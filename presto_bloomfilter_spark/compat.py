@@ -47,8 +47,10 @@ def bloom_filter(
     Inserts each non-null, non-empty element of ``col``; returns the
     merged BloomFilter (ungrouped) or a DataFrame[group_by, sketch]
     (grouped).  Null/'' elements are silently ignored
-    (BloomFilter.java:161-167).
+    (BloomFilter.java:161-167).  The reference takes varchar, so the
+    column is cast to string: ``bloom_filter_contains`` probes strings.
     """
+    df = df.withColumn(col, F.col(col).cast("string"))
     spec = agg.bloom_over_strings(col, expected_insertions, fpp)
     if group_by is None:
         return agg.aggregate_sketch(df, spec, target_partials=target_partials)
@@ -114,9 +116,10 @@ def bloom_filter_contains(spark: SparkSession, bf, col) -> Column:
     absent, true ⇒ probably present; null element → false.  The filter
     rides a broadcast; probes are vectorized per Arrow batch with an
     executor-local LRU keyed by the blob's sha256 (the reference's Guava
-    cache, BloomFilterScalarFunctions.java:25,46-61)."""
+    cache, BloomFilterScalarFunctions.java:25,46-61).  The element is
+    cast to string, as ``bloom_filter`` builds over strings."""
     c = F.col(col) if isinstance(col, str) else col
-    return contains_udf(spark, bf)(c)
+    return contains_udf(spark, bf)(c.cast("string"))
 
 
 def to_string(bf) -> str:
@@ -364,13 +367,8 @@ def register_sql_aggregates(spark: SparkSession) -> None:
 
     @pandas_udf("binary")
     def _agg_merge(blobs: pd.Series) -> bytes:
-        it = (ser.sketch_from_bytes(bytes(b)) for b in blobs if b is not None)
-        first = next(it, None)
-        if first is None:
-            return None
-        for sk in it:
-            first = first.merge(sk)
-        return first.to_bytes()
+        sk = ser.merge_blobs(bytes(b) for b in blobs if b is not None)
+        return None if sk is None else sk.to_bytes()
 
     spark.udf.register("bloom_filter", _agg_bloom)
     spark.udf.register("bloom_filter_sized", _agg_bloom_sized)

@@ -130,6 +130,18 @@ def sketch_from_bytes(buf: bytes):
     return cls._from_parts(params, payload)
 
 
+def merge_blobs(blobs, mapper=map):
+    """Decode each blob and fold the sketches with ``merge`` — the
+    combine step of every build (tree-merge levels, grouped merges,
+    store unions, SQL ``sketch_merge``).  ``mapper`` runs the decodes:
+    pass a thread pool's ``map`` to decode in parallel (the fold order
+    stays the input order).  Returns None for no blobs."""
+    out = None
+    for sk in mapper(sketch_from_bytes, blobs):
+        out = sk if out is None else out.merge(sk)
+    return out
+
+
 def _split(buf: bytes):
     magic, ver, kind, flags, digest, plen, slen = _unpack_header(buf)
     _check(magic, ver)

@@ -21,8 +21,8 @@ directly:
 Same vectorized batch interface (add_ints / add_strings over numpy,
 no per-row Python) and PBFS serialization (kind 7) as the siblings, so
 the aggregate/grouped/tree-merge dataflow works unchanged via
-``theta_over_tokens`` / ``theta_over_strings`` specs in
-operators/aggregate.py.
+``SketchSpec(col, ThetaSketch)`` in operators/aggregate.py (wrap it in
+``TokenDedupAccumulator`` for token-id columns).
 """
 
 from __future__ import annotations

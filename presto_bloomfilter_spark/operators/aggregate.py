@@ -30,32 +30,30 @@ final merge work.  applyInPandas materializes each group in one worker
 from __future__ import annotations
 
 import contextlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
-from functools import reduce
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
 from presto_bloomfilter_spark.functions.cms import CountMinSketch
 from presto_bloomfilter_spark.functions.hll import HyperLogLog
 from presto_bloomfilter_spark.functions.kll import KLLSketch
 from presto_bloomfilter_spark.functions.multi import MultiSketch
-from presto_bloomfilter_spark.functions.cbf import CountingBloomFilter
-from presto_bloomfilter_spark.functions.sbbf import SplitBlockBloomFilter
-from presto_bloomfilter_spark.functions.tdigest import TDigest
-from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
+from presto_bloomfilter_spark.functions.serialization import merge_blobs, sketch_from_bytes
 
 DEFAULT_FAN_IN = 16
 
 _ARROW_BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def tune_arrow_batches(df_or_spark) -> None:
+def tune_arrow_batches(df_or_spark) -> bool:
     """Pin JVM→Python Arrow transfer batches to a cache-resident size.
 
     Rows here carry wide ``array<int>`` token columns (~180 elements),
@@ -64,7 +62,7 @@ def tune_arrow_batches(df_or_spark) -> None:
     produce→serialize→consume pipeline cache-resident: measured 4-7x on
     the DataFrame-path sketch build (4.0 s → 0.56 s for 75M tokens at
     local[16]).  Only applied while the conf sits at its default, so an
-    explicit user setting always wins.
+    explicit user setting always wins; returns whether it changed it.
 
     NOTE: this change is session-global and persists after the call —
     lazy operators (``grouped_sketch``) return un-executed DataFrames,
@@ -77,8 +75,10 @@ def tune_arrow_batches(df_or_spark) -> None:
     try:
         if spark.conf.get(_ARROW_BATCH_KEY, "10000") == "10000":
             spark.conf.set(_ARROW_BATCH_KEY, "4096")
+            return True
     except Exception:  # pragma: no cover — conf API unavailable
         pass
+    return False
 
 
 @contextlib.contextmanager
@@ -86,20 +86,14 @@ def _tuned_arrow_batches(df_or_spark):
     """Scoped form of tune_arrow_batches: set the cache-resident Arrow
     batch size for the duration of an eager job, then restore, so
     unrelated pandas-UDF workloads in the same session keep the default."""
-    spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    prev = None
-    try:
-        if spark.conf.get(_ARROW_BATCH_KEY, "10000") == "10000":
-            spark.conf.set(_ARROW_BATCH_KEY, "4096")
-            prev = "10000"
-    except Exception:  # pragma: no cover — conf API unavailable
-        pass
+    changed = tune_arrow_batches(df_or_spark)
     try:
         yield
     finally:
-        if prev is not None:
+        if changed:
             try:
-                spark.conf.set(_ARROW_BATCH_KEY, prev)
+                getattr(df_or_spark, "sparkSession", df_or_spark).conf.set(
+                    _ARROW_BATCH_KEY, "10000")
             except Exception:  # pragma: no cover
                 pass
 
@@ -137,7 +131,7 @@ class TokenDedupAccumulator:
             else weighted
         )
 
-    def add_flat(self, flat: np.ndarray) -> None:
+    def add_ints(self, flat: np.ndarray) -> None:
         if flat.size == 0:
             return
         if self.direct:
@@ -198,242 +192,105 @@ def _unwrap(sk):
     return sk.finish() if isinstance(sk, TokenDedupAccumulator) else sk
 
 
+def _non_null(col) -> pa.Array:
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    return col.drop_null() if col.null_count else col
+
+
 @dataclass(frozen=True)
 class SketchSpec:
-    """factory() → empty sketch; update(sketch, arrow RecordBatch) →
-    vectorized bulk insert of one batch. Both run inside executors."""
+    """What one build computes: ``factory()`` → an empty sketch (token
+    specs wrap it in ``TokenDedupAccumulator``), ``update(sketch,
+    batch)`` → a vectorized insert of one Arrow batch's ``column``.
+    Both run inside executors.
 
-    columns: tuple[str, ...]
+    ``update`` picks the insert path from the column's Arrow type and
+    drops NULLs at the Arrow level first (converting first would float
+    an int batch: NaN for nulls, silent precision loss above 2^53):
+
+    - string / large_string → ``add_strings``;
+    - integer → ``add_ints`` on the exact ints (``add`` for sketches
+      with no int path: the quantile family);
+    - list<integer> → flattened (the vectorized F.explode, SURVEY.md
+      §2.3), then ``add_ints``;
+    - floating → ``add`` (quantile family only);
+    - list<floating> → an (m, ``sketch.d``) matrix, then ``add`` (FD /
+      Gram); a vector with a NULL element or the wrong length is loud.
+
+    Other scalar types hash through ``add_strings``.  A floating column
+    into a hash sketch (one with ``add_ints``) is a TypeError: cast it
+    to an integer or string type first.  Real NaN values still reach
+    the sketch, which handles them as it does on direct use.
+    """
+
+    column: str
     factory: Callable[[], object]
-    update: Callable[[object, pa.RecordBatch], None]
+
+    @property
+    def columns(self) -> tuple[str, ...]:
+        return (self.column,)
+
+    def update(self, sk, batch: pa.RecordBatch) -> None:
+        col = _non_null(batch.column(batch.schema.get_field_index(self.column)))
+        t = col.type
+        nested = pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t)
+        if nested:
+            t = t.value_type
+        hashed = hasattr(sk, "add_ints")
+        if hashed and pa.types.is_floating(t):
+            raise TypeError(
+                f"floating column '{self.column}' ({col.type}) into hash sketch "
+                f"{type(sk).__name__}: cast it to an integer or string type")
+        if nested:
+            if pa.types.is_floating(t):
+                if len(col):
+                    sk.add(_matrix(col, sk.d, self.column))
+                return
+            col = _non_null(col.flatten())
+        if not len(col):
+            return
+        if pa.types.is_integer(t) and hashed:
+            sk.add_ints(col.to_numpy(zero_copy_only=False))
+        elif pa.types.is_integer(t) or pa.types.is_floating(t):
+            sk.add(col.to_numpy(zero_copy_only=False))
+        else:
+            sk.add_strings(col.to_pandas())
 
 
-# ---- batch extractors (Arrow-level, no per-row Python) -----------------------
-
-
-def _col_strings(batch: pa.RecordBatch, name: str) -> pd.Series:
-    return batch.column(batch.schema.get_field_index(name)).to_pandas()
-
-
-def _col_flat_tokens(batch: pa.RecordBatch, name: str) -> np.ndarray:
-    """Flatten an array<int> column to one numpy vector — zero-copy via
-    pyarrow ListArray.flatten() (SURVEY.md §2.3: the vectorized form of
-    F.explode for sketch input)."""
-    col = batch.column(batch.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
+def _matrix(col: pa.Array, d: int, name: str) -> np.ndarray:
+    """list<float> rows → (m, d) float64 matrix (zero-copy flatten +
+    reshape, the row-batch form FD/Gram accumulators eat)."""
     flat = col.flatten()
-    return flat.to_numpy(zero_copy_only=False)
+    if flat.null_count or len(flat) != len(col) * d:
+        raise ValueError(
+            f"ragged or null vectors in '{name}': {len(flat)} values for "
+            f"{len(col)} rows at declared dim {d}")
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(-1, d)
 
 
-def _col_floats(batch: pa.RecordBatch, name: str) -> np.ndarray:
-    col = batch.column(batch.schema.get_field_index(name))
-    return col.to_numpy(zero_copy_only=False)
-
-
-def _col_ints(batch: pa.RecordBatch, name: str) -> np.ndarray:
-    """Non-null values of an integer column, exact int64.  Nulls are
-    dropped at the ARROW level: converting first would float the whole
-    batch (NaN for nulls, silent precision loss above 2^53) — the
-    int-hash guard in hashing.py would then reject it loudly, but the
-    insert semantics should simply ignore nulls like add_strings does."""
-    col = batch.column(batch.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    if col.null_count:
-        col = col.drop_null()
-    return col.to_numpy(zero_copy_only=False)
-
-
-# ---- prebuilt specs ----------------------------------------------------------
+# ---- prebuilt specs (any other build: SketchSpec(column, factory)) -----------
 
 
 def bloom_over_strings(col: str, n: int = BloomFilter.DEFAULT_EXPECTED_INSERTIONS,
                        p: float = BloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """bloom_filter(varchar[, n[, p]]) parity (reference
-    BloomFilterAggregation.java:31-62)."""
-    return SketchSpec(
-        (col,),
-        lambda: BloomFilter(n, p),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
+    """bloom_filter(el[, n[, p]]) build (reference
+    BloomFilterAggregation.java:31-62).  The column's Arrow type picks
+    the hash path (string → string hash, integer → int hash), so a
+    filter built over ints must be probed with ints; ``bloom_over_ints``
+    is the same function."""
+    return SketchSpec(col, lambda: BloomFilter(n, p))
 
 
-def bloom_over_tokens(col: str = "tokens", n: int = BloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                      p: float = BloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(BloomFilter(n, p)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def bloom_over_ints(col: str, n: int = BloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                    p: float = BloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """bloom_filter over a scalar integer column — no string casts, int
-    hashing stays pure numpy."""
-    return SketchSpec(
-        (col,),
-        lambda: BloomFilter(n, p),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
-
-
-def sbbf_over_strings(col: str, n: int = SplitBlockBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                      p: float = SplitBlockBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """Split-block (Parquet-style blocked) bloom over a string column —
-    same build dataflow as bloom_over_strings, one-cache-line probes."""
-    return SketchSpec(
-        (col,),
-        lambda: SplitBlockBloomFilter(n, p),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def sbbf_over_tokens(col: str = "tokens", n: int = SplitBlockBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                     p: float = SplitBlockBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(SplitBlockBloomFilter(n, p)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def sbbf_over_ints(col: str, n: int = SplitBlockBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                   p: float = SplitBlockBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: SplitBlockBloomFilter(n, p),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
-
-
-def cbf_over_strings(col: str, n: int = CountingBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                     p: float = CountingBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    """Counting bloom over a string column — merge is saturating
-    counter ADDITION (multiset), so the same partial/tree dataflow
-    builds both the insert filter and the delete filter that
-    ``CountingBloomFilter.subtract`` consumes."""
-    return SketchSpec(
-        (col,),
-        lambda: CountingBloomFilter(n, p),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def cbf_over_ints(col: str, n: int = CountingBloomFilter.DEFAULT_EXPECTED_INSERTIONS,
-                  p: float = CountingBloomFilter.DEFAULT_FPP) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: CountingBloomFilter(n, p),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
-
-
-def hll_over_strings(col: str, precision: int = HyperLogLog.DEFAULT_PRECISION) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: HyperLogLog(precision),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
+bloom_over_ints = bloom_over_strings
 
 
 def hll_over_tokens(col: str = "tokens", precision: int = HyperLogLog.DEFAULT_PRECISION) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(HyperLogLog(precision)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
+    return SketchSpec(col, lambda: TokenDedupAccumulator(HyperLogLog(precision)))
 
 
-def cms_over_tokens(col: str = "tokens", eps: float = 1e-4, delta: float = 0.01) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(CountMinSketch(eps, delta)),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def cms_over_strings(col: str, eps: float = 1e-4, delta: float = 0.01) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: CountMinSketch(eps, delta),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def cms_over_ints(col: str, eps: float = 1e-4, delta: float = 0.01) -> SketchSpec:
-    """count-min over a scalar integer column — no string casts, int
-    hashing stays pure numpy (the join-key shape for
-    ``CountMinSketch.inner_product`` join-size estimation)."""
-    return SketchSpec(
-        (col,),
-        lambda: CountMinSketch(eps, delta),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
-
-
-def _col_matrix(batch: pa.RecordBatch, name: str, d: int) -> "np.ndarray":
-    """array<float> column → (m, d) float64 matrix, zero-copy flatten +
-    reshape (the vectorized row-batch form FD/Gram accumulators eat)."""
-    col = batch.column(batch.schema.get_field_index(name))
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    if flat.size != len(col) * d:
-        raise ValueError(
-            f"ragged or null vectors in '{name}': {flat.size} values for "
-            f"{len(col)} rows at declared dim {d}")
-    return flat.reshape(-1, d)
-
-
-def fd_over_vectors(col: str, d: int, ell: int = 32) -> SketchSpec:
-    """Frequent-Directions matrix sketch (functions/fd.py) over an
-    array<float> embedding column: ℓ×d state per partial, one SVD per
-    Arrow batch, tree-merged with the GLPW mergeability guarantee."""
-    from presto_bloomfilter_spark.functions.fd import FrequentDirections
-
-    return SketchSpec(
-        (col,),
-        lambda: FrequentDirections(d, ell),
-        lambda sk, b: sk.add(_col_matrix(b, col, d)),
-    )
-
-
-def gram_over_vectors(col: str, d: int) -> SketchSpec:
-    """Exact distributed Gram/covariance accumulator (AᵀA, lossless
-    vector-add merge) over an array<float> column."""
-    from presto_bloomfilter_spark.functions.fd import ExactGram
-
-    return SketchSpec(
-        (col,),
-        lambda: ExactGram(d),
-        lambda sk, b: sk.add(_col_matrix(b, col, d)),
-    )
-
-
-def countsketch_over_strings(col: str, width: int = 4096, depth: int = 7) -> SketchSpec:
-    """Count-Sketch (signed AMS, functions/countsketch.py) over a string
-    column — the UNBIASED frequency/F2/join-size sibling of
-    cms_over_strings with a lossless elementwise-add merge."""
-    from presto_bloomfilter_spark.functions.countsketch import CountSketch
-
-    return SketchSpec(
-        (col,),
-        lambda: CountSketch(width, depth),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def countsketch_over_ints(col: str, width: int = 4096, depth: int = 7) -> SketchSpec:
-    """Count-Sketch over a scalar integer column (join keys, token ids)."""
-    from presto_bloomfilter_spark.functions.countsketch import CountSketch
-
-    return SketchSpec(
-        (col,),
-        lambda: CountSketch(width, depth),
-        lambda sk, b: sk.add_ints(_col_ints(b, col)),
-    )
+def kll_over_column(col: str, k: int = KLLSketch.DEFAULT_K) -> SketchSpec:
+    return SketchSpec(col, lambda: KLLSketch(k))
 
 
 def token_family_over_tokens(
@@ -452,127 +309,11 @@ def token_family_over_tokens(
     dedup counts (TokenDedupAccumulator), so the kernels run once per
     unique id per partition, not once per token.
     """
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(
-            MultiSketch(
-                [
-                    BloomFilter(bloom_n, bloom_p),
-                    CountMinSketch(cms_eps, cms_delta),
-                    HyperLogLog(hll_precision),
-                ]
-            )
-        ),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def theta_over_strings(col: str, k: int | None = None) -> SketchSpec:
-    """KMV/theta distinct sketch over a string column — the sibling to
-    use when SET OPERATIONS (intersection/difference/Jaccard) on the
-    distinct sets must stay accurate (functions/theta.py)."""
-    from presto_bloomfilter_spark.functions.theta import ThetaSketch
-
-    kk = k or ThetaSketch.DEFAULT_K
-    return SketchSpec(
-        (col,),
-        lambda: ThetaSketch(kk),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def theta_over_tokens(col: str = "tokens", k: int | None = None) -> SketchSpec:
-    from presto_bloomfilter_spark.functions.theta import ThetaSketch
-
-    kk = k or ThetaSketch.DEFAULT_K
-    return SketchSpec(
-        (col,),
-        lambda: TokenDedupAccumulator(ThetaSketch(kk), weighted=False),
-        lambda sk, b: sk.add_flat(_col_flat_tokens(b, col)),
-    )
-
-
-def kll_over_column(col: str, k: int = KLLSketch.DEFAULT_K) -> SketchSpec:
-    return SketchSpec(
-        (col,),
-        lambda: KLLSketch(k),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def tdigest_over_column(col: str, compression: int = TDigest.DEFAULT_COMPRESSION) -> SketchSpec:
-    """t-digest quantiles — tail-accurate sibling of kll_over_column
-    (north_rule lists both); same build/merge dataflow."""
-    return SketchSpec(
-        (col,),
-        lambda: TDigest(compression),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def moments_over_column(col: str, lo: float, hi: float,
-                        k: int = 12, clamp: bool = False,
-                        log: bool = False) -> SketchSpec:
-    """Moments-sketch quantiles (Gan et al. VLDB 2018) — the
-    HIGH-CARDINALITY grouped sibling of kll/tdigest_over_column:
-    ~(k+3)·8 bytes of state per key and a pure vector-add merge, so a
-    per-key quantile table over millions of keys stays tiny where a
-    KLL per key would not.  ``(lo, hi)`` is the declared value range
-    (geometry, like bloom's n/p); ``log=True`` accumulates ln-moments
-    for long-tailed data.  No worst-case rank bound — that is the
-    published trade; use KLL when you need the guarantee."""
-    from presto_bloomfilter_spark.functions.moments import MomentsSketch
-
-    return SketchSpec(
-        (col,),
-        lambda: MomentsSketch(lo, hi, k, clamp=clamp, log=log),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def ddsketch_over_column(col: str, alpha: float = 0.01,
-                         max_bins: int = 2048) -> SketchSpec:
-    """DDSketch quantiles (Masson et al. VLDB 2019) — the RELATIVE-error
-    sibling of kll/tdigest_over_column: every estimate of a positive
-    quantile is within ``alpha`` relative error, and the merge is
-    LOSSLESS bucket-count addition, so estimates are byte-identical
-    under any merge tree / task-retry order — the strongest
-    merge-associativity member of the quantile family."""
-    from presto_bloomfilter_spark.functions.ddsketch import DDSketch
-
-    return SketchSpec(
-        (col,),
-        lambda: DDSketch(alpha, max_bins),
-        lambda sk, b: sk.add(_col_floats(b, col)),
-    )
-
-
-def mg_over_strings(col: str, k: int = 4096) -> SketchSpec:
-    """Misra-Gries frequent-items summary over a string column
-    (functions/mg.py) — the DETERMINISTIC heavy-hitter sibling of
-    cms_over_strings: at most k exact (item, count) pairs, undercount
-    <= n/(k+1), PODS'12 mergeable trim.  Every item with true count
-    above n/(k+1) is guaranteed present, which is the candidate-
-    generation contract for two-phase exact top-k."""
-    from presto_bloomfilter_spark.functions.mg import MisraGries
-
-    return SketchSpec(
-        (col,),
-        lambda: MisraGries(k),
-        lambda sk, b: sk.add_strings(_col_strings(b, col)),
-    )
-
-
-def mg_over_tokens(col: str = "tokens", k: int = 4096) -> SketchSpec:
-    """Misra-Gries over a flattened array<int> token column — all
-    occurrences, like cms_over_tokens."""
-    from presto_bloomfilter_spark.functions.mg import MisraGries
-
-    return SketchSpec(
-        (col,),
-        lambda: MisraGries(k),
-        lambda sk, b: sk.add_ints(_col_flat_tokens(b, col)),
-    )
+    return SketchSpec(col, lambda: TokenDedupAccumulator(MultiSketch([
+        BloomFilter(bloom_n, bloom_p),
+        CountMinSketch(cms_eps, cms_delta),
+        HyperLogLog(hll_precision),
+    ])))
 
 
 # ---- ungrouped aggregation (two-level tree merge) ----------------------------
@@ -599,41 +340,77 @@ class BuildMetrics:
         }
 
 
-def _partial_build(spec: SketchSpec, metrics: BuildMetrics | None = None):
+def _build_partial(spec: SketchSpec, batches: Iterable[pa.RecordBatch],
+                   metrics: BuildMetrics | None = None):
+    """The partial phase of every ungrouped build (the reference's
+    input/partial-state step): factory → update each non-empty batch →
+    (finished sketch, rows).  The batches come from mapInArrow, the
+    shared parquet row-group reader, or one pandas group."""
+    sk, rows, n_batches = spec.factory(), 0, 0
+    for b in batches:
+        if b.num_rows:
+            spec.update(sk, b)
+            rows += b.num_rows
+            n_batches += 1
+    if metrics is not None:
+        metrics._rows.add(rows)
+        metrics._batches.add(n_batches)
+        metrics._partials.add(1)
+    return _unwrap(sk), rows
+
+
+def _blob_batch(sk) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays([pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
+
+
+def _row_group_batches(path: str, cols: list[str],
+                       row_groups: Iterable[int] | None = None) -> Iterator[pa.RecordBatch]:
+    """The one direct parquet reader (fused, grouped-fused and
+    incremental builds): opens the file once per task and reads each
+    row group (default: all) with only ``cols``."""
+    pf = pq.ParquetFile(path)
+    if row_groups is None:
+        row_groups = range(pf.metadata.num_row_groups)
+    for rg in row_groups:
+        yield from pf.read_row_group(rg, columns=cols).to_batches()
+
+
+def _fused_shards(spark, path: str, cols: list[str], n_tasks: int | None, n_rg: int):
+    """(shard DataFrame, n_tasks, scan) for a fused parquet build: one
+    Spark task per shard id, row groups strided over shards so
+    file-position skew balances out; ``scan(shard_batches)`` is a task's
+    batch source."""
+    if n_tasks is None:
+        n_tasks = spark.sparkContext.defaultParallelism
+    n_tasks = max(1, min(n_tasks, n_rg))
+
+    def scan(shard_batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _row_group_batches(path, cols, [
+            rg for b in shard_batches for sid in b.column(0).to_pylist()
+            for rg in range(sid, n_rg, n_tasks)])
+
+    return spark.range(0, n_tasks, 1, n_tasks), n_tasks, scan
+
+
+def _merge_partials(metrics: BuildMetrics | None = None):
+    """mapInArrow body of one tree-merge level: fold the task's blobs."""
+
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sk = spec.factory()
-        for b in batches:
-            if b.num_rows:
-                spec.update(sk, b)
-                if metrics is not None:
-                    metrics._rows.add(b.num_rows)
-                    metrics._batches.add(1)
-        if metrics is not None:
-            metrics._partials.add(1)
-        yield pa.RecordBatch.from_arrays([pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
+        n = 0
 
-    return fn
+        def blobs():
+            nonlocal n
+            for b in batches:
+                n += b.num_rows
+                yield from b.column(0).to_pylist()
 
-
-def _make_merge_blobs(metrics: BuildMetrics | None = None):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sk = None
-        for b in batches:
-            for buf in b.column(0):
-                other = sketch_from_bytes(buf.as_py())
-                if sk is None:
-                    sk = other
-                else:
-                    sk = sk.merge(other)
-                    if metrics is not None:
-                        metrics._merges.add(1)
+        sk = merge_blobs(blobs())
         if sk is not None:
-            yield pa.RecordBatch.from_arrays([pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
+            if metrics is not None:
+                metrics._merges.add(n - 1)
+            yield _blob_batch(sk)
 
     return fn
-
-
-_merge_blobs = _make_merge_blobs()
 
 
 def aggregate_sketch(
@@ -660,8 +437,12 @@ def aggregate_sketch(
     pruned = df.select(*spec.columns)
     if target_partials:
         pruned = pruned.coalesce(target_partials)
+
+    def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield _blob_batch(_build_partial(spec, batches, metrics)[0])
+
     with _tuned_arrow_batches(df):
-        partials = pruned.mapInArrow(_partial_build(spec, metrics), "sketch binary")
+        partials = pruned.mapInArrow(partial, "sketch binary")
         # coalesce never INCREASES partition count, so n_parts may
         # overstate the real partial count for narrow inputs; the cost
         # is at most log_fan_in(target) extra repartition rounds over a
@@ -687,7 +468,7 @@ def _tree_merge_collect(
     fan_in blobs (north_rule: treeAggregate-style merges, no driver
     hotspot).
     """
-    merge_fn = _make_merge_blobs(metrics) if metrics is not None else _merge_blobs
+    merge_fn = _merge_partials(metrics)
     while n_parts > fan_in:
         n_parts = -(-n_parts // fan_in)
         partials = partials.repartition(n_parts).mapInArrow(merge_fn, "sketch binary")
@@ -696,23 +477,16 @@ def _tree_merge_collect(
         if spec is None:
             raise ValueError("no sketches to merge")
         return _unwrap(spec.factory())
+    if metrics is not None:
+        metrics._merges.add(len(blobs) - 1)
     # deserialize in a thread pool: zlib.decompress and the numpy buffer
     # copies release the GIL, and per-blob decode (~13 ms for a
     # compressed multi-sketch) dominates the driver tail — the merges
     # themselves are sub-ms vector ops (SCALING_PROFILE.md)
-    if len(blobs) > 1:
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(min(8, len(blobs))) as ex:
-            sketches = list(ex.map(sketch_from_bytes, blobs))
-    else:
-        sketches = [sketch_from_bytes(blobs[0])]
-    out = sketches[0]
-    for x in sketches[1:]:
-        out = out.merge(x)
-        if metrics is not None:
-            metrics._merges.add(1)
-    return out
+    with ThreadPoolExecutor(min(8, len(blobs))) as ex:
+        return merge_blobs(blobs, ex.map)
 
 
 def aggregate_sketch_from_parquet(
@@ -742,32 +516,12 @@ def aggregate_sketch_from_parquet(
     splits parquet scans — we only relocate the decode to the process
     that consumes the bytes.
     """
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(path).metadata
-    n_rg = meta.num_row_groups
-    if n_tasks is None:
-        n_tasks = spark.sparkContext.defaultParallelism
-    n_tasks = max(1, min(n_tasks, n_rg))
-    cols = list(spec.columns)
+    n_rg = pq.ParquetFile(path).metadata.num_row_groups
+    shards, n_tasks, scan = _fused_shards(spark, path, list(spec.columns), n_tasks, n_rg)
 
     def build_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        sk = spec.factory()
-        pf = pq.ParquetFile(path)
-        for b in batches:
-            for sid in b.column(0).to_pylist():
-                for rg in range(sid, n_rg, n_tasks):
-                    tbl = pf.read_row_group(rg, columns=cols)
-                    for rb in tbl.to_batches():
-                        spec.update(sk, rb)
-                        if metrics is not None:
-                            metrics._rows.add(rb.num_rows)
-                            metrics._batches.add(1)
-        if metrics is not None:
-            metrics._partials.add(1)
-        yield pa.RecordBatch.from_arrays([pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
+        yield _blob_batch(_build_partial(spec, scan(batches), metrics)[0])
 
-    shards = spark.range(0, n_tasks, 1, n_tasks)
     partials = shards.mapInArrow(build_shard, "sketch binary")
     return _tree_merge_collect(partials, n_tasks, fan_in, spec, metrics)
 
@@ -788,10 +542,7 @@ def grouped_sketch_from_parquet(
     as the map_side strategy: a task only sees its own shard's share of
     a hot key.  Returns DataFrame[key string, sketch binary].
     """
-    import pyarrow.parquet as pq
-
     pf = pq.ParquetFile(path)
-    meta = pf.metadata
     # key labels come from Python str() in the fused kernel; str() and
     # Spark's cast-to-string agree for string/int keys but NOT for
     # double ('1e-07' vs '1.0E-7') or boolean ('True' vs 'true') — so
@@ -805,24 +556,13 @@ def grouped_sketch_from_parquet(
             f"str() labels would diverge from grouped_sketch's JVM "
             f"cast-to-string; pre-cast the key to string (or use "
             f"grouped_sketch)")
-    n_rg = meta.num_row_groups
-    if n_tasks is None:
-        n_tasks = spark.sparkContext.defaultParallelism
-    n_tasks = max(1, min(n_tasks, n_rg))
     cols = list(dict.fromkeys([key, *spec.columns]))
+    shards, _, scan = _fused_shards(spark, path, cols, n_tasks, pf.metadata.num_row_groups)
     grouped_body = _grouped_partial_build(spec, key)
 
     def build_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def shard_batches() -> Iterator[pa.RecordBatch]:
-            pf = pq.ParquetFile(path)
-            for b in batches:
-                for sid in b.column(0).to_pylist():
-                    for rg in range(sid, n_rg, n_tasks):
-                        yield from pf.read_row_group(rg, columns=cols).to_batches()
+        yield from grouped_body(scan(batches))
 
-        yield from grouped_body(shard_batches())
-
-    shards = spark.range(0, n_tasks, 1, n_tasks)
     partials = shards.mapInArrow(build_shard, f"{key} string, sketch binary")
     return grouped_merge_sketch_column(partials, key)
 
@@ -842,7 +582,7 @@ def merge_sketch_column(df: DataFrame, col: str = "sketch", fan_in: int = DEFAUL
     pruned = df.select(F.col(col).alias("sketch"))
     if target_partials:
         pruned = pruned.coalesce(target_partials)
-    partials = pruned.mapInArrow(_merge_blobs, "sketch binary")
+    partials = pruned.mapInArrow(_merge_partials(), "sketch binary")
     n_parts = target_partials or pruned.rdd.getNumPartitions()
     # shared tree-merge tail (bounded fan-in, threaded blob decode);
     # raises the same ValueError on empty input
@@ -899,11 +639,8 @@ def top_k_tokens(
     m = m_per_partition or 8 * k
 
     def local_top(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc = TokenDedupAccumulator(_CandidateSink(), weighted=True)
-        for b in batches:
-            if b.num_rows:
-                acc.add_flat(_col_flat_tokens(b, col))
-        sink = acc.finish()
+        sink, _ = _build_partial(SketchSpec(col, lambda: TokenDedupAccumulator(
+            _CandidateSink(), weighted=True)), batches)
         ids, counts = sink.top(m)
         thr = int(min(counts)) if len(sink._ids) > m else 0
         yield pa.RecordBatch.from_arrays(
@@ -1006,10 +743,10 @@ def mg_top_k(
 
     Output: (item string, cnt long).
     """
-    from presto_bloomfilter_spark.functions.mg import MisraGries  # noqa: F401
+    from presto_bloomfilter_spark.functions.mg import MisraGries
 
     spark = df.sparkSession
-    summary = aggregate_sketch(df.select(col), mg_over_strings(col, k_counters))
+    summary = aggregate_sketch(df.select(col), SketchSpec(col, lambda: MisraGries(k_counters)))
     bound = summary.error_bound()
     cands = [item for item, _ in summary.topk(k_counters)]
     if not cands:
@@ -1193,10 +930,14 @@ def grouped_sketch(
     if strategy != "salted":
         raise ValueError(f"unknown strategy {strategy!r}")
 
+    # pandas floats a nullable int column (NaN for NULL); the Spark
+    # schema puts it back to exact ints before update picks the path
+    arrow_schema = to_arrow_schema(pruned.select(*spec.columns).schema)
+
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = spec.factory()
-        if len(pdf):
-            spec.update(sk, pa.RecordBatch.from_pandas(pdf[list(spec.columns)], preserve_index=False))
+        batch = pa.RecordBatch.from_pandas(
+            pdf[list(spec.columns)], schema=arrow_schema, preserve_index=False)
+        sk, _ = _build_partial(spec, [batch])
         return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
 
     if not salt:
@@ -1204,17 +945,8 @@ def grouped_sketch(
 
     sc = salt_col or key
     salted = pruned.withColumn("__salt", F.pmod(F.xxhash64(F.col(sc), F.monotonically_increasing_id()), F.lit(salt)))
-
-    def build_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-        return build(pdf.drop(columns="__salt"))
-
-    partials = salted.groupBy(key, "__salt").applyInPandas(build_salted, out_schema)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = reduce(lambda a, b: a.merge(b), (sketch_from_bytes(x) for x in pdf["sketch"]))
-        return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
-
-    return partials.groupBy(key).applyInPandas(merge_group, out_schema)
+    partials = salted.groupBy(key, "__salt").applyInPandas(build, out_schema)
+    return grouped_merge_sketch_column(partials, key)
 
 
 def sketch_estimates(df: DataFrame, col: str = "sketch",
@@ -1249,7 +981,7 @@ def grouped_merge_sketch_column(df: DataFrame, key: str, col: str = "sketch") ->
     The key keeps its input type (an int key stays int)."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = reduce(lambda a, b: a.merge(b), (sketch_from_bytes(x) for x in pdf[col]))
+        sk = merge_blobs(pdf[col])
         return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
 
     key_type = df.schema[key].dataType.simpleString()

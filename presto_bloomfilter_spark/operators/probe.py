@@ -27,20 +27,16 @@ from pyspark.sql.functions import pandas_udf
 
 from presto_bloomfilter_spark.functions import serialization as ser
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
+from presto_bloomfilter_spark.functions.sbbf import SplitBlockBloomFilter
 from presto_bloomfilter_spark.operators.aggregate import (
     DEFAULT_FAN_IN,
+    SketchSpec,
     aggregate_sketch,
-    bloom_over_ints,
-    bloom_over_strings,
-    sbbf_over_ints,
-    sbbf_over_strings,
 )
 
-# membership-sketch spec factories per `kind` arg of bloom_semi_join
-_SEMI_JOIN_SPECS = {
-    "bloom": (bloom_over_strings, bloom_over_ints),
-    "sbbf": (sbbf_over_strings, sbbf_over_ints),
-}
+# membership sketch per `kind` arg of bloom_semi_join; the key column's
+# (cast) Arrow type picks the string or int insert path
+_SEMI_JOIN_SPECS = {"bloom": BloomFilter, "sbbf": SplitBlockBloomFilter}
 
 # '' is invisible to every membership filter (reference empty-element
 # semantics, BloomFilter.java:161-167) but a legitimate JOIN KEY: a
@@ -257,7 +253,8 @@ def bloom_semi_join(
     if kind not in _SEMI_JOIN_SPECS:
         raise ValueError(f"unknown sketch kind {kind!r}; "
                          f"one of {sorted(_SEMI_JOIN_SPECS)}")
-    spec_strings, spec_ints = _SEMI_JOIN_SPECS[kind]
+    cls = _SEMI_JOIN_SPECS[kind]
+    spec = SketchSpec(build_col, lambda: cls(expected_insertions, fpp))
     ints = resolve_key_mode(probe_df, probe_col, build_df, build_col)
     # the bloom build reads raw (non-distinct) keys: inserts are
     # idempotent, so skipping .distinct() skips a whole shuffle of the
@@ -266,7 +263,6 @@ def bloom_semi_join(
         # integer keys: no casts — int hashing stays pure numpy and the
         # verify join compares native longs
         raw_keys = build_df.select(build_col)
-        spec = spec_ints(build_col, expected_insertions, fpp)
         pre = probe_df.filter(contains_udf(spark, aggregate_sketch(raw_keys, spec, fan_in),
                                            ints=True)(F.col(probe_col)))
         join_cond_col = F.col(probe_col)
@@ -274,7 +270,6 @@ def bloom_semi_join(
         raw_keys = build_df.select(F.col(build_col).cast("string").alias(build_col))
         sent_keys = build_df.select(
             _keyable(F.col(build_col).cast("string")).alias(build_col))
-        spec = spec_strings(build_col, expected_insertions, fpp)
         pre = probe_df.filter(contains_udf(spark, aggregate_sketch(sent_keys, spec, fan_in))(
             _keyable(F.col(probe_col).cast("string"))))
         join_cond_col = F.col(probe_col).cast("string")

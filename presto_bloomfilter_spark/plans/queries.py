@@ -23,7 +23,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from presto_bloomfilter_spark.functions.cbf import CountingBloomFilter
+from presto_bloomfilter_spark.functions.cms import CountMinSketch
+from presto_bloomfilter_spark.functions.countsketch import CountSketch
+from presto_bloomfilter_spark.functions.ddsketch import DDSketch
+from presto_bloomfilter_spark.functions.fd import ExactGram, FrequentDirections
+from presto_bloomfilter_spark.functions.hll import HyperLogLog
+from presto_bloomfilter_spark.functions.moments import MomentsSketch
 from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
+from presto_bloomfilter_spark.functions.tdigest import TDigest
+from presto_bloomfilter_spark.functions.theta import ThetaSketch
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators import (
     classifier, contamination, dedup, multimodal, packing, ranking, sampling,
@@ -130,9 +139,9 @@ def q_cbf_delete_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     big = F.col("o_totalprice") > 250_000
     ins = orders.filter(big).select("o_orderkey")
     dels = orders.filter(big & (F.col("o_orderstatus") == "F")).select("o_orderkey")
-    sk = agg.aggregate_sketch(ins, agg.cbf_over_ints("o_orderkey", n=50_000, p=0.001))
-    sk.subtract(
-        agg.aggregate_sketch(dels, agg.cbf_over_ints("o_orderkey", n=50_000, p=0.001)))
+    spec = agg.SketchSpec("o_orderkey", lambda: CountingBloomFilter(50_000, 0.001))
+    sk = agg.aggregate_sketch(ins, spec)
+    sk.subtract(agg.aggregate_sketch(dels, spec))
     pre = lineitem.filter(contains_udf(spark, sk, ints=True)(F.col("l_orderkey")))
     live = (orders.filter(big & (F.col("o_orderstatus") != "F"))
             .select(F.col("o_orderkey").alias("l_orderkey")).distinct())
@@ -259,7 +268,7 @@ SELECT COUNT(*) AS n_docs, COUNT(*) AS n_contained FROM {_TOKENS_SQL}
 
 def q_hll_docs_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.hll_over_strings("doc_id"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.SketchSpec("doc_id", HyperLogLog))
     ests = [(r[0], float(sketch_from_bytes(r.sketch).estimate())) for r in per_src.collect()]
     lit = spark.createDataFrame(ests, "source string, est double")
     exact = tokens.groupBy("source").agg(F.countDistinct("doc_id").alias("n_docs"))
@@ -282,7 +291,7 @@ def q_hll_docs_by_source_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources): rows group by (source, salt) first, per-key partials
     merge second — no task ever owns all of the 55%-skewed 'web' key."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.hll_over_strings("doc_id"),
+    per_src = agg.grouped_sketch(tokens, "source", agg.SketchSpec("doc_id", HyperLogLog),
                                  strategy="salted", salt=8)
     ests = [(r[0], float(sketch_from_bytes(r.sketch).estimate())) for r in per_src.collect()]
     lit = spark.createDataFrame(ests, "source string, est double")
@@ -392,7 +401,8 @@ def q_theta_token_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/theta.py).  Asserted within 10% of the exact overlap
     (3-sigma of ~k*J common samples; measured ~2% on this data)."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.theta_over_tokens("tokens"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.SketchSpec(
+        "tokens", lambda: agg.TokenDedupAccumulator(ThetaSketch())))
     sk = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     est = sk["web"].intersection_estimate(sk["books"])
     webs = tokens.filter(F.col("source") == "web").select(F.explode("tokens").alias("t")).distinct()
@@ -421,7 +431,8 @@ def q_theta_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact (same 3-sigma-of-common-samples argument as the overlap gate;
     measured ~2-3% on this data)."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.theta_over_tokens("tokens"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.SketchSpec(
+        "tokens", lambda: agg.TokenDedupAccumulator(ThetaSketch())))
     sk = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     d_est = sk["web"].difference_estimate(sk["books"])
     j_est = sk["web"].jaccard_estimate(sk["books"])
@@ -454,7 +465,8 @@ def q_cms_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     tokens = load_tokens(spark, sf_dir)
-    cms = agg.aggregate_sketch(tokens, agg.cms_over_tokens("tokens", eps=1e-4))
+    cms = agg.aggregate_sketch(tokens, agg.SketchSpec(
+        "tokens", lambda: agg.TokenDedupAccumulator(CountMinSketch(1e-4))))
     w = Window.orderBy(F.desc("cnt"), F.asc("token"))
     top = (
         tokens.select(F.explode("tokens").alias("token"))
@@ -937,8 +949,8 @@ def q_fd_embedding_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     d = 64
     vecs = emb.select("embedding")
-    gram = agg.aggregate_sketch(vecs, agg.gram_over_vectors("embedding", d))
-    fd = agg.aggregate_sketch(vecs, agg.fd_over_vectors("embedding", d, ell=32))
+    gram = agg.aggregate_sketch(vecs, agg.SketchSpec("embedding", lambda: ExactGram(d)))
+    fd = agg.aggregate_sketch(vecs, agg.SketchSpec("embedding", lambda: FrequentDirections(d, 32)))
     diff_eigs = np.linalg.eigvalsh(gram.G - fd.gram())
     tol = 1e-6 * fd.fnorm2
     psd_ok = bool(diff_eigs.min() >= -tol) and gram.n == fd.n
@@ -1135,7 +1147,6 @@ def q_countsketch_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     4σ of the Thorup-Zhang variance envelopes."""
     import numpy as np
 
-    from presto_bloomfilter_spark.functions.countsketch import CountSketch
     from presto_bloomfilter_spark.operators.contamination import split_words
 
     width = 4096
@@ -1143,7 +1154,7 @@ def q_countsketch_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select("source", F.explode(split_words("text")).alias("word"))
 
     per_src = agg.grouped_sketch(
-        words, "source", agg.countsketch_over_strings("word", width=width))
+        words, "source", agg.SketchSpec("word", lambda: CountSketch(width)))
     sks = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     a, b = sorted(sks)[:2]
     merged = None
@@ -1303,7 +1314,7 @@ def q_tdigest_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling (north_rule lists both t-digest and KLL); asserted within
     rank-error envelopes against the exact empirical CDF."""
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.tdigest_over_column("n_tok"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.SketchSpec("n_tok", TDigest))
     rows = []
     tol = None
     for r in per_src.collect():
@@ -1340,7 +1351,7 @@ def q_ddsketch_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = load_tokens(spark, sf_dir)
     alpha = 0.01
     per_src = agg.grouped_sketch(
-        tokens, "source", agg.ddsketch_over_column("n_tok", alpha=alpha))
+        tokens, "source", agg.SketchSpec("n_tok", lambda: DDSketch(alpha)))
     rows = []
     for r in per_src.collect():
         sk = sketch_from_bytes(r.sketch)
@@ -4340,7 +4351,7 @@ def q_streaming_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
 
     sink = run_stream_from_files(
         spark, in_dir, "doc_id string",
-        agg.hll_over_strings("doc_id"),
+        agg.SketchSpec("doc_id", HyperLogLog),
         SketchStore(f"{root}/store"), "maint", f"{root}/ckpt",
     )
     est = sink.current().estimate()
@@ -4458,7 +4469,7 @@ def q_moments_ntok_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = load_tokens(spark, sf_dir).select(
         "source", F.col("n_tok").cast("double").alias("ntokd"))
     grouped = agg.grouped_sketch(
-        tokens, "source", agg.moments_over_column("ntokd", 0.0, 1024.0))
+        tokens, "source", agg.SketchSpec("ntokd", lambda: MomentsSketch(0.0, 1024.0)))
     est = [(r["source"],
             float(sketch_from_bytes(r["sketch"]).quantile(0.5)),
             float(sketch_from_bytes(r["sketch"]).quantile(0.9)))
@@ -4492,7 +4503,7 @@ def q_sql_sketch_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "source")
     agg.grouped_sketch(
-        docs, "source", agg.hll_over_strings("doc_id")
+        docs, "source", agg.SketchSpec("doc_id", HyperLogLog)
     ).createOrReplaceTempView("pbs_sketch_tbl")
     compat.register_sql_functions(spark)
     est = spark.sql(
@@ -4524,9 +4535,10 @@ def q_cms_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select("o_custkey")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
 
-    cms_li = agg.aggregate_sketch(li, agg.cms_over_ints("l_partkey", eps=1e-5))
-    cms_o = agg.aggregate_sketch(orders, agg.cms_over_ints("o_custkey", eps=1e-5))
-    cms_c = agg.aggregate_sketch(cust, agg.cms_over_ints("c_custkey", eps=1e-5))
+    def cms(df, col):
+        return agg.aggregate_sketch(df, agg.SketchSpec(col, lambda: CountMinSketch(1e-5)))
+
+    cms_li, cms_o, cms_c = cms(li, "l_partkey"), cms(orders, "o_custkey"), cms(cust, "c_custkey")
 
     self_est = cms_li.inner_product(cms_li)
     self_slack = cms_li.inner_product_bound(cms_li)
@@ -4618,9 +4630,9 @@ def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id")).repartition(8)
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_ckpt_"))
     sk1, built1 = checkpointed_aggregate(
-        spark, docs, agg.hll_over_strings("doc_id"), store, "cr")
+        spark, docs, agg.SketchSpec("doc_id", HyperLogLog), store, "cr")
     sk2, built2 = checkpointed_aggregate(
-        spark, docs, agg.hll_over_strings("doc_id"), store, "cr")
+        spark, docs, agg.SketchSpec("doc_id", HyperLogLog), store, "cr")
     n_exact = docs.distinct().count()
     est = sk2.estimate()
     return spark.createDataFrame(
@@ -4662,7 +4674,7 @@ def q_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     files_a = sorted(glob.glob(root + "/a/*.parquet"))
     files_b = sorted(glob.glob(root + "/b/*.parquet"))
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_incstore_"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
 
     _, n1 = incremental_aggregate(spark, files_a, spec, store, "inc")
     sk2, n2 = incremental_aggregate(spark, files_a + files_b, spec, store, "inc")
@@ -4719,7 +4731,7 @@ def q_incremental_update_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.commit(adds=files_b)
 
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_deltastore_"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
     sk1, n1 = incremental_aggregate_delta(spark, t, spec, store, "incd", 1)
     snap1 = IncrementalBuild(store, "incd").snapshot
     sk2, n2 = incremental_aggregate_delta(spark, t, spec, store, "incd")
@@ -4783,7 +4795,7 @@ def q_streaming_windowed_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = run_windowed_stream_from_files(
         spark, in_dir, "ts timestamp, user_id string",
-        agg.hll_over_strings("user_id"), time_col="ts",
+        agg.SketchSpec("user_id", HyperLogLog), time_col="ts",
         window_duration="1 day", watermark_delay="40 days",
         checkpoint=f"{root}/ckpt",
     ).collect()

@@ -100,10 +100,7 @@ class SketchStore:
         ``load_merged_distributed`` is the scale path."""
         if not keys:
             raise ValueError("no keys")
-        out = self.get(keys[0])
-        for k in keys[1:]:
-            out.merge(self.get(k))
-        return out
+        return ser.merge_blobs(self.get_bytes(k) for k in keys)
 
     def load_merged_distributed(self, spark, keys: list[str], fan_in: int = 16):
         """Union of many persisted sketches WITHOUT the driver ever
@@ -112,9 +109,10 @@ class SketchStore:
         shared bounded-fan-in tree merge finishes.  The store root must
         be reachable from executors (shared fs / object store — the same
         assumption the atomic-rename persist already makes)."""
-        from presto_bloomfilter_spark.operators.aggregate import _tree_merge_collect
-
-        import pyarrow as pa
+        from presto_bloomfilter_spark.operators.aggregate import (
+            _blob_batch,
+            _tree_merge_collect,
+        )
 
         if not keys:
             raise ValueError("no keys")
@@ -124,14 +122,10 @@ class SketchStore:
             [(k,) for k in sorted(keys)], "key string").repartition(n_tasks)
 
         def load_and_merge(batches):
-            sk = None
-            for b in batches:
-                for k in b.column(0).to_pylist():
-                    other = ser.sketch_from_bytes(store.get_bytes(k))
-                    sk = other if sk is None else sk.merge(other)
+            sk = ser.merge_blobs(store.get_bytes(k) for b in batches
+                                 for k in b.column(0).to_pylist())
             if sk is not None:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
+                yield _blob_batch(sk)
 
         partials = kdf.mapInArrow(load_and_merge, "sketch binary")
         return _tree_merge_collect(partials, n_tasks, fan_in)
@@ -279,6 +273,8 @@ def checkpointed_aggregate(spark, df, spec, store: SketchStore, job_id: str,
     import pyarrow as pa
     from pyspark import TaskContext
 
+    from presto_bloomfilter_spark.operators.aggregate import _build_partial
+
     ckpt = CheckpointedBuild(store, job_id, source_snapshot=source_snapshot)
     done = frozenset(ckpt.done_partitions())
 
@@ -286,12 +282,7 @@ def checkpointed_aggregate(spark, df, spec, store: SketchStore, job_id: str,
         pid = TaskContext.get().partitionId()
         if pid in done:
             return
-        sk = spec.factory()
-        rows = 0
-        for b in batches:
-            rows += b.num_rows
-            if b.num_rows:
-                spec.update(sk, b)
+        sk, rows = _build_partial(spec, batches)
         blob = sk.to_bytes()
         # executor-side persist: blob goes store-ward from the task that
         # built it; the driver only ever sees the 3-field lineage row
@@ -404,7 +395,10 @@ class IncrementalBuild:
         ``<table-id>@v3``) instead of a file-set fingerprint."""
         import pyarrow as pa
 
-        from presto_bloomfilter_spark.operators.aggregate import _unwrap
+        from presto_bloomfilter_spark.operators.aggregate import (
+            _build_partial,
+            _row_group_batches,
+        )
 
         if not files:
             raise ValueError("empty snapshot: no files")
@@ -415,21 +409,14 @@ class IncrementalBuild:
         new = _delta_or_raise(self.files, files, sizes)
         if new:
             job_id, store, cols = self.job_id, self.store, list(spec.columns)
-            factory, update = spec.factory, spec.update
             fdf = spark.createDataFrame(
                 [(f,) for f in new], "path string").repartition(len(new), "path")
 
             def build(batches):
-                import pyarrow.parquet as pq
                 for b in batches:
                     for path in b.column(0).to_pylist():
-                        sk = factory()
-                        rows = 0
-                        for rb in pq.ParquetFile(path).iter_batches(columns=cols):
-                            rows += rb.num_rows
-                            if rb.num_rows:
-                                update(sk, rb)
-                        blob = _unwrap(sk).to_bytes()
+                        sk, rows = _build_partial(spec, _row_group_batches(path, cols))
+                        blob = sk.to_bytes()
                         store.put(_file_key(job_id, path), blob)
                         yield pa.RecordBatch.from_arrays(
                             [pa.array([path], pa.string()),

@@ -30,10 +30,11 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
-from presto_bloomfilter_spark.operators.aggregate import SketchSpec, _unwrap
+from presto_bloomfilter_spark.operators.aggregate import SketchSpec, _build_partial, _unwrap
 
 
 def windowed_sketch_stream(
@@ -66,6 +67,9 @@ def windowed_sketch_stream(
     # the watermarked event-time column must survive the projection or
     # Catalyst loses the watermark→stateful-operator linkage
     cols = list(dict.fromkeys(["window_start", "window_end", time_col, *spec.columns]))
+    # pandas floats a nullable int column (NaN for NULL); the Spark
+    # schema puts it back to exact ints before update picks the path
+    arrow_schema = to_arrow_schema(bucketed.select(*spec.columns).schema)
 
     def fold(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
         import pyarrow as pa
@@ -88,11 +92,9 @@ def windowed_sketch_stream(
                 continue
             window_end = pdf["window_end"].iloc[0]
             batch = pa.RecordBatch.from_pandas(
-                pdf[list(spec.columns)], preserve_index=False
+                pdf[list(spec.columns)], schema=arrow_schema, preserve_index=False
             )
-            fresh = spec.factory()
-            spec.update(fresh, batch)
-            sk = sk.merge(_unwrap(fresh)) if sk is not None else _unwrap(fresh)
+            sk = sk.merge(_build_partial(spec, [batch])[0])
         state.update((sk.to_bytes(),))
         if window_end is not None:
             # fire when the watermark passes the end of this window;

@@ -8,6 +8,7 @@ from pyspark.sql import SparkSession, functions as F
 
 sys.path.insert(0, sys.argv[1])
 
+from presto_bloomfilter_spark import HyperLogLog
 from presto_bloomfilter_spark.operators import aggregate as agg
 
 marker = tempfile.mktemp(prefix="pbs_retry_")
@@ -49,10 +50,10 @@ gbase = spark.range(0, 100_000).selectExpr(
     "cast(id as string) as k", "cast(id % 4 as string) as g").repartition(8)
 gflaky = gbase.mapInPandas(fail_once, "k string, g string")
 a = {r["g"]: bytes(r["sketch"]) for r in
-     agg.grouped_sketch(gflaky, "g", agg.hll_over_strings("k")).collect()}
+     agg.grouped_sketch(gflaky, "g", agg.SketchSpec("k", HyperLogLog)).collect()}
 assert os.path.exists(marker), "grouped injection never fired"
 b = {r["g"]: bytes(r["sketch"]) for r in
-     agg.grouped_sketch(gbase, "g", agg.hll_over_strings("k")).collect()}
+     agg.grouped_sketch(gbase, "g", agg.SketchSpec("k", HyperLogLog)).collect()}
 assert a == b, "grouped retry diverged"
 print("RETRY_DETERMINISM_OK")
 spark.stop()

@@ -6,7 +6,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from presto_bloomfilter_spark import BloomFilter, sketch_from_bytes
+import pandas as pd
+import pyarrow as pa
+
+from presto_bloomfilter_spark import (
+    BloomFilter, CountingBloomFilter, CountMinSketch, CountSketch, DDSketch, ExactGram,
+    FrequentDirections, HyperLogLog, KLLSketch, MisraGries, MomentsSketch,
+    SplitBlockBloomFilter, TDigest, ThetaSketch, sketch_from_bytes,
+)
+from presto_bloomfilter_spark.functions.multi import MultiSketch
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators.probe import bloom_semi_join, filter_by_sketch
 from presto_bloomfilter_spark.sources.corpus import load_tokens
@@ -15,6 +23,10 @@ from presto_bloomfilter_spark.sources.corpus import load_tokens
 @pytest.fixture(scope="module")
 def tokens(spark, sf_dir):
     return load_tokens(spark, sf_dir).cache()
+
+
+def _bloom_tokens(n=100_000, p=0.01):
+    return agg.SketchSpec("tokens", lambda: agg.TokenDedupAccumulator(BloomFilter(n, p)))
 
 
 def test_bloom_over_doc_ids(spark, tokens):
@@ -30,7 +42,7 @@ def test_bloom_over_doc_ids(spark, tokens):
 def test_parallelism_invariance(spark, tokens):
     """Same sketch bytes at 1, 4, 13 partitions — the key invariant for
     a hand-built partial/merge protocol (SURVEY.md §7)."""
-    spec = agg.bloom_over_tokens("tokens", 100_000, 0.01)
+    spec = _bloom_tokens()
     digests = set()
     for parts in (1, 4, 13):
         bf = agg.aggregate_sketch(tokens.repartition(parts), spec, fan_in=4)
@@ -51,7 +63,8 @@ def test_hll_vs_exact_and_spark_builtin(spark, tokens):
 
 
 def test_cms_token_frequencies(spark, tokens):
-    cms = agg.aggregate_sketch(tokens, agg.cms_over_tokens("tokens", eps=1e-4))
+    cms = agg.aggregate_sketch(tokens, agg.SketchSpec(
+        "tokens", lambda: agg.TokenDedupAccumulator(CountMinSketch(1e-4))))
     top = (
         tokens.select(F.explode("tokens").alias("t"))
         .groupBy("t")
@@ -102,9 +115,9 @@ def test_grouped_sketch_strategies_agree(spark, tokens):
 
 
 def test_merge_sketch_column(spark, tokens):
-    per_source = agg.grouped_sketch(tokens, "source", agg.bloom_over_tokens("tokens", 100_000))
+    per_source = agg.grouped_sketch(tokens, "source", _bloom_tokens(p=BloomFilter.DEFAULT_FPP))
     merged = agg.merge_sketch_column(per_source, "sketch")
-    direct = agg.aggregate_sketch(tokens, agg.bloom_over_tokens("tokens", 100_000))
+    direct = agg.aggregate_sketch(tokens, _bloom_tokens(p=BloomFilter.DEFAULT_FPP))
     assert merged == direct  # union of per-group = global
 
 
@@ -133,7 +146,7 @@ def test_fused_parquet_scan_matches_dataframe_path(spark, sf_dir):
     from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet
 
     path = ensure_tokens_parquet(sf_dir)
-    spec = agg.bloom_over_tokens("tokens", 100_000, 0.01)
+    spec = _bloom_tokens()
     via_df = agg.aggregate_sketch(load_tokens(spark, sf_dir), spec)
     via_fused = agg.aggregate_sketch_from_parquet(spark, path, spec, n_tasks=7)
     assert via_fused.sha256 == via_df.sha256
@@ -167,10 +180,10 @@ def test_dedup_accumulator_range_fallback():
     rng = np.random.default_rng(7)
     small = rng.integers(0, 50_000, size=10_000)
     huge = rng.integers(0, 2**31 - 1, size=10_000)
-    spec = agg.bloom_over_tokens("tokens", 100_000, 0.01)
+    spec = _bloom_tokens()
     acc = spec.factory()
-    acc.add_flat(small)
-    acc.add_flat(huge)  # range blows past cap → flush + direct
+    acc.add_ints(small)
+    acc.add_ints(huge)  # range blows past cap → flush + direct
     got = acc.finish()
     ref = BloomFilter(100_000, 0.01)
     ref.add_ints(small)
@@ -186,11 +199,11 @@ def test_multisketch_roundtrip_and_merge_invariance():
     b = rng.integers(0, 30_000, size=50_000)
     spec = agg.token_family_over_tokens("tokens")
 
-    whole = spec.factory(); whole.add_flat(np.concatenate([a, b]))
+    whole = spec.factory(); whole.add_ints(np.concatenate([a, b]))
     whole = whole.finish()
 
-    left = spec.factory(); left.add_flat(a)
-    right = spec.factory(); right.add_flat(b)
+    left = spec.factory(); left.add_ints(a)
+    right = spec.factory(); right.add_ints(b)
     merged = left.finish().merge(right.finish())
 
     rt = sketch_from_bytes(merged.to_bytes())
@@ -205,8 +218,7 @@ def test_multisketch_roundtrip_and_merge_invariance():
 def test_build_metrics_accumulators(spark, tokens):
     m = agg.BuildMetrics(spark)
     n = tokens.count()
-    agg.aggregate_sketch(tokens.repartition(6), agg.bloom_over_tokens("tokens", 100_000, 0.01),
-                         fan_in=4, target_partials=6, metrics=m)
+    agg.aggregate_sketch(tokens.repartition(6), _bloom_tokens(), fan_in=4, target_partials=6, metrics=m)
     d = m.as_dict()
     assert d["rows"] == n
     assert d["partial_sketches"] == 6
@@ -326,6 +338,23 @@ def test_bloom_over_ints_ignores_nulls(spark):
     assert sk.might_contain(1) and sk.might_contain(3)
 
 
+def test_grouped_sketch_salted_nullable_int_column(spark):
+    """The salted path hands each group to pandas, which floats a
+    nullable long column (NaN for NULL).  The batch must go back to
+    exact int64 so the NULL is skipped and the ints take the int hash:
+    the same blobs as the map_side path, which never leaves Arrow."""
+    df = spark.createDataFrame(
+        [("a", 1), ("a", None), ("a", 2**53 + 1), ("b", 7), ("b", None)],
+        "g string, k bigint").coalesce(1)
+    for spec in (agg.SketchSpec("k", HyperLogLog), agg.bloom_over_ints("k", 1000, 0.01)):
+        map_side = {r["g"]: bytes(r["sketch"]) for r in agg.grouped_sketch(df, "g", spec).collect()}
+        salted = {r["g"]: bytes(r["sketch"]) for r in agg.grouped_sketch(
+            df, "g", spec, strategy="salted", salt=2).collect()}
+        assert salted == map_side
+    bf = sketch_from_bytes(salted["a"])
+    assert bf.might_contain(1) and bf.might_contain(2**53 + 1)
+
+
 def test_grouped_sketch_null_keys_both_strategies(spark):
     """A NULL group key must neither crash the map_side Arrow split
     (np.unique can't sort None vs str) nor diverge between strategies:
@@ -335,7 +364,7 @@ def test_grouped_sketch_null_keys_both_strategies(spark):
         "g string, v string").coalesce(1)
     for strategy, kw in (("map_side", {}), ("salted", {"salt": 2})):
         out = {r["g"]: r["sketch"] for r in agg.grouped_sketch(
-            df, "g", agg.hll_over_strings("v"), strategy=strategy, **kw).collect()}
+            df, "g", agg.SketchSpec("v", HyperLogLog), strategy=strategy, **kw).collect()}
         assert set(out) == {"a", None}, (strategy, set(out))
         from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
         assert round(sketch_from_bytes(out[None]).estimate()) == 2, strategy
@@ -348,7 +377,7 @@ def test_grouped_sketch_salted_int_key(spark):
     df = spark.createDataFrame(
         [(2021, "a"), (2021, "b"), (2022, "c")], "year int, v string")
     out = {r["year"]: r["sketch"] for r in agg.grouped_sketch(
-        df, "year", agg.hll_over_strings("v"), strategy="salted", salt=2).collect()}
+        df, "year", agg.SketchSpec("v", HyperLogLog), strategy="salted", salt=2).collect()}
     assert set(out) == {"2021", "2022"}
 
 
@@ -365,7 +394,7 @@ def test_grouped_from_parquet_rejects_diverging_key_types(spark, tmp_path):
         agg.grouped_sketch_from_parquet(spark, p + "/" +
                                         next(f for f in __import__("os").listdir(p)
                                              if f.endswith(".parquet")),
-                                        "k", agg.hll_over_strings("v"))
+                                        "k", agg.SketchSpec("v", HyperLogLog))
 
 
 def test_grouped_sketch_key_labels_agree_across_strategies(spark):
@@ -379,8 +408,136 @@ def test_grouped_sketch_key_labels_agree_across_strategies(spark):
     bools = spark.createDataFrame(
         [(True, "a"), (False, "b")], "k boolean, v string")
     for frame in (df, bools):
-        spec = agg.hll_over_strings("v")
+        spec = agg.SketchSpec("v", HyperLogLog)
         m = {r["k"] for r in agg.grouped_sketch(frame, "k", spec).collect()}
         s = {r["k"] for r in agg.grouped_sketch(
             frame, "k", spec, strategy="salted", salt=2).collect()}
         assert m == s, (m, s)
+
+
+# ---- SketchSpec type dispatch (Spark-free) ------------------------------------
+
+# three batches per Arrow input type, NULLs included
+_RAW = {
+    "list<int>": ([[3, 1, None, 3], None, [7]], [[2**20 + 5, 1], [], [None]], [[9, 9, 9], [4]]),
+    "int": ([5, None, 2**53 + 1], [None, None], [-7, 0, 11]),
+    "string": (["a", None, "b", ""], ["b", "c"], [None]),
+    "float": ([1.5, None, 2.0], [0.25, 3.0], [None, 8.0]),
+    "list<float>": ([[1.0, 0.0], None, [0.5, 2.0]], [[3.0, -1.0]], [None]),
+}
+_ARROW_TYPES = {
+    "list<int>": pa.list_(pa.int32()), "int": pa.int64(), "string": pa.string(),
+    "float": pa.float64(), "list<float>": pa.list_(pa.float64()),
+}
+
+
+def _native(arrow_type, rows):
+    """A batch's non-null values in the form the sketch's own insert
+    method takes, built from the Python lists (not through Arrow)."""
+    rows = [r for r in rows if r is not None]
+    if arrow_type == "list<int>":
+        return np.array([x for r in rows for x in r if x is not None], dtype=np.int64)
+    if arrow_type == "int":
+        return np.array(rows, dtype=np.int64)
+    if arrow_type == "string":
+        return pd.Series(rows, dtype=object)
+    if arrow_type == "float":
+        return np.array(rows, dtype=np.float64)
+    return np.array(rows, dtype=np.float64).reshape(-1, 2)
+
+
+def _family():
+    return MultiSketch([BloomFilter(1000, 0.01), CountMinSketch(0.01, 0.05), HyperLogLog(10)])
+
+
+def _dedup(make):
+    return lambda: agg.TokenDedupAccumulator(make())
+
+
+# (sketch kind, Arrow input type, factory, own insert method): every pair
+# a retired ``*_over_*`` factory served
+_DISPATCH = [
+    *[(kind, "list<int>", _dedup(make), "add_ints") for kind, make in [
+        ("bloom", lambda: BloomFilter(1000, 0.01)),
+        ("sbbf", lambda: SplitBlockBloomFilter(1000, 0.01)),
+        ("hll", lambda: HyperLogLog(10)),
+        ("cms", lambda: CountMinSketch(0.01, 0.05)),
+        ("theta", lambda: ThetaSketch(64)),
+        ("family", _family)]],
+    ("mg", "list<int>", lambda: MisraGries(4), "add_ints"),
+    *[(kind, "int", make, "add_ints") for kind, make in [
+        ("bloom", lambda: BloomFilter(1000, 0.01)),
+        ("sbbf", lambda: SplitBlockBloomFilter(1000, 0.01)),
+        ("cbf", lambda: CountingBloomFilter(1000, 0.01)),
+        ("cms", lambda: CountMinSketch(0.01, 0.05)),
+        ("countsketch", lambda: CountSketch(64, 3))]],
+    *[(kind, "string", make, "add_strings") for kind, make in [
+        ("bloom", lambda: BloomFilter(1000, 0.01)),
+        ("sbbf", lambda: SplitBlockBloomFilter(1000, 0.01)),
+        ("cbf", lambda: CountingBloomFilter(1000, 0.01)),
+        ("hll", lambda: HyperLogLog(10)),
+        ("cms", lambda: CountMinSketch(0.01, 0.05)),
+        ("countsketch", lambda: CountSketch(64, 3)),
+        ("theta", lambda: ThetaSketch(64)),
+        ("mg", lambda: MisraGries(4))]],
+    *[(kind, "float", make, "add") for kind, make in [
+        ("kll", lambda: KLLSketch(8)),
+        ("tdigest", lambda: TDigest(50)),
+        ("moments", lambda: MomentsSketch(-1.0, 10.0)),
+        ("ddsketch", lambda: DDSketch(0.05))]],
+    ("fd", "list<float>", lambda: FrequentDirections(2, 2), "add"),
+    ("gram", "list<float>", lambda: ExactGram(2), "add"),
+]
+
+
+@pytest.mark.parametrize(
+    "kind,arrow_type,make,method", _DISPATCH,
+    ids=[f"{k}-{t}" for k, t, _, _ in _DISPATCH])
+def test_sketch_spec_update_matches_native_insert(kind, arrow_type, make, method):
+    """SketchSpec.update picks the insert path from the column's Arrow
+    type and skips NULLs: over three batches (NULLs inside lists and
+    NULL rows included) it yields the bytes of calling the sketch's own
+    insert method on each batch's non-null values."""
+    spec = agg.SketchSpec("c", make)
+    got, want = spec.factory(), make()
+    for rows in _RAW[arrow_type]:
+        batch = pa.RecordBatch.from_arrays([pa.array(rows, _ARROW_TYPES[arrow_type])], ["c"])
+        spec.update(got, batch)
+        getattr(want, method)(_native(arrow_type, rows))
+    assert agg._unwrap(got).to_bytes() == agg._unwrap(want).to_bytes()
+
+
+def test_sketch_spec_real_nan_still_reaches_the_sketch():
+    """Only NULLs are dropped: a real NaN is the sketch's to handle, as
+    on direct use (DDSketch rejects it, KLL skips it)."""
+    batch = pa.RecordBatch.from_arrays([pa.array([1.0, float("nan"), None])], ["c"])
+    with pytest.raises(ValueError, match="NaN"):
+        agg.SketchSpec("c", DDSketch).update(DDSketch(), batch)
+    kll = KLLSketch()
+    agg.SketchSpec("c", KLLSketch).update(kll, batch)
+    assert kll.n == 1
+
+
+@pytest.mark.parametrize("make", [
+    lambda: BloomFilter(1000, 0.01), lambda: SplitBlockBloomFilter(1000, 0.01),
+    lambda: CountingBloomFilter(1000, 0.01), HyperLogLog, lambda: CountMinSketch(0.01, 0.05),
+    lambda: ThetaSketch(64), lambda: MisraGries(4), lambda: CountSketch(64, 3),
+    lambda: agg.TokenDedupAccumulator(HyperLogLog(10)),
+], ids=["bloom", "sbbf", "cbf", "hll", "cms", "theta", "mg", "countsketch", "dedup"])
+def test_sketch_spec_rejects_floats_into_hash_sketch(make):
+    """A hash sketch has no float insert: a floating column (or a list
+    of floats) is a TypeError, not a one-element ``add(array)`` that
+    inserts ``str(array)`` or an AttributeError."""
+    for arr in (pa.array([1.0, None, 3.0]), pa.array([[1.0], None], pa.list_(pa.float64()))):
+        batch = pa.RecordBatch.from_arrays([arr], ["c"])
+        with pytest.raises(TypeError, match="cast it to an integer or string"):
+            agg.SketchSpec("c", make).update(make(), batch)
+
+
+def test_sketch_spec_rejects_ragged_or_null_vectors():
+    """A vector with a NULL element or the wrong length cannot become an
+    (m, d) matrix row: loud error, not a silently shifted matrix."""
+    for rows in ([[1.0, None]], [[1.0, 2.0, 3.0]]):
+        batch = pa.RecordBatch.from_arrays([pa.array(rows, pa.list_(pa.float64()))], ["c"])
+        with pytest.raises(ValueError, match="ragged or null"):
+            agg.SketchSpec("c", lambda: ExactGram(2)).update(ExactGram(2), batch)

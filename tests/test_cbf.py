@@ -113,7 +113,7 @@ def test_aggregate_build_and_distributed_delete(spark, sf_dir):
     ins = orders.filter("o_totalprice > 200000").select("o_orderkey")
     dels = orders.filter("o_totalprice > 200000 AND o_orderstatus = 'F'") \
                  .select("o_orderkey")
-    spec = lambda: agg.cbf_over_ints("o_orderkey", n=50_000, p=0.001)  # noqa: E731
+    spec = lambda: agg.SketchSpec("o_orderkey", lambda: CountingBloomFilter(50_000, 0.001))  # noqa: E731
     sk = agg.aggregate_sketch(ins, spec())
     assert type(sk) is CountingBloomFilter
     sk.subtract(agg.aggregate_sketch(dels, spec()))

@@ -37,6 +37,18 @@ def test_contains_positive_negative(spark, names):
     ).collect()[0].hit
 
 
+def test_int_column_build_probes_with_contains(spark):
+    """The reference's bloom_filter takes varchar: an int column is
+    built and probed as its strings, so bloom_filter_contains finds
+    every key instead of missing them all."""
+    ids = spark.createDataFrame([(1,), (42,), (None,), (2**40,)], "id bigint")
+    bf = compat.bloom_filter(ids, "id", 1000, 0.01)
+    hits = ids.filter(F.col("id").isNotNull()).withColumn(
+        "hit", compat.bloom_filter_contains(spark, bf, "id")).collect()
+    assert len(hits) == 3 and all(r.hit for r in hits)
+    assert bf.might_contain("42")
+
+
 def test_custom_params_roundtrip(spark, names):
     """params survive serialization and read back via the header
     (TestBloomFilterQueries params query; get_* scalar fns)."""

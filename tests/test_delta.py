@@ -113,6 +113,7 @@ def test_spark_read_time_travel(spark, table):
 
 
 def test_incremental_aggregate_delta_snapshot_keyed(spark, table, tmp_path):
+    from presto_bloomfilter_spark import HyperLogLog
     from presto_bloomfilter_spark.operators import aggregate as agg
     from presto_bloomfilter_spark.store import (
         IncrementalBuild, SketchStore, incremental_aggregate_delta)
@@ -123,7 +124,7 @@ def test_incremental_aggregate_delta_snapshot_keyed(spark, table, tmp_path):
                         [f"b{i}" for i in range(200)])
     table.commit(adds=[f1])
     store = SketchStore(str(tmp_path / "store"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
 
     sk1, n1 = incremental_aggregate_delta(spark, table, spec, store, "dj", 1)
     assert n1 == 1

@@ -130,11 +130,11 @@ def test_spark_spec_matches_local(spark):
     bound)."""
     rows = [(f"w{i % 50}",) for i in range(2_000)]
     df = spark.createDataFrame(rows, "w string").repartition(8)
-    exact = agg.aggregate_sketch(df, agg.mg_over_strings("w", k=64))
+    exact = agg.aggregate_sketch(df, agg.SketchSpec("w", lambda: MisraGries(64)))
     assert exact.n == 2_000
     assert exact.error_bound() == 0
     est = exact.estimate_strings(pd.Series([f"w{i}" for i in range(50)]))
     assert est.tolist() == [40] * 50
-    trimmed = agg.aggregate_sketch(df, agg.mg_over_strings("w", k=8))
+    trimmed = agg.aggregate_sketch(df, agg.SketchSpec("w", lambda: MisraGries(8)))
     est2 = trimmed.estimate_strings(pd.Series(["w0"]))
     assert 40 - trimmed.error_bound() <= est2[0] <= 40

@@ -41,7 +41,7 @@ def test_sketch_build_scan_prunes_to_spec_columns(spark, sf_dir):
     # plan would swap in InMemoryTableScan and hide the parquet scan
     spark.catalog.clearCache()
     tokens = load_tokens(spark, sf_dir)
-    pruned = tokens.select(*agg.bloom_over_tokens("tokens").columns)
+    pruned = tokens.select(*agg.hll_over_tokens("tokens").columns)
     plan = _plan(pruned)
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m is not None

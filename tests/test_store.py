@@ -51,7 +51,7 @@ def test_invalid_keys_and_garbage(tmp_path):
 def test_checkpointed_aggregate_and_resume(spark, sf_dir, tmp_path):
     store = SketchStore(str(tmp_path))
     tokens = load_tokens(spark, sf_dir).repartition(6)
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
 
     sk1, computed1 = checkpointed_aggregate(spark, tokens, spec, store, "job1", "snap-A")
     assert computed1 == 6
@@ -88,7 +88,7 @@ def test_checkpointed_aggregate_driver_never_holds_partials(spark, sf_dir, tmp_p
     see this monkeypatch — any driver-side blob load would count)."""
     store = SketchStore(str(tmp_path))
     tokens = load_tokens(spark, sf_dir).repartition(64)
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
 
     driver_reads = []
     real_get_bytes = SketchStore.get_bytes
@@ -160,8 +160,8 @@ def test_sketch_table_keyed_merge_is_distributed(spark, tmp_path, monkeypatch):
     tokens = load_tokens(spark, "/root/testdata/sf0.001")
     half_a = tokens.filter(F.crc32(F.col("doc_id").cast("string")) % 2 == 0)
     half_b = tokens.filter(F.crc32(F.col("doc_id").cast("string")) % 2 != 0)
-    per_src_a = agg.grouped_sketch(half_a, "source", agg.hll_over_strings("doc_id"))
-    per_src_b = agg.grouped_sketch(half_b, "source", agg.hll_over_strings("doc_id"))
+    per_src_a = agg.grouped_sketch(half_a, "source", agg.SketchSpec("doc_id", HyperLogLog))
+    per_src_b = agg.grouped_sketch(half_b, "source", agg.SketchSpec("doc_id", HyperLogLog))
     path = str(tmp_path / "split_table")
     write_sketch_table(per_src_a.union(per_src_b), path)
     n_keys = per_src_a.count()
@@ -285,7 +285,7 @@ def test_incremental_update_equals_full_rebuild(spark, sf_dir, tmp_path):
     files_a = _write_snapshot(even, str(tmp_path / "a"), 3)
     files_b = _write_snapshot(odd, str(tmp_path / "b"), 2)
     store = SketchStore(str(tmp_path / "store"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
 
     sk1, n1 = incremental_aggregate(spark, files_a, spec, store, "inc")
     assert n1 == 3
@@ -316,7 +316,7 @@ def test_incremental_update_directory_form(spark, sf_dir, tmp_path):
     _write_snapshot(tokens, str(tmp_path / "snap"), 2)
     store = SketchStore(str(tmp_path / "store"))
     sk, n = incremental_aggregate(
-        spark, str(tmp_path / "snap"), agg.hll_over_strings("doc_id"), store, "d")
+        spark, str(tmp_path / "snap"), agg.SketchSpec("doc_id", HyperLogLog), store, "d")
     assert n == 2
     exact = tokens.select("doc_id").distinct().count()
     assert abs(sk.estimate() - exact) <= 0.03 * exact
@@ -330,7 +330,7 @@ def test_incremental_refuses_rewritten_and_vanished_files(spark, sf_dir, tmp_pat
     tokens = load_tokens(spark, sf_dir)
     files = _write_snapshot(tokens, str(tmp_path / "snap"), 3)
     store = SketchStore(str(tmp_path / "store"))
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
     _, n = incremental_aggregate(spark, files, spec, store, "guard")
     assert n == 3
 
@@ -364,7 +364,7 @@ def test_incremental_driver_never_holds_partials(spark, sf_dir, tmp_path, monkey
     monkeypatch.setattr(SketchStore, "get_bytes",
                         lambda self, key: driver_reads.append(key) or real_get_bytes(self, key))
     sk, n = incremental_aggregate(
-        spark, files, agg.hll_over_strings("doc_id"), store, "big", fan_in=4)
+        spark, files, agg.SketchSpec("doc_id", HyperLogLog), store, "big", fan_in=4)
     assert n == 8 and driver_reads == []
     exact = tokens.select("doc_id").distinct().count()
     assert abs(sk.estimate() - exact) <= 0.03 * exact
@@ -383,7 +383,7 @@ def test_incremental_grouped_build_and_compact(spark, sf_dir, tmp_path):
     odd = tokens.filter(F.crc32(F.col("doc_id").cast("string")) % 2 != 0)
     files_a = _write_snapshot(even, str(tmp_path / "a"), 2)
     files_b = _write_snapshot(odd, str(tmp_path / "b"), 2)
-    spec = agg.hll_over_strings("doc_id")
+    spec = agg.SketchSpec("doc_id", HyperLogLog)
 
     inc = IncrementalGroupedBuild(str(tmp_path / "sketches"), "bysrc")
     _, n1 = inc.update(spark, files_a, "source", spec)
@@ -424,7 +424,7 @@ def test_sketch_estimates_decodes_executor_side(spark, sf_dir, tmp_path, monkeyp
     import presto_bloomfilter_spark.operators.aggregate as agg_mod
 
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.hll_over_strings("doc_id"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.SketchSpec("doc_id", HyperLogLog))
 
     decoded_on_driver = []
     real = agg_mod.sketch_from_bytes

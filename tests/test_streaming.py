@@ -4,6 +4,7 @@ idempotent micro-batch folding, replay safety."""
 import numpy as np
 import pytest
 
+from presto_bloomfilter_spark import CountMinSketch, HyperLogLog
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.sources.corpus import generate_tokens_table
 from presto_bloomfilter_spark.store import SketchStore
@@ -31,7 +32,7 @@ def test_stream_folds_all_files(spark, tmp_path):
         spark,
         indir,
         "doc_id string, tokens array<int>, n_tok int, source string",
-        agg.hll_over_strings("doc_id"),
+        agg.SketchSpec("doc_id", HyperLogLog),
         store,
         "stream1",
         str(tmp_path / "ckpt"),
@@ -43,7 +44,7 @@ def test_stream_folds_all_files(spark, tmp_path):
 
 def test_replayed_batch_is_skipped(spark, tmp_path):
     store = SketchStore(str(tmp_path / "store"))
-    spec = agg.cms_over_strings("doc_id", eps=0.01)
+    spec = agg.SketchSpec("doc_id", lambda: CountMinSketch(0.01))
     sink = StreamingSketchSink(spec, store, "jobR")
     df = spark.createDataFrame([("a",), ("b",)], "doc_id string")
     sink(df, epoch_id=0)
@@ -57,7 +58,9 @@ def test_replayed_batch_is_skipped(spark, tmp_path):
 def _write_ts_files(tmp_path, spark):
     """Three files advancing event time; file3's rows push the watermark
     past the first windows so they finalize. One row in file2 is late
-    (inside watermark) for window 0 and must still merge in."""
+    (inside watermark) for window 0 and must still merge in.  A NULL
+    user_id in file1 reaches the fold as a pandas float column and must
+    be skipped, not hashed or crash the insert."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -73,7 +76,7 @@ def _write_ts_files(tmp_path, spark):
                          "user_id": pa.array(uid, pa.int64())})
 
     # window = 10 min. w0: [0,10), w1: [10,20), w2: [20,30) ...
-    pq.write_table(mk([(1, 1), (2, 2), (3, 3), (11, 10)]), str(d / "f0.parquet"))
+    pq.write_table(mk([(1, 1), (2, 2), (3, 3), (5, None), (11, 10)]), str(d / "f0.parquet"))
     # advances watermark to ~21-10=11 > 10 → w0 closes next batch;
     # includes a LATE row for w0 (minute 4, within the 10-min delay)
     pq.write_table(mk([(21, 20), (4, 4), (12, 11)]), str(d / "f1.parquet"))
@@ -99,7 +102,7 @@ def test_windowed_stateful_sketch_stream(spark, tmp_path):
         spark,
         indir,
         "ts timestamp, user_id long",
-        agg.hll_over_strings("user_id"),
+        agg.SketchSpec("user_id", HyperLogLog),
         time_col="ts",
         window_duration="10 minutes",
         watermark_delay="10 minutes",
@@ -460,7 +463,7 @@ def test_windowed_stream_non_utc_session_timezone(spark, tmp_path):
             spark,
             indir,
             "ts timestamp, user_id long",
-            agg.hll_over_strings("user_id"),
+            agg.SketchSpec("user_id", HyperLogLog),
             time_col="ts",
             window_duration="10 minutes",
             watermark_delay="10 minutes",

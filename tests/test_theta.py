@@ -72,7 +72,8 @@ def test_grouped_theta_build_spark(spark, sf_dir):
     from pyspark.sql import functions as F
 
     tokens = load_tokens(spark, sf_dir)
-    per_src = agg.grouped_sketch(tokens, "source", agg.theta_over_tokens("tokens"))
+    per_src = agg.grouped_sketch(tokens, "source", agg.SketchSpec(
+        "tokens", lambda: agg.TokenDedupAccumulator(ThetaSketch())))
     sk = {r[0]: sketch_from_bytes(r.sketch) for r in per_src.collect()}
     exact = {r[0]: r[1] for r in tokens.select("source", F.explode("tokens").alias("t"))
              .groupBy("source").agg(F.countDistinct("t")).collect()}
