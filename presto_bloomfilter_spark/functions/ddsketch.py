@@ -6,11 +6,18 @@ contract is different and uniquely useful for token statistics: every
 quantile estimate of a positive value is within RELATIVE error ``alpha``
 of an exact quantile — ``|est - x_q| <= alpha * x_q`` — regardless of the
 distribution, and (unlike KLL/t-digest, whose byte output depends on
-merge order) its merge is LOSSLESS bucket-count addition: associative,
+merge order) its merge is bucket-count addition: associative,
 commutative, and byte-identical under any merge tree.  That makes it the
 one quantile sketch here whose estimates are provably invariant across
 shuffle nondeterminism, task retries, and fan-in shape — the property
 the north rule's "merge associativity" clause is really about.
+
+Both claims are qualified once ``_collapse`` fires (more than
+``max_bins`` buckets in a store): the merge stops being LOSSLESS, and
+quantiles that fall in the folded low bucket lose the ``alpha`` bound.
+The bytes stay merge-tree independent, since a fold always keeps the
+top ``max_bins`` indices of the union and sums the rest into the lowest
+kept one, whichever partial folded first.
 
 Log-spaced buckets: value x > 0 maps to index ceil(log_gamma(x)) with
 gamma = (1+alpha)/(1-alpha); bucket i estimates 2·gamma^i/(gamma+1)

@@ -54,9 +54,9 @@ def hash_ints64(values: np.ndarray, seed: int = 0) -> np.ndarray:
     that Arrow→pandas silently converted to float64 — NaN would cast
     to INT64_MIN garbage and ids above 2^53 have ALREADY lost
     precision, so hashing the cast-back would produce silent bloom
-    false negatives.  Mask the NULLs and keep the column integral
-    upstream (operators/probe.py's int path routes through a lossless
-    string cast for exactly this reason).
+    false negatives.  Drop the NULLs while the column is still Arrow
+    and keep it integral (``hash_dispatch`` in operators/aggregate.py
+    does this for both build and probe).
     """
     x = np.asarray(values)
     if x.dtype.kind == "f":

@@ -198,6 +198,25 @@ def _non_null(col) -> pa.Array:
     return col.drop_null() if col.null_count else col
 
 
+def hash_dispatch(sk, op: str, col: pa.Array, name: str):
+    """The one hash-path choice that build (``op="add"``) and probe
+    (``op="might_contain"``) share, so both hash a column the same way
+    by construction.  ``col`` is NULL-free; its Arrow type picks:
+
+    - integer → ``sk.<op>_ints`` on the exact ints (every int width
+      hashes alike, so an int32 build matches a bigint probe);
+    - floating → TypeError;
+    - anything else → ``sk.<op>_strings``.
+    """
+    if pa.types.is_floating(col.type):
+        raise TypeError(
+            f"floating column '{name}' ({col.type}) into hash sketch "
+            f"{type(sk).__name__}: cast it to an integer or string type")
+    if pa.types.is_integer(col.type):
+        return getattr(sk, op + "_ints")(col.to_numpy(zero_copy_only=False))
+    return getattr(sk, op + "_strings")(col.to_pandas())
+
+
 @dataclass(frozen=True)
 class SketchSpec:
     """What one build computes: ``factory()`` → an empty sketch (token
@@ -205,23 +224,20 @@ class SketchSpec:
     batch)`` → a vectorized insert of one Arrow batch's ``column``.
     Both run inside executors.
 
-    ``update`` picks the insert path from the column's Arrow type and
-    drops NULLs at the Arrow level first (converting first would float
-    an int batch: NaN for nulls, silent precision loss above 2^53):
+    ``update`` drops NULLs at the Arrow level first (converting first
+    would float an int batch: NaN for nulls, silent precision loss
+    above 2^53), flattens list columns (the vectorized F.explode,
+    SURVEY.md §2.3), then picks the insert path:
 
-    - string / large_string → ``add_strings``;
-    - integer → ``add_ints`` on the exact ints (``add`` for sketches
-      with no int path: the quantile family);
-    - list<integer> → flattened (the vectorized F.explode, SURVEY.md
-      §2.3), then ``add_ints``;
-    - floating → ``add`` (quantile family only);
+    - hash sketches (those with ``add_ints``) → :func:`hash_dispatch`,
+      the same choice the probe makes (a float column is a TypeError:
+      cast it to an integer or string type first);
     - list<floating> → an (m, ``sketch.d``) matrix, then ``add`` (FD /
-      Gram); a vector with a NULL element or the wrong length is loud.
+      Gram); a vector with a NULL element or the wrong length is loud;
+    - otherwise → ``add`` (the quantile family).
 
-    Other scalar types hash through ``add_strings``.  A floating column
-    into a hash sketch (one with ``add_ints``) is a TypeError: cast it
-    to an integer or string type first.  Real NaN values still reach
-    the sketch, which handles them as it does on direct use.
+    Real NaN values still reach the sketch, which handles them as it
+    does on direct use.
     """
 
     column: str
@@ -233,29 +249,20 @@ class SketchSpec:
 
     def update(self, sk, batch: pa.RecordBatch) -> None:
         col = _non_null(batch.column(batch.schema.get_field_index(self.column)))
-        t = col.type
-        nested = pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t)
-        if nested:
-            t = t.value_type
         hashed = hasattr(sk, "add_ints")
-        if hashed and pa.types.is_floating(t):
-            raise TypeError(
-                f"floating column '{self.column}' ({col.type}) into hash sketch "
-                f"{type(sk).__name__}: cast it to an integer or string type")
-        if nested:
-            if pa.types.is_floating(t):
+        t = col.type
+        if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+            if pa.types.is_floating(t.value_type) and not hashed:
                 if len(col):
                     sk.add(_matrix(col, sk.d, self.column))
                 return
             col = _non_null(col.flatten())
         if not len(col):
             return
-        if pa.types.is_integer(t) and hashed:
-            sk.add_ints(col.to_numpy(zero_copy_only=False))
-        elif pa.types.is_integer(t) or pa.types.is_floating(t):
-            sk.add(col.to_numpy(zero_copy_only=False))
+        if hashed:
+            hash_dispatch(sk, "add", col, self.column)
         else:
-            sk.add_strings(col.to_pandas())
+            sk.add(col.to_numpy(zero_copy_only=False))
 
 
 def _matrix(col: pa.Array, d: int, name: str) -> np.ndarray:

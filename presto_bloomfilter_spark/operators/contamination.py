@@ -233,7 +233,7 @@ def contamination_xor(
     test_grams = test_df.select(
         F.explode(word_ngrams(text_col, n)).alias("g")
     ).select(_bloomable(F.col("g")).alias("g"))
-    xf = build_xor_filter(test_grams, "g", fp_bits=fp_bits, ints=False)
+    xf = build_xor_filter(test_grams, "g", fp_bits=fp_bits)
     return _probe_and_aggregate(train_grams, xf)
 
 

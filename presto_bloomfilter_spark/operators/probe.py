@@ -4,7 +4,7 @@ The reference evaluates ``bloom_filter_contains(bf, el)`` per row with a
 Guava LRU keyed by the blob's sha256 prefix
 (BloomFilterScalarFunctions.java:25,46-61).  Spark-native translation
 (SURVEY.md §3.2): the sketch bytes ride a torrent broadcast to every
-executor; an *iterator* pandas UDF deserializes once per task (plus an
+executor; an *iterator* Arrow UDF deserializes once per task (plus an
 executor-local LRU keyed by the same sha256 header) and probes whole
 Arrow batches vectorized.  No cross join against a 1-row aggregate —
 a broadcast variable is the idiomatic Spark form of that pattern.
@@ -20,10 +20,10 @@ from collections import OrderedDict
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from presto_bloomfilter_spark.functions import serialization as ser
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
@@ -31,11 +31,13 @@ from presto_bloomfilter_spark.functions.sbbf import SplitBlockBloomFilter
 from presto_bloomfilter_spark.operators.aggregate import (
     DEFAULT_FAN_IN,
     SketchSpec,
+    _non_null,
     aggregate_sketch,
+    hash_dispatch,
 )
 
 # membership sketch per `kind` arg of bloom_semi_join; the key column's
-# (cast) Arrow type picks the string or int insert path
+# Arrow type picks the string or int hash path (hash_dispatch)
 _SEMI_JOIN_SPECS = {"bloom": BloomFilter, "sbbf": SplitBlockBloomFilter}
 
 # '' is invisible to every membership filter (reference empty-element
@@ -135,64 +137,46 @@ class ProbeMetrics:
         }
 
 
-def contains_udf(spark: SparkSession, sketch, ints: bool = False,
-                 metrics: ProbeMetrics | None = None):
+def contains_udf(spark: SparkSession, sketch, metrics: ProbeMetrics | None = None):
     """Vectorized membership predicate over a broadcast sketch.
 
     Returns a column function usable in ``df.filter`` — the Spark form
     of ``WHERE bloom_filter_contains(bf, col)`` (reference README.md:28).
-    Pass ``metrics`` to count probes/misses executor-side (the
-    reference's preMiss-style counters).
+    The key column's Arrow type picks the hash path through the same
+    :func:`hash_dispatch` the build uses (integer → exact int hash,
+    floating → TypeError, else string hash), so a column probes the
+    filter built over it.  NULLs are dropped at the Arrow level (no
+    float64 round trip for nullable ints) and probe False, as in the
+    reference (BloomFilterContainsScalarFunction.java:33-42).  Pass
+    ``metrics`` to count probes/misses executor-side (the reference's
+    preMiss-style counters).
     """
     blob = sketch.to_bytes() if hasattr(sketch, "to_bytes") else bytes(sketch)
     bv = spark.sparkContext.broadcast(blob)
 
-    if ints:
-        # Arrow→pandas turns a nullable int batch into float64: NaN for
-        # NULLs and SILENT precision loss above 2^53 (a snowflake-style
-        # id changes value → hash mismatch → bloom false negative).  So
-        # the int path casts to STRING JVM-side (lossless for bigint)
-        # and parses back to exact int64 here; NULLs probe False, same
-        # as the string form / reference null semantics.
-
-        @pandas_udf("boolean")
-        def probe_str(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            sk = _cached_sketch(bv.value)
-            for s in it:
-                out = np.zeros(len(s), dtype=bool)
-                mask = s.notna().to_numpy()
-                if mask.any():
-                    vals = s[mask].to_numpy().astype(np.int64)
-                    out[mask] = sk.might_contain_ints(vals)
-                if metrics is not None:
-                    metrics._probes.add(len(out))
-                    metrics._misses.add(int(len(out) - out.sum()))
-                yield pd.Series(out)
-
-        def probe(col):
-            from pyspark.sql import Column, functions as F
-
-            c = col if isinstance(col, Column) else F.col(col)
-            return probe_str(c.cast("string"))
-
-    else:
-
-        @pandas_udf("boolean")
-        def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            sk = _cached_sketch(bv.value)
-            for s in it:
-                hits = sk.might_contain_strings(s)
-                if metrics is not None:
-                    metrics._probes.add(len(hits))
-                    metrics._misses.add(int(len(hits) - hits.sum()))
-                yield pd.Series(hits)
+    @arrow_udf("boolean")
+    def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        sk = _cached_sketch(bv.value)
+        for keys in it:
+            hits = hash_dispatch(sk, "might_contain", _non_null(keys), "probe key")
+            if keys.null_count:
+                out = np.zeros(len(keys), dtype=bool)
+                out[keys.is_valid().to_numpy(zero_copy_only=False)] = hits
+                hits = out
+            if metrics is not None:
+                metrics._probes.add(len(hits))
+                metrics._misses.add(int(len(hits) - hits.sum()))
+            yield pa.array(hits)
 
     return probe
 
 
-def filter_by_sketch(spark: SparkSession, df: DataFrame, col: str, sketch, ints: bool = False) -> DataFrame:
+def filter_by_sketch(spark: SparkSession, df: DataFrame, col: str, sketch) -> DataFrame:
     """df rows whose `col` is (probably) in the sketch; no false negatives."""
-    return df.filter(contains_udf(spark, sketch, ints=ints)(F.col(col)))
+    return df.filter(contains_udf(spark, sketch)(F.col(col)))
+
+
+_INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
 
 
 def resolve_key_mode(probe_df: DataFrame, probe_col: str,
@@ -202,10 +186,9 @@ def resolve_key_mode(probe_df: DataFrame, probe_col: str,
     or through the lossless string cast (False), refusing pairs whose
     string forms would silently diverge.  Shared by every sketch-backed
     semi join (bloom/sbbf/xor)."""
-    int_types = {"tinyint", "smallint", "int", "bigint"}
     pt, bt = dict(probe_df.dtypes)[probe_col], dict(build_df.dtypes)[build_col]
-    ints = pt in int_types and bt in int_types
-    numeric = int_types | {"float", "double", "decimal"}
+    ints = pt in _INT_TYPES and bt in _INT_TYPES
+    numeric = _INT_TYPES | {"float", "double", "decimal"}
     if not ints and (pt.split("(")[0] in numeric) != (bt.split("(")[0] in numeric):
         # a numeric key against a non-numeric one would fall through to
         # the string path, where '5.0' != '5' silently DROPS matching
@@ -255,29 +238,38 @@ def bloom_semi_join(
                          f"one of {sorted(_SEMI_JOIN_SPECS)}")
     cls = _SEMI_JOIN_SPECS[kind]
     spec = SketchSpec(build_col, lambda: cls(expected_insertions, fpp))
-    ints = resolve_key_mode(probe_df, probe_col, build_df, build_col)
-    # the bloom build reads raw (non-distinct) keys: inserts are
-    # idempotent, so skipping .distinct() skips a whole shuffle of the
-    # build side; only the exact-verify broadcast below needs dedup
-    if ints:
-        # integer keys: no casts — int hashing stays pure numpy and the
-        # verify join compares native longs
-        raw_keys = build_df.select(build_col)
-        pre = probe_df.filter(contains_udf(spark, aggregate_sketch(raw_keys, spec, fan_in),
-                                           ints=True)(F.col(probe_col)))
-        join_cond_col = F.col(probe_col)
-    else:
-        raw_keys = build_df.select(F.col(build_col).cast("string").alias(build_col))
-        sent_keys = build_df.select(
-            _keyable(F.col(build_col).cast("string")).alias(build_col))
-        pre = probe_df.filter(contains_udf(spark, aggregate_sketch(sent_keys, spec, fan_in))(
-            _keyable(F.col(probe_col).cast("string"))))
-        join_cond_col = F.col(probe_col).cast("string")
-    build_keys = raw_keys.distinct()
+    return _sketch_semi_join(spark, probe_df, probe_col, build_df, build_col,
+                            lambda keys: aggregate_sketch(keys, spec, fan_in), exact)
+
+
+def _sketch_semi_join(spark: SparkSession, probe_df: DataFrame, probe_col: str,
+                     build_df: DataFrame, build_col: str, build, exact: bool,
+                     caller: str = "bloom_semi_join") -> DataFrame:
+    """The shape every sketch-backed semi join shares: ``build(keys)``
+    turns the one-column build-key DataFrame (named ``build_col``) into
+    a membership sketch, the probe side is pre-filtered by it, and with
+    ``exact`` a broadcast semi join over the distinct build keys removes
+    the false positives.
+
+    Integer key pairs hash natively: the build and the probe UDF read
+    the raw columns and the verify join compares native longs.  Other
+    pairs go through the lossless string cast, with '' mapped to the
+    empty-key sentinel on both sides of the filter; the verify join
+    still compares the original (cast) values."""
+    ints = resolve_key_mode(probe_df, probe_col, build_df, build_col, caller)
+
+    def key(c):
+        return F.col(c) if ints else F.col(c).cast("string")
+
+    def hashed_key(c):
+        return key(c) if ints else _keyable(key(c))
+
+    # the build reads raw (non-distinct) keys: inserts are idempotent, so
+    # skipping .distinct() skips a whole shuffle of the build side; only
+    # the exact-verify broadcast below needs dedup
+    sketch = build(build_df.select(hashed_key(build_col).alias(build_col)))
+    pre = probe_df.filter(contains_udf(spark, sketch)(hashed_key(probe_col)))
     if not exact:
         return pre
-    return pre.join(
-        F.broadcast(build_keys.withColumnRenamed(build_col, "__bk")),
-        join_cond_col == F.col("__bk"),
-        "left_semi",
-    )
+    build_keys = build_df.select(key(build_col).alias("__bk")).distinct()
+    return pre.join(F.broadcast(build_keys), key(probe_col) == F.col("__bk"), "left_semi")

@@ -34,10 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from presto_bloomfilter_spark.functions.xorf import XorFilter
-from presto_bloomfilter_spark.operators.probe import (
-    contains_udf,
-    resolve_key_mode,
-)
+from presto_bloomfilter_spark.operators.probe import _INT_TYPES, _sketch_semi_join
 from presto_bloomfilter_spark.operators.sharded import _shard_col
 from presto_bloomfilter_spark.store import SketchStore
 
@@ -49,9 +46,7 @@ __all__ = [
 ]
 
 
-def build_xor_filter(
-    df: DataFrame, col: str, fp_bits: int = 8, ints: bool | None = None,
-) -> XorFilter:
+def build_xor_filter(df: DataFrame, col: str, fp_bits: int = 8) -> XorFilter:
     """Build ONE xor filter over the distinct values of ``df[col]``.
 
     The dedup happens in Spark (map-side partial distinct); the peel
@@ -60,24 +55,19 @@ def build_xor_filter(
     The distinct key set must fit one task (~8-16 bytes/key working
     set); beyond that use :func:`build_xor_shards`.
 
-    NULLs are dropped JVM-side (reference null semantics — and on the
-    int path this also keeps Arrow from floating the batch, the
-    silent->2^53 corruption hash_ints64 refuses).
+    An integer column hashes as exact ints, as the probe hashes an
+    integer column; anything else is cast to string JVM-side, so probe
+    it with a string column.  NULLs are dropped JVM-side (reference null semantics — and on the int path
+    this also keeps Arrow from floating the batch, the silent->2^53
+    corruption hash_ints64 refuses).
     """
-    if ints is None:
-        ints = dict(df.dtypes)[col] in {"tinyint", "smallint", "int", "bigint"}
-    if ints:
-        keys = df.select(F.col(col).cast("long").alias("__k"))
-    else:
-        keys = df.select(F.col(col).cast("string").alias("__k"))
-    keys = keys.filter(F.col("__k").isNotNull()).dropDuplicates()
+    ints = dict(df.dtypes)[col] in _INT_TYPES
+    keys = (df.select((F.col(col) if ints else F.col(col).cast("string")).alias("__k"))
+            .filter(F.col("__k").isNotNull()).dropDuplicates())
+    build_keys = XorFilter.build_ints if ints else XorFilter.build_strings
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        if ints:
-            xf = XorFilter.build_ints(pdf["__k"].to_numpy(), fp_bits)
-        else:
-            xf = XorFilter.build_strings(pdf["__k"], fp_bits)
-        return pd.DataFrame({"sketch": [xf.to_bytes()]})
+        return pd.DataFrame({"sketch": [build_keys(pdf["__k"], fp_bits).to_bytes()]})
 
     rows = (
         keys.withColumn("__g", F.lit(0))
@@ -155,33 +145,6 @@ def xor_semi_join(
     membership test, then (optionally) remove the ~2^-fp_bits false
     positives with a broadcast exact semi join — equals the exact semi
     join, no false negatives by construction."""
-    from presto_bloomfilter_spark.operators.probe import _keyable
-
-    ints = resolve_key_mode(probe_df, probe_col, build_df, build_col,
-                            caller="xor_semi_join")
-    if ints:
-        xf = build_xor_filter(build_df.select(build_col), build_col,
-                              fp_bits=fp_bits, ints=True)
-        pre = probe_df.filter(contains_udf(spark, xf, ints=True)(F.col(probe_col)))
-        build_keys = build_df.select(build_col).distinct()
-        join_cond = F.col(probe_col) == F.col("__bk")
-    else:
-        # '' is invisible to the filter — build and probe through the
-        # shared empty-key sentinel so the exactness claim holds for
-        # ''-keyed rows too (the verify join compares original values)
-        xf = build_xor_filter(
-            build_df.select(
-                _keyable(F.col(build_col).cast("string")).alias(build_col)),
-            build_col, fp_bits=fp_bits, ints=False)
-        pre = probe_df.filter(
-            contains_udf(spark, xf)(_keyable(F.col(probe_col).cast("string"))))
-        build_keys = build_df.select(
-            F.col(build_col).cast("string").alias(build_col)).distinct()
-        join_cond = F.col(probe_col).cast("string") == F.col("__bk")
-    if not exact:
-        return pre
-    return pre.join(
-        F.broadcast(build_keys.withColumnRenamed(build_col, "__bk")),
-        join_cond,
-        "left_semi",
-    )
+    return _sketch_semi_join(spark, probe_df, probe_col, build_df, build_col,
+                            lambda keys: build_xor_filter(keys, build_col, fp_bits),
+                            exact, caller="xor_semi_join")

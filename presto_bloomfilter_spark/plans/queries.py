@@ -142,7 +142,7 @@ def q_cbf_delete_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec = agg.SketchSpec("o_orderkey", lambda: CountingBloomFilter(50_000, 0.001))
     sk = agg.aggregate_sketch(ins, spec)
     sk.subtract(agg.aggregate_sketch(dels, spec))
-    pre = lineitem.filter(contains_udf(spark, sk, ints=True)(F.col("l_orderkey")))
+    pre = lineitem.filter(contains_udf(spark, sk)(F.col("l_orderkey")))
     live = (orders.filter(big & (F.col("o_orderstatus") != "F"))
             .select(F.col("o_orderkey").alias("l_orderkey")).distinct())
     filtered = pre.join(F.broadcast(live), "l_orderkey", "left_semi")

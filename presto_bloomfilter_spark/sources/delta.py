@@ -151,7 +151,7 @@ class DeltaTable:
     def commit(self, adds: list[str] = (), removes: list[str] = ()) -> int:
         """Append the next commit with `add`/`remove` actions for the
         given data-file paths (absolute, inside the table dir →
-        recorded relative).  Atomic via write-temp + ``os.rename`` —
+        recorded relative).  Atomic via write-temp + ``os.link`` —
         the same put-if-absent commit discipline the protocol
         requires; a concurrent winner surfaces as FileExistsError."""
         if not adds and not removes:
@@ -181,10 +181,15 @@ class DeltaTable:
         tmp = final + f".tmp-{os.getpid()}"
         with open(tmp, "w") as fh:
             fh.write("\n".join(lines) + "\n")
-        if os.path.exists(final):  # put-if-absent: lost the commit race
+        try:
+            # put-if-absent in one step: link fails if a concurrent
+            # writer's commit is already there (a check-then-rename
+            # would overwrite a winner landing in between)
+            os.link(tmp, final)
+        except FileExistsError:
+            raise FileExistsError(f"commit {version} already exists") from None
+        finally:
             os.unlink(tmp)
-            raise FileExistsError(f"commit {version} already exists")
-        os.rename(tmp, final)
         return version
 
 

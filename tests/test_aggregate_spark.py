@@ -16,7 +16,8 @@ from presto_bloomfilter_spark import (
 )
 from presto_bloomfilter_spark.functions.multi import MultiSketch
 from presto_bloomfilter_spark.operators import aggregate as agg
-from presto_bloomfilter_spark.operators.probe import bloom_semi_join, filter_by_sketch
+from presto_bloomfilter_spark.operators.probe import bloom_semi_join, contains_udf, filter_by_sketch
+from presto_bloomfilter_spark.operators.staticfilter import build_xor_filter
 from presto_bloomfilter_spark.sources.corpus import load_tokens
 
 
@@ -299,8 +300,9 @@ def test_top_k_tokens_certifies_when_distinct_below_k(spark):
 def test_int_probe_nullable_and_beyond_2pow53(spark):
     """Regression: a NULL in a probe batch makes Arrow→pandas deliver
     float64, silently corrupting ids above 2^53 (false negatives) and
-    NaN-hashing NULLs.  The int probe path now round-trips through a
-    lossless string cast: big ids probe exactly, NULLs probe False."""
+    NaN-hashing NULLs.  The probe drops NULLs at the Arrow level and
+    hashes the exact int64 values: big ids probe exactly, NULLs probe
+    False."""
     from presto_bloomfilter_spark.operators.probe import bloom_semi_join, filter_by_sketch
 
     big_a, big_b = 9007199254740993, 9007199254740995  # 2^53+1, 2^53+3
@@ -314,9 +316,43 @@ def test_int_probe_nullable_and_beyond_2pow53(spark):
     # NOT collide with the inserted one via float rounding
     sk = agg.aggregate_sketch(
         build, agg.bloom_over_ints("k", 1000, 0.0001))
-    kept = {r.k for r in filter_by_sketch(spark, probe, "k", sk, ints=True).collect()}
+    kept = {r.k for r in filter_by_sketch(spark, probe, "k", sk).collect()}
     assert big_a in kept and 5 in kept and None not in kept
     assert big_b not in kept  # float64 would have rounded both to 2^53+2
+
+
+_MEMBERSHIP = {
+    "bloom": lambda: BloomFilter(1000, 0.001),
+    "sbbf": lambda: SplitBlockBloomFilter(1000, 0.001),
+    "cbf": lambda: CountingBloomFilter(1000, 0.001),
+}
+
+
+@pytest.mark.parametrize("build_type,probe_type,keys", [
+    ("bigint", "bigint", [5, 2**53 + 1, None, -7]),
+    ("int", "bigint", [5, 2**31 - 1, None, -7]),
+    ("string", "string", ["a", "", None, "ü"]),
+], ids=["bigint", "int-build-bigint-probe", "string"])
+@pytest.mark.parametrize("kind", ["bloom", "sbbf", "cbf", "xor"])
+def test_probe_hash_path_follows_key_type(spark, kind, build_type, probe_type, keys):
+    """Build and probe pick the hash path from the column type alone (no
+    caller knob): every inserted key probes true; NULL probes false, and
+    so does '' (never inserted, reference BloomFilter.java:161-167)."""
+    build = spark.createDataFrame([(k,) for k in keys], f"k {build_type}")
+    if kind == "xor":
+        sk = build_xor_filter(build, "k")
+    else:
+        sk = agg.aggregate_sketch(build, agg.SketchSpec("k", _MEMBERSHIP[kind]))
+    probe = spark.createDataFrame([(k,) for k in keys], f"k {probe_type}").coalesce(1)
+    hits = dict(probe.select("k", contains_udf(spark, sk)(F.col("k"))).collect())
+    assert hits == {k: k is not None and k != "" for k in keys}
+
+
+def test_probe_rejects_floating_keys(spark):
+    sk = agg.aggregate_sketch(spark.range(10), agg.SketchSpec("id", _MEMBERSHIP["bloom"]))
+    with pytest.raises(Exception, match="cast it to an integer or string"):
+        filter_by_sketch(spark, spark.range(10).selectExpr("cast(id as double) k"), "k",
+                         sk).count()
 
 
 def test_hash_ints64_rejects_float_arrays():

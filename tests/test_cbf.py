@@ -119,7 +119,7 @@ def test_aggregate_build_and_distributed_delete(spark, sf_dir):
     sk.subtract(agg.aggregate_sketch(dels, spec()))
     live = orders.filter("o_totalprice > 200000 AND o_orderstatus <> 'F'") \
                  .select("o_orderkey")
-    hits = filter_by_sketch(spark, lineitem, "l_orderkey", sk, ints=True)
+    hits = filter_by_sketch(spark, lineitem, "l_orderkey", sk)
     exact = lineitem.join(live.withColumnRenamed("o_orderkey", "l_orderkey")
                           .distinct(), "l_orderkey", "left_semi")
     # no false negatives after the distributed delete

@@ -154,6 +154,15 @@ def test_validation(spark, labeled):
         classifier.QualityClassifier((0.0,) * 3, buckets=8, iters=1, lr=1.0)
 
 
+def test_null_label_is_loud(spark, labeled):
+    """A NULL label is neither 0 nor 1: ``isin`` alone evaluates to NULL
+    for it and would let the row train silently."""
+    nulled = labeled.withColumn(
+        "label", F.when(F.col("doc_id") == 5, F.lit(None)).otherwise(F.col("label")))
+    with pytest.raises(ValueError, match="labels must be 0/1, found y=None for id='5'"):
+        classifier.train_quality_classifier(nulled)
+
+
 # ------------------- multiclass (trained language ID) -------------------
 
 

@@ -74,6 +74,23 @@ def test_collapsing_bounds_size_and_keeps_upper_quantiles():
         assert _rel_err(data, sk, q) <= 0.0101, q
 
 
+def test_merge_tree_invariant_bytes_after_collapse():
+    """Collapse makes the merge lossy, not order-dependent: partials
+    that fold at different points still meet in the same bytes."""
+    rng = np.random.default_rng(4)
+    chunks = [rng.lognormal(0, 3, 400) * s for s in (1, -1, 1, 1, -1, 1)]
+    parts = [DDSketch(alpha=0.01, max_bins=32).add(c) for c in chunks]
+    left = parts[0].copy()
+    for p in parts[1:]:
+        left.merge(p)
+    right = parts[-1].copy()
+    for p in reversed(parts[:-1]):
+        right.merge(p)
+    full = DDSketch(alpha=0.01, max_bins=32).add(np.concatenate(chunks))
+    assert all(p.collapsed for p in parts)
+    assert left.to_bytes() == right.to_bytes() == full.to_bytes()
+
+
 def test_serialization_roundtrip_and_kind_dispatch():
     rng = np.random.default_rng(4)
     sk = DDSketch(alpha=0.005).add(np.concatenate(

@@ -94,6 +94,21 @@ def test_commit_race_is_put_if_absent(table):
     assert "f1.parquet" in open(table.log_dir + "/" + "0" * 19 + "1.json").read()
 
 
+def test_commit_race_between_check_and_write_keeps_winner(table, monkeypatch):
+    # the winner lands after any existence check the loser could make:
+    # the commit itself must be put-if-absent, not check-then-rename
+    final = table.log_dir + "/" + "0" * 19 + "1.json"
+    with open(final, "w") as fh:
+        fh.write(json.dumps({"add": {"path": "data/f1.parquet", "size": 1,
+                                     "dataChange": True}}) + "\n")
+    monkeypatch.setattr(os.path, "exists", lambda p: False)
+    with pytest.raises(FileExistsError, match="commit 1 already exists"):
+        table._write_commit(1, ["{}"])
+    monkeypatch.undo()
+    assert "f1.parquet" in open(final).read()
+    assert sorted(os.listdir(table.log_dir)) == ["0" * 20 + ".json", "0" * 19 + "1.json"]
+
+
 def test_checkpointed_table_is_loud(table):
     open(table.log_dir + "/_last_checkpoint", "w").write("{}")
     with pytest.raises(NotImplementedError, match="checkpoint"):

@@ -72,6 +72,17 @@ def test_bloom_semi_join_probe_side_has_no_shuffle(spark, sf_dir):
         assert "tokens" not in body and "n_tok" not in body, body
 
 
+def test_bigint_bloom_semi_join_probes_the_raw_key(spark, sf_dir):
+    """An integer key pair hashes natively: the probe UDF reads the raw
+    bigint column, with no JVM string cast beneath it."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100_000)
+    plan = _plan(bloom_semi_join(spark, lineitem, "l_orderkey", orders, "o_orderkey",
+                                 expected_insertions=10_000))
+    assert re.search(r"Arguments: \[probe\(l_orderkey#\d+L\)#\d+\]", plan), plan
+    assert "as string" not in plan, plan
+
+
 def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir):
     """The map_side grouped build must shuffle sketch blobs, not raw
     token rows: the exchange has to sit ABOVE the partial-build python

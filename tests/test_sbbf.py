@@ -111,7 +111,7 @@ def test_aggregate_and_semijoin_in_spark(spark, sf_dir):
     sk = agg.aggregate_sketch(keys, agg.SketchSpec(
         "o_orderkey", lambda: SplitBlockBloomFilter(50_000, 0.001)))
     assert type(sk) is SplitBlockBloomFilter
-    hits = filter_by_sketch(spark, lineitem, "l_orderkey", sk, ints=True)
+    hits = filter_by_sketch(spark, lineitem, "l_orderkey", sk)
     exact = lineitem.join(keys.withColumnRenamed("o_orderkey", "l_orderkey")
                           .distinct(), "l_orderkey", "left_semi")
     assert hits.count() >= exact.count()  # no false negatives

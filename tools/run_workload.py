@@ -100,7 +100,7 @@ def main() -> None:
     # probe it back over the corpus (membership of every token's doc)
     t0 = time.time()
     n_hit = tokens.filter(
-        contains_udf(spark, bloom, ints=True)(F.element_at(F.col("tokens"), 1))
+        contains_udf(spark, bloom)(F.element_at(F.col("tokens"), 1))
     ).count()
     metrics["bloom_probe"] = {"sec": round(time.time() - t0, 3), "rows_hit": n_hit}
 
