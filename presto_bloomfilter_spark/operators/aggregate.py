@@ -14,17 +14,23 @@ AbstractBloomFilterAggregation.java:19-60 + BloomFilterStateSerializer
               avoid driver hotspots")
               → driver merges ≤ fan_in blobs ("final" phase).
 
-  grouped:    df.groupBy(key).applyInPandas(build)     — Catalyst plans
-              the hash shuffle; for skewed keys the salted variant
-              groups by (key, salt) first and then merges per key, so
-              no single task owns a whole hot key.
+  grouped:    df.mapInArrow(per-key partial build)  — map_side: one
+              partial per (input partition, key), so only blobs
+              shuffle and a hot key costs nothing extra
+              → repartition(key).sortWithinPartitions(key)
+                .mapInArrow(fold each sorted run of equal keys) —
+              the per-key combine; the salted strategy runs the same
+              sorted-run fold over raw rows keyed by (key, salt), then
+              the per-key merge, so no single task owns a whole hot key.
 
 Scale notes (100 TB / 1000 executors): the partial phase reads each
 input partition exactly once and emits O(sketch_size) bytes per
 partition — shuffle volume is partitions × sketch bytes, independent of
 row count.  fan_in bounds both the level-2 task count and the driver's
-final merge work.  applyInPandas materializes each group in one worker
-(that is *why* salting is mandatory for a 55%-skewed `source`).
+final merge work.  A sorted-run fold streams Arrow batches and holds one
+run's state at a time, but every row of a run lands in one task (that
+is *why* salting is mandatory for a 55%-skewed `source` on the raw-row
+path).
 """
 
 from __future__ import annotations
@@ -34,12 +40,10 @@ from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
 from presto_bloomfilter_spark.functions.cms import CountMinSketch
@@ -116,20 +120,72 @@ class TokenDedupAccumulator:
     on demand; if the observed id range exceeds ``RANGE_CAP`` (i.e. the
     column is not a bounded vocab), we flush and fall back to direct
     vectorized inserts — no pathological memory use on arbitrary ints.
+
+    Sparse mode: one key's stream in a grouped build holds a few
+    thousand ids spread over the whole vocabulary, where a
+    vocabulary-sized count array costs far more to allocate and scan
+    than the ids themselves.  While ``4 × buffered ids < max − min`` of
+    the ids seen so far, the id arrays are only buffered, and ``flush``
+    pushes ``np.unique(ids, return_counts=True)``: the same sorted
+    (id, count) stream the dense flush reads off the count array, so the
+    wrapped sketch gets identical calls and writes identical bytes.
+    Once the buffer is dense enough it is bincounted into the array and
+    the accumulator stays dense (a whole row group crosses on its first
+    batch).  The [base, base+len) window is tracked in both modes, so the
+    fallback to direct inserts happens at the same id either way.
     """
 
     RANGE_CAP = 1 << 22  # 4M distinct ids → 32MB counts array, max
 
     def __init__(self, sketch, weighted: bool | None = None):
         self.sketch = sketch
-        self.counts: np.ndarray | None = None
-        self.base = 0
         self.direct = False
         self.weighted = (
             isinstance(sketch, (CountMinSketch, MultiSketch))
             if weighted is None
             else weighted
         )
+        self._reset()
+
+    def _reset(self) -> None:
+        self.base, self._size = 0, 0  # count window [base, base+_size); 0 = none
+        self._counts: np.ndarray | None = None  # dense mode
+        self._pending: list[np.ndarray] = []  # sparse mode: buffered ids
+        self._n_pending = 0
+        self._lo, self._hi = float("inf"), float("-inf")  # ids seen so far
+
+    @property
+    def counts(self) -> np.ndarray | None:
+        """Pending counts as the dense window array (bincounted from the
+        buffer while sparse); None when nothing is pending.  The
+        benchmark's per-layer replay reads the pre-flush stream here."""
+        if self._pending:
+            return np.bincount(np.concatenate(self._pending) - self.base,
+                               minlength=self._size)
+        return self._counts
+
+    def _cover(self, mn: int, mx: int) -> bool:
+        """Grow the count window to cover [mn, mx]; False when that
+        would pass ``RANGE_CAP``."""
+        if not self._size:
+            if mx - mn >= self.RANGE_CAP:
+                return False
+            # cap the PADDED size too, not just the raw range, so the
+            # first window never exceeds RANGE_CAP counts
+            pad = max(1024, (mx - mn) // 4)
+            pad = min(pad, max(0, (self.RANGE_CAP - (mx - mn + 1)) // 2))
+            self.base, self._size = mn - pad, mx - mn + 2 * pad + 1
+            return True
+        nb = min(self.base, mn)
+        ne = max(self.base + self._size, mx + 1)
+        if ne - nb > self.RANGE_CAP:
+            return False
+        if self._counts is not None and ne - nb > self._size:
+            grown = np.zeros(ne - nb, dtype=np.int64)
+            grown[self.base - nb : self.base - nb + self._size] = self._counts
+            self._counts = grown
+        self.base, self._size = nb, ne - nb
+        return True
 
     def add_ints(self, flat: np.ndarray) -> None:
         if flat.size == 0:
@@ -139,46 +195,45 @@ class TokenDedupAccumulator:
             return
         mn = int(flat.min())
         mx = int(flat.max())
-        if self.counts is None:
-            if mx - mn >= self.RANGE_CAP:
-                self.direct = True
-                self.sketch.add_ints(flat)
+        if not self._cover(mn, mx):
+            self.flush()
+            self.direct = True
+            self.sketch.add_ints(flat)
+            return
+        if self._counts is None:
+            self._lo, self._hi = min(self._lo, mn), max(self._hi, mx)
+            self._n_pending += flat.size
+            if 4 * self._n_pending < self._hi - self._lo:
+                # a copy: the caller may reuse its array before flush
+                self._pending.append(flat.copy())
                 return
-            # cap the PADDED size too, not just the raw range, so the
-            # first allocation never exceeds RANGE_CAP counts
-            pad = max(1024, (mx - mn) // 4)
-            pad = min(pad, max(0, (self.RANGE_CAP - (mx - mn + 1)) // 2))
-            self.base = mn - pad
-            self.counts = np.zeros(mx + pad - self.base + 1, dtype=np.int64)
-        elif mn < self.base or mx >= self.base + len(self.counts):
-            nb = min(self.base, mn)
-            ne = max(self.base + len(self.counts), mx + 1)
-            if ne - nb > self.RANGE_CAP:
-                self.flush()
-                self.direct = True
-                self.sketch.add_ints(flat)
-                return
-            grown = np.zeros(ne - nb, dtype=np.int64)
-            grown[self.base - nb : self.base - nb + len(self.counts)] = self.counts
-            self.base, self.counts = nb, grown
-        self.counts += np.bincount(flat - self.base, minlength=len(self.counts))
+            if self._pending:
+                flat = np.concatenate([*self._pending, flat])
+                self._pending = []
+            self._counts = np.bincount(flat - self.base, minlength=self._size)
+            return
+        self._counts += np.bincount(flat - self.base, minlength=self._size)
 
     def flush(self) -> None:
         """Push accumulated (id, count) pairs into the wrapped sketch."""
-        if self.counts is None:
+        if self._counts is not None:
+            nz = np.nonzero(self._counts)[0]
+            vals, counts = nz + self.base, self._counts[nz]
+        elif self._pending:
+            vals, counts = np.unique(np.concatenate(self._pending), return_counts=True)
+            vals = vals.astype(np.int64)
+        else:
             return
-        nz = np.nonzero(self.counts)[0]
-        if nz.size:
-            vals = nz + self.base
+        self._reset()
+        if vals.size:
             if self.weighted:
-                self.sketch.add_ints(vals, counts=self.counts[nz])
+                self.sketch.add_ints(vals, counts=counts)
             else:
-                total = int(self.counts[nz].sum())
+                total = int(counts.sum())
                 self.sketch.add_ints(vals)
                 # keep the offered-rows metric meaning rows, not uniques
                 if hasattr(self.sketch, "approx_items"):
-                    self.sketch.approx_items += total - int(nz.size)
-        self.counts = None
+                    self.sketch.approx_items += total - int(vals.size)
 
     def finish(self):
         self.flush()
@@ -352,7 +407,7 @@ def _build_partial(spec: SketchSpec, batches: Iterable[pa.RecordBatch],
     """The partial phase of every ungrouped build (the reference's
     input/partial-state step): factory → update each non-empty batch →
     (finished sketch, rows).  The batches come from mapInArrow, the
-    shared parquet row-group reader, or one pandas group."""
+    shared parquet row-group reader."""
     sk, rows, n_batches = spec.factory(), 0, 0
     for b in batches:
         if b.num_rows:
@@ -830,15 +885,19 @@ class _CandidateSink:
         return self._ids[sel].tolist(), self._counts[sel].tolist()
 
 
-# ---- grouped aggregation (salted two-level) ----------------------------------
+# ---- grouped aggregation (map-side partials, sorted-run folds) ---------------
 
 
 def _grouped_partial_build(spec: SketchSpec, key: str):
     """mapInArrow body: one partial sketch per (input partition, key).
 
-    Arrow-level group split (np.unique on the key column + RecordBatch
-    .filter) — raw rows never shuffle, and token list columns never pass
-    through pandas object arrays.
+    Arrow-level group split: NULL-key rows are filtered off as their own
+    group, then one stable ``np.argsort`` of the key codes and one
+    ``take`` order the batch by key, and each key's rows are a zero-copy
+    ``slice`` of it (input order kept within a key).  Raw rows never
+    shuffle, and token list columns never pass through pandas object
+    arrays.  A key's per-partition stream is small next to the
+    vocabulary, so a token spec's accumulator stays in its sparse mode.
     """
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -846,12 +905,17 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
 
         _NULL_GROUP = object()  # dict key for the NULL group
         sketches: dict = {}
+
+        def update(kv, rows: pa.RecordBatch) -> None:
+            sk = sketches.get(kv)
+            if sk is None:
+                sk = sketches[kv] = spec.factory()
+            spec.update(sk, rows)
+
         for b in batches:
             if not b.num_rows:
                 continue
-            kcol = b.column(b.schema.get_field_index(key))
-            if isinstance(kcol, pa.ChunkedArray):
-                kcol = kcol.combine_chunks()
+            kcol = b.column(key)
             if kcol.null_count:
                 # split the NULL-group rows off at the Arrow level:
                 # np.unique cannot sort None against str (TypeError),
@@ -859,29 +923,19 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
                 # NaN — dropping nulls BEFORE to_numpy also keeps int
                 # keys exactly int64
                 null_mask = pc.is_null(kcol)
-                sub_null = b.filter(null_mask)
-                sk = sketches.get(_NULL_GROUP)
-                if sk is None:
-                    sk = sketches[_NULL_GROUP] = spec.factory()
-                spec.update(sk, sub_null)
+                update(_NULL_GROUP, b.filter(null_mask))
                 b = b.filter(pc.invert(null_mask))
                 if not b.num_rows:
                     continue
-                kcol = b.column(b.schema.get_field_index(key))
-            keys = kcol.to_numpy(zero_copy_only=False)
-            uniq, inv = np.unique(keys, return_inverse=True)
+                kcol = b.column(key)
+            uniq, inv = np.unique(kcol.to_numpy(zero_copy_only=False), return_inverse=True)
             if len(uniq) == 1:
-                sk = sketches.get(uniq[0])
-                if sk is None:
-                    sk = sketches[uniq[0]] = spec.factory()
-                spec.update(sk, b)
+                update(uniq[0], b)
                 continue
-            for i, kv in enumerate(uniq):
-                sub = b.filter(pa.array(inv == i))
-                sk = sketches.get(kv)
-                if sk is None:
-                    sk = sketches[kv] = spec.factory()
-                spec.update(sk, sub)
+            b = b.take(pa.array(np.argsort(inv, kind="stable")))
+            ends = np.cumsum(np.bincount(inv)).tolist()
+            for kv, lo, hi in zip(uniq, [0, *ends], ends):
+                update(kv, b.slice(lo, hi - lo))
         if sketches:
             ks = list(sketches)
             yield pa.RecordBatch.from_arrays(
@@ -892,6 +946,73 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
             )
 
     return fn
+
+
+def _grouping_equal(x: pa.Array, y: pa.Array) -> np.ndarray:
+    """Row-wise ``x == y`` under GROUP BY equality: NULL equals NULL,
+    NaN equals NaN, and -0.0 equals 0.0 (IEEE ``==`` already does)."""
+    import pyarrow.compute as pc
+
+    def np_(a):
+        return a.to_numpy(zero_copy_only=False)
+
+    eq = np_(pc.equal(x, y).fill_null(False)) | (np_(x.is_null()) & np_(y.is_null()))
+    if pa.types.is_floating(x.type):
+        eq |= np_(pc.is_nan(x).fill_null(False)) & np_(pc.is_nan(y).fill_null(False))
+    return eq
+
+
+def _fold_sorted_runs(df: DataFrame, keys: list[str], out_schema: str,
+                      step: Callable[[object, pa.RecordBatch], object]) -> DataFrame:
+    """The one grouped fold: shuffle ``df`` by ``keys``, sort each
+    partition by them, and fold each run of equal keys inside
+    mapInArrow.  ``state = step(state, rows)`` runs on every slice of a
+    run (``state`` starts as None), and the run becomes one output row
+    ``(keys[0], state.to_bytes())``.
+
+    Run boundaries are found at the Arrow level under GROUP BY equality
+    (:func:`_grouping_equal`, which is also how the shuffle and the sort
+    place NULL, NaN and ±0.0), and a run may continue across batches.  A
+    run's row is emitted with the batch in which the run ends, so a task
+    holds one run's state at a time — no pandas frame, no per-group
+    Python call besides ``step``.  An empty input gives no rows.
+    """
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        state = first = None  # the open run: its fold state and first row
+
+        def emit(firsts, states):
+            return pa.RecordBatch.from_arrays(
+                [pa.concat_arrays([r.column(keys[0]) for r in firsts]),
+                 pa.array([s.to_bytes() for s in states], pa.binary())],
+                [keys[0], "sketch"])
+
+        for b in batches:
+            n = b.num_rows
+            if not n:
+                continue
+            new = np.zeros(n, dtype=bool)
+            for k in keys:
+                col = b.column(k)
+                if first is not None:
+                    col = pa.concat_arrays([first.column(k), col])
+                new[n - len(col) + 1:] |= ~_grouping_equal(col[1:], col[:-1])
+            new[0] |= first is None
+            bounds = [*np.flatnonzero(new).tolist(), n]
+            if bounds[0]:  # the head of the batch continues the open run
+                state = step(state, b.slice(0, bounds[0]))
+            firsts, states = [], []
+            for lo, hi in zip(bounds, bounds[1:]):
+                if first is not None:
+                    firsts.append(first)
+                    states.append(state)
+                first, state = b.slice(lo, 1), step(None, b.slice(lo, hi - lo))
+            if states:
+                yield emit(firsts, states)
+        if first is not None:
+            yield emit([first], [state])
+
+    return df.repartition(*keys).sortWithinPartitions(*keys).mapInArrow(fn, out_schema)
 
 
 def grouped_sketch(
@@ -905,18 +1026,21 @@ def grouped_sketch(
     """Per-key sketches: returns DataFrame[key string, sketch binary].
 
     ``map_side`` (default): partial sketch per (partition, key) inside
-    mapInArrow, then a tiny grouped blob merge — the partial/combine
-    protocol of the reference's grouped accumulator (reference
-    BloomFilterStateFactory.java:48-91) in Spark dataflow.  Only sketch
-    blobs shuffle (partitions x keys x sketch_size bytes, independent of
-    row count), and skewed keys cost nothing extra: a task only ever
-    sees its own partition's share of a hot key.  Right choice for
-    low-cardinality keys like ``source``.
+    mapInArrow (:func:`_grouped_partial_build`), then a tiny grouped
+    blob merge — the partial/combine protocol of the reference's grouped
+    accumulator (reference BloomFilterStateFactory.java:48-91) in Spark
+    dataflow.  Only sketch blobs shuffle (partitions x keys x
+    sketch_size bytes, independent of row count), and skewed keys cost
+    nothing extra: a task only ever sees its own partition's share of a
+    hot key.  Right choice for low-cardinality keys like ``source``.
 
-    ``salted``: groups raw rows by (key, salt) with applyInPandas, then
-    merges the S partials per key — the explicit repartition/salting
-    dataflow (north_rule).  Use for high-cardinality keys where
-    per-partition x per-key partials would blow up the map side.
+    ``salted``: shuffles raw rows by (key, salt) — by key alone when
+    ``salt`` is unset — and builds one sketch per sorted run of equal
+    keys (:func:`_fold_sorted_runs`); with a salt the S partials per key
+    then go through :func:`grouped_merge_sketch_column` — the explicit
+    repartition/salting dataflow (north_rule).  Use for high-cardinality
+    keys where per-partition x per-key partials would blow up the map
+    side.
     """
     tune_arrow_batches(df)
     cols = [key, *spec.columns]
@@ -937,22 +1061,17 @@ def grouped_sketch(
     if strategy != "salted":
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    # pandas floats a nullable int column (NaN for NULL); the Spark
-    # schema puts it back to exact ints before update picks the path
-    arrow_schema = to_arrow_schema(pruned.select(*spec.columns).schema)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        batch = pa.RecordBatch.from_pandas(
-            pdf[list(spec.columns)], schema=arrow_schema, preserve_index=False)
-        sk, _ = _build_partial(spec, [batch])
-        return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
+    def build(sk, rows: pa.RecordBatch):
+        sk = spec.factory() if sk is None else sk
+        spec.update(sk, rows)
+        return sk
 
     if not salt:
-        return pruned.groupBy(key).applyInPandas(build, out_schema)
+        return _fold_sorted_runs(pruned, [key], out_schema, build)
 
     sc = salt_col or key
     salted = pruned.withColumn("__salt", F.pmod(F.xxhash64(F.col(sc), F.monotonically_increasing_id()), F.lit(salt)))
-    partials = salted.groupBy(key, "__salt").applyInPandas(build, out_schema)
+    partials = _fold_sorted_runs(salted, [key, "__salt"], out_schema, build)
     return grouped_merge_sketch_column(partials, key)
 
 
@@ -984,13 +1103,15 @@ def sketch_estimates(df: DataFrame, col: str = "sketch",
 
 
 def grouped_merge_sketch_column(df: DataFrame, key: str, col: str = "sketch") -> DataFrame:
-    """Grouped merge of pre-built sketches → DataFrame[key, sketch].
-    The key keeps its input type (an int key stays int)."""
+    """Grouped merge of pre-built sketches → DataFrame[key, sketch]: one
+    :func:`_fold_sorted_runs` pass folding each key's blobs with
+    ``merge_blobs``.  The key keeps its input type (an int key stays
+    int); as in ``groupBy``, NULL is one group, NaN is one group, and
+    -0.0 joins 0.0."""
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = merge_blobs(pdf[col])
-        return pd.DataFrame({key: [pdf[key].iloc[0]], "sketch": [sk.to_bytes()]})
+    def merge(sk, rows: pa.RecordBatch):
+        part = merge_blobs(rows.column(col).to_pylist())
+        return part if sk is None else sk.merge(part)
 
     key_type = df.schema[key].dataType.simpleString()
-    return df.select(key, col).groupBy(key).applyInPandas(
-        merge_group, f"{key} {key_type}, sketch binary")
+    return _fold_sorted_runs(df.select(key, col), [key], f"{key} {key_type}, sketch binary", merge)

@@ -555,6 +555,29 @@ def log_odds_keywords(df: DataFrame, group_a: str, group_b: str,
     return out
 
 
+def _key_histogram(df: DataFrame, value_col: str, by: str | None) -> DataFrame:
+    """The distinct-value histogram the two per-key distribution ops
+    read: ``(__k, value, __c)`` over the non-NULL values, plus ``__n``,
+    the key's non-NULL row count (a window over the same key
+    partitioning, so no totals join).  A NULL ``by`` key is a group of
+    its own, as in ``groupBy``; ``__k`` is absent without ``by``."""
+    from pyspark.sql import Window
+
+    keys = [F.col(by).alias("__k")] if by else []
+    hist = (df.filter(F.col(value_col).isNotNull())
+            .groupBy(*keys, value_col).agg(F.count(F.lit(1)).alias("__c")))
+    return hist.withColumn(
+        "__n", F.sum("__c").over(Window.partitionBy(*(["__k"] if by else []))))
+
+
+def _join_back(df: DataFrame, per_key: DataFrame, by: str | None, cond) -> DataFrame:
+    """Left-join ``per_key`` onto every row of ``df`` — NULL-safe on the
+    key, so a NULL key finds its own group's row — then drop the key."""
+    if by:
+        cond = cond & F.col(by).eqNullSafe(F.col("__k"))
+    return df.join(per_key, cond, "left").drop("__k")
+
+
 def percentile_normalize(df: DataFrame, value_col: str,
                          by: str | None = None,
                          out_col: str = "pctl") -> DataFrame:
@@ -568,6 +591,10 @@ def percentile_normalize(df: DataFrame, value_col: str,
     one value (the strictly-less convention — deterministic, no
     tie-ordering dependence, exactly replayable in SQL).
 
+    NULLs: every row is kept.  A NULL value is left out of its key's
+    histogram and row count and gets a NULL ``out_col``; a NULL ``by``
+    key is a group of its own (NULL-safe joins).
+
     Scale shape — the repo's histogram-quantile pattern applied
     row-wise: NEVER a row-ordered window (a per-key percent_rank sorts
     every row of the key on one reducer); instead ONE distinct-VALUE
@@ -578,19 +605,14 @@ def percentile_normalize(df: DataFrame, value_col: str,
     """
     from pyspark.sql import Window
 
-    keys = [by] if by else []
-    hist = df.groupBy(*keys, value_col).agg(F.count(F.lit(1)).alias("__c"))
-    w = (Window.partitionBy(*keys) if keys else Window.partitionBy()) \
-        .orderBy(value_col).rowsBetween(Window.unboundedPreceding, -1)
-    cum = hist.withColumn("__lt", F.coalesce(F.sum("__c").over(w), F.lit(0)))
-    totals = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")) if keys \
-        else df.agg(F.count(F.lit(1)).alias("__n"))
-    lookup = (cum.join(F.broadcast(totals), keys) if keys
-              else cum.crossJoin(F.broadcast(totals)))
-    lookup = lookup.select(
-        *keys, value_col,
-        (F.col("__lt") / F.col("__n")).alias(out_col))
-    return df.join(lookup, keys + [value_col])
+    keys = ["__k"] if by else []
+    hist = _key_histogram(df, value_col, by)
+    w = (Window.partitionBy(*keys).orderBy(value_col)
+         .rowsBetween(Window.unboundedPreceding, -1))
+    lookup = hist.select(
+        *keys, F.col(value_col).alias("__v"),
+        (F.coalesce(F.sum("__c").over(w), F.lit(0)) / F.col("__n")).alias(out_col))
+    return _join_back(df, lookup, by, F.col(value_col) == F.col("__v")).drop("__v")
 
 
 def winsorize(df: DataFrame, value_col: str, by: str | None = None,
@@ -607,29 +629,29 @@ def winsorize(df: DataFrame, value_col: str, by: str | None = None,
     itself is a map-only greatest/least.  Adds ``out_col`` (default
     ``{value_col}_w``) plus ``{value_col}_lo`` / ``{value_col}_hi``
     threshold columns for auditing.  Exact ⇒ fully SQL-replayable.
+
+    NULLs: every row is kept.  NULL values are left out of the
+    histogram and of n, and their rows get NULL ``out_col`` and NULL
+    thresholds; a NULL ``by`` key is a group of its own.
     """
     from pyspark.sql import Window
 
     if not (0.0 <= lo < hi <= 1.0):
         raise ValueError("need 0 <= lo < hi <= 1")
     out_col = out_col or f"{value_col}_w"
-    keys = [by] if by else []
-    hist = df.groupBy(*keys, value_col).agg(F.count(F.lit(1)).alias("__c"))
-    w = (Window.partitionBy(*keys) if keys else Window.partitionBy()) \
-        .orderBy(value_col).rowsBetween(Window.unboundedPreceding, 0)
+    keys = ["__k"] if by else []
+    hist = _key_histogram(df, value_col, by)
+    w = (Window.partitionBy(*keys).orderBy(value_col)
+         .rowsBetween(Window.unboundedPreceding, 0))
     cum = hist.withColumn("__cum", F.sum("__c").over(w))
-    totals = (df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")) if keys
-              else df.agg(F.count(F.lit(1)).alias("__n")))
-    cum = (cum.join(F.broadcast(totals), keys) if keys
-           else cum.crossJoin(F.broadcast(totals)))
-    th = cum.groupBy(*keys).agg(
-        F.min(F.when(F.col("__cum") >= F.ceil(F.lit(lo) * F.col("__n")),
-                     F.col(value_col))).alias(f"{value_col}_lo"),
-        F.min(F.when(F.col("__cum") >= F.ceil(F.lit(hi) * F.col("__n")),
-                     F.col(value_col))).alias(f"{value_col}_hi"),
-    )
-    joined = (df.join(F.broadcast(th), keys) if keys
-              else df.crossJoin(F.broadcast(th)))
+
+    def at(q: float):
+        return F.min(F.when(F.col("__cum") >= F.ceil(F.lit(q) * F.col("__n")),
+                            F.col(value_col)))
+
+    th = cum.groupBy(*keys).agg(at(lo).alias(f"{value_col}_lo"),
+                                at(hi).alias(f"{value_col}_hi"))
+    joined = _join_back(df, F.broadcast(th), by, F.col(value_col).isNotNull())
     return joined.withColumn(
         out_col,
         F.greatest(F.col(f"{value_col}_lo"),

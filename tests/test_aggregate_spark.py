@@ -375,10 +375,9 @@ def test_bloom_over_ints_ignores_nulls(spark):
 
 
 def test_grouped_sketch_salted_nullable_int_column(spark):
-    """The salted path hands each group to pandas, which floats a
-    nullable long column (NaN for NULL).  The batch must go back to
-    exact int64 so the NULL is skipped and the ints take the int hash:
-    the same blobs as the map_side path, which never leaves Arrow."""
+    """A nullable long column through the salted path: the NULL is
+    skipped and the ints take the exact int hash (no float detour,
+    2**53 + 1 included), the same blobs as the map_side path."""
     df = spark.createDataFrame(
         [("a", 1), ("a", None), ("a", 2**53 + 1), ("b", 7), ("b", None)],
         "g string, k bigint").coalesce(1)
@@ -449,6 +448,124 @@ def test_grouped_sketch_key_labels_agree_across_strategies(spark):
         s = {r["k"] for r in agg.grouped_sketch(
             frame, "k", spec, strategy="salted", salt=2).collect()}
         assert m == s, (m, s)
+
+
+def test_grouped_merge_edge_cases_match_dict_fold(spark):
+    """grouped_merge_sketch_column against a pure-Python dict fold: a
+    NULL key is one row, a bigint key stays bigint, runs of one key span
+    several 7-row Arrow batches, and a double key groups as ``groupBy``
+    does (every NaN together, -0.0 with 0.0)."""
+    from pyspark.sql.types import DoubleType, LongType
+
+    rng = np.random.default_rng(11)
+    nan = float("nan")
+    cases = {
+        "bigint": ([None, 1, 2**40 + 3, -5], LongType()),
+        "double": ([None, nan, -0.0, 0.0, 1.5], DoubleType()),
+    }
+    prev = spark.conf.get(agg._ARROW_BATCH_KEY)
+    spark.conf.set(agg._ARROW_BATCH_KEY, "7")
+    try:
+        for name, (keys, dtype) in cases.items():
+            rows = []
+            for i in range(90):
+                sk = HyperLogLog(10)
+                sk.add_ints(rng.integers(0, 10**6, 20))
+                rows.append((keys[i % len(keys)], sk.to_bytes()))
+            expected: dict = {}
+            for k, blob in rows:
+                label = "nan" if k != k else k  # NaN != NaN; -0.0 == 0.0 already
+                sk = sketch_from_bytes(blob)
+                expected[label] = sk if label not in expected else expected[label].merge(sk)
+            df = spark.createDataFrame(rows, f"k {dtype.simpleString()}, sketch binary")
+            out = agg.grouped_merge_sketch_column(df, "k")
+            assert out.schema["k"].dataType == dtype, name
+            got = [("nan" if r.k != r.k else r.k, bytes(r.sketch)) for r in out.collect()]
+            assert len(got) == len(expected), (name, [k for k, _ in got])
+            assert dict(got) == {k: sk.to_bytes() for k, sk in expected.items()}, name
+    finally:
+        spark.conf.set(agg._ARROW_BATCH_KEY, prev)
+
+
+def _dense_reference(sketch, batches, weighted: bool):
+    """What a dense-only accumulator pushes into ``sketch``: one
+    bincount over the whole stream, then its nonzero (id, count) pairs
+    in id order."""
+    ids = np.concatenate(batches).astype(np.int64)
+    base = int(ids.min())
+    counts = np.bincount(ids - base)
+    nz = np.flatnonzero(counts)
+    if weighted:
+        sketch.add_ints(nz + base, counts=counts[nz])
+    else:
+        sketch.add_ints(nz + base)
+        if hasattr(sketch, "approx_items"):
+            sketch.approx_items += int(counts.sum()) - int(nz.size)
+    return sketch
+
+
+def _dedup_streams(dtype):
+    """(name, batches, mode before flush) for the three stream shapes."""
+    rng = np.random.default_rng(5)
+
+    def zipf(n, vocab):
+        return np.minimum(rng.zipf(1.3, n) - 1, vocab - 1).astype(dtype)
+
+    # sparse: 5 x 300 ids over a 50k-id range (4 x 1500 < range)
+    sparse = [np.append(zipf(299, 50_000), 50_000 - 1).astype(dtype) for _ in range(5)]
+    # dense: the first batch already has 4 x ids >= its range
+    dense = [zipf(20_000, 5_000) for _ in range(4)]
+    # turns dense at the 7th batch (4 x 7 x 2000 >= 50k)
+    turning = [np.append(zipf(1999, 50_000), 49_999).astype(dtype) for _ in range(10)]
+    return [("sparse", sparse, "sparse"), ("dense", dense, "dense"),
+            ("turning", turning, "dense")]
+
+
+_DEDUP_SKETCHES = {
+    "bloom": lambda: BloomFilter(100_000, 0.01),
+    "sbbf": lambda: SplitBlockBloomFilter(100_000, 0.01),
+    "cbf": lambda: CountingBloomFilter(100_000, 0.01),
+    "hll": lambda: HyperLogLog(),
+    "cms": lambda: CountMinSketch(1e-3, 0.01),
+    "theta": lambda: ThetaSketch(),
+    "token_family": lambda: agg.token_family_over_tokens().factory().sketch,
+    "top_k_sink": agg._CandidateSink,
+}
+
+
+@pytest.mark.parametrize("dtype", [np.int32, np.int64])
+@pytest.mark.parametrize("kind", sorted(_DEDUP_SKETCHES))
+def test_token_dedup_sparse_mode_matches_dense_reference(kind, dtype):
+    """Sparse mode must push the dense flush's exact (id, count) stream:
+    for streams that stay sparse, stay dense, or turn dense midway, the
+    wrapped sketch's bytes and approx_items equal a dense-only
+    reference's."""
+    make = _DEDUP_SKETCHES[kind]
+    weighted = kind == "top_k_sink" or None
+    for name, batches, mode in _dedup_streams(dtype):
+        acc = agg.TokenDedupAccumulator(make(), weighted=weighted)
+        for b in batches:
+            acc.add_ints(b)
+        assert (acc._counts is None) == (mode == "sparse"), (kind, name)
+        got = acc.finish()
+        ref = _dense_reference(make(), batches, acc.weighted)
+        if kind == "top_k_sink":
+            assert np.array_equal(got._ids, ref._ids), name
+            assert np.array_equal(got._counts, ref._counts), name
+            continue
+        assert got.to_bytes() == ref.to_bytes(), (kind, name)
+        assert getattr(got, "approx_items", None) == getattr(ref, "approx_items", None), (kind, name)
+
+
+def test_token_dedup_sparse_buffer_survives_caller_reuse():
+    """Sparse mode holds ids until flush, so it must not alias an array
+    the caller refills between calls."""
+    buf = np.empty(2, np.int64)
+    acc = agg.TokenDedupAccumulator(agg._CandidateSink(), weighted=True)
+    for batch in ([5, 40_000], [7, 30_000]):
+        buf[:] = batch
+        acc.add_ints(buf)
+    assert acc.finish()._ids.tolist() == [5, 7, 30_000, 40_000]
 
 
 # ---- SketchSpec type dispatch (Spark-free) ------------------------------------

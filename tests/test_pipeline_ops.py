@@ -1311,3 +1311,53 @@ def test_winsorize_clips_at_exact_histogram_quantiles(spark):
     assert clipped[100] == 9 and clipped[5] == 5 and clipped[1] == 1
     with _pytest.raises(ValueError):
         winsorize(df, "v", lo=0.9, hi=0.1)
+
+
+def test_percentile_normalize_and_winsorize_keep_null_rows(spark):
+    """NULL keys and values against a pandas oracle: every row is kept,
+    a NULL key is its own group, and a NULL value stays out of its
+    key's histogram and n and gets NULL outputs (and thresholds)."""
+    import math
+
+    import pandas as pd
+
+    from presto_bloomfilter_spark.operators.stats import percentile_normalize, winsorize
+
+    vals = {"s": [10, 10, 20, None, 30, 5], None: [7, None, 3, 7], "t": [4],
+            "z": [None, None]}
+    rows = [(i, k, v) for i, (k, v) in enumerate(
+        (k, v) for k, vs in vals.items() for v in vs)]
+    df = spark.createDataFrame(rows, "id long, source string, v long")
+    pdf = pd.DataFrame(rows, columns=["id", "source", "v"]).set_index("id")
+
+    def norm(x):
+        return None if x is None or pd.isna(x) else float(x)
+
+    def as_dict(series: pd.Series) -> dict:
+        return {i: norm(x) for i, x in series.items()}
+
+    def order_stat(s: pd.Series, q: float):
+        s = s.dropna().sort_values()
+        return s.iloc[max(math.ceil(q * len(s)), 1) - 1] if len(s) else None
+
+    for by in ("source", None):
+        groups = pdf.groupby("source", dropna=False)["v"] if by else None
+        v = pdf["v"]
+        rank = groups.rank(method="min") if by else v.rank(method="min")
+        n = groups.transform("count") if by else v.count()
+        want = as_dict((rank - 1) / n)
+        got = {r["id"]: norm(r["pctl"]) for r in percentile_normalize(df, "v", by=by).collect()}
+        assert got == want, by
+
+        lo_q, hi_q = 0.2, 0.8
+        out = winsorize(df, "v", by=by, lo=lo_q, hi=hi_q).collect()
+        assert sorted(r["id"] for r in out) == sorted(pdf.index), by
+        for q, col in ((lo_q, "v_lo"), (hi_q, "v_hi")):
+            th = (groups.transform(lambda s: order_stat(s, q)) if by
+                  else pd.Series(order_stat(v, q), index=pdf.index))
+            th = th.where(v.notna())
+            assert {r["id"]: norm(r[col]) for r in out} == as_dict(th), (by, col)
+        lo = pd.Series({r["id"]: norm(r["v_lo"]) for r in out}, dtype=float)
+        hi = pd.Series({r["id"]: norm(r["v_hi"]) for r in out}, dtype=float)
+        want_w = as_dict(v.clip(lower=lo, upper=hi).where(v.notna()))
+        assert {r["id"]: norm(r["v_w"]) for r in out} == want_w, by

@@ -4,6 +4,7 @@
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from presto_bloomfilter_spark.operators import aggregate as agg
@@ -83,22 +84,35 @@ def test_bigint_bloom_semi_join_probes_the_raw_key(spark, sf_dir):
     assert "as string" not in plan, plan
 
 
-def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir):
-    """The map_side grouped build must shuffle sketch blobs, not raw
-    token rows: the exchange has to sit ABOVE the partial-build python
-    node, not between scan and python."""
+@pytest.mark.parametrize("path", ["map_side", "salted", "merge"])
+def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir, path):
+    """Every grouped path plans its per-key step as Arrow, never as a
+    pandas group UDF.  The map_side build must also shuffle sketch
+    blobs, not raw token rows: its one exchange has to sit ABOVE the
+    partial-build python node, not between scan and python."""
     tokens = load_tokens(spark, sf_dir)
-    out = agg.grouped_sketch(tokens, "source", agg.hll_over_tokens("tokens"))
+    spec = agg.hll_over_tokens("tokens")
+    if path == "merge":
+        blobs = spark.createDataFrame([("a", b"")], "source string, sketch binary")
+        out = agg.grouped_merge_sketch_column(blobs, "source")
+    elif path == "salted":
+        out = agg.grouped_sketch(tokens, "source", spec, salt=8, strategy="salted")
+    else:
+        out = agg.grouped_sketch(tokens, "source", spec)
     plan = _plan(out)
-    # tree shape: Scan → MapInArrow(partial build) → Exchange → merge;
-    # the exchange must sit ABOVE the python partial-build node
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "MapInArrow" in plan, plan
+    if path != "map_side":
+        return
+    # tree shape: Scan → MapInArrow(partial build) → Exchange → Sort →
+    # MapInArrow(sorted-run merge); formatted trees print parents
+    # first, so the partial build is the MapInArrow after the exchange
     tree = plan.split("\n\n")[0]
-    scan_i = tree.find("Scan parquet")
-    map_i = tree.find("MapInArrow")
+    assert tree.count("Exchange") == 1, tree
     ex_i = tree.find("Exchange")
+    map_i = tree.find("MapInArrow", ex_i)
+    scan_i = tree.find("Scan parquet")
     assert -1 not in (scan_i, map_i, ex_i), tree
-    # formatted trees print parents first: Exchange above MapInArrow
-    # above Scan means ex_i < map_i < scan_i in text order
     assert ex_i < map_i < scan_i, tree
     # and the exchanged rows are (key, sketch) blobs, not token rows
     m = re.search(r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
