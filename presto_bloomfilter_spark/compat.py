@@ -15,14 +15,20 @@ from __future__ import annotations
 import base64
 import os
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.functions import arrow_udf
 
 from presto_bloomfilter_spark.functions import serialization as ser
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
+from presto_bloomfilter_spark.functions.cms import CountMinSketch
+from presto_bloomfilter_spark.functions.hll import HyperLogLog
+from presto_bloomfilter_spark.functions.kll import KLLSketch
 from presto_bloomfilter_spark.operators import aggregate as agg
-from presto_bloomfilter_spark.operators.probe import contains_udf
+from presto_bloomfilter_spark.operators.probe import _cached_sketch, _probe_keys, contains_udf
 from presto_bloomfilter_spark.store import SketchStore
 
 
@@ -166,18 +172,86 @@ def bloom_filter_persist(bf, path: str) -> bool:
 # ---- SQL surface ---------------------------------------------------------------
 #
 # Every reference use-site is SQL text (reference README.md:21-29,
-# run_tests.sh:123-125).  PySpark can register SCALAR functions but not
-# UDAFs, so the surface is a documented hybrid: aggregations
-# (bloom_filter, bloom_filter_from_string, bloom_filter_load) run
-# through the Python API above and publish their result as a one-row
-# temp view / binary literal; every scalar function then works inside
-# spark.sql text, so the reference's CTE probe query shape runs as-is.
+# run_tests.sh:123-125): every function registers for spark.sql text,
+# so the reference's CTE probe query shape runs as-is.
+
+
+def _varchar(els: pa.Array, fn: str) -> pa.Array:
+    """The SQL element rule (the reference takes VARCHAR): a string stays
+    a string and an integer becomes its decimal string — Arrow's cast
+    gives the same string as Spark's, so it matches what
+    ``bloom_filter`` inserts.  Any other type is a TypeError: Arrow and
+    Spark write floats differently, so the caller must cast."""
+    t = els.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return els
+    if pa.types.is_integer(t) or pa.types.is_null(t):
+        return els.cast(pa.string())
+    raise TypeError(
+        f"{fn} takes a VARCHAR element, got {t}: pass CAST(el AS STRING) "
+        f"(integers are cast for you)")
+
+
+def _insert(sk, els: pa.Array, fn: str) -> bytes:
+    """A SQL aggregate's build: the non-NULL VARCHAR elements into
+    ``sk`` through the same ``hash_dispatch`` every build takes."""
+    keys = agg._non_null(_varchar(els, fn))
+    if len(keys):
+        agg.hash_dispatch(sk, "add", keys, fn)
+    return sk.to_bytes()
+
+
+def _sql_build(make, fn: str):
+    """Arrow grouped-agg UDF ``fn(el) -> blob`` over ``make()``."""
+
+    def udf(els: pa.Array) -> bytes:
+        return _insert(make(), els, fn)
+
+    return arrow_udf(udf, "binary")
+
+
+def _blob_groups(blobs: pa.Array) -> tuple[np.ndarray, list[tuple[bytes, np.ndarray]]]:
+    """Group rows by blob at the Arrow level: ``(codes, groups)`` with
+    ``groups[codes[i]] = (blob, row indices)`` for row i, code -1 for a
+    NULL blob.  The group key is the blob's identity prefix — the
+    48-byte header (whose digest covers the payload) plus the params
+    json it declares, both dictionary-encoded — so a multi-MB filter is
+    copied once per distinct blob, never once per row."""
+    hdr = ser._HEADER.size
+    heads = pc.binary_slice(blobs, 0, hdr).dictionary_encode().dictionary
+    width = hdr + max((ser.read_params_length(h) for h in heads.to_pylist()), default=0)
+    enc = pc.binary_slice(blobs, 0, width).dictionary_encode()
+    codes = enc.indices.fill_null(-1).to_numpy(zero_copy_only=False)
+    order = np.argsort(codes, kind="stable")
+    ends = np.cumsum(np.bincount(codes + 1)).tolist()  # ends[0]: the NULL rows
+    return codes, [(blobs[int(order[lo])].as_py(), order[lo:hi])
+                   for lo, hi in zip(ends, ends[1:])]
+
+
+def _per_blob(fn, out_type: pa.DataType):
+    """Arrow UDF ``blob -> fn(blob)``: ``fn`` runs once per distinct
+    blob of a batch, and a NULL blob gives NULL."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    def udf(blobs: pa.Array) -> pa.Array:
+        codes, groups = _blob_groups(blobs)
+        return pa.array([fn(b) for b, _ in groups], out_type).take(
+            pa.array(codes, mask=codes < 0))
+
+    return arrow_udf(udf, from_arrow_type(out_type))
+
+
+def _sketch_with(blob: bytes, attr: str, fn: str, want: str):
+    sk = _cached_sketch(blob)
+    if not hasattr(sk, attr):
+        raise ValueError(f"{fn} needs a {want}, got {type(sk).__name__}")
+    return sk
 
 
 def register_sql_functions(spark: SparkSession) -> None:
     """Register the reference's scalar functions for spark.sql text:
 
-    - ``bloom_filter_contains(bf binary, el string) -> boolean``
+    - ``bloom_filter_contains(bf binary, el varchar) -> boolean``
     - ``to_string(bf binary) -> string`` (base64)
     - ``get_expected_insertions(bf binary) -> bigint``
     - ``get_false_positive_percentage(bf binary) -> double``
@@ -193,115 +267,61 @@ def register_sql_functions(spark: SparkSession) -> None:
     - ``sketch_f2(bf binary) -> double`` (Count-Sketch second moment
       Σ f² — self-join size from SQL text; loud on other families)
 
-    ``bloom_filter_contains`` is an Arrow-vectorized pandas UDF with the
-    executor-local sha256-keyed LRU (same dedup cache as the Python-API
-    probe); the header getters read only the serialized header.  Safe to
-    call more than once (re-registration replaces)."""
-    from pyspark.sql.functions import pandas_udf
+    Every one is an Arrow UDF that groups a batch's rows by blob at the
+    Arrow level and decodes each distinct blob once, through the
+    executor-local sha256-keyed LRU of the Python-API probe (the
+    reference's cache, BloomFilterScalarFunctions.java:25,46-61); the
+    header getters read only the serialized header.  A NULL blob gives
+    NULL.  ``bloom_filter_contains`` probes with the same kernel as
+    ``contains_udf``; its element follows the VARCHAR rule: a string, or
+    an integer (probed as its decimal string, as ``bloom_filter``
+    inserts it); cast any other type to STRING first.  NULL and ''
+    elements probe false.  Safe to call more than once (re-registration
+    replaces)."""
 
-    from presto_bloomfilter_spark.operators.probe import _cached_sketch
-
-    @pandas_udf("boolean")
-    def _sql_contains(blobs: pd.Series, els: pd.Series) -> pd.Series:
-        import numpy as np
-
+    @arrow_udf("boolean")
+    def _sql_contains(blobs: pa.Array, els: pa.Array) -> pa.Array:
         # nullable boolean: SQL semantics (and the reference scalar,
         # BloomFilterContainsScalarFunction.java:33-42 via @SqlNullable)
         # return NULL for a NULL filter argument, never false
-        out = pd.array(np.zeros(len(els), dtype=bool), dtype="boolean")
-        if len(els):
-            # the blob is usually a scalar subquery (one distinct value
-            # per batch); factorize handles the general case.  Group by
-            # the PBFS header+params PREFIX (48-byte header whose
-            # digest covers the payload, plus the params json it
-            # declares) — a multi-MB filter would otherwise be memcpy'd
-            # once PER ROW just to build a hashable group key.  NULL
-            # blobs get code -1 (factorize drops None from uniques).
-            def prefix(b):
-                if b is None:
-                    return None
-                mv = memoryview(b)
-                hdr = ser._HEADER.size
-                plen = ser.read_params_length(bytes(mv[:hdr]))
-                return bytes(mv[: hdr + plen])
+        els = _varchar(els, "bloom_filter_contains")
+        codes, groups = _blob_groups(blobs)
+        hits = np.zeros(len(els), dtype=bool)
+        for blob, rows in groups:
+            keys = els if len(rows) == len(els) else els.take(rows)
+            hits[rows] = _probe_keys(_cached_sketch(blob), keys)
+        return pa.array(hits, mask=codes < 0)
 
-            codes, uniques = pd.factorize(blobs.map(prefix))
-            out[codes == -1] = None
-            for u in range(len(uniques)):
-                mask = codes == u
-                # one full-blob copy per GROUP, not per row
-                first = int(np.flatnonzero(mask)[0])
-                sk = _cached_sketch(bytes(blobs.iloc[first]))
-                out[mask] = sk.might_contain_strings(els[mask])
-        return pd.Series(out, dtype="boolean")
+    @arrow_udf("binary")
+    def _sql_from_string(s: pa.Array) -> pa.Array:
+        return pa.array([None if x is None else base64.b64decode(x) for x in s.to_pylist()],
+                        pa.binary())
 
-    @pandas_udf("string")
-    def _sql_to_string(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: None if b is None else base64.b64encode(bytes(b)).decode("ascii")
-        )
-
-    @pandas_udf("long")
-    def _sql_n(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: None if b is None else int(ser.read_params(bytes(b))["n"]))
-
-    @pandas_udf("double")
-    def _sql_p(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda b: None if b is None else float(ser.read_params(bytes(b))["p"]))
-
-    @pandas_udf("binary")
-    def _sql_from_string(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: None if x is None else base64.b64decode(x))
-
-    @pandas_udf("double")
-    def _sql_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        # quantile-family scalar (KLL / t-digest): sketch_quantile(bf, q)
-        def one(b, q):
-            # a NULL double reaches the pandas UDF as NaN, not None
-            if b is None or q is None or q != q:
-                return None
-            sk = _cached_sketch(bytes(b))
-            if not hasattr(sk, "quantile"):
-                raise ValueError(
-                    f"sketch_quantile needs a quantile sketch, got "
-                    f"{type(sk).__name__}")
-            return float(sk.quantile(float(q)))
-
-        return pd.Series([one(b, q) for b, q in zip(blobs, qs)],
-                         dtype="float64")
-
-    @pandas_udf("double")
-    def _sql_f2(blobs: pd.Series) -> pd.Series:
-        # second-moment scalar (Count-Sketch): sketch_f2(bf) -> Σ f²
-        def one(b):
-            if b is None:
-                return None
-            sk = _cached_sketch(bytes(b))
-            if not hasattr(sk, "f2"):
-                raise ValueError(
-                    f"sketch_f2 needs a Count-Sketch, got {type(sk).__name__}")
-            return float(sk.f2())
-
-        return pd.Series([one(b) for b in blobs], dtype="float64")
-
-    @pandas_udf("double")
-    def _sql_estimate(blobs: pd.Series) -> pd.Series:
-        # family-generic: every PBFS sketch defines estimate() (HLL/
-        # theta distinct count, bloom fill-derived insertions, CMS
-        # total weight, KLL/t-digest n); decode through the executor-
-        # local sha256 LRU so a broadcast blob deserializes once
-        return blobs.map(
-            lambda b: None if b is None
-            else float(_cached_sketch(bytes(b)).estimate()))
+    @arrow_udf("double")
+    def _sql_quantile(blobs: pa.Array, qs: pa.Array) -> pa.Array:
+        codes, groups = _blob_groups(blobs)
+        null = (codes < 0) | qs.is_null().to_numpy(zero_copy_only=False)
+        out = np.zeros(len(qs))
+        for blob, rows in groups:
+            sk = _sketch_with(blob, "quantile", "sketch_quantile", "quantile sketch")
+            rows = rows[~null[rows]]
+            out[rows] = [float(sk.quantile(q)) for q in qs.take(rows).to_pylist()]
+        return pa.array(out, mask=null)
 
     spark.udf.register("bloom_filter_contains", _sql_contains)
-    spark.udf.register("to_string", _sql_to_string)
-    spark.udf.register("get_expected_insertions", _sql_n)
-    spark.udf.register("get_false_positive_percentage", _sql_p)
+    spark.udf.register("to_string", _per_blob(
+        lambda b: base64.b64encode(b).decode("ascii"), pa.string()))
+    spark.udf.register("get_expected_insertions", _per_blob(
+        lambda b: int(ser.read_params(b)["n"]), pa.int64()))
+    spark.udf.register("get_false_positive_percentage", _per_blob(
+        lambda b: float(ser.read_params(b)["p"]), pa.float64()))
     spark.udf.register("bloom_filter_from_string", _sql_from_string)
-    spark.udf.register("sketch_estimate", _sql_estimate)
+    spark.udf.register("sketch_estimate", _per_blob(
+        lambda b: float(_cached_sketch(b).estimate()), pa.float64()))
+    spark.udf.register("sketch_f2", _per_blob(
+        lambda b: float(_sketch_with(b, "f2", "sketch_f2", "Count-Sketch").f2()),
+        pa.float64()))
     spark.udf.register("sketch_quantile", _sql_quantile)
-    spark.udf.register("sketch_f2", _sql_f2)
     register_sql_aggregates(spark)
 
 
@@ -309,71 +329,48 @@ def register_sql_aggregates(spark: SparkSession) -> None:
     """Register the reference's AGGREGATE functions for spark.sql text
     (called by ``register_sql_functions`` — one call covers both):
 
-    - ``bloom_filter(el string) -> binary`` (reference defaults: n=10M,
+    - ``bloom_filter(el varchar) -> binary`` (reference defaults: n=10M,
       p=0.01, BloomFilter.java:64-65)
-    - ``bloom_filter_sized(el string, n bigint, p double) -> binary``
+    - ``bloom_filter_sized(el varchar, n bigint, p double) -> binary``
       (the reference's ``bloom_filter(el, n, p)`` overloads — Spark UDF
       names cannot overload by arity, so the sized form is its own name)
-    - ``hll_sketch(el string) -> binary``
-    - ``cms_sketch(el string) -> binary`` / ``kll_sketch(v double) ->
+    - ``hll_sketch(el varchar) -> binary``
+    - ``cms_sketch(el varchar) -> binary`` / ``kll_sketch(v double) ->
       binary`` — the sibling sketches in SQL text; decode with the
       registered ``sketch_estimate`` / ``sketch_quantile`` scalars
     - ``sketch_merge(bf binary) -> binary`` (the reference's
       ``bloom_filter(bf)`` aggregation of PRE-BUILT filters,
       BloomFilterAggregation.java — family-generic here)
 
-    These are grouped-agg pandas UDFs: Spark ships each group's rows to
+    These are Arrow grouped-agg UDFs: Spark ships each group's rows to
     one task (complete-mode aggregation, no partial/merge combine), so
     this is the SQL-TEXT PARITY surface, not the scale path — corpus-
     scale builds belong to operators/aggregate's partial/tree-merge
     dataflow, whose blobs these same SQL scalars can then probe/decode.
-    NULL elements are skipped, like the reference's null handling.
+    Elements follow the VARCHAR rule of ``bloom_filter_contains`` and
+    insert through the build's ``hash_dispatch``; NULL elements are
+    skipped, like the reference's null handling.  An aggregate over
+    empty input gives no rows.
     """
-    from pyspark.sql.functions import pandas_udf
 
-    from presto_bloomfilter_spark.functions.hll import HyperLogLog
+    @arrow_udf("binary")
+    def _agg_bloom_sized(els: pa.Array, n: pa.Array, p: pa.Array) -> bytes:
+        return _insert(BloomFilter(int(n[0].as_py()), float(p[0].as_py())), els,
+                       "bloom_filter_sized")
 
-    @pandas_udf("binary")
-    def _agg_bloom(els: pd.Series) -> bytes:
-        return BloomFilter().add_strings(els).to_bytes()
+    @arrow_udf("binary")
+    def _agg_kll(vals: pa.Array) -> bytes:
+        return KLLSketch().add(agg._non_null(vals).to_numpy(zero_copy_only=False)).to_bytes()
 
-    @pandas_udf("binary")
-    def _agg_bloom_sized(els: pd.Series, n: pd.Series, p: pd.Series) -> bytes:
-        if not len(els):
-            return None
-        return (BloomFilter(int(n.iloc[0]), float(p.iloc[0]))
-                .add_strings(els).to_bytes())
-
-    @pandas_udf("binary")
-    def _agg_hll(els: pd.Series) -> bytes:
-        return HyperLogLog().add_strings(els).to_bytes()
-
-    @pandas_udf("binary")
-    def _agg_cms(els: pd.Series) -> bytes:
-        from presto_bloomfilter_spark.functions.cms import CountMinSketch
-
-        return CountMinSketch().add_strings(els).to_bytes()
-
-    @pandas_udf("binary")
-    def _agg_kll(vals: pd.Series) -> bytes:
-        import numpy as np
-
-        from presto_bloomfilter_spark.functions.kll import KLLSketch
-
-        # KLLSketch.add drops NaN itself; only the NULL→NaN conversion
-        # is needed here
-        return KLLSketch().add(
-            vals.to_numpy(dtype=np.float64, na_value=np.nan)).to_bytes()
-
-    @pandas_udf("binary")
-    def _agg_merge(blobs: pd.Series) -> bytes:
-        sk = ser.merge_blobs(bytes(b) for b in blobs if b is not None)
+    @arrow_udf("binary")
+    def _agg_merge(blobs: pa.Array) -> bytes:
+        sk = ser.merge_blobs(agg._non_null(blobs).to_pylist())
         return None if sk is None else sk.to_bytes()
 
-    spark.udf.register("bloom_filter", _agg_bloom)
+    for fn, make in [("bloom_filter", BloomFilter), ("hll_sketch", HyperLogLog),
+                     ("cms_sketch", CountMinSketch)]:
+        spark.udf.register(fn, _sql_build(make, fn))
     spark.udf.register("bloom_filter_sized", _agg_bloom_sized)
-    spark.udf.register("hll_sketch", _agg_hll)
-    spark.udf.register("cms_sketch", _agg_cms)
     spark.udf.register("kll_sketch", _agg_kll)
     spark.udf.register("sketch_merge", _agg_merge)
 

@@ -888,22 +888,41 @@ class _CandidateSink:
 # ---- grouped aggregation (map-side partials, sorted-run folds) ---------------
 
 
+def _key_slices(b: pa.RecordBatch, key: str) -> Iterator[tuple[object, pa.RecordBatch]]:
+    """``(value, rows)`` per distinct value of the ``key`` column of
+    ``b``, the NULL rows as value None.  The NULL rows are filtered off
+    first, at the Arrow level: np.unique cannot sort None against str,
+    and an int column with nulls would float to NaN.  Then one stable
+    ``np.argsort`` of the key codes and one ``take`` order the batch by
+    key, and each key's rows are a zero-copy ``slice`` of it (input
+    order kept within a key)."""
+    import pyarrow.compute as pc
+
+    if b.column(key).null_count:
+        null = pc.is_null(b.column(key))
+        yield None, b.filter(null)
+        b = b.filter(pc.invert(null))
+    uniq, inv = np.unique(b.column(key).to_numpy(zero_copy_only=False), return_inverse=True)
+    if len(uniq) == 1:
+        yield uniq[0], b
+        return
+    b = b.take(pa.array(np.argsort(inv, kind="stable")))
+    ends = np.cumsum(np.bincount(inv)).tolist()
+    for kv, lo, hi in zip(uniq, [0, *ends], ends):
+        yield kv, b.slice(lo, hi - lo)
+
+
 def _grouped_partial_build(spec: SketchSpec, key: str):
     """mapInArrow body: one partial sketch per (input partition, key).
 
-    Arrow-level group split: NULL-key rows are filtered off as their own
-    group, then one stable ``np.argsort`` of the key codes and one
-    ``take`` order the batch by key, and each key's rows are a zero-copy
-    ``slice`` of it (input order kept within a key).  Raw rows never
-    shuffle, and token list columns never pass through pandas object
-    arrays.  A key's per-partition stream is small next to the
-    vocabulary, so a token spec's accumulator stays in its sparse mode.
+    Arrow-level group split (:func:`_key_slices`, NULL keys one group).
+    Raw rows never shuffle, and token list columns never pass through
+    pandas object arrays.  A key's per-partition stream is small
+    next to the vocabulary, so a token spec's accumulator stays in its
+    sparse mode.
     """
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        _NULL_GROUP = object()  # dict key for the NULL group
         sketches: dict = {}
 
         def update(kv, rows: pa.RecordBatch) -> None:
@@ -913,34 +932,12 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
             spec.update(sk, rows)
 
         for b in batches:
-            if not b.num_rows:
-                continue
-            kcol = b.column(key)
-            if kcol.null_count:
-                # split the NULL-group rows off at the Arrow level:
-                # np.unique cannot sort None against str (TypeError),
-                # and a numeric key column with nulls would float to
-                # NaN — dropping nulls BEFORE to_numpy also keeps int
-                # keys exactly int64
-                null_mask = pc.is_null(kcol)
-                update(_NULL_GROUP, b.filter(null_mask))
-                b = b.filter(pc.invert(null_mask))
-                if not b.num_rows:
-                    continue
-                kcol = b.column(key)
-            uniq, inv = np.unique(kcol.to_numpy(zero_copy_only=False), return_inverse=True)
-            if len(uniq) == 1:
-                update(uniq[0], b)
-                continue
-            b = b.take(pa.array(np.argsort(inv, kind="stable")))
-            ends = np.cumsum(np.bincount(inv)).tolist()
-            for kv, lo, hi in zip(uniq, [0, *ends], ends):
-                update(kv, b.slice(lo, hi - lo))
+            for kv, rows in _key_slices(b, key):
+                update(kv, rows)
         if sketches:
             ks = list(sketches)
             yield pa.RecordBatch.from_arrays(
-                [pa.array([None if k is _NULL_GROUP else str(k) for k in ks],
-                          pa.string()),
+                [pa.array([None if k is None else str(k) for k in ks], pa.string()),
                  pa.array([sketches[k].to_bytes() for k in ks], pa.binary())],
                 [key, "sketch"],
             )
@@ -1082,24 +1079,27 @@ def sketch_estimates(df: DataFrame, col: str = "sketch",
     missing last step that otherwise tempts a collect+deserialize loop
     over a sketch table).  All other columns pass through unchanged;
     every sketch family defines estimate() (HLL/theta distinct count,
-    bloom fill-derived insertions, CMS total weight, KLL/t-digest n)."""
-    fields = [f"{f.name} {f.dataType.simpleString()}"
-              for f in df.schema.fields if f.name != col]
+    bloom fill-derived insertions, CMS total weight, KLL/t-digest n).
+    The other columns pass through as the batch's own Arrow arrays, so a
+    bigint stays exact next to a NULL; a NULL sketch gives a NULL
+    estimate."""
+    from pyspark.sql.types import StructType
+
+    fields = [f for f in df.schema.fields if f.name != col]
     if len(fields) == len(df.schema.fields):
         raise ValueError(f"no column {col!r} in {df.columns}")
     if out_col in df.columns and out_col != col:
         raise ValueError(
             f"output column {out_col!r} already exists in {df.columns}; "
             "pass a different out_col")
-    out_schema = ", ".join([*fields, f"{out_col} double"])
 
-    def decode(it):
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf[out_col] = [float(sketch_from_bytes(b).estimate()) for b in pdf[col]]
-            yield pdf.drop(columns=[col])
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            est = [None if x is None else float(sketch_from_bytes(x).estimate())
+                   for x in b.column(col).to_pylist()]
+            yield b.drop_columns([col]).append_column(out_col, pa.array(est, pa.float64()))
 
-    return df.mapInPandas(decode, out_schema)
+    return df.mapInArrow(decode, StructType(fields).add(out_col, "double"))
 
 
 def grouped_merge_sketch_column(df: DataFrame, key: str, col: str = "sketch") -> DataFrame:

@@ -553,6 +553,38 @@ def minhash_near_dup_pairs(
 # ---- exact n-gram Jaccard (set-similarity join, pure Catalyst) ----------------
 
 
+def _gram_sets(df: DataFrame, text_col: str, id_col: str, n: int,
+               max_gram_docs: int | None) -> tuple[DataFrame, DataFrame]:
+    """Each doc's distinct word-n-gram set as ``(id, sz)`` set sizes and
+    exploded ``(id, g)`` rows — the input of both n-gram pair joins.
+
+    ``max_gram_docs`` drops from the rows (not from the sizes) every
+    gram in more than that many docs.  Grams are distinct per doc, so a
+    gram's row count is its document frequency; the count is a
+    ``groupBy`` (partial counts before the shuffle, so a stop-gram
+    shared by every doc is one row per task, not every row on one task
+    as a per-gram window would be), and the over-cap grams leave by a
+    broadcast anti join.
+    """
+    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    grams = F.when(
+        F.size(words) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - n),
+            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(n)]),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", words)))
+    sets = df.select(
+        F.col(id_col).cast("string").alias("id"),
+        F.array_distinct(grams).alias("grams"),
+    )
+    tokens = sets.select("id", F.explode("grams").alias("g"))
+    if max_gram_docs is not None:
+        stop = tokens.groupBy("g").count().filter(F.col("count") > max_gram_docs).select("g")
+        tokens = tokens.join(F.broadcast(stop), "g", "left_anti")
+    return sets.select("id", F.size("grams").alias("sz")), tokens
+
+
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                         threshold: float = 0.5, n: int = 3,
                         max_gram_docs: int | None = None) -> DataFrame:
@@ -575,27 +607,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     whitespace, no empty words — Python ``str.split()`` semantics), so
     this Jaccard is the same similarity verify_pairs_exact computes.
     """
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    sets = df.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.array_distinct(grams).alias("grams"),
-    )
-    sizes = sets.select("id", F.size("grams").alias("sz"))
-    tokens = sets.select("id", F.explode("grams").alias("g"))
-    if max_gram_docs is not None:
-        w = Window.partitionBy("g")
-        tokens = (
-            tokens.withColumn("__df", F.count(F.lit(1)).over(w))
-            .filter(F.col("__df") <= max_gram_docs)
-            .drop("__df")
-        )
+    sizes, tokens = _gram_sets(df, text_col, id_col, n, max_gram_docs)
     a, b = tokens.alias("a"), tokens.alias("b")
     co = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") < F.col("b.id")))
@@ -635,27 +647,7 @@ def ngram_containment_pairs(df: DataFrame, text_col: str = "text",
     corpus carries no containment signal but quadratic join cost);
     None keeps the result exact, which is what the oracle checks.
     """
-    words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-    sets = df.select(
-        F.col(id_col).cast("string").alias("id"),
-        F.array_distinct(grams).alias("grams"),
-    )
-    sizes = sets.select("id", F.size("grams").alias("sz"))
-    tokens = sets.select("id", F.explode("grams").alias("g"))
-    if max_gram_docs is not None:
-        w = Window.partitionBy("g")
-        tokens = (
-            tokens.withColumn("__df", F.count(F.lit(1)).over(w))
-            .filter(F.col("__df") <= max_gram_docs)
-            .drop("__df")
-        )
+    sizes, tokens = _gram_sets(df, text_col, id_col, n, max_gram_docs)
     a, b = tokens.alias("a"), tokens.alias("b")
     co = (
         a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.id") != F.col("b.id")))

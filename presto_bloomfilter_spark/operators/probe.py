@@ -137,6 +137,20 @@ class ProbeMetrics:
         }
 
 
+def _probe_keys(sk, keys: pa.Array) -> np.ndarray:
+    """The one membership kernel: ``keys`` probed against ``sk`` through
+    :func:`hash_dispatch` (the hash path the build takes for the same
+    Arrow type), NULL keys dropped at the Arrow level and probing False.
+    Serves ``contains_udf``, SQL ``bloom_filter_contains`` and
+    ``sharded_contains``."""
+    hits = hash_dispatch(sk, "might_contain", _non_null(keys), "probe key")
+    if not keys.null_count:
+        return hits
+    out = np.zeros(len(keys), dtype=bool)
+    out[keys.is_valid().to_numpy(zero_copy_only=False)] = hits
+    return out
+
+
 def contains_udf(spark: SparkSession, sketch, metrics: ProbeMetrics | None = None):
     """Vectorized membership predicate over a broadcast sketch.
 
@@ -158,11 +172,7 @@ def contains_udf(spark: SparkSession, sketch, metrics: ProbeMetrics | None = Non
     def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         sk = _cached_sketch(bv.value)
         for keys in it:
-            hits = hash_dispatch(sk, "might_contain", _non_null(keys), "probe key")
-            if keys.null_count:
-                out = np.zeros(len(keys), dtype=bool)
-                out[keys.is_valid().to_numpy(zero_copy_only=False)] = hits
-                hits = out
+            hits = _probe_keys(sk, keys)
             if metrics is not None:
                 metrics._probes.add(len(hits))
                 metrics._misses.add(int(len(hits) - hits.sum()))

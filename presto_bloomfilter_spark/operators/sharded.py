@@ -13,9 +13,11 @@ FAMILY of S independent filters sharded by key hash:
   sketch-table/store layer already handles atomic publish;
 - probe: repartition probe rows by the SAME shard function, so each
   task touches exactly one shard; the task lazily loads that one
-  filter from the store (executor-local sha256-keyed LRU) and probes
-  its whole partition vectorized.  No executor ever holds more than
-  one shard (plus cache), no broadcast of the full family exists.
+  filter from the store (executor-local sha256-keyed LRU), cuts each
+  Arrow batch into per-shard slices and probes them with the shared
+  ``probe._probe_keys`` kernel, passing the probe rows' own columns
+  through.  No executor ever holds more than one shard (plus cache),
+  no broadcast of the full family exists.
 
 Union semantics per shard are unchanged (bitset OR), so the family
 keeps the merge algebra: two sharded families with identical (S, n, p)
@@ -30,12 +32,14 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
 from presto_bloomfilter_spark.operators import aggregate as agg
+from presto_bloomfilter_spark.operators.aggregate import _key_slices
 from presto_bloomfilter_spark.store import SketchStore
 
 
@@ -160,7 +164,7 @@ def sharded_contains(
     """
     import json
 
-    from presto_bloomfilter_spark.operators.probe import _cached_sketch
+    from presto_bloomfilter_spark.operators.probe import _cached_sketch, _probe_keys
 
     driver_store = SketchStore(store_root)
     manifest_key = f"{name}.manifest"
@@ -194,10 +198,8 @@ def sharded_contains(
 
     # the probe key is Spark-cast to string ONCE, JVM-side, and carried
     # through the shuffle: the build inserted Spark cast("string")
-    # forms, and probing pandas astype(str) instead would silently
-    # false-negative every value whose pandas stringification differs
-    # (a NULL in the batch floats the column: '12345.0' vs '12345';
-    # booleans 'True' vs 'true'; ids >2^53 losing precision)
+    # forms, so the probe hashes exactly those strings (a Python-side
+    # stringification would differ: 'True' vs 'true', '1.0E-7')
     with_shard = probe_df.withColumn(
         "__k", F.col(probe_col).cast("string")
     ).withColumn("__shard", _shard_col(F.col("__k"), shards))
@@ -214,18 +216,15 @@ def sharded_contains(
         ).repartition(probe_parallelism, "__shard", "__salt")
     else:
         with_shard = with_shard.repartition(shards, "__shard")
-    out_fields = probe_df.schema.fields
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-    keep_cols = [f.name for f in out_fields]
+    keep_cols = probe_df.columns
+    out_schema = StructType(list(probe_df.schema.fields))
     if flag_col is not None:
-        out_schema += f", {flag_col} boolean"
+        out_schema.add(flag_col, "boolean")
 
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         store = SketchStore(store_root)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            for shard, sub in pdf.groupby("__shard"):
+        for b in batches:
+            for shard, sub in _key_slices(b, "__shard"):
                 key = shard_keys[int(shard)]
                 if not store.exists(key):
                     # persist_sharded_bloom writes EVERY shard in
@@ -238,16 +237,14 @@ def sharded_contains(
                         f"{store_root!r} (manifest says {shards} shards "
                         f"exist); store unreachable or partially persisted"
                     )
-                sk = _cached_sketch(store.get_bytes(key))
-                mask = sk.might_contain_strings(sub["__k"])
+                hits = _probe_keys(_cached_sketch(store.get_bytes(key)), sub.column("__k"))
+                out = sub.select(keep_cols)
                 if flag_col is not None:
-                    out = sub[keep_cols].copy()
-                    out[flag_col] = mask
-                    yield out
+                    yield out.append_column(flag_col, pa.array(hits))
                 else:
-                    yield sub.loc[mask if keep_hits else ~mask, keep_cols]
+                    yield out.filter(pa.array(hits if keep_hits else ~hits))
 
-    return with_shard.mapInPandas(probe, out_schema)
+    return with_shard.mapInArrow(probe, out_schema)
 
 
 def sharded_bloom_semi_join(

@@ -12,9 +12,9 @@ shape instead is:
 - sharded family (``build_xor_shards`` + ``persist_xor_shards``): route
   keys by the SAME ``xxhash64(string key) mod S`` function the sharded
   bloom family uses, peel each shard in its own task, persist one store
-  object per shard plus a manifest.  Because probing only needs
-  ``might_contain_strings`` on whatever blob the store returns, the
-  EXISTING ``operators/sharded.py:sharded_contains`` probes an xor
+  object per shard plus a manifest.  Because probing only needs the
+  string probe (the shared ``probe._probe_keys`` kernel) on whatever
+  blob the store returns, the EXISTING ``operators/sharded.py:sharded_contains`` probes an xor
   family unchanged — shard routing, executor-local LRU, loud missing-
   object semantics and all.  That is the 10^12-key posture: no task
   ever holds more than one shard's keys at build or one shard's filter

@@ -4420,11 +4420,11 @@ def q_sql_bloom_agg_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE), probe (bloom_filter_contains in WHERE), exact verify, final
     agg — no Python-API step at all.  Upgrades the hybrid
     sql_surface_cte gate: round 3 documented 'a PySpark UDAF cannot be
-    SQL-registered'; grouped-agg pandas UDFs can (pyspark 4.x), so the
+    SQL-registered'; grouped-agg Arrow UDFs can (pyspark 4.x), so the
     reference's full SQL surface now exists verbatim.  Execution notes
     baked in here: the 1-row aggregate result is COLLECTED (one blob)
     and republished as a literal view before the probe references it —
-    (a) a pandas-UDAF plan inside a scalar subquery trips a
+    (a) a python-UDAF plan inside a scalar subquery tripped a
     null-session NPE in Spark's subquery re-execution (live or cached),
     and (b) attaching the CTE via CROSS JOIN instead materializes the
     ~90 KB blob once PER PROBE ROW through Arrow (measured 20x slower

@@ -586,8 +586,8 @@ class IncrementalGroupedBuild:
 
     def merged_view(self, spark):
         """DataFrame[key, sketch]: all deltas unioned and merged per key
-        IN SPARK (one blob shuffle) — decode estimates downstream with a
-        mapInPandas, or collect only if the key count is small."""
+        IN SPARK (one blob shuffle) — decode estimates downstream with
+        ``sketch_estimates``, or collect only if the key count is small."""
         from presto_bloomfilter_spark.operators.aggregate import (
             grouped_merge_sketch_column,
         )
@@ -629,23 +629,22 @@ def write_sketch_table(df, path: str, mode: str = "overwrite") -> None:
     same idea: sketches as rows in a queryable store instead of files).
     The extra columns make the table self-describing: sha256 for dedup/
     cache keys, params for geometry checks before any merge.  Non-sketch
-    columns keep their input types (an int key round-trips as int)."""
-    out_schema = ", ".join(
-        [*(f"{f.name} {f.dataType.simpleString()}" if f.name != "sketch"
-           else "sketch binary" for f in df.schema.fields),
-         "sha256 string", "params string"]
-    )
+    columns pass through as the batch's own Arrow arrays, so they keep
+    their input types and values (an int key round-trips as an exact
+    int, also next to a NULL)."""
+    import pyarrow as pa
+    from pyspark.sql.types import StructType
 
-    def annotate(it):
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["sha256"] = [ser.read_hash(b).hex() for b in pdf["sketch"]]
-            pdf["params"] = [
-                json.dumps(ser.read_params(b), sort_keys=True) for b in pdf["sketch"]
-            ]
-            yield pdf
+    def annotate(batches):
+        for b in batches:
+            blobs = b.column("sketch").to_pylist()
+            yield b.append_column(
+                "sha256", pa.array([ser.read_hash(x).hex() for x in blobs], pa.string())
+            ).append_column("params", pa.array(
+                [json.dumps(ser.read_params(x), sort_keys=True) for x in blobs], pa.string()))
 
-    df.mapInPandas(annotate, out_schema).write.mode(mode).parquet(path)
+    out_schema = StructType(list(df.schema.fields)).add("sha256", "string").add("params", "string")
+    df.mapInArrow(annotate, out_schema).write.mode(mode).parquet(path)
 
 
 def read_sketch_table(spark, path: str):

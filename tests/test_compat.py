@@ -247,6 +247,66 @@ def test_sql_contains_null_filter_is_null(spark):
     assert [r.r for r in rows] == [True, None, True]
 
 
+def test_sql_surface_varchar_rule_matches_python_api(spark):
+    """A bigint column with NULLs through SQL bloom_filter / hll_sketch /
+    bloom_filter_contains equals the Python API on the same column (the
+    ints are built and probed as their decimal strings, 2^53+1 exactly);
+    a double element is a loud TypeError that says CAST."""
+    from presto_bloomfilter_spark import HyperLogLog
+
+    compat.register_sql_functions(spark)
+    big = 2**53 + 1
+    vals = [big, None, 5, -7, None, 123456789012]
+    df = spark.createDataFrame(list(enumerate(vals)), "id bigint, v bigint").coalesce(1)
+    df.createOrReplaceTempView("tv_varchar")
+    bf = compat.bloom_filter(df, "v", 1000, 0.001)
+    row = spark.sql("SELECT bloom_filter_sized(v, 1000, 0.001) AS bf, bloom_filter(v) AS d, "
+                    "hll_sketch(v) AS h FROM tv_varchar").collect()[0]
+    assert bytes(row.bf) == bf.to_bytes()
+    assert bytes(row.d) == compat.bloom_filter(df, "v").to_bytes()
+    strs = [str(v) for v in vals if v is not None]
+    assert bytes(row.h) == HyperLogLog().add_strings(strs).to_bytes()
+
+    compat.publish_sketch_view(spark, bf, "tv_varchar_bf")
+    probe = spark.createDataFrame(list(enumerate(vals + [2**53, 999])), "id bigint, v bigint")
+    probe.createOrReplaceTempView("tv_varchar_probe")
+    sql = {r.id: r.hit for r in spark.sql(
+        "SELECT id, bloom_filter_contains((SELECT bf FROM tv_varchar_bf), v) AS hit "
+        "FROM tv_varchar_probe").collect()}
+    api = {r.id: r.hit for r in probe.select(
+        "id", compat.bloom_filter_contains(spark, bf, "v").alias("hit")).collect()}
+    assert sql == api
+    assert [sql[i] for i in range(len(vals))] == [v is not None for v in vals]
+
+    for q in ["SELECT bloom_filter_contains((SELECT bf FROM tv_varchar_bf), "
+              "CAST(v AS DOUBLE)) FROM tv_varchar",
+              "SELECT hll_sketch(CAST(v AS DOUBLE)) FROM tv_varchar"]:
+        with pytest.raises(Exception, match="CAST"):
+            spark.sql(q).collect()
+
+
+def test_sql_contains_picks_each_rows_filter(spark):
+    """'' and NULL elements probe false, a NULL blob gives NULL, and two
+    different filters chosen per row with CASE inside one batch each
+    probe against their own filter."""
+    compat.register_sql_functions(spark)
+    compat.publish_sketch_view(spark, BloomFilter(100, 0.001).add_strings(["a"]), "tv_case_a")
+    compat.publish_sketch_view(spark, BloomFilter(100, 0.001).add_strings(["b"]), "tv_case_b")
+    spark.createDataFrame(
+        [(0, "a", "a"), (1, "b", "a"), (2, "a", "b"), (3, "b", "b"),
+         (4, None, "a"), (5, "a", ""), (6, "b", None), (7, "a", "a")],
+        "id int, f string, el string").coalesce(1).createOrReplaceTempView("tv_case_rows")
+    rows = spark.sql(
+        """
+        SELECT id, bloom_filter_contains(
+                 CASE WHEN f = 'a' THEN (SELECT bf FROM tv_case_a)
+                      WHEN f = 'b' THEN (SELECT bf FROM tv_case_b) END, el) AS r
+        FROM tv_case_rows
+        """).collect()
+    assert {r.id: r.r for r in rows} == {0: True, 1: False, 2: False, 3: True,
+                                         4: None, 5: False, 6: False, 7: True}
+
+
 def test_probe_metrics_miss_rate(spark):
     """Mirror of the reference's probe-counter sanity (reference
     TestBloomFilterPerformanceContains.java:42): build over half the

@@ -1255,25 +1255,30 @@ def test_log_odds_keywords_separates_planted_vocab(spark):
     assert zs.get("common", 0.0) == 0.0
 
 
-def test_ngram_containment_max_gram_docs_drops_stop_grams(spark):
+@pytest.mark.parametrize("op,measure,kept", [
+    pytest.param("ngram_containment_pairs", "containment", 2 / 3, id="containment"),
+    pytest.param("ngram_jaccard_pairs", "jaccard", 1 / 2, id="jaccard"),
+])
+def test_ngram_containment_max_gram_docs_drops_stop_grams(spark, op, measure, kept):
     """A gram shared by every doc is dropped from candidate generation
     when max_gram_docs caps it; the exact default keeps it."""
-    from presto_bloomfilter_spark.operators.dedup import ngram_containment_pairs
+    from presto_bloomfilter_spark.operators import dedup
 
+    pairs = getattr(dedup, op)
     stop = "the quick brown"
     rows = [("a", stop + " fox one"), ("b", stop + " fox one"),
             ("c", stop + " cat two"), ("d", stop + " dog three")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    exact = {(r["id_a"], r["id_b"]) for r in
-             ngram_containment_pairs(df, threshold=0.99).collect()}
-    assert ("a", "b") in exact and ("b", "a") in exact
+    exact = {(r["id_a"], r["id_b"]) for r in pairs(df, threshold=0.99).collect()}
+    assert ("a", "b") in exact
+    if measure == "containment":
+        assert ("b", "a") in exact
     # the universal 'the quick brown' gram is dropped from candidate
-    # generation; the denominator |A| stays the full gram set (same
-    # contract as ngram_jaccard_pairs), so a<->b survives at 2/3
-    filtered = {(r["id_a"], r["id_b"]): r["containment"]
-                for r in ngram_containment_pairs(
-                    df, threshold=0.6, max_gram_docs=3).collect()}
-    assert abs(filtered[("a", "b")] - 2 / 3) < 1e-12
+    # generation; the set sizes stay the full gram sets, so a<->b
+    # survives at 2/3 containment (2 / (3 + 3 - 2) Jaccard)
+    filtered = {(r["id_a"], r["id_b"]): r[measure]
+                for r in pairs(df, threshold=0.0, max_gram_docs=3).collect()}
+    assert abs(filtered[("a", "b")] - kept) < 1e-12
     # and the stop-gram no longer links unrelated docs at all
     assert ("c", "d") not in filtered
 

@@ -6,6 +6,7 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.util import PythonEvalType
 
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators.probe import bloom_semi_join
@@ -119,6 +120,61 @@ def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir, path):
     assert m is not None, plan
     assert "tokens" not in m.group(1), m.group(1)
     assert "sketch" in m.group(1), m.group(1)
+
+
+_PANDAS_EVAL_TYPES = {v for k, v in vars(PythonEvalType).items()
+                      if k.startswith("SQL_") and "PANDAS" in k}
+
+
+@pytest.mark.parametrize("surface", ["sharded_contains", "sketch_estimates",
+                                     "sql_contains", "sql_aggregate"])
+def test_sketch_surface_plans_arrow_not_pandas(spark, tmp_path, surface):
+    """The sharded probe, the sketch-table decode and the SQL surface
+    run Arrow python nodes (MapInArrow, or ArrowEvalPython /
+    ArrowAggregatePython with an Arrow eval type), never a pandas one."""
+    from presto_bloomfilter_spark import HyperLogLog, compat
+    from presto_bloomfilter_spark.operators.sharded import (
+        build_sharded_bloom, persist_sharded_bloom, sharded_contains,
+    )
+    from presto_bloomfilter_spark.store import SketchStore
+
+    keys = spark.range(100).select(F.col("id").cast("string").alias("k"))
+    if surface == "sharded_contains":
+        root = str(tmp_path / "fam")
+        persist_sharded_bloom(build_sharded_bloom(keys, "k", 2, 100),
+                              SketchStore(root), "f", 2, 100)
+        out = sharded_contains(spark, keys, "k", root, "f", 2)
+    elif surface == "sketch_estimates":
+        out = agg.sketch_estimates(spark.createDataFrame(
+            [("a", HyperLogLog().to_bytes())], "key string, sketch binary"))
+    else:
+        compat.register_sql_functions(spark)
+        keys.createOrReplaceTempView("tv_plan_keys")
+        compat.publish_sketch_view(spark, compat.bloom_filter(keys, "k", 100), "tv_plan_bf")
+        out = spark.sql(
+            "SELECT k FROM tv_plan_keys WHERE bloom_filter_contains((SELECT bf FROM tv_plan_bf), k)"
+            if surface == "sql_contains" else "SELECT bloom_filter(k) AS bf FROM tv_plan_keys")
+    plan = _plan(out)
+    assert re.search(r"MapInArrow|ArrowEvalPython|ArrowAggregatePython", plan), plan
+    assert not re.search(r"InPandas|Pandas\(", plan), plan
+    eval_types = [int(t) for t in re.findall(
+        r"\) Arrow(?:EvalPython|AggregatePython)\n(?:[^\n]*\n)*?Arguments: [^\n]*, (\d+)\n", plan)]
+    assert not _PANDAS_EVAL_TYPES & set(eval_types), plan
+    if surface.startswith("sql"):
+        assert eval_types, plan
+
+
+@pytest.mark.parametrize("op", ["ngram_jaccard_pairs", "ngram_containment_pairs"])
+def test_ngram_pairs_stop_gram_filter_has_no_window(spark, op):
+    """The max_gram_docs document-frequency filter is a groupBy count
+    plus a broadcast anti join: no per-gram Window that would put a
+    stop-gram's every row on one task."""
+    from presto_bloomfilter_spark.operators import dedup
+
+    df = spark.createDataFrame([("a", "x y z w")], "doc_id string, text string")
+    plan = _plan(getattr(dedup, op)(df, max_gram_docs=3))
+    assert "Window" not in plan, plan
+    assert "LeftAnti" in plan, plan
 
 
 def test_adaptive_query_execution_enabled(spark):

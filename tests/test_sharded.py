@@ -134,8 +134,11 @@ def test_probe_deleted_shard_object_raises(spark, keys_df, tmp_path):
 def test_sharded_contains_exact_string_forms_and_parallelism(spark, tmp_path):
     """The probe must use Spark cast('string') forms like the build —
     pandas astype(str) on a NULL-floated int batch probed '12345.0'
-    against an inserted '12345' (silent false negatives).  Also drives
-    probe_parallelism > shards (salted shard spread)."""
+    against an inserted '12345' (silent false negatives).  The probe
+    rows' other columns pass through exactly: a bigint pass-through
+    column holding NULL and 2^53+1 in rows of ONE key (one shard, one
+    batch) keeps 2^53+1 in every mode.  Also drives probe_parallelism >
+    shards (salted shard spread)."""
     from presto_bloomfilter_spark.operators.sharded import (
         build_sharded_bloom, persist_sharded_bloom, sharded_contains,
     )
@@ -146,20 +149,26 @@ def test_sharded_contains_exact_string_forms_and_parallelism(spark, tmp_path):
     build = spark.createDataFrame([(big,), (5,), (7,)], "k bigint")
     fam = build_sharded_bloom(build, "k", 4, 1000)
     persist_sharded_bloom(fam, SketchStore(root), "f", 4, 1000)
+    hit_rows = {(big, 1), (5, None), (5, big)}
+    miss_rows = {(None, 2), (999, None), (999, big + 2)}
     probe = spark.createDataFrame(
-        [(big,), (None,), (5,), (999,)], "k bigint").coalesce(1)
-    kept = {r.k for r in sharded_contains(
-        spark, probe, "k", root, "f", 4).collect()}
-    assert big in kept and 5 in kept
-    assert None not in kept and 999 not in kept
+        sorted(hit_rows | miss_rows, key=str), "k bigint, v bigint").coalesce(1)
+
+    def rows(df):
+        return {(r.k, r.v) for r in df.collect()}
+
+    kept = rows(sharded_contains(spark, probe, "k", root, "f", 4))
+    assert kept == hit_rows
+    # complement mode: the rows that DEFINITELY miss, exact too
+    assert rows(sharded_contains(
+        spark, probe, "k", root, "f", 4, keep_hits=False)) == miss_rows
     # salted wide probe returns the same row set
-    kept2 = {r.k for r in sharded_contains(
-        spark, probe, "k", root, "f", 4, probe_parallelism=16).collect()}
-    assert kept2 == kept
+    assert rows(sharded_contains(
+        spark, probe, "k", root, "f", 4, probe_parallelism=16)) == kept
     # flag mode returns every row with a membership flag
-    flagged = {r.k: r["__hit"] for r in sharded_contains(
+    flagged = {(r.k, r.v): r["__hit"] for r in sharded_contains(
         spark, probe, "k", root, "f", 4, flag_col="__hit").collect()}
-    assert flagged[big] and flagged[5] and not flagged[999] and not flagged[None]
+    assert flagged == {**{r: True for r in hit_rows}, **{r: False for r in miss_rows}}
 
 
 def test_allocate_bloom_budget_uniform_and_exact_spend():

@@ -443,3 +443,32 @@ def test_sketch_estimates_decodes_executor_side(spark, sf_dir, tmp_path, monkeyp
         agg.sketch_estimates(per_src, col="nope")
     with pytest.raises(ValueError, match="already exists"):
         agg.sketch_estimates(per_src, out_col="source")
+
+
+def test_sketch_table_helpers_pass_bigint_keys_through_exactly(spark, tmp_path):
+    """sketch_estimates and write_sketch_table append their columns to
+    the input rows: a bigint key 2^53+1 next to a NULL key in the same
+    batch stays exact (a float round trip would give 2^53)."""
+    import json
+
+    from presto_bloomfilter_spark.functions.serialization import read_params
+    from presto_bloomfilter_spark.store import read_sketch_table, write_sketch_table
+
+    big = 2**53 + 1
+    sketches = {k: HyperLogLog().add_strings([f"u{i}" for i in range(n)])
+                for k, n in [(None, 3), (big, 5), (7, 11)]}
+    blobs = {k: sk.to_bytes() for k, sk in sketches.items()}
+    df = spark.createDataFrame(list(blobs.items()), "key bigint, sketch binary").coalesce(1)
+
+    est = {r.key: r.estimate for r in agg.sketch_estimates(df).collect()}
+    assert est == {k: float(sk.estimate()) for k, sk in sketches.items()}
+
+    path = str(tmp_path / "tbl")
+    write_sketch_table(df, path)
+    tbl = read_sketch_table(spark, path)
+    assert dict(tbl.dtypes)["key"] == "bigint"
+    rows = {r.key: r for r in tbl.collect()}
+    assert set(rows) == {None, big, 7}
+    for k, b in blobs.items():
+        assert bytes(rows[k].sketch) == b
+        assert json.loads(rows[k].params) == read_params(b)
