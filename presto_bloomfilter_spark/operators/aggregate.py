@@ -36,6 +36,7 @@ path).
 from __future__ import annotations
 
 import contextlib
+import itertools
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
@@ -51,6 +52,7 @@ from presto_bloomfilter_spark.functions.hll import HyperLogLog
 from presto_bloomfilter_spark.functions.kll import KLLSketch
 from presto_bloomfilter_spark.functions.multi import MultiSketch
 from presto_bloomfilter_spark.functions.serialization import merge_blobs, sketch_from_bytes
+from presto_bloomfilter_spark.store import _source_files
 
 DEFAULT_FAN_IN = 16
 
@@ -426,32 +428,39 @@ def _blob_batch(sk) -> pa.RecordBatch:
 
 
 def _row_group_batches(path: str, cols: list[str],
-                       row_groups: Iterable[int] | None = None) -> Iterator[pa.RecordBatch]:
-    """The one direct parquet reader (fused, grouped-fused and
-    incremental builds): opens the file once per task and reads each
-    row group (default: all) with only ``cols``."""
+                       row_groups: Iterable[int]) -> Iterator[pa.RecordBatch]:
+    """The one direct parquet reader: opens the file once and reads each
+    of ``row_groups`` with only ``cols``."""
     pf = pq.ParquetFile(path)
-    if row_groups is None:
-        row_groups = range(pf.metadata.num_row_groups)
     for rg in row_groups:
         yield from pf.read_row_group(rg, columns=cols).to_batches()
 
 
-def _fused_shards(spark, path: str, cols: list[str], n_tasks: int | None, n_rg: int):
-    """(shard DataFrame, n_tasks, scan) for a fused parquet build: one
-    Spark task per shard id, row groups strided over shards so
-    file-position skew balances out; ``scan(shard_batches)`` is a task's
-    batch source."""
-    if n_tasks is None:
-        n_tasks = spark.sparkContext.defaultParallelism
-    n_tasks = max(1, min(n_tasks, n_rg))
+def _list_shards(files: list[str]) -> list[tuple[str, int]]:
+    """The (file, row group) shards of ``files``, from their footers
+    (read on the driver)."""
+    return [(f, rg) for f in files for rg in range(pq.read_metadata(f).num_row_groups)]
 
-    def scan(shard_batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        return _row_group_batches(path, cols, [
-            rg for b in shard_batches for sid in b.column(0).to_pylist()
-            for rg in range(sid, n_rg, n_tasks)])
 
-    return spark.range(0, n_tasks, 1, n_tasks), n_tasks, scan
+def _fused_shards(spark, shards: list, n_tasks: int | None):
+    """(task DataFrame, per-task shard lists) for a scan that runs in the
+    Python workers: shard i runs in task i mod n_tasks, where n_tasks =
+    min(requested or defaultParallelism, number of shards) — strided so
+    file-position skew balances out.  Task t's one input row is t."""
+    n = max(1, min(n_tasks or spark.sparkContext.defaultParallelism, len(shards)))
+    return spark.range(0, n, 1, n), [shards[t::n] for t in range(n)]
+
+
+def _task_shards(groups: list, batches: Iterator[pa.RecordBatch]) -> list:
+    """A ``_fused_shards`` task's shard list, read off its input rows."""
+    return [s for b in batches for t in b.column(0).to_pylist() for s in groups[t]]
+
+
+def _scan_shards(shards: list, cols: list[str]) -> Iterator[pa.RecordBatch]:
+    """A task's batches: each of its files opened once, row groups in
+    shard order."""
+    for path, run in itertools.groupby(shards, key=lambda s: s[0]):
+        yield from _row_group_batches(path, cols, [rg for _, rg in run])
 
 
 def _merge_partials(metrics: BuildMetrics | None = None):
@@ -553,64 +562,68 @@ def _tree_merge_collect(
 
 def aggregate_sketch_from_parquet(
     spark,
-    path: str,
+    source,
     spec: SketchSpec,
     n_tasks: int | None = None,
     fan_in: int = DEFAULT_FAN_IN,
     metrics: BuildMetrics | None = None,
 ):
-    """Fused columnar scan + partial sketch build over a parquet file.
+    """Fused columnar scan + partial sketch build over parquet files.
 
     The DataFrame path (``aggregate_sketch``) routes every token through
     the JVM: parquet scan → InternalRow → Arrow serialization → socket →
     Python.  For a sketch build that data movement *is* the job cost —
     the sketch kernels are ~10x cheaper than the transport.  This
     operator keeps Spark as the scheduler/merger but moves the scan into
-    the Python worker: the driver lists row groups, Spark schedules one
-    task per shard (``spark.range(0, n, 1, n)`` → one shard id per
-    partition), and each task reads its row groups directly with
-    pyarrow, updates its partial sketch, and emits one blob.  Raw tokens
-    never cross a process boundary.
+    the Python worker: the driver lists (file, row group) shards, Spark
+    schedules one task per shard group (``spark.range(0, n, 1, n)`` →
+    one task id per partition), and each task reads its row groups
+    directly with pyarrow, updates its partial sketch, and emits one
+    blob.  Raw tokens never cross a process boundary.
 
+    ``source`` is a parquet file, a directory of ``*.parquet``, a list
+    of paths, a ``DeltaTable`` or a ``DeltaSnapshot`` — the sources of
+    ``store.incremental_aggregate``, which is this build with a store.
     On a real cluster the same pattern holds with object-store paths
-    (pyarrow reads s3://… natively); shards are strided over row groups
-    so file-position skew balances out.  This mirrors how Spark itself
+    (pyarrow reads s3://… natively).  This mirrors how Spark itself
     splits parquet scans — we only relocate the decode to the process
     that consumes the bytes.
     """
-    n_rg = pq.ParquetFile(path).metadata.num_row_groups
-    shards, n_tasks, scan = _fused_shards(spark, path, list(spec.columns), n_tasks, n_rg)
+    tasks, groups = _fused_shards(spark, _list_shards(_source_files(source)[0]), n_tasks)
+    cols = list(spec.columns)
 
-    def build_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield _blob_batch(_build_partial(spec, scan(batches), metrics)[0])
+    def build_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        shards = _task_shards(groups, batches)
+        yield _blob_batch(_build_partial(spec, _scan_shards(shards, cols), metrics)[0])
 
-    partials = shards.mapInArrow(build_shard, "sketch binary")
-    return _tree_merge_collect(partials, n_tasks, fan_in, spec, metrics)
+    partials = tasks.mapInArrow(build_task, "sketch binary")
+    return _tree_merge_collect(partials, len(groups), fan_in, spec, metrics)
 
 
 def grouped_sketch_from_parquet(
     spark,
-    path: str,
+    source,
     key: str,
     spec: SketchSpec,
     n_tasks: int | None = None,
 ) -> DataFrame:
-    """Grouped fused build: per-(shard, key) partials from a direct
+    """Grouped fused build: per-(task, key) partials from a direct
     pyarrow row-group scan, then a blob-only grouped merge.
 
-    The grouped analogue of ``aggregate_sketch_from_parquet``: raw rows
-    never cross a process boundary and never shuffle — only
-    ``shards x keys`` sketch blobs do.  Skew-proof for the same reason
-    as the map_side strategy: a task only sees its own shard's share of
-    a hot key.  Returns DataFrame[key string, sketch binary].
+    The grouped analogue of ``aggregate_sketch_from_parquet`` (same
+    sources, same shard scan): raw rows never cross a process boundary
+    and never shuffle — only ``tasks x keys`` sketch blobs do.
+    Skew-proof for the same reason as the map_side strategy: a task only
+    sees its own shards' share of a hot key.  Returns DataFrame[key
+    string, sketch binary].
     """
-    pf = pq.ParquetFile(path)
+    files = _source_files(source)[0]
     # key labels come from Python str() in the fused kernel; str() and
     # Spark's cast-to-string agree for string/int keys but NOT for
     # double ('1e-07' vs '1.0E-7') or boolean ('True' vs 'true') — so
     # restrict this dataflow to the types whose labels are identical to
     # grouped_sketch's, instead of silently diverging
-    ktype = pf.schema_arrow.field(key).type
+    ktype = pq.read_schema(files[0]).field(key).type
     if not (pa.types.is_string(ktype) or pa.types.is_large_string(ktype)
             or pa.types.is_integer(ktype)):
         raise ValueError(
@@ -619,13 +632,13 @@ def grouped_sketch_from_parquet(
             f"cast-to-string; pre-cast the key to string (or use "
             f"grouped_sketch)")
     cols = list(dict.fromkeys([key, *spec.columns]))
-    shards, _, scan = _fused_shards(spark, path, cols, n_tasks, pf.metadata.num_row_groups)
+    tasks, groups = _fused_shards(spark, _list_shards(files), n_tasks)
     grouped_body = _grouped_partial_build(spec, key)
 
-    def build_shard(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from grouped_body(scan(batches))
+    def build_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        yield from grouped_body(_scan_shards(_task_shards(groups, batches), cols))
 
-    partials = shards.mapInArrow(build_shard, f"{key} string, sketch binary")
+    partials = tasks.mapInArrow(build_task, f"{key} string, sketch binary")
     return grouped_merge_sketch_column(partials, key)
 
 

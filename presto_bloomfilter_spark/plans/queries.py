@@ -4618,21 +4618,24 @@ WHERE rn = 1
 
 def q_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resumable checkpointed build (north_rule: 'resumable from
-    checkpoint with per-partition lineage'): the first build persists
-    every partition partial; an identical re-run must recompute ZERO
-    partitions and return a byte-identical sketch, whose estimate is
-    value-checked cross-engine."""
+    checkpoint with per-partition lineage'): the documents, written as
+    8 parquet files, are built shard by shard with every part
+    persisted; an identical re-run must build ZERO shards and return a
+    byte-identical sketch, whose estimate is value-checked
+    cross-engine."""
     import tempfile
 
-    from presto_bloomfilter_spark.store import SketchStore, checkpointed_aggregate
+    from presto_bloomfilter_spark.store import SketchStore, incremental_aggregate
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id")).repartition(8)
+    src = tempfile.mkdtemp(prefix="pbs_ckpt_src_") + "/docs"
+    docs.write.parquet(src)
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_ckpt_"))
-    sk1, built1 = checkpointed_aggregate(
-        spark, docs, agg.SketchSpec("doc_id", HyperLogLog), store, "cr")
-    sk2, built2 = checkpointed_aggregate(
-        spark, docs, agg.SketchSpec("doc_id", HyperLogLog), store, "cr")
+    sk1, built1 = incremental_aggregate(
+        spark, src, agg.SketchSpec("doc_id", HyperLogLog), store, "cr")
+    sk2, built2 = incremental_aggregate(
+        spark, src, agg.SketchSpec("doc_id", HyperLogLog), store, "cr")
     n_exact = docs.distinct().count()
     est = sk2.estimate()
     return spark.createDataFrame(
@@ -4715,7 +4718,7 @@ def q_incremental_update_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from presto_bloomfilter_spark.operators.sampling import md5_bucket
     from presto_bloomfilter_spark.sources.delta import create_delta_table
     from presto_bloomfilter_spark.store import (
-        IncrementalBuild, SketchStore, incremental_aggregate_delta)
+        Manifest, SketchStore, incremental_aggregate)
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"))
@@ -4732,10 +4735,10 @@ def q_incremental_update_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store = SketchStore(tempfile.mkdtemp(prefix="pbs_deltastore_"))
     spec = agg.SketchSpec("doc_id", HyperLogLog)
-    sk1, n1 = incremental_aggregate_delta(spark, t, spec, store, "incd", 1)
-    snap1 = IncrementalBuild(store, "incd").snapshot
-    sk2, n2 = incremental_aggregate_delta(spark, t, spec, store, "incd")
-    sk3, n3 = incremental_aggregate_delta(spark, t, spec, store, "incd")
+    sk1, n1 = incremental_aggregate(spark, t.snapshot(1), spec, store, "incd")
+    snap1 = Manifest.load(store, "incd").snapshot
+    sk2, n2 = incremental_aggregate(spark, t, spec, store, "incd")
+    sk3, n3 = incremental_aggregate(spark, t, spec, store, "incd")
     full = agg.aggregate_sketch(t.read(spark), spec)
     n_v1 = t.read(spark, 1).count()
     n_all = t.read(spark).count()
@@ -4746,7 +4749,7 @@ def q_incremental_update_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
           bool(n1 == len(files_a) and n2 == len(files_b) and n3 == 0),
           bool(sk2.to_bytes() == full.to_bytes() == sk3.to_bytes()),
           bool(snap1 == "docs@v1"
-               and IncrementalBuild(store, "incd").snapshot == "docs@v2"))],
+               and Manifest.load(store, "incd").snapshot == "docs@v2"))],
         "n_docs_v1 long, n_docs long, hll_v1_ok boolean, hll_ok boolean, "
         "delta_counts_ok boolean, identical_to_full boolean, "
         "snapshot_keyed boolean",

@@ -13,8 +13,10 @@ off the log (no directory listing, no file-set fingerprinting), and
 time travel is "stop replaying earlier".
 
 Scope: the subset needed for manifest-driven reads and snapshot-keyed
-``IncrementalBuild`` — json commits, add/remove with relative or
-absolute paths, metaData passthrough.  Not implemented (loud, not
+resumable builds (``store.incremental_aggregate`` and the fused
+``aggregate_sketch_from_parquet`` take a ``DeltaTable`` or
+``DeltaSnapshot`` as their source) — json commits, add/remove with
+relative or absolute paths, metaData passthrough.  Not implemented (loud, not
 silent): parquet checkpoints (``_last_checkpoint``), column mapping,
 deletion vectors.  Tables written by this module are readable by any
 Delta reader that tolerates a missing checkpoint (the protocol only

@@ -39,9 +39,8 @@ def load_source(spark, source: str, snapshot_id: int | str | None = None):
 
     - ``"iceberg:<catalog.db.table>"`` — an Iceberg table, optionally
       pinned to ``snapshot_id`` (time-travel read: the SAME rows on
-      every retry/resume, which is what makes checkpoint lineage
-      meaningful — ``store.CheckpointedBuild`` stamps the id into its
-      manifest and refuses to resume across snapshots);
+      every retry/resume; resumable builds take parquet files or a
+      Delta snapshot instead, see ``store.incremental_aggregate``);
     - any other string — a parquet path (this sandbox's testdata; the
       production layout is identical minus the catalog).
 

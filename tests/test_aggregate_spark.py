@@ -228,21 +228,31 @@ def test_build_metrics_accumulators(spark, tokens):
     assert d["batches"] >= d["partial_sketches"]
 
 
-def test_grouped_fused_parquet_matches_dataframe_grouped(spark, sf_dir):
+def test_grouped_fused_parquet_matches_dataframe_grouped(spark, sf_dir, tmp_path):
+    import pyarrow.parquet as pq
+
     from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet
 
     path = ensure_tokens_parquet(sf_dir)
+    # the same rows as a directory of 3 files with several row groups each
+    tbl = pq.read_table(path)
+    n = tbl.num_rows
+    for i in range(3):
+        lo, hi = i * n // 3, (i + 1) * n // 3
+        pq.write_table(tbl.slice(lo, hi - lo), str(tmp_path / f"part-{i}.parquet"),
+                       row_group_size=max(1, n // 10))
     spec = agg.hll_over_tokens("tokens")
     via_df = {
         r[0]: sketch_from_bytes(r.sketch).estimate()
         for r in agg.grouped_sketch(load_tokens(spark, sf_dir), "source", spec).collect()
     }
-    via_fused = {
-        r[0]: sketch_from_bytes(r.sketch).estimate()
-        for r in agg.grouped_sketch_from_parquet(spark, path, "source", spec, n_tasks=6).collect()
-    }
     # HLL merge is register-max: estimates are partitioning-invariant
-    assert via_fused == via_df
+    for source in (path, str(tmp_path)):
+        via_fused = {
+            r[0]: sketch_from_bytes(r.sketch).estimate()
+            for r in agg.grouped_sketch_from_parquet(spark, source, "source", spec, n_tasks=6).collect()
+        }
+        assert via_fused == via_df
 
 
 def test_top_k_tokens_matches_exact_groupby(spark, tokens):

@@ -3,11 +3,12 @@ snapshot-keyed incremental sketch maintenance built on it.
 
 The reader's one job is a CORRECT manifest: log replay, time travel,
 and the loud failure modes (gaps, unknown removes, checkpointed
-tables) are pinned here; the Spark read and IncrementalBuild
-integration run against a real local table directory.
+tables) are pinned here; the Spark read, the resumable build and the
+fused build run against a real local table directory.
 """
 
 import json
+import multiprocessing
 import os
 
 import pyarrow as pa
@@ -130,8 +131,7 @@ def test_spark_read_time_travel(spark, table):
 def test_incremental_aggregate_delta_snapshot_keyed(spark, table, tmp_path):
     from presto_bloomfilter_spark import HyperLogLog
     from presto_bloomfilter_spark.operators import aggregate as agg
-    from presto_bloomfilter_spark.store import (
-        IncrementalBuild, SketchStore, incremental_aggregate_delta)
+    from presto_bloomfilter_spark.store import Manifest, SketchStore, incremental_aggregate
 
     f1 = _write_parquet(table.path + "/data/f1.parquet",
                         [f"a{i}" for i in range(300)])
@@ -141,16 +141,81 @@ def test_incremental_aggregate_delta_snapshot_keyed(spark, table, tmp_path):
     store = SketchStore(str(tmp_path / "store"))
     spec = agg.SketchSpec("doc_id", HyperLogLog)
 
-    sk1, n1 = incremental_aggregate_delta(spark, table, spec, store, "dj", 1)
+    sk1, n1 = incremental_aggregate(spark, table.snapshot(1), spec, store, "dj")
     assert n1 == 1
-    assert IncrementalBuild(store, "dj").snapshot == "tbl-1@v1"
+    assert Manifest.load(store, "dj").snapshot == "tbl-1@v1"
     table.commit(adds=[f2])
-    sk2, n2 = incremental_aggregate_delta(spark, table.path, spec, store, "dj")
+    sk2, n2 = incremental_aggregate(spark, delta.DeltaTable(table.path), spec, store, "dj")
     assert n2 == 1                                  # only the v2 delta
-    assert IncrementalBuild(store, "dj").snapshot == "tbl-1@v2"
-    _, n3 = incremental_aggregate_delta(spark, table, spec, store, "dj")
+    assert Manifest.load(store, "dj").snapshot == "tbl-1@v2"
+    _, n3 = incremental_aggregate(spark, table, spec, store, "dj")
     assert n3 == 0                                  # idempotent re-run
     full = agg.aggregate_sketch(table.read(spark), spec)
     assert sk2.to_bytes() == full.to_bytes()        # merge associativity
     assert abs(sk2.estimate() - 500) <= 0.03 * 500
     assert abs(sk1.estimate() - 300) <= 0.05 * 300
+
+
+def test_fused_build_reads_delta_snapshot(spark, table):
+    """The fused pyarrow scan takes a Delta snapshot as its source: a
+    time-travelled version builds the same bytes as the DataFrame build
+    over that version's read."""
+    from presto_bloomfilter_spark import HyperLogLog
+    from presto_bloomfilter_spark.operators import aggregate as agg
+
+    f1 = _write_parquet(table.path + "/data/f1.parquet", [f"a{i}" for i in range(300)])
+    f2 = _write_parquet(table.path + "/data/f2.parquet", [f"b{i}" for i in range(200)])
+    f3 = _write_parquet(table.path + "/data/f3.parquet", [f"c{i}" for i in range(100)])
+    table.commit(adds=[f1, f2])
+    table.commit(adds=[f3])
+    for spec in (agg.SketchSpec("doc_id", HyperLogLog), agg.bloom_over_strings("doc_id", 1000)):
+        fused = agg.aggregate_sketch_from_parquet(spark, table.snapshot(1), spec)
+        assert fused.to_bytes() == agg.aggregate_sketch(table.read(spark, 1), spec).to_bytes()
+        latest = agg.aggregate_sketch_from_parquet(spark, table, spec)
+        assert latest.to_bytes() == agg.aggregate_sketch(table.read(spark), spec).to_bytes()
+
+
+def _race_commits(path, worker, rounds, barrier, out):
+    """One racing writer: each round, wait for the other writer, then
+    try to commit the next version with this writer's own data file."""
+    t = delta.DeltaTable(path)
+    for r in range(rounds):
+        f = f"{path}/data/w{worker}-r{r}.parquet"
+        barrier.wait()
+        try:
+            out.put((worker, f, t.commit(adds=[f])))
+        except FileExistsError:
+            out.put((worker, f, None))
+
+
+def test_commit_race_between_processes(table):
+    """Two processes commit the same next version over and over: each
+    version has exactly one commit (a winner's), every attempt either
+    wins or raises FileExistsError, and the replayed snapshot has no
+    gap and holds exactly the winners' files."""
+    workers, rounds = 2, 12
+    for w in range(workers):
+        for r in range(rounds):
+            _write_parquet(f"{table.path}/data/w{w}-r{r}.parquet", [f"{w}-{r}"])
+    ctx = multiprocessing.get_context("spawn")
+    barrier, out = ctx.Barrier(workers), ctx.Queue()
+    procs = [ctx.Process(target=_race_commits, args=(table.path, w, rounds, barrier, out))
+             for w in range(workers)]
+    for p in procs:
+        p.start()
+    results = [out.get(timeout=120) for _ in range(workers * rounds)]
+    for p in procs:
+        p.join(timeout=60)
+        assert p.exitcode == 0
+    wins = {v: f for _, f, v in results if v is not None}
+    losses = [f for _, f, v in results if v is None]
+    assert len(wins) + len(losses) == workers * rounds
+    assert len(wins) == len([v for _, _, v in results if v is not None])  # no version won twice
+    assert table.versions() == list(range(len(wins) + 1))
+    for v, f in wins.items():
+        with open(table.log_dir + f"/{v:020d}.json") as fh:
+            actions = [json.loads(line) for line in fh if line.strip()]
+        assert [a["add"]["path"] for a in actions] == [os.path.relpath(f, table.path)]
+    snap = table.snapshot()
+    assert snap.version == len(wins)
+    assert snap.files == tuple(sorted(wins.values()))

@@ -2,6 +2,11 @@
 reference persist-service: PUT/GET round trip, merge-of-loaded,
 resumable partial builds)."""
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -9,7 +14,10 @@ from presto_bloomfilter_spark import BloomFilter, HyperLogLog
 from pyspark.sql import functions as F
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.sources.corpus import load_tokens
-from presto_bloomfilter_spark.store import CheckpointedBuild, SketchStore, checkpointed_aggregate
+from presto_bloomfilter_spark.store import (
+    Manifest, SketchStore, incremental_aggregate, snapshot_fingerprint)
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_put_get_roundtrip(tmp_path):
@@ -48,46 +56,68 @@ def test_invalid_keys_and_garbage(tmp_path):
         store.get_bytes("missing")
 
 
+def _write_snapshot(df, path, n_files):
+    import glob
+
+    df.repartition(n_files).write.parquet(path)
+    return sorted(glob.glob(path + "/*.parquet"))
+
+
 def test_checkpointed_aggregate_and_resume(spark, sf_dir, tmp_path):
-    store = SketchStore(str(tmp_path))
-    tokens = load_tokens(spark, sf_dir).repartition(6)
+    """A checkpoint is the resumable build with no prior manifest: the
+    first run builds every file's shards, a resume builds none and
+    returns the same sketch; a source that lost a sketched file refuses
+    to resume, and a DataFrame is not a source (its partition ids are
+    no stable shard identity)."""
+    store = SketchStore(str(tmp_path / "store"))
+    tokens = load_tokens(spark, sf_dir)
+    files = _write_snapshot(tokens, str(tmp_path / "src"), 6)
     spec = agg.SketchSpec("doc_id", HyperLogLog)
 
-    sk1, computed1 = checkpointed_aggregate(spark, tokens, spec, store, "job1", "snap-A")
-    assert computed1 == 6
+    sk1, computed1 = incremental_aggregate(spark, str(tmp_path / "src"), spec, store, "job1")
+    assert computed1 == len(files) == 6
     direct = agg.aggregate_sketch(tokens, spec)
     assert sk1 == direct
 
     # resume: nothing left to compute, same result from the manifest
-    sk2, computed2 = checkpointed_aggregate(spark, tokens, spec, store, "job1", "snap-A")
+    sk2, computed2 = incremental_aggregate(spark, str(tmp_path / "src"), spec, store, "job1")
     assert computed2 == 0
     assert sk2 == sk1
 
-    # wrong snapshot → refuse to resume
-    with pytest.raises(ValueError, match="snapshot"):
-        CheckpointedBuild(store, "job1", source_snapshot="snap-B")
+    # a different source snapshot that drops a sketched file → refuse
+    with pytest.raises(ValueError, match="missing from the snapshot"):
+        incremental_aggregate(spark, files[1:], spec, store, "job1")
+    with pytest.raises(TypeError, match="write it to parquet"):
+        incremental_aggregate(spark, tokens, spec, store, "job2")
 
 
 def test_manifest_lineage(tmp_path, spark, sf_dir):
-    store = SketchStore(str(tmp_path))
-    tokens = load_tokens(spark, sf_dir).repartition(3)
-    _, _ = checkpointed_aggregate(spark, tokens, agg.bloom_over_strings("doc_id", 10_000), store, "jobL")
-    ck = CheckpointedBuild(store, "jobL")
-    parts = ck.manifest.partitions
-    assert set(parts) == {"0", "1", "2"}
-    assert sum(v["rows"] for v in parts.values()) == tokens.count()
-    for v in parts.values():
-        assert len(v["sha256"]) == 64 and store.exists(v["key"])
+    store = SketchStore(str(tmp_path / "store"))
+    tokens = load_tokens(spark, sf_dir)
+    files = _write_snapshot(tokens, str(tmp_path / "src"), 3)
+    _, _ = incremental_aggregate(
+        spark, files, agg.bloom_over_strings("doc_id", 10_000), store, "jobL")
+    m = Manifest.load(store, "jobL")
+    parts = m.parts
+    assert parts and sum(v["rows"] for v in parts.values()) == tokens.count()
+    for key, v in parts.items():
+        assert len(v["sha256"]) == 64 and store.exists(key)
+    # every (file, row group) shard is covered by exactly one part
+    shards = sorted(tuple(s) for v in parts.values() for s in v["shards"])
+    assert shards == sorted(agg._list_shards(files))
+    assert m.files == {f: os.path.getsize(f) for f in files}
+    assert m.snapshot == snapshot_fingerprint(m.files.items())
 
 
 def test_checkpointed_aggregate_driver_never_holds_partials(spark, sf_dir, tmp_path, monkeypatch):
-    """Scale posture over ≥64 partitions: tasks persist their own
-    partials executor-side and only (pid, sha256, rows) lineage rows
+    """Scale posture with more parts than fan_in: tasks persist their
+    own partials executor-side and only (sha256, rows) lineage rows
     reach the driver; the final merge is the distributed bounded-fan-in
     tree, so DRIVER-side store reads are zero (worker processes don't
     see this monkeypatch — any driver-side blob load would count)."""
-    store = SketchStore(str(tmp_path))
-    tokens = load_tokens(spark, sf_dir).repartition(64)
+    store = SketchStore(str(tmp_path / "store"))
+    tokens = load_tokens(spark, sf_dir)
+    files = _write_snapshot(tokens, str(tmp_path / "src"), 16)
     spec = agg.SketchSpec("doc_id", HyperLogLog)
 
     driver_reads = []
@@ -95,29 +125,40 @@ def test_checkpointed_aggregate_driver_never_holds_partials(spark, sf_dir, tmp_p
     monkeypatch.setattr(SketchStore, "get_bytes",
                         lambda self, key: driver_reads.append(key) or real_get_bytes(self, key))
 
-    sk1, computed1 = checkpointed_aggregate(
-        spark, tokens, spec, store, "big", "snap-A", fan_in=8)
-    assert computed1 == 64
+    sk1, computed1 = incremental_aggregate(spark, files, spec, store, "big", fan_in=2)
+    assert computed1 == 16
     assert driver_reads == []  # merge ran in tasks, not the driver
     assert sk1 == agg.aggregate_sketch(tokens, spec)
 
-    # resume recomputes ZERO partitions and still merges distributed
-    sk2, computed2 = checkpointed_aggregate(
-        spark, tokens, spec, store, "big", "snap-A", fan_in=8)
+    # resume recomputes ZERO files and still merges distributed
+    sk2, computed2 = incremental_aggregate(spark, files, spec, store, "big", fan_in=2)
     assert computed2 == 0 and sk2 == sk1 and driver_reads == []
 
-    # lineage is complete: 64 partials, all persisted, hashes recorded
-    ck = CheckpointedBuild(store, "big")
-    assert len(ck.manifest.partitions) == 64
-    assert all(store.exists(v["key"]) and len(v["sha256"]) == 64
-               for v in ck.manifest.partitions.values())
+    # lineage is complete: more parts than fan_in, all persisted, hashes recorded
+    parts = Manifest.load(store, "big").parts
+    assert len(parts) > 2
+    assert all(store.exists(k) and len(v["sha256"]) == 64 for k, v in parts.items())
 
 
 def test_record_partition_meta_refuses_missing_blob(tmp_path):
     store = SketchStore(str(tmp_path))
-    ck = CheckpointedBuild(store, "jobX")
+    m = Manifest("jobX")
     with pytest.raises(ValueError, match="missing from store"):
-        ck.record_partition_meta(0, "0" * 64, 10)
+        m.record(store, "jobX.part-0", [["f.parquet", 0]], "0" * 64, 10)
+    assert m.parts == {}
+
+
+def test_resume_across_parallelism_equals_fresh_build(sf_dir):
+    """A build checkpointed at local[2] and resumed after the source
+    grew at local[4] equals a fresh local[4] build.  Runs in a
+    subprocess: each phase needs its own SparkContext size."""
+    proc = subprocess.run(
+        [sys.executable, str(REPO / "tests" / "drivers" / "resume_drive.py"),
+         str(REPO), sf_dir],
+        capture_output=True, text=True, timeout=420,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "RESUME_ACROSS_PARALLELISM_OK" in proc.stdout
 
 
 def test_sketch_table_sink_roundtrip(spark, tmp_path):
@@ -266,19 +307,10 @@ def test_load_csv_faithful_null_vs_empty_roundtrip(spark, tmp_path):
 # ---- snapshot-delta incremental maintenance ----------------------------------
 
 
-def _write_snapshot(df, path, n_files):
-    import glob
-
-    df.repartition(n_files).write.parquet(path)
-    return sorted(glob.glob(path + "/*.parquet"))
-
-
 def test_incremental_update_equals_full_rebuild(spark, sf_dir, tmp_path):
     """Append-only snapshot growth: update processes ONLY the new
     files, a re-run is a 0-file no-op, and the maintained sketch is
     byte-identical to a full rebuild (merge associativity)."""
-    from presto_bloomfilter_spark.store import IncrementalBuild, incremental_aggregate
-
     tokens = load_tokens(spark, sf_dir)
     even = tokens.filter(F.crc32(F.col("doc_id").cast("string")) % 2 == 0)
     odd = tokens.filter(F.crc32(F.col("doc_id").cast("string")) % 2 != 0)
@@ -302,16 +334,13 @@ def test_incremental_update_equals_full_rebuild(spark, sf_dir, tmp_path):
     assert abs(sk1.estimate() - exact_even) <= 0.03 * exact_even
 
     # per-file lineage recorded with snapshot fingerprint
-    inc = IncrementalBuild(store, "inc")
-    assert set(inc.files) == set(files_a + files_b)
-    assert all(len(v["sha256"]) == 64 and store.exists(v["key"])
-               for v in inc.files.values())
-    assert len(inc.snapshot) == 32
+    m = Manifest.load(store, "inc")
+    assert set(m.files) == set(files_a + files_b)
+    assert all(len(v["sha256"]) == 64 and store.exists(k) for k, v in m.parts.items())
+    assert len(m.snapshot) == 32
 
 
 def test_incremental_update_directory_form(spark, sf_dir, tmp_path):
-    from presto_bloomfilter_spark.store import incremental_aggregate
-
     tokens = load_tokens(spark, sf_dir)
     _write_snapshot(tokens, str(tmp_path / "snap"), 2)
     store = SketchStore(str(tmp_path / "store"))
@@ -325,8 +354,6 @@ def test_incremental_update_directory_form(spark, sf_dir, tmp_path):
 def test_incremental_refuses_rewritten_and_vanished_files(spark, sf_dir, tmp_path):
     """Sketches are not subtractable: a rewritten or vanished
     already-sketched file must fail loud, not drift silently."""
-    from presto_bloomfilter_spark.store import incremental_aggregate
-
     tokens = load_tokens(spark, sf_dir)
     files = _write_snapshot(tokens, str(tmp_path / "snap"), 3)
     store = SketchStore(str(tmp_path / "store"))
@@ -349,11 +376,9 @@ def test_incremental_refuses_rewritten_and_vanished_files(spark, sf_dir, tmp_pat
 
 
 def test_incremental_driver_never_holds_partials(spark, sf_dir, tmp_path, monkeypatch):
-    """Scale posture: file partials persist executor-side, only (path,
-    sha256, rows) lineage reaches the driver, and with more files than
-    fan-in the merge is the distributed tree — zero driver blob reads."""
-    from presto_bloomfilter_spark.store import incremental_aggregate
-
+    """Scale posture: task partials persist executor-side, only (sha256,
+    rows) lineage reaches the driver, and with more parts than fan-in
+    the merge is the distributed tree — zero driver blob reads."""
     tokens = load_tokens(spark, sf_dir)
     files = _write_snapshot(tokens.repartition(8), str(tmp_path / "snap"), 8)
     assert len(files) == 8
@@ -364,8 +389,9 @@ def test_incremental_driver_never_holds_partials(spark, sf_dir, tmp_path, monkey
     monkeypatch.setattr(SketchStore, "get_bytes",
                         lambda self, key: driver_reads.append(key) or real_get_bytes(self, key))
     sk, n = incremental_aggregate(
-        spark, files, agg.SketchSpec("doc_id", HyperLogLog), store, "big", fan_in=4)
+        spark, files, agg.SketchSpec("doc_id", HyperLogLog), store, "big", fan_in=2)
     assert n == 8 and driver_reads == []
+    assert len(Manifest.load(store, "big").parts) > 2
     exact = tokens.select("doc_id").distinct().count()
     assert abs(sk.estimate() - exact) <= 0.03 * exact
 
@@ -389,7 +415,7 @@ def test_incremental_grouped_build_and_compact(spark, sf_dir, tmp_path):
     _, n1 = inc.update(spark, files_a, "source", spec)
     view, n2 = inc.update(spark, files_a + files_b, "source", spec)
     assert (n1, n2) == (2, 2)
-    assert len(inc.deltas) == 2 and len(inc.snapshot) == 32
+    assert len(inc.manifest.parts) == 2 and len(inc.manifest.snapshot) == 32
 
     exact = {r.source: r.d for r in tokens.groupBy("source")
              .agg(F.countDistinct("doc_id").alias("d")).collect()}
@@ -406,7 +432,7 @@ def test_incremental_grouped_build_and_compact(spark, sf_dir, tmp_path):
 
     # compact: 2 deltas -> 1 base, same merged estimates, reopen works
     assert inc.compact(spark) == 2
-    assert len(inc.deltas) == 1
+    assert len(inc.manifest.parts) == 1
     reopened = IncrementalGroupedBuild(str(tmp_path / "sketches"), "bysrc")
     got2 = {r.source: sketch_from_bytes(r.sketch).estimate()
             for r in reopened.merged_view(spark).collect()}

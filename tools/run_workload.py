@@ -57,8 +57,8 @@ def main() -> None:
     )
     from presto_bloomfilter_spark.operators import aggregate as agg
     from presto_bloomfilter_spark.operators.probe import contains_udf
-    from presto_bloomfilter_spark.sources.corpus import load_tokens
-    from presto_bloomfilter_spark.store import SketchStore, checkpointed_aggregate
+    from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet, load_tokens
+    from presto_bloomfilter_spark.store import SketchStore, incremental_aggregate
 
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
@@ -80,12 +80,14 @@ def main() -> None:
 
     t_all = time.time()
 
-    # 1. per-token membership bloom — built through the checkpointed
-    # path: partial per partition persists before the final merge, so a
-    # restarted job resumes from the manifest (per-partition lineage)
+    # 1. per-token membership bloom — built through the resumable path:
+    # each task's partial over its (file, row group) shards persists
+    # before the final merge, so a restarted job resumes from the
+    # manifest (per-shard lineage)
     t0 = time.time()
-    bloom, built_parts = checkpointed_aggregate(
-        spark, tokens, agg.SketchSpec("tokens", lambda: agg.TokenDedupAccumulator(
+    bloom, built_parts = incremental_aggregate(
+        spark, ensure_tokens_parquet(args.sf_dir),
+        agg.SketchSpec("tokens", lambda: agg.TokenDedupAccumulator(
             BloomFilter(args.bloom_n, args.fpp))),
         store, f"{args.job_id}.bloom",
     )
@@ -140,8 +142,6 @@ def main() -> None:
     }
 
     # 5. fused family (bloom+CMS+HLL in one pyarrow scan) + t-digest
-    from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet
-
     t0 = time.time()
     fam = agg.aggregate_sketch_from_parquet(
         spark, ensure_tokens_parquet(args.sf_dir),
