@@ -98,6 +98,21 @@ def _seed_for(attempt: int) -> int:
     return int(splitmix64(np.array([attempt + 1], dtype=_U64))[0])
 
 
+def _string_keys(values):
+    """(values as a Series, mask of the ones that are keys): NULL and ''
+    are not keys (reference empty-element semantics, as for every
+    membership filter)."""
+    import pandas as pd
+
+    s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
+    return s, (s.notna() & (s.str.len() > 0)).to_numpy()
+
+
+def _string_digests(values) -> np.ndarray:
+    s, keys = _string_keys(values)
+    return hash_strings64(s[keys])
+
+
 @ser.register_kind(ser.KIND_XOR)
 class XorFilter:
     """Static xor filter over 64-bit key digests (the library's shared
@@ -198,11 +213,7 @@ class XorFilter:
 
     @classmethod
     def build_strings(cls, values, fp_bits: int = 8) -> "XorFilter":
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        s = s[s.notna() & (s.str.len() > 0)]
-        return cls.build_digests(hash_strings64(s), fp_bits)
+        return cls.build_digests(_string_digests(values), fp_bits)
 
     @classmethod
     def build_ints(cls, values, fp_bits: int = 8) -> "XorFilter":
@@ -222,11 +233,8 @@ class XorFilter:
         return got == fp
 
     def might_contain_strings(self, values) -> np.ndarray:
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
+        s, mask = _string_keys(values)
         out = np.zeros(len(s), dtype=bool)
-        mask = (s.notna() & (s.str.len() > 0)).to_numpy()
         if mask.any():
             out[mask] = self._probe(hash_strings64(s[mask]))
         return out
@@ -312,3 +320,28 @@ class XorFilter:
             and self.seed == other.seed
             and bool(np.array_equal(self.cells, other.cells))
         )
+
+
+class _XorKeyCollector:
+    """The build state of one distributed XorFilter: ``add_ints`` /
+    ``add_strings`` (fed by ``operators.aggregate.hash_dispatch``, so a
+    column hashes as it probes) collect key digests, and ``to_bytes`` is
+    the filter peeled over them.  The peel needs every key at once, so
+    a build folds exactly one collector per filter (no merge)."""
+
+    def __init__(self, fp_bits: int = 8):
+        self.fp_bits = fp_bits
+        self._digests: list[np.ndarray] = []
+
+    def add_ints(self, values) -> None:
+        self._digests.append(hash_ints64(np.asarray(values)))
+
+    def add_strings(self, values) -> None:
+        self._digests.append(_string_digests(values))
+
+    def finish(self) -> XorFilter:
+        return XorFilter.build_digests(
+            np.concatenate([np.empty(0, _U64), *self._digests]), self.fp_bits)
+
+    def to_bytes(self) -> bytes:
+        return self.finish().to_bytes()

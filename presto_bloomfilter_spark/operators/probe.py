@@ -11,7 +11,9 @@ a broadcast variable is the idiomatic Spark form of that pattern.
 
 At 100 TB the probe is a map-only stage: no shuffle, filter evaluated
 inside the scan pipeline, bloom FP rate bounds the extra rows that the
-(optional) exact verification join must process.
+(optional) exact verification join must process.  Every sketch-backed
+semi join runs one dataflow, :func:`_sketch_semi_join`, whose verify is
+broadcast or shuffled as Catalyst's size statistics decide (no hint).
 """
 
 from __future__ import annotations
@@ -55,10 +57,6 @@ def map_empty_to(col, token: str):
     (semi joins here, contamination grams in contamination.py) — one
     place for the scheme, parameterized by the sentinel."""
     return F.when(col == "", F.lit(token)).otherwise(col)
-
-
-def _keyable(col):
-    return map_empty_to(col, _EMPTY_KEY_TOKEN)
 
 # executor-local deserialization cache, keyed by the 32-byte sha256
 # header (reference cache: max 40 entries, BloomFilterScalarFunctions.java:25)
@@ -195,23 +193,17 @@ def resolve_key_mode(probe_df: DataFrame, probe_col: str,
     """Decide whether a build/probe key pair hashes as integers (True)
     or through the lossless string cast (False), refusing pairs whose
     string forms would silently diverge.  Shared by every sketch-backed
-    semi join (bloom/sbbf/xor)."""
+    semi join (bloom/sbbf/xor/sharded)."""
     pt, bt = dict(probe_df.dtypes)[probe_col], dict(build_df.dtypes)[build_col]
     ints = pt in _INT_TYPES and bt in _INT_TYPES
     numeric = _INT_TYPES | {"float", "double", "decimal"}
-    if not ints and (pt.split("(")[0] in numeric) != (bt.split("(")[0] in numeric):
-        # a numeric key against a non-numeric one would fall through to
-        # the string path, where '5.0' != '5' silently DROPS matching
-        # rows that a plain semi join (numeric coercion) would keep —
-        # refuse instead of returning a wrong subset
+    if not ints and pt != bt and numeric & {pt.split("(")[0], bt.split("(")[0]}:
+        # a numeric key against any other type falls through to the
+        # string path, where '5.0' != '5' silently DROPS matching rows
+        # that a plain semi join (numeric coercion) would keep — refuse
+        # instead of returning a wrong subset
         raise ValueError(
-            f"{caller} key types are incomparable as strings: "
-            f"probe {probe_col}:{pt} vs build {build_col}:{bt}; cast "
-            f"both keys to a common type first")
-    if not ints and pt != bt and pt.split("(")[0] in numeric:
-        # e.g. double vs bigint: '5.0' vs '5' string forms diverge
-        raise ValueError(
-            f"{caller} mixed numeric key types: probe "
+            f"{caller} key types are incomparable as strings: probe "
             f"{probe_col}:{pt} vs build {build_col}:{bt} — their string "
             f"forms differ ('5.0' vs '5'), which would silently drop "
             f"matches; cast both keys to a common type first")
@@ -233,11 +225,12 @@ def bloom_semi_join(
     """The reference's motivating pattern (README.md:8-38): replace an
     expensive join with build-side bloom + probe-side filter.
 
-    With ``exact=True`` a broadcast semi join over the *pre-filtered*
-    probe side removes bloom false positives, so the result equals the
-    exact semi join while the heavy scan-side work is done by the bloom
-    predicate (this mirrors what Catalyst's InjectRuntimeFilter does
-    automatically, but user-controlled and persistable — SURVEY.md §4).
+    With ``exact=True`` a semi join of the *pre-filtered* probe side
+    against the distinct build keys (broadcast or shuffled, as Catalyst's
+    size statistics decide) removes bloom false positives, so the result
+    equals the exact semi join while the heavy scan-side work is done by
+    the bloom predicate (this mirrors what Catalyst's InjectRuntimeFilter
+    does automatically, but user-controlled and persistable — SURVEY.md §4).
 
     ``kind`` picks the membership sketch: ``"bloom"`` (reference-parity
     classic filter) or ``"sbbf"`` (split-block/Parquet blocked variant
@@ -248,38 +241,50 @@ def bloom_semi_join(
                          f"one of {sorted(_SEMI_JOIN_SPECS)}")
     cls = _SEMI_JOIN_SPECS[kind]
     spec = SketchSpec(build_col, lambda: cls(expected_insertions, fpp))
-    return _sketch_semi_join(spark, probe_df, probe_col, build_df, build_col,
-                            lambda keys: aggregate_sketch(keys, spec, fan_in), exact)
+    return _sketch_semi_join(
+        probe_df, probe_col, build_df, build_col,
+        _sketch_filter(spark, lambda keys: aggregate_sketch(keys, spec, fan_in)), exact)
 
 
-def _sketch_semi_join(spark: SparkSession, probe_df: DataFrame, probe_col: str,
-                     build_df: DataFrame, build_col: str, build, exact: bool,
-                     caller: str = "bloom_semi_join") -> DataFrame:
-    """The shape every sketch-backed semi join shares: ``build(keys)``
-    turns the one-column build-key DataFrame (named ``build_col``) into
-    a membership sketch, the probe side is pre-filtered by it, and with
-    ``exact`` a broadcast semi join over the distinct build keys removes
-    the false positives.
+def _sketch_filter(spark: SparkSession, build):
+    """The pre-filter step of a broadcast-sketch semi join:
+    ``build(keys)`` turns the build-key frame into a membership sketch,
+    and the probe rows are filtered by it (:func:`filter_by_sketch`)."""
+    return lambda keys, probe, col: filter_by_sketch(spark, probe, col, build(keys))
 
-    Integer key pairs hash natively: the build and the probe UDF read
-    the raw columns and the verify join compares native longs.  Other
-    pairs go through the lossless string cast, with '' mapped to the
+
+def _sketch_semi_join(probe_df: DataFrame, probe_col: str, build_df: DataFrame,
+                      build_col: str, prefilter, exact: bool,
+                      caller: str = "bloom_semi_join") -> DataFrame:
+    """The one semi-join dataflow every sketch-backed semi join shares.
+    ``prefilter(keys, probe, "__pk")`` filters ``probe`` (``probe_df``
+    plus the keyed probe column ``__pk``) by a membership structure it
+    builds over ``keys`` (the keyed build column, named ``build_col``);
+    with ``exact`` a semi join against the distinct build keys removes
+    the false positives.  The verify carries no join hint: Catalyst
+    broadcasts the build keys when its size statistics put them under
+    ``spark.sql.autoBroadcastJoinThreshold`` and shuffles otherwise.
+
+    Integer key pairs hash natively: the build and the probe read the
+    raw columns and the verify join compares native longs.  Other pairs
+    go through the lossless string cast, with '' mapped to the
     empty-key sentinel on both sides of the filter; the verify join
-    still compares the original (cast) values."""
+    still compares the original (cast) values.  Key pairs whose forms
+    would silently diverge are refused (:func:`resolve_key_mode`)."""
     ints = resolve_key_mode(probe_df, probe_col, build_df, build_col, caller)
 
     def key(c):
         return F.col(c) if ints else F.col(c).cast("string")
 
     def hashed_key(c):
-        return key(c) if ints else _keyable(key(c))
+        return key(c) if ints else map_empty_to(key(c), _EMPTY_KEY_TOKEN)
 
     # the build reads raw (non-distinct) keys: inserts are idempotent, so
     # skipping .distinct() skips a whole shuffle of the build side; only
-    # the exact-verify broadcast below needs dedup
-    sketch = build(build_df.select(hashed_key(build_col).alias(build_col)))
-    pre = probe_df.filter(contains_udf(spark, sketch)(hashed_key(probe_col)))
+    # the exact verify below needs dedup
+    pre = prefilter(build_df.select(hashed_key(build_col).alias(build_col)),
+                    probe_df.withColumn("__pk", hashed_key(probe_col)), "__pk").drop("__pk")
     if not exact:
         return pre
     build_keys = build_df.select(key(build_col).alias("__bk")).distinct()
-    return pre.join(F.broadcast(build_keys), key(probe_col) == F.col("__bk"), "left_semi")
+    return pre.join(build_keys, key(probe_col) == F.col("__bk"), "left_semi")

@@ -29,6 +29,7 @@ single filter can hold.
 
 from __future__ import annotations
 
+import json
 import math
 from collections.abc import Iterator
 
@@ -40,6 +41,7 @@ from pyspark.sql.types import StructType
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators.aggregate import _key_slices
+from presto_bloomfilter_spark.operators.probe import _cached_sketch, _probe_keys, _sketch_semi_join
 from presto_bloomfilter_spark.store import SketchStore
 
 
@@ -110,8 +112,6 @@ def persist_family(
     ``empty_blob()`` so a probe-side missing object always means store
     breakage, never "empty shard" — plus the ``{name}.manifest`` that
     ``sharded_contains`` validates before any task launches."""
-    import json
-
     rows = family.collect()
     written = set()
     for r in rows:
@@ -162,10 +162,6 @@ def sharded_contains(
     cluster a driver-local ``store_root`` that executors can't see
     must be an error, not silent false negatives.
     """
-    import json
-
-    from presto_bloomfilter_spark.operators.probe import _cached_sketch, _probe_keys
-
     driver_store = SketchStore(store_root)
     manifest_key = f"{name}.manifest"
     if not driver_store.meta_exists(manifest_key):
@@ -263,28 +259,21 @@ def sharded_bloom_semi_join(
     """bloom_semi_join for key spaces beyond one filter: build the
     sharded family (one grouped job), persist per shard, pre-filter the
     probe side shard-locally, then (optionally) remove false positives
-    with a broadcast exact semi join — equals the exact semi join."""
-    store = SketchStore(store_root)
-    family = build_sharded_bloom(build_df, build_col, shards,
-                                 expected_insertions_per_shard, fpp)
-    persist_sharded_bloom(family, store, name, shards,
-                          expected_insertions_per_shard, fpp)
-    pre = sharded_contains(spark, probe_df, probe_col, store_root, name, shards)
-    if not exact:
-        return pre
-    # NO forced broadcast: at the key scales that motivate sharding, the
-    # distinct build keys do not fit one executor — a shuffle left-semi
-    # join over the bloom-thinned probe side is the scale-safe verify,
-    # and AQE still picks a broadcast join on its own when the build
-    # side happens to be small
-    build_keys = build_df.select(
-        F.col(build_col).cast("string").alias("__bk")
-    ).distinct()
-    return pre.join(
-        build_keys,
-        F.col(probe_col).cast("string") == F.col("__bk"),
-        "left_semi",
-    )
+    with the exact semi join — equals the exact semi join.  The shared
+    ``probe._sketch_semi_join`` dataflow supplies the key rule (refused
+    incomparable key types, '' keys kept) and the hint-free verify,
+    which shuffles when the distinct build keys are too large to
+    broadcast — the key scales that motivate sharding."""
+
+    def prefilter(keys: DataFrame, probe: DataFrame, col: str) -> DataFrame:
+        family = build_sharded_bloom(keys, build_col, shards,
+                                     expected_insertions_per_shard, fpp)
+        persist_sharded_bloom(family, SketchStore(store_root), name, shards,
+                              expected_insertions_per_shard, fpp)
+        return sharded_contains(spark, probe, col, store_root, name, shards)
+
+    return _sketch_semi_join(probe_df, probe_col, build_df, build_col, prefilter,
+                             exact, caller="sharded_bloom_semi_join")
 
 
 def allocate_bloom_budget(counts, total_bits: float, weights=None,

@@ -38,7 +38,9 @@ from presto_bloomfilter_spark.operators import (
     classifier, contamination, dedup, multimodal, packing, ranking, sampling,
     selection, similarity, text,
 )
-from presto_bloomfilter_spark.operators.probe import bloom_semi_join, contains_udf
+from presto_bloomfilter_spark.operators.probe import (
+    _sketch_filter, _sketch_semi_join, bloom_semi_join, contains_udf,
+)
 from presto_bloomfilter_spark.sources.corpus import load_tokens, tokens_parquet_path
 from presto_bloomfilter_spark.sources.tables import load_table
 
@@ -58,26 +60,36 @@ _STOPWORD_SQL = "('the','a','of','and','to')"
 # ======================= sketch queries (SURVEY §2.1) =========================
 
 
-def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference README.md:8-38 flagship: bloom pre-filter replaces the
-    join's scan-side shuffle; exact verify removes false positives."""
+def _orders_semijoin(spark: SparkSession, sf_dir: str, price: int, join) -> DataFrame:
+    """The semijoin gates' shape: ``join(lineitem, big)`` keeps the
+    lineitem rows of ``big`` (the orders priced above ``price``), then
+    counts rows and sums quantity per return flag."""
     orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    big = orders.filter(F.col("o_totalprice") > 300_000).select("o_orderkey")
-    filtered = bloom_semi_join(spark, lineitem, "l_orderkey", big, "o_orderkey",
-                               expected_insertions=50_000, fpp=0.001)
-    return filtered.groupBy("l_returnflag").agg(
+    big = orders.filter(F.col("o_totalprice") > price)
+    return join(load_table(spark, sf_dir, "lineitem"), big).groupBy("l_returnflag").agg(
         F.count("*").alias("cnt"),
         F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
     )
 
 
-ORACLE_BLOOM_SEMIJOIN = """
+def _orders_semijoin_oracle(orders_where: str) -> str:
+    return f"""
 SELECT l_returnflag, COUNT(*) AS cnt, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
 FROM lineitem
-WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 300000)
+WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE {orders_where})
 GROUP BY l_returnflag
 """
+
+
+def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference README.md:8-38 flagship: bloom pre-filter replaces the
+    join's scan-side shuffle; exact verify removes false positives."""
+    return _orders_semijoin(spark, sf_dir, 300_000, lambda lineitem, big: bloom_semi_join(
+        spark, lineitem, "l_orderkey", big, "o_orderkey", expected_insertions=50_000,
+        fpp=0.001))
+
+
+ORACLE_BLOOM_SEMIJOIN = _orders_semijoin_oracle("o_totalprice > 300000")
 
 
 def q_sbbf_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,16 +97,9 @@ def q_sbbf_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked) filter, functions/sbbf.py: one-cache-line probes, exact
     Poisson-blocked FPR sizing.  Same exact-verify semantics → same
     oracle as bloom_semijoin."""
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    big = orders.filter(F.col("o_totalprice") > 300_000).select("o_orderkey")
-    filtered = bloom_semi_join(spark, lineitem, "l_orderkey", big, "o_orderkey",
-                               expected_insertions=50_000, fpp=0.001,
-                               kind="sbbf")
-    return filtered.groupBy("l_returnflag").agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-    )
+    return _orders_semijoin(spark, sf_dir, 300_000, lambda lineitem, big: bloom_semi_join(
+        spark, lineitem, "l_orderkey", big, "o_orderkey", expected_insertions=50_000,
+        fpp=0.001, kind="sbbf"))
 
 
 ORACLE_SBBF_SEMIJOIN = ORACLE_BLOOM_SEMIJOIN
@@ -108,22 +113,11 @@ def q_xor_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives, so the result equals the exact semi join — the oracle."""
     from presto_bloomfilter_spark.operators.staticfilter import xor_semi_join
 
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    big = orders.filter(F.col("o_totalprice") > 280_000).select("o_orderkey")
-    filtered = xor_semi_join(spark, lineitem, "l_orderkey", big, "o_orderkey")
-    return filtered.groupBy("l_returnflag").agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-    )
+    return _orders_semijoin(spark, sf_dir, 280_000, lambda lineitem, big: xor_semi_join(
+        spark, lineitem, "l_orderkey", big, "o_orderkey"))
 
 
-ORACLE_XOR_SEMIJOIN = """
-SELECT l_returnflag, COUNT(*) AS cnt, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-FROM lineitem
-WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 280000)
-GROUP BY l_returnflag
-"""
+ORACLE_XOR_SEMIJOIN = _orders_semijoin_oracle("o_totalprice > 280000")
 
 
 def q_cbf_delete_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,34 +125,25 @@ def q_cbf_delete_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting bloom over the >250k order keys, then RETRACT the 'F'
     orders by aggregating a second filter over the delete keys and
     subtracting it — two distributed builds, zero per-key driver work.
-    The semi-join then probes the net filter; exact verify against the
-    live key set removes false positives, so the result equals the
-    exact semi join on (inserted minus deleted) — which is the oracle."""
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    big = F.col("o_totalprice") > 250_000
-    ins = orders.filter(big).select("o_orderkey")
-    dels = orders.filter(big & (F.col("o_orderstatus") == "F")).select("o_orderkey")
-    spec = agg.SketchSpec("o_orderkey", lambda: CountingBloomFilter(50_000, 0.001))
-    sk = agg.aggregate_sketch(ins, spec)
-    sk.subtract(agg.aggregate_sketch(dels, spec))
-    pre = lineitem.filter(contains_udf(spark, sk)(F.col("l_orderkey")))
-    live = (orders.filter(big & (F.col("o_orderstatus") != "F"))
-            .select(F.col("o_orderkey").alias("l_orderkey")).distinct())
-    filtered = pre.join(F.broadcast(live), "l_orderkey", "left_semi")
-    return filtered.groupBy("l_returnflag").agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-    )
+    The semi-join (the shared ``_sketch_semi_join`` dataflow) then
+    probes the net filter; exact verify against the live key set removes
+    false positives, so the result equals the exact semi join on
+    (inserted minus deleted) — which is the oracle."""
+
+    def join(lineitem: DataFrame, big: DataFrame) -> DataFrame:
+        final = F.col("o_orderstatus") == "F"
+        spec = agg.SketchSpec("o_orderkey", lambda: CountingBloomFilter(50_000, 0.001))
+        sk = agg.aggregate_sketch(big, spec)
+        sk.subtract(agg.aggregate_sketch(big.filter(final), spec))
+        return _sketch_semi_join(lineitem, "l_orderkey", big.filter(~final), "o_orderkey",
+                                 _sketch_filter(spark, lambda _keys: sk), exact=True,
+                                 caller="q_cbf_delete_semijoin")
+
+    return _orders_semijoin(spark, sf_dir, 250_000, join)
 
 
-ORACLE_CBF_DELETE_SEMIJOIN = """
-SELECT l_returnflag, COUNT(*) AS cnt, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-FROM lineitem
-WHERE l_orderkey IN (SELECT o_orderkey FROM orders
-                     WHERE o_totalprice > 250000 AND o_orderstatus <> 'F')
-GROUP BY l_returnflag
-"""
+ORACLE_CBF_DELETE_SEMIJOIN = _orders_semijoin_oracle(
+    "o_totalprice > 250000 AND o_orderstatus <> 'F'")
 
 
 def q_sharded_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,18 +158,10 @@ def q_sharded_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from presto_bloomfilter_spark.operators.sharded import sharded_bloom_semi_join
 
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    big = orders.filter(F.col("o_totalprice") > 300_000).select("o_orderkey")
-    filtered = sharded_bloom_semi_join(
+    return _orders_semijoin(spark, sf_dir, 300_000, lambda lineitem, big: sharded_bloom_semi_join(
         spark, lineitem, "l_orderkey", big, "o_orderkey",
         store_root=tempfile.mkdtemp(prefix="pbs_shard_"),
-        shards=8, expected_insertions_per_shard=10_000, fpp=0.001,
-    )
-    return filtered.groupBy("l_returnflag").agg(
-        F.count("*").alias("cnt"),
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-    )
+        shards=8, expected_insertions_per_shard=10_000, fpp=0.001))
 
 
 ORACLE_SHARDED_BLOOM_SEMIJOIN = ORACLE_BLOOM_SEMIJOIN

@@ -15,6 +15,7 @@ from presto_bloomfilter_spark import (
     SplitBlockBloomFilter, TDigest, ThetaSketch, sketch_from_bytes,
 )
 from presto_bloomfilter_spark.functions.multi import MultiSketch
+from presto_bloomfilter_spark.functions.xorf import _XorKeyCollector
 from presto_bloomfilter_spark.operators import aggregate as agg
 from presto_bloomfilter_spark.operators.probe import bloom_semi_join, contains_udf, filter_by_sketch
 from presto_bloomfilter_spark.operators.staticfilter import build_xor_filter
@@ -685,8 +686,8 @@ def test_sketch_spec_real_nan_still_reaches_the_sketch():
     lambda: BloomFilter(1000, 0.01), lambda: SplitBlockBloomFilter(1000, 0.01),
     lambda: CountingBloomFilter(1000, 0.01), HyperLogLog, lambda: CountMinSketch(0.01, 0.05),
     lambda: ThetaSketch(64), lambda: MisraGries(4), lambda: CountSketch(64, 3),
-    lambda: agg.TokenDedupAccumulator(HyperLogLog(10)),
-], ids=["bloom", "sbbf", "cbf", "hll", "cms", "theta", "mg", "countsketch", "dedup"])
+    lambda: agg.TokenDedupAccumulator(HyperLogLog(10)), _XorKeyCollector,
+], ids=["bloom", "sbbf", "cbf", "hll", "cms", "theta", "mg", "countsketch", "dedup", "xor"])
 def test_sketch_spec_rejects_floats_into_hash_sketch(make):
     """A hash sketch has no float insert: a floating column (or a list
     of floats) is a TypeError, not a one-element ``add(array)`` that

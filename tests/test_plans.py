@@ -85,12 +85,42 @@ def test_bigint_bloom_semi_join_probes_the_raw_key(spark, sf_dir):
     assert "as string" not in plan, plan
 
 
-@pytest.mark.parametrize("path", ["map_side", "salted", "merge"])
-def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir, path):
-    """Every grouped path plans its per-key step as Arrow, never as a
-    pandas group UDF.  The map_side build must also shuffle sketch
-    blobs, not raw token rows: its one exchange has to sit ABOVE the
-    partial-build python node, not between scan and python."""
+@pytest.mark.parametrize("kind", ["bloom", "sharded"])
+def test_exact_semi_join_verify_is_not_forced_to_broadcast(spark, tmp_path, kind):
+    """The exact verify carries no broadcast hint: with broadcasting
+    switched off, no BroadcastExchange may carry the build keys (a
+    forced broadcast of a build side too large for one executor is the
+    failure this rules out)."""
+    from presto_bloomfilter_spark.operators.sharded import sharded_bloom_semi_join
+
+    probe = spark.range(200).select(F.col("id").cast("string").alias("k"))
+    build = spark.range(0, 200, 3).select(F.col("id").cast("string").alias("k"))
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        if kind == "bloom":
+            out = bloom_semi_join(spark, probe, "k", build, "k", expected_insertions=100)
+        else:
+            out = sharded_bloom_semi_join(spark, probe, "k", build, "k", str(tmp_path),
+                                          shards=2, expected_insertions_per_shard=100)
+        plan = _plan(out)
+        assert out.count() == 67
+    finally:
+        spark.conf.set(conf, old)
+    assert "LeftSemi" in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+
+
+@pytest.mark.parametrize("path", ["map_side", "salted", "merge", "xor_filter", "xor_shards"])
+def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir, path, monkeypatch):
+    """Every grouped path, and both xor builds, plan their per-key (per
+    filter) step as Arrow, never as a pandas group UDF.  The map_side
+    build must also shuffle sketch blobs, not raw token rows: its one
+    exchange has to sit ABOVE the partial-build python node, not between
+    scan and python."""
+    from presto_bloomfilter_spark.operators import staticfilter
+
     tokens = load_tokens(spark, sf_dir)
     spec = agg.hll_over_tokens("tokens")
     if path == "merge":
@@ -98,6 +128,16 @@ def test_grouped_sketch_map_side_shuffles_only_blobs(spark, sf_dir, path):
         out = agg.grouped_merge_sketch_column(blobs, "source")
     elif path == "salted":
         out = agg.grouped_sketch(tokens, "source", spec, salt=8, strategy="salted")
+    elif path == "xor_shards":
+        out = staticfilter.build_xor_shards(tokens, "doc_id", 4)
+    elif path == "xor_filter":
+        # the single-filter build is eager: plan the partials it folds
+        partials = []
+        fold = agg._tree_merge_collect
+        monkeypatch.setattr(agg, "_tree_merge_collect",
+                            lambda df, *a, **k: partials.append(df) or fold(df, *a, **k))
+        staticfilter.build_xor_filter(tokens, "doc_id")
+        [out] = partials
     else:
         out = agg.grouped_sketch(tokens, "source", spec)
     plan = _plan(out)

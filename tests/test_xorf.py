@@ -138,20 +138,85 @@ def test_sql_contains_dispatches_xor_blobs(spark):
     assert got == {"alpha": True, "beta": True, "nope": False}
 
 
-def test_semi_joins_keep_empty_string_keys(spark):
-    """'' is invisible to the filters (reference empty-element
-    semantics) but a legitimate join key: both semi joins route it
-    through the shared sentinel so the result still equals the exact
-    semi join (regression for the silent-drop hole)."""
+def _semi_joins(spark, tmp_path) -> dict:
+    """The four sketch-backed semi joins, each as (probe, probe_col,
+    build, build_col) -> DataFrame with small filter geometry."""
     from presto_bloomfilter_spark.operators.probe import bloom_semi_join
+    from presto_bloomfilter_spark.operators.sharded import sharded_bloom_semi_join
     from presto_bloomfilter_spark.operators.staticfilter import xor_semi_join
 
+    return {
+        "bloom": lambda *a: bloom_semi_join(spark, *a, expected_insertions=100),
+        "sbbf": lambda *a: bloom_semi_join(spark, *a, expected_insertions=100, kind="sbbf"),
+        "xor": lambda *a: xor_semi_join(spark, *a),
+        "sharded": lambda *a: sharded_bloom_semi_join(
+            spark, *a, str(tmp_path / "fam"), shards=2, expected_insertions_per_shard=100),
+    }
+
+
+def test_semi_joins_keep_empty_string_keys(spark, tmp_path):
+    """'' is invisible to the filters (reference empty-element
+    semantics) but a legitimate join key: every semi join routes it
+    through the shared sentinel so the result still equals the exact
+    semi join (regression for the silent-drop hole)."""
     build = spark.createDataFrame([("",), ("a",)], "k string")
     probe = spark.createDataFrame(
         [("", 1), ("a", 2), ("b", 3), (None, 4)], "k string, v int")
-    exact = {2, 1}
-    got_xor = {r.v for r in xor_semi_join(spark, probe, "k", build, "k").collect()}
-    got_bloom = {r.v for r in bloom_semi_join(
-        spark, probe, "k", build, "k", expected_insertions=100).collect()}
-    assert got_xor == exact
-    assert got_bloom == exact
+    got = {kind: {r.v for r in join(probe, "k", build, "k").collect()}
+           for kind, join in _semi_joins(spark, tmp_path).items()}
+    assert got == dict.fromkeys(got, {1, 2})
+
+
+@pytest.mark.parametrize("probe_type", ["double", "string"])
+@pytest.mark.parametrize("kind", ["bloom", "sbbf", "xor", "sharded"])
+def test_semi_joins_refuse_incomparable_key_types(spark, tmp_path, kind, probe_type):
+    """A double or string probe key against a bigint build key would
+    compare string forms ('5.0' vs '5') and silently drop matches:
+    every semi join refuses it, naming itself."""
+    build = spark.createDataFrame([(5,)], "k bigint")
+    probe = spark.createDataFrame([("5",)], "k string").selectExpr(f"cast(k as {probe_type}) k")
+    caller = {"sbbf": "bloom", "sharded": "sharded_bloom"}.get(kind, kind) + "_semi_join"
+    with pytest.raises(ValueError, match=f"^{caller} "):
+        _semi_joins(spark, tmp_path)[kind](probe, "k", build, "k")
+
+
+def _blob_sha(xf) -> str:
+    import hashlib
+
+    return hashlib.sha256(xf.to_bytes()).hexdigest()
+
+
+def test_spark_xor_builds_are_byte_identical_to_local_builds(spark):
+    """The Arrow-path builds peel the same filter as a local build over
+    the distinct non-NULL keys, for an int and a string column (NULLs,
+    duplicates and '' in the input), per shard of a family, and an
+    empty input gives an empty filter."""
+    from pyspark.sql import functions as F
+
+    from presto_bloomfilter_spark.operators.sharded import _shard_col
+    from presto_bloomfilter_spark.operators.staticfilter import (
+        build_xor_filter,
+        build_xor_shards,
+    )
+
+    ints = spark.createDataFrame([(v,) for v in [3, None, 7, 3, 2**53 + 1, -4, 7]], "k bigint")
+    assert _blob_sha(build_xor_filter(ints, "k")) == _blob_sha(
+        XorFilter.build_ints([3, 7, 2**53 + 1, -4]))
+    strs = spark.createDataFrame(
+        [(v,) for v in ["x", None, "y", "x", "", "zz", "y"]], "k string").repartition(3)
+    assert _blob_sha(build_xor_filter(strs, "k")) == _blob_sha(
+        XorFilter.build_strings(["x", "y", "zz"]))
+
+    shards = 3
+    fam = {r.shard: XorFilter.from_bytes(bytes(r.sketch))
+           for r in build_xor_shards(ints, "k", shards).collect()}
+    per_shard: dict = {}
+    for r in ints.select(F.col("k").cast("string").alias("k")).dropna().select(
+            "k", _shard_col(F.col("k"), shards).alias("s")).collect():
+        per_shard.setdefault(r.s, set()).add(r.k)
+    assert set(fam) == set(per_shard)
+    for s, keys in per_shard.items():
+        assert _blob_sha(fam[s]) == _blob_sha(XorFilter.build_strings(sorted(keys)))
+
+    empty = build_xor_filter(spark.createDataFrame([], "k bigint"), "k")
+    assert type(empty) is XorFilter and empty.n_keys == 0
