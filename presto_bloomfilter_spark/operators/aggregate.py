@@ -263,15 +263,21 @@ def hash_dispatch(sk, op: str, col: pa.Array, name: str):
 
     - integer → ``sk.<op>_ints`` on the exact ints (every int width
       hashes alike, so an int32 build matches a bigint probe);
-    - floating → TypeError;
-    - anything else → ``sk.<op>_strings``.
+    - string, large_string or dictionary of either → ``sk.<op>_strings``;
+    - anything else (floating, boolean, date, timestamp, decimal,
+      binary, …) → TypeError naming the column and its type: which
+      string form it would hash as is the caller's choice.
     """
-    if pa.types.is_floating(col.type):
-        raise TypeError(
-            f"floating column '{name}' ({col.type}) into hash sketch "
-            f"{type(sk).__name__}: cast it to an integer or string type")
     if pa.types.is_integer(col.type):
         return getattr(sk, op + "_ints")(col.to_numpy(zero_copy_only=False))
+    t = col.type.value_type if pa.types.is_dictionary(col.type) else col.type
+    if not (pa.types.is_string(t) or pa.types.is_large_string(t)):
+        to = "an integer or string type" if pa.types.is_floating(t) else "string"
+        raise TypeError(
+            f"column '{name}' ({col.type}) into hash sketch "
+            f"{type(sk).__name__}: cast it to {to} first")
+    if pa.types.is_dictionary(col.type):
+        col = col.dictionary_decode()
     return getattr(sk, op + "_strings")(col.to_pandas())
 
 
@@ -288,8 +294,9 @@ class SketchSpec:
     SURVEY.md §2.3), then picks the insert path:
 
     - hash sketches (those with ``add_ints``) → :func:`hash_dispatch`,
-      the same choice the probe makes (a float column is a TypeError:
-      cast it to an integer or string type first);
+      the same choice the probe makes (a column that is neither
+      integer nor string, a float column among them, is a TypeError:
+      cast it first);
     - list<floating> → an (m, ``sketch.d``) matrix, then ``add`` (FD /
       Gram); a vector with a NULL element or the wrong length is loud;
     - otherwise → ``add`` (the quantile family).

@@ -12,8 +12,12 @@ a broadcast variable is the idiomatic Spark form of that pattern.
 At 100 TB the probe is a map-only stage: no shuffle, filter evaluated
 inside the scan pipeline, bloom FP rate bounds the extra rows that the
 (optional) exact verification join must process.  Every sketch-backed
-semi join runs one dataflow, :func:`_sketch_semi_join`, whose verify is
-broadcast or shuffled as Catalyst's size statistics decide (no hint).
+semi join runs one dataflow, :func:`_sketch_semi_join`: with ``exact``
+it is the plain semi join, planned by Catalyst (broadcast or shuffled,
+with Spark's own runtime bloom filter where that is enabled), since a
+Python sketch pre-filter in front of that join was measured slower at
+every scale tried; without ``exact`` it is the sketch pre-filter alone,
+which returns a superset.
 """
 
 from __future__ import annotations
@@ -135,13 +139,13 @@ class ProbeMetrics:
         }
 
 
-def _probe_keys(sk, keys: pa.Array) -> np.ndarray:
-    """The one membership kernel: ``keys`` probed against ``sk`` through
-    :func:`hash_dispatch` (the hash path the build takes for the same
-    Arrow type), NULL keys dropped at the Arrow level and probing False.
-    Serves ``contains_udf``, SQL ``bloom_filter_contains`` and
-    ``sharded_contains``."""
-    hits = hash_dispatch(sk, "might_contain", _non_null(keys), "probe key")
+def _probe_keys(sk, keys: pa.Array, name: str = "probe key") -> np.ndarray:
+    """The one membership kernel: ``keys`` (the column ``name``) probed
+    against ``sk`` through :func:`hash_dispatch` (the hash path the build
+    takes for the same Arrow type), NULL keys dropped at the Arrow level
+    and probing False.  Serves ``contains_udf``, SQL
+    ``bloom_filter_contains`` and ``sharded_contains``."""
+    hits = hash_dispatch(sk, "might_contain", _non_null(keys), name)
     if not keys.null_count:
         return hits
     out = np.zeros(len(keys), dtype=bool)
@@ -149,19 +153,20 @@ def _probe_keys(sk, keys: pa.Array) -> np.ndarray:
     return out
 
 
-def contains_udf(spark: SparkSession, sketch, metrics: ProbeMetrics | None = None):
+def contains_udf(spark: SparkSession, sketch, metrics: ProbeMetrics | None = None,
+                 name: str = "probe key"):
     """Vectorized membership predicate over a broadcast sketch.
 
     Returns a column function usable in ``df.filter`` — the Spark form
     of ``WHERE bloom_filter_contains(bf, col)`` (reference README.md:28).
     The key column's Arrow type picks the hash path through the same
     :func:`hash_dispatch` the build uses (integer → exact int hash,
-    floating → TypeError, else string hash), so a column probes the
+    string → string hash, any other type → TypeError), so a column probes the
     filter built over it.  NULLs are dropped at the Arrow level (no
     float64 round trip for nullable ints) and probe False, as in the
     reference (BloomFilterContainsScalarFunction.java:33-42).  Pass
     ``metrics`` to count probes/misses executor-side (the reference's
-    preMiss-style counters).
+    preMiss-style counters); ``name`` is the column a type error names.
     """
     blob = sketch.to_bytes() if hasattr(sketch, "to_bytes") else bytes(sketch)
     bv = spark.sparkContext.broadcast(blob)
@@ -170,7 +175,7 @@ def contains_udf(spark: SparkSession, sketch, metrics: ProbeMetrics | None = Non
     def probe(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         sk = _cached_sketch(bv.value)
         for keys in it:
-            hits = _probe_keys(sk, keys)
+            hits = _probe_keys(sk, keys, name)
             if metrics is not None:
                 metrics._probes.add(len(hits))
                 metrics._misses.add(int(len(hits) - hits.sum()))
@@ -181,7 +186,7 @@ def contains_udf(spark: SparkSession, sketch, metrics: ProbeMetrics | None = Non
 
 def filter_by_sketch(spark: SparkSession, df: DataFrame, col: str, sketch) -> DataFrame:
     """df rows whose `col` is (probably) in the sketch; no false negatives."""
-    return df.filter(contains_udf(spark, sketch)(F.col(col)))
+    return df.filter(contains_udf(spark, sketch, name=col)(F.col(col)))
 
 
 _INT_TYPES = {"tinyint", "smallint", "int", "bigint"}
@@ -225,12 +230,17 @@ def bloom_semi_join(
     """The reference's motivating pattern (README.md:8-38): replace an
     expensive join with build-side bloom + probe-side filter.
 
-    With ``exact=True`` a semi join of the *pre-filtered* probe side
-    against the distinct build keys (broadcast or shuffled, as Catalyst's
-    size statistics decide) removes bloom false positives, so the result
-    equals the exact semi join while the heavy scan-side work is done by
-    the bloom predicate (this mirrors what Catalyst's InjectRuntimeFilter
-    does automatically, but user-controlled and persistable — SURVEY.md §4).
+    With ``exact=True`` the result is the exact semi join, run as the
+    plain ``left_semi`` join and planned by Catalyst: it broadcasts a
+    small build side, shuffles a large one, and injects its own runtime
+    bloom filter where ``spark.sql.optimizer.runtime.bloomFilter.enabled``
+    allows (InjectRuntimeFilter, SURVEY.md §4).  No bloom is built: a
+    Python bloom pre-filter in front of that join was measured slower
+    on both sides of the broadcast threshold (ROADMAP item 2).  With
+    ``exact=False`` the bloom is built over the build keys and the
+    result is the probe rows it passes — a superset of the semi join
+    with no false negatives, for a caller that verifies (or tolerates
+    the false positives) itself.
 
     ``kind`` picks the membership sketch: ``"bloom"`` (reference-parity
     classic filter) or ``"sbbf"`` (split-block/Parquet blocked variant
@@ -257,34 +267,36 @@ def _sketch_semi_join(probe_df: DataFrame, probe_col: str, build_df: DataFrame,
                       build_col: str, prefilter, exact: bool,
                       caller: str = "bloom_semi_join") -> DataFrame:
     """The one semi-join dataflow every sketch-backed semi join shares.
+
+    With ``exact`` the result is the plain semi join of ``probe_df``
+    against the build keys, with no join hint, and ``prefilter`` is never
+    called: nothing is built, broadcast or persisted, and Catalyst plans
+    the join from its size statistics.  Without ``exact``,
     ``prefilter(keys, probe, "__pk")`` filters ``probe`` (``probe_df``
     plus the keyed probe column ``__pk``) by a membership structure it
-    builds over ``keys`` (the keyed build column, named ``build_col``);
-    with ``exact`` a semi join against the distinct build keys removes
-    the false positives.  The verify carries no join hint: Catalyst
-    broadcasts the build keys when its size statistics put them under
-    ``spark.sql.autoBroadcastJoinThreshold`` and shuffles otherwise.
+    builds over ``keys`` (the keyed build column, named ``build_col``),
+    and the result is that superset.
 
     Integer key pairs hash natively: the build and the probe read the
-    raw columns and the verify join compares native longs.  Other pairs
+    raw columns, and the exact join compares native longs.  Other pairs
     go through the lossless string cast, with '' mapped to the
-    empty-key sentinel on both sides of the filter; the verify join
-    still compares the original (cast) values.  Key pairs whose forms
-    would silently diverge are refused (:func:`resolve_key_mode`)."""
+    empty-key sentinel on both sides of the filter; the exact join
+    compares the original (cast) values, so '' is a key and NULL never
+    matches.  Key pairs whose forms would silently diverge are refused
+    first, on both paths (:func:`resolve_key_mode`)."""
     ints = resolve_key_mode(probe_df, probe_col, build_df, build_col, caller)
 
     def key(c):
         return F.col(c) if ints else F.col(c).cast("string")
 
+    if exact:
+        build_keys = build_df.select(key(build_col).alias("__bk"))
+        return probe_df.join(build_keys, key(probe_col) == F.col("__bk"), "left_semi")
+
     def hashed_key(c):
         return key(c) if ints else map_empty_to(key(c), _EMPTY_KEY_TOKEN)
 
     # the build reads raw (non-distinct) keys: inserts are idempotent, so
-    # skipping .distinct() skips a whole shuffle of the build side; only
-    # the exact verify below needs dedup
-    pre = prefilter(build_df.select(hashed_key(build_col).alias(build_col)),
-                    probe_df.withColumn("__pk", hashed_key(probe_col)), "__pk").drop("__pk")
-    if not exact:
-        return pre
-    build_keys = build_df.select(key(build_col).alias("__bk")).distinct()
-    return pre.join(build_keys, key(probe_col) == F.col("__bk"), "left_semi")
+    # skipping .distinct() skips a whole shuffle of the build side
+    return prefilter(build_df.select(hashed_key(build_col).alias(build_col)),
+                     probe_df.withColumn("__pk", hashed_key(probe_col)), "__pk").drop("__pk")

@@ -256,14 +256,15 @@ def sharded_bloom_semi_join(
     name: str = "sharded_bloom",
     exact: bool = True,
 ) -> DataFrame:
-    """bloom_semi_join for key spaces beyond one filter: build the
-    sharded family (one grouped job), persist per shard, pre-filter the
-    probe side shard-locally, then (optionally) remove false positives
-    with the exact semi join — equals the exact semi join.  The shared
+    """bloom_semi_join for key spaces beyond one filter.  The shared
     ``probe._sketch_semi_join`` dataflow supplies the key rule (refused
-    incomparable key types, '' keys kept) and the hint-free verify,
-    which shuffles when the distinct build keys are too large to
-    broadcast — the key scales that motivate sharding."""
+    incomparable key types, '' keys kept) and the plan.  With ``exact``
+    the result is the plain semi join, planned by Catalyst, and no family
+    is built or persisted under ``store_root``.  With ``exact=False`` the
+    sharded family is built (one grouped job) and persisted one object
+    per shard when this is called, and the probe side is pre-filtered
+    shard-locally when the result runs: a superset of the semi join with
+    no false negatives."""
 
     def prefilter(keys: DataFrame, probe: DataFrame, col: str) -> DataFrame:
         family = build_sharded_bloom(keys, build_col, shards,

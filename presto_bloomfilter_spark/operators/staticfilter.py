@@ -69,8 +69,8 @@ def build_xor_filter(df: DataFrame, col: str, fp_bits: int = 8) -> XorFilter:
 
     The column's Arrow type picks the hash path exactly as for every
     other hash sketch (``hash_dispatch``): an integer column hashes as
-    exact ints, a floating one is a TypeError, anything else hashes as
-    strings — probe with a column of the same kind.  NULLs and '' are
+    exact ints, a string one as strings, any other type is a TypeError
+    — probe with a column of the same kind.  NULLs and '' are
     not keys.  An empty input gives an empty filter.
     """
     return aggregate_sketch(*_xor_keys(df, F.col(col), fp_bits), target_partials=1)
@@ -125,12 +125,13 @@ def xor_semi_join(
     fp_bits: int = 8,
     exact: bool = True,
 ) -> DataFrame:
-    """bloom_semi_join's shape on a static xor filter: build once over
-    the (frozen) build keys, pre-filter the probe side with the 3-load
-    membership test, then (optionally) remove the ~2^-fp_bits false
-    positives with the exact semi join (broadcast or shuffled, as
-    Catalyst's size statistics decide) — equals the exact semi join, no
-    false negatives by construction."""
+    """bloom_semi_join's shape on a static xor filter.  With ``exact``
+    the result is the plain semi join, planned by Catalyst, and no filter
+    is built (``probe._sketch_semi_join``).  With ``exact=False`` the
+    filter is built once over the (frozen) build keys and the probe side
+    is pre-filtered with the 3-load membership test: a superset of the
+    semi join with ~2^-fp_bits false positives and no false negatives
+    by construction."""
     return _sketch_semi_join(
         probe_df, probe_col, build_df, build_col,
         _sketch_filter(spark, lambda keys: build_xor_filter(keys, build_col, fp_bits)),

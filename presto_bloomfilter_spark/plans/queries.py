@@ -60,13 +60,21 @@ _STOPWORD_SQL = "('the','a','of','and','to')"
 # ======================= sketch queries (SURVEY §2.1) =========================
 
 
-def _orders_semijoin(spark: SparkSession, sf_dir: str, price: int, join) -> DataFrame:
-    """The semijoin gates' shape: ``join(lineitem, big)`` keeps the
-    lineitem rows of ``big`` (the orders priced above ``price``), then
-    counts rows and sums quantity per return flag."""
-    orders = load_table(spark, sf_dir, "orders")
-    big = orders.filter(F.col("o_totalprice") > price)
-    return join(load_table(spark, sf_dir, "lineitem"), big).groupBy("l_returnflag").agg(
+def _orders_semijoin(spark: SparkSession, sf_dir: str, price: int, prefilter,
+                     live=None) -> DataFrame:
+    """The semijoin gates' shape: ``prefilter(lineitem, big)`` (``big``:
+    the orders priced above ``price``) is a sketch semi join with
+    ``exact=False``, so it returns the sketch-filtered superset of the
+    lineitem rows of the live orders (``big``, filtered by ``live`` when
+    given); a semi join against the live order keys then removes the
+    false positives.  A false negative in the sketch would drop rows the
+    exact oracle keeps.  Then counts rows and sums quantity per return
+    flag."""
+    big = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > price)
+    keys = (big if live is None else big.filter(live)).select(F.col("o_orderkey").alias("__bk"))
+    pre = prefilter(load_table(spark, sf_dir, "lineitem"), big)
+    semi = pre.join(keys, F.col("l_orderkey") == F.col("__bk"), "left_semi")
+    return semi.groupBy("l_returnflag").agg(
         F.count("*").alias("cnt"),
         F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
     )
@@ -86,7 +94,7 @@ def q_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's scan-side shuffle; exact verify removes false positives."""
     return _orders_semijoin(spark, sf_dir, 300_000, lambda lineitem, big: bloom_semi_join(
         spark, lineitem, "l_orderkey", big, "o_orderkey", expected_insertions=50_000,
-        fpp=0.001))
+        fpp=0.001, exact=False))
 
 
 ORACLE_BLOOM_SEMIJOIN = _orders_semijoin_oracle("o_totalprice > 300000")
@@ -99,7 +107,7 @@ def q_sbbf_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as bloom_semijoin."""
     return _orders_semijoin(spark, sf_dir, 300_000, lambda lineitem, big: bloom_semi_join(
         spark, lineitem, "l_orderkey", big, "o_orderkey", expected_insertions=50_000,
-        fpp=0.001, kind="sbbf"))
+        fpp=0.001, kind="sbbf", exact=False))
 
 
 ORACLE_SBBF_SEMIJOIN = ORACLE_BLOOM_SEMIJOIN
@@ -114,7 +122,7 @@ def q_xor_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from presto_bloomfilter_spark.operators.staticfilter import xor_semi_join
 
     return _orders_semijoin(spark, sf_dir, 280_000, lambda lineitem, big: xor_semi_join(
-        spark, lineitem, "l_orderkey", big, "o_orderkey"))
+        spark, lineitem, "l_orderkey", big, "o_orderkey", exact=False))
 
 
 ORACLE_XOR_SEMIJOIN = _orders_semijoin_oracle("o_totalprice > 280000")
@@ -130,16 +138,17 @@ def q_cbf_delete_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     false positives, so the result equals the exact semi join on
     (inserted minus deleted) — which is the oracle."""
 
+    final = F.col("o_orderstatus") == "F"
+
     def join(lineitem: DataFrame, big: DataFrame) -> DataFrame:
-        final = F.col("o_orderstatus") == "F"
         spec = agg.SketchSpec("o_orderkey", lambda: CountingBloomFilter(50_000, 0.001))
         sk = agg.aggregate_sketch(big, spec)
         sk.subtract(agg.aggregate_sketch(big.filter(final), spec))
         return _sketch_semi_join(lineitem, "l_orderkey", big.filter(~final), "o_orderkey",
-                                 _sketch_filter(spark, lambda _keys: sk), exact=True,
+                                 _sketch_filter(spark, lambda _keys: sk), exact=False,
                                  caller="q_cbf_delete_semijoin")
 
-    return _orders_semijoin(spark, sf_dir, 250_000, join)
+    return _orders_semijoin(spark, sf_dir, 250_000, join, live=~final)
 
 
 ORACLE_CBF_DELETE_SEMIJOIN = _orders_semijoin_oracle(
@@ -161,7 +170,7 @@ def q_sharded_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _orders_semijoin(spark, sf_dir, 300_000, lambda lineitem, big: sharded_bloom_semi_join(
         spark, lineitem, "l_orderkey", big, "o_orderkey",
         store_root=tempfile.mkdtemp(prefix="pbs_shard_"),
-        shards=8, expected_insertions_per_shard=10_000, fpp=0.001))
+        shards=8, expected_insertions_per_shard=10_000, fpp=0.001, exact=False))
 
 
 ORACLE_SHARDED_BLOOM_SEMIJOIN = ORACLE_BLOOM_SEMIJOIN

@@ -323,6 +323,9 @@ def test_int_probe_nullable_and_beyond_2pow53(spark):
     out = bloom_semi_join(spark, probe, "k", build, "k",
                           expected_insertions=1000, exact=True)
     assert {r.k for r in out.collect()} == {big_a, 5}
+    pre = bloom_semi_join(spark, probe, "k", build, "k",
+                          expected_insertions=1000, fpp=0.0001, exact=False)
+    assert {r.k for r in pre.collect()} == {big_a, 5}
     # direct filter path: NULL rows must drop, the adjacent big id must
     # NOT collide with the inserted one via float rounding
     sk = agg.aggregate_sketch(
@@ -364,6 +367,36 @@ def test_probe_rejects_floating_keys(spark):
     with pytest.raises(Exception, match="cast it to an integer or string"):
         filter_by_sketch(spark, spark.range(10).selectExpr("cast(id as double) k"), "k",
                          sk).count()
+
+
+@pytest.mark.parametrize("side", ["build", "probe"])
+@pytest.mark.parametrize("expr, arrow_type", [
+    ("id % 2 = 0", "bool"), ("date_add(date'2020-01-01', cast(id as int))", "date32"),
+    ("timestamp_seconds(id)", "timestamp"), ("cast(id as decimal(10,2))", "decimal128"),
+], ids=["boolean", "date", "timestamp", "decimal"])
+def test_hash_sketch_rejects_non_string_keys(spark, side, expr, arrow_type):
+    """A key column that is neither integer nor string has no agreed
+    hashed form: build and probe both raise a TypeError naming the
+    column and its type, and asking for a cast to string."""
+    keys = spark.range(3).selectExpr(f"{expr} k")
+    spec = agg.SketchSpec("k", _MEMBERSHIP["bloom"])
+    match = rf"column 'k' \({arrow_type}.*cast it to string first"
+    with pytest.raises(Exception, match=match):
+        if side == "build":
+            agg.aggregate_sketch(keys, spec)
+        else:
+            sk = agg.aggregate_sketch(spark.range(3).selectExpr("cast(id as string) k"), spec)
+            filter_by_sketch(spark, keys, "k", sk).count()
+
+
+def test_hash_sketch_decodes_dictionary_string_keys():
+    """A dictionary-encoded string column hashes as its plain strings."""
+    words = pa.array(["a", "b", "a", "c"])
+    plain, coded = BloomFilter(100, 0.01), BloomFilter(100, 0.01)
+    agg.hash_dispatch(plain, "add", words, "k")
+    agg.hash_dispatch(coded, "add", words.dictionary_encode(), "k")
+    assert plain == coded
+    assert agg.hash_dispatch(coded, "might_contain", words.dictionary_encode(), "k").all()
 
 
 def test_hash_ints64_rejects_float_arrays():

@@ -58,17 +58,15 @@ def test_top_customers_uses_broadcast_join(spark, sf_dir):
 
 
 def test_bloom_semi_join_probe_side_has_no_shuffle(spark, sf_dir):
-    """The probe side is filter-then-broadcast-verify: a map-only
-    pipeline. Any Exchange on the probe path would mean the bloom
-    pattern regressed to a shuffle join."""
+    """The bloom pre-filter (``exact=False``) is a map-only pipeline on
+    the probe side: the probe UDF inside the scan's stage and no
+    Exchange over the probe table's rows."""
     tokens = load_tokens(spark, sf_dir)
     build = tokens.filter(F.col("source") == "books").select("doc_id")
     out = bloom_semi_join(spark, tokens, "doc_id", build, "doc_id",
-                          expected_insertions=10_000)
+                          expected_insertions=10_000, exact=False)
     plan = _plan(out)
-    # allowed exchanges: the build-side distinct (hashpartitioning of
-    # the bare key, shrinks the broadcast) and the broadcast itself —
-    # nothing may shuffle the probe table's rows
+    assert _PROBE_NODE.search(plan), plan
     for m in re.finditer(r"\(\d+\) Exchange\n((?:.+\n)+?)\n", plan):
         body = m.group(1)
         assert "tokens" not in body and "n_tok" not in body, body
@@ -80,36 +78,86 @@ def test_bigint_bloom_semi_join_probes_the_raw_key(spark, sf_dir):
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100_000)
     plan = _plan(bloom_semi_join(spark, lineitem, "l_orderkey", orders, "o_orderkey",
-                                 expected_insertions=10_000))
+                                 expected_insertions=10_000, exact=False))
     assert re.search(r"Arguments: \[probe\(l_orderkey#\d+L\)#\d+\]", plan), plan
     assert "as string" not in plan, plan
 
 
-@pytest.mark.parametrize("kind", ["bloom", "sharded"])
-def test_exact_semi_join_verify_is_not_forced_to_broadcast(spark, tmp_path, kind):
-    """The exact verify carries no broadcast hint: with broadcasting
-    switched off, no BroadcastExchange may carry the build keys (a
-    forced broadcast of a build side too large for one executor is the
-    failure this rules out)."""
-    from presto_bloomfilter_spark.operators.sharded import sharded_bloom_semi_join
+def _sketch_jobs(spark, call):
+    """``call()`` under a fresh job group: its result and the number of
+    Spark jobs it ran before any action on that result."""
+    import uuid
 
+    sc = spark.sparkContext
+    group = f"semi-join-plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "semi join plan choice")
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_PROBE_NODE = re.compile(r"ArrowEvalPython|MapInArrow")
+
+
+def _exact_semi_join_plan(spark, semi_joins, kind, tmp_path):
+    """The plan of an exact semi join of 200 string keys against every
+    third one, after checking that the call ran no Spark job, that no
+    probe UDF sits in the plan, that nothing was persisted and that the
+    result is the exact semi join."""
     probe = spark.range(200).select(F.col("id").cast("string").alias("k"))
     build = spark.range(0, 200, 3).select(F.col("id").cast("string").alias("k"))
+    out, jobs = _sketch_jobs(spark, lambda: semi_joins[kind](probe, "k", build, "k"))
+    plan = _plan(out)
+    assert jobs == 0
+    assert not _PROBE_NODE.search(plan), plan
+    assert not (tmp_path / "fam").exists()
+    assert out.count() == 67
+    return plan
+
+
+@pytest.mark.parametrize("kind", ["bloom", "sbbf", "xor", "sharded"])
+def test_exact_semi_join_verify_is_not_forced_to_broadcast(spark, tmp_path, semi_joins, kind):
+    """``exact=True`` is the plain semi join with no join hint: with
+    broadcasting switched off no BroadcastExchange may carry the build
+    keys (a forced broadcast of a build side too large for one executor
+    is the failure this rules out), and no sketch is built."""
     conf = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(conf)
     spark.conf.set(conf, "-1")
     try:
-        if kind == "bloom":
-            out = bloom_semi_join(spark, probe, "k", build, "k", expected_insertions=100)
-        else:
-            out = sharded_bloom_semi_join(spark, probe, "k", build, "k", str(tmp_path),
-                                          shards=2, expected_insertions_per_shard=100)
-        plan = _plan(out)
-        assert out.count() == 67
+        plan = _exact_semi_join_plan(spark, semi_joins, kind, tmp_path)
     finally:
         spark.conf.set(conf, old)
     assert "LeftSemi" in plan, plan
     assert "BroadcastExchange" not in plan, plan
+
+
+@pytest.mark.parametrize("kind", ["bloom", "sbbf", "xor", "sharded"])
+def test_small_build_side_gets_a_plain_broadcast_semi_join(spark, tmp_path, semi_joins, kind):
+    """At the session's default threshold Catalyst broadcasts a small
+    build side of the plain semi join: a ``BroadcastHashJoin`` and no
+    sketch built, broadcast or persisted."""
+    plan = _exact_semi_join_plan(spark, semi_joins, kind, tmp_path)
+    assert re.search(r"BroadcastHashJoin .*LeftSemi", plan), plan
+
+
+@pytest.mark.parametrize("kind", ["bloom", "sbbf", "xor", "sharded"])
+def test_inexact_semi_join_is_the_sketch_prefilter(spark, semi_joins, kind):
+    """``exact=False`` builds the sketch when called and probes it in
+    the plan, with no join: its result is a superset of the semi join
+    that an exact semi join cuts back to it."""
+    probe = spark.range(200).select(F.col("id").alias("k"))
+    build = spark.range(0, 200, 3).select(F.col("id").alias("k"))
+    out, jobs = _sketch_jobs(spark, lambda: semi_joins[kind](probe, "k", build, "k",
+                                                              exact=False))
+    plan = _plan(out)
+    assert jobs > 0
+    assert _PROBE_NODE.search(plan), plan
+    assert "LeftSemi" not in plan, plan
+    assert out.count() >= 67
+    assert out.join(build, "k", "left_semi").count() == 67
 
 
 @pytest.mark.parametrize("path", ["map_side", "salted", "merge", "xor_filter", "xor_shards"])

@@ -118,6 +118,9 @@ def test_aggregate_and_semijoin_in_spark(spark, sf_dir):
     got = bloom_semi_join(spark, lineitem, "l_orderkey", keys, "o_orderkey",
                           expected_insertions=50_000, fpp=0.001, kind="sbbf")
     assert got.count() == exact.count()
+    pre = bloom_semi_join(spark, lineitem, "l_orderkey", keys, "o_orderkey",
+                          expected_insertions=50_000, fpp=0.001, kind="sbbf", exact=False)
+    assert pre.count() == hits.count()  # the pre-filter is the sbbf probe
     with pytest.raises(ValueError, match="unknown sketch kind"):
         bloom_semi_join(spark, lineitem, "l_orderkey", keys, "o_orderkey",
                         kind="cuckoo")

@@ -57,6 +57,13 @@ def test_sharded_semi_join_equals_exact(spark, sf_dir, tmp_path):
     )
     exact = lineitem.join(big, lineitem.l_orderkey == big.o_orderkey, "left_semi")
     assert got.count() == exact.count()
+    pre = sharded_bloom_semi_join(
+        spark, lineitem, "l_orderkey", big, "o_orderkey",
+        store_root=str(tmp_path / "s2"), shards=4,
+        expected_insertions_per_shard=10_000, fpp=0.001, exact=False,
+    )
+    assert pre.count() >= exact.count()
+    assert pre.join(big, pre.l_orderkey == big.o_orderkey, "left_semi").count() == exact.count()
     assert got.select(F.sum("l_quantity")).collect()[0][0] == \
         exact.select(F.sum("l_quantity")).collect()[0][0]
 

@@ -138,46 +138,35 @@ def test_sql_contains_dispatches_xor_blobs(spark):
     assert got == {"alpha": True, "beta": True, "nope": False}
 
 
-def _semi_joins(spark, tmp_path) -> dict:
-    """The four sketch-backed semi joins, each as (probe, probe_col,
-    build, build_col) -> DataFrame with small filter geometry."""
-    from presto_bloomfilter_spark.operators.probe import bloom_semi_join
-    from presto_bloomfilter_spark.operators.sharded import sharded_bloom_semi_join
-    from presto_bloomfilter_spark.operators.staticfilter import xor_semi_join
-
-    return {
-        "bloom": lambda *a: bloom_semi_join(spark, *a, expected_insertions=100),
-        "sbbf": lambda *a: bloom_semi_join(spark, *a, expected_insertions=100, kind="sbbf"),
-        "xor": lambda *a: xor_semi_join(spark, *a),
-        "sharded": lambda *a: sharded_bloom_semi_join(
-            spark, *a, str(tmp_path / "fam"), shards=2, expected_insertions_per_shard=100),
-    }
-
-
-def test_semi_joins_keep_empty_string_keys(spark, tmp_path):
+def test_semi_joins_keep_empty_string_keys(spark, semi_joins):
     """'' is invisible to the filters (reference empty-element
-    semantics) but a legitimate join key: every semi join routes it
-    through the shared sentinel so the result still equals the exact
-    semi join (regression for the silent-drop hole)."""
+    semantics) but a legitimate join key: every sketch pre-filter
+    (``exact=False``) routes it through the shared sentinel, so its
+    superset keeps the '' row (regression for the silent-drop hole),
+    and the exact semi join keeps it as well.  A NULL key never
+    matches."""
     build = spark.createDataFrame([("",), ("a",)], "k string")
     probe = spark.createDataFrame(
         [("", 1), ("a", 2), ("b", 3), (None, 4)], "k string, v int")
-    got = {kind: {r.v for r in join(probe, "k", build, "k").collect()}
-           for kind, join in _semi_joins(spark, tmp_path).items()}
-    assert got == dict.fromkeys(got, {1, 2})
+    for kind, join in semi_joins.items():
+        assert {r.v for r in join(probe, "k", build, "k").collect()} == {1, 2}, kind
+        pre = {r.v for r in join(probe, "k", build, "k", exact=False).collect()}
+        assert {1, 2} <= pre and 4 not in pre, (kind, pre)
 
 
 @pytest.mark.parametrize("probe_type", ["double", "string"])
 @pytest.mark.parametrize("kind", ["bloom", "sbbf", "xor", "sharded"])
-def test_semi_joins_refuse_incomparable_key_types(spark, tmp_path, kind, probe_type):
+def test_semi_joins_refuse_incomparable_key_types(spark, semi_joins, kind, probe_type):
     """A double or string probe key against a bigint build key would
     compare string forms ('5.0' vs '5') and silently drop matches:
-    every semi join refuses it, naming itself."""
+    every semi join refuses it, naming itself, exact or not (the key
+    rule runs first on both paths)."""
     build = spark.createDataFrame([(5,)], "k bigint")
     probe = spark.createDataFrame([("5",)], "k string").selectExpr(f"cast(k as {probe_type}) k")
     caller = {"sbbf": "bloom", "sharded": "sharded_bloom"}.get(kind, kind) + "_semi_join"
-    with pytest.raises(ValueError, match=f"^{caller} "):
-        _semi_joins(spark, tmp_path)[kind](probe, "k", build, "k")
+    for exact in (True, False):
+        with pytest.raises(ValueError, match=f"^{caller} "):
+            semi_joins[kind](probe, "k", build, "k", exact=exact)
 
 
 def _blob_sha(xf) -> str:
