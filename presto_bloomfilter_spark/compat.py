@@ -32,10 +32,6 @@ from presto_bloomfilter_spark.operators.probe import _cached_sketch, _probe_keys
 from presto_bloomfilter_spark.store import SketchStore
 
 
-def _as_blob(bf) -> bytes:
-    return bf.to_bytes() if hasattr(bf, "to_bytes") else bytes(bf)
-
-
 # ---- aggregation functions ---------------------------------------------------
 
 
@@ -131,7 +127,7 @@ def bloom_filter_contains(spark: SparkSession, bf, col) -> Column:
 def to_string(bf) -> str:
     """``to_string(bf)`` scalar — base64 of the serialized filter
     (reference BloomFilterToStringScalarFunction.java:37-44)."""
-    return base64.b64encode(_as_blob(bf)).decode("ascii")
+    return base64.b64encode(ser._as_blob(bf)).decode("ascii")
 
 
 def to_string_col(col) -> Column:
@@ -148,7 +144,7 @@ def get_expected_insertions(bf) -> int:
     from the serialized header without decoding the payload."""
     if isinstance(bf, BloomFilter):
         return bf.expected_insertions
-    return int(ser.read_params(_as_blob(bf))["n"])
+    return int(ser.read_params(ser._as_blob(bf))["n"])
 
 
 def get_false_positive_percentage(bf) -> float:
@@ -156,7 +152,7 @@ def get_false_positive_percentage(bf) -> float:
     BloomFilterGetFalsePositivePercentageScalarFunction.java:36-44)."""
     if isinstance(bf, BloomFilter):
         return bf.fpp
-    return float(ser.read_params(_as_blob(bf))["p"])
+    return float(ser.read_params(ser._as_blob(bf))["p"])
 
 
 def bloom_filter_persist(bf, path: str) -> bool:
@@ -310,7 +306,7 @@ def register_sql_functions(spark: SparkSession) -> None:
 
     spark.udf.register("bloom_filter_contains", _sql_contains)
     spark.udf.register("to_string", _per_blob(
-        lambda b: base64.b64encode(b).decode("ascii"), pa.string()))
+        lambda b: base64.b64encode(ser._full_blob(b)).decode("ascii"), pa.string()))
     spark.udf.register("get_expected_insertions", _per_blob(
         lambda b: int(ser.read_params(b)["n"]), pa.int64()))
     spark.udf.register("get_false_positive_percentage", _per_blob(
@@ -379,5 +375,34 @@ def publish_sketch_view(spark: SparkSession, bf, view: str = "bloom_bf") -> None
     """Publish an aggregated sketch as a one-row temp view (``bf``
     binary column) so SQL text can reference it via a scalar subquery —
     the hybrid hand-off from the Python-API aggregation to the SQL
-    probe surface."""
-    spark.createDataFrame([(bytearray(_as_blob(bf)),)], "bf binary").createOrReplaceTempView(view)
+    probe surface.
+
+    The view is one literal row (``SELECT <blob> AS bf``), so the
+    optimizer inlines ``(SELECT bf FROM view)`` into the query as that
+    literal: no subquery and no Spark job read it.  The value is a
+    by-reference blob (the header, the params and the full blob's
+    content-addressed file name: about 150 bytes), so a probe carries
+    the name, not the filter, in every row.  The full blob is written
+    and shipped with ``SparkContext.addFile`` once per application (a
+    sketch already shipped is not written again), and each executor
+    reads it once into its sha256-keyed sketch cache.
+    Every function that returns or persists blob bytes (``to_string``,
+    ``sketch_merge``, ``SketchStore.put``) gives the full blob, never
+    the reference."""
+    from pyspark import SparkFiles
+
+    sc = spark.sparkContext
+    blob = ser._as_blob(bf)
+    name, ref = ser._by_reference(blob)
+    if not any(f.endswith("/" + name) for f in sc.listFiles):
+        # under the driver's SparkFiles root, which Spark deletes when
+        # the context stops; addFile copies it up into that root
+        root = os.path.join(SparkFiles.getRootDirectory(), "published")
+        os.makedirs(root, exist_ok=True)
+        with open(os.path.join(root, name), "wb") as f:
+            f.write(blob)
+        sc.addFile(os.path.join(root, name))
+    # a literal row, not a one-row Arrow LocalRelation (which also plans
+    # without a job): two scalar subqueries over two such relations feed
+    # one Python UDF node the same value
+    spark.sql("SELECT :bf AS bf", args={"bf": ref}).createOrReplaceTempView(view)

@@ -75,10 +75,13 @@ def hash_strings64(values, seed: int = 0) -> np.ndarray:
     """Hash a string/bytes sequence to uint64, vectorized via pandas.
 
     ``pd.util.hash_pandas_object`` uses a fixed internal key, so results
-    are stable across Python processes (unlike builtin ``hash``).
+    are stable across Python processes (unlike builtin ``hash``).  Each
+    value is hashed on its own (``categorize=False``): the categorizing
+    path factorizes strings as C strings, so within one batch every
+    string that agrees up to its first NUL got the first one's hash.
     """
     s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-    h = pd.util.hash_pandas_object(s, index=False).to_numpy(dtype=np.uint64)
+    h = pd.util.hash_pandas_object(s, index=False, categorize=False).to_numpy(dtype=np.uint64)
     if seed:
         with np.errstate(over="ignore"):
             h = h + _U64(seed & 0xFFFFFFFFFFFFFFFF) * _SM_GAMMA

@@ -12,7 +12,8 @@ clean little-endian layout:
     0..3    magic  b"PBFS"
     4..5    u16    format version (1)
     6       u8     sketch kind (1=bloom 2=hll 3=cms 4=kll 5=multi)
-    7       u8     flags (bit0: payload is zlib-compressed)
+    7       u8     flags (bit0: payload is zlib-compressed;
+                           bit1: by-reference, see below)
     8..39   sha256 of the *uncompressed* payload  (cache key)
     40..43  u32    params JSON length
     44..47  u32    stored payload length
@@ -22,6 +23,16 @@ Compression is optional and measured, not assumed: near-capacity bloom
 bitsets are incompressible (reference gzips unconditionally and pays
 ~20 ms per round trip, TestBloomFilterSerialization.java:59,74); we
 compress only when it actually shrinks the payload.
+
+A *by-reference* blob has the header and params of a full blob (so its
+kind, params and content digest read as the full blob's) with the
+by-reference flag set, and as its payload the name
+``<sha256 of the full blob>.sketch`` of a file shipped to the Spark
+application with ``SparkContext.addFile`` (``compat.publish_sketch_view``
+ships it).  It is what a SQL probe carries per row in place of the
+filter, the way the reference passes its Slice by reference.
+:func:`decode` resolves one through ``SparkFiles``; it is never written
+to a store, a checkpoint or a sketch table.
 """
 
 from __future__ import annotations
@@ -34,6 +45,8 @@ import zlib
 MAGIC = b"PBFS"
 VERSION = 1
 _HEADER = struct.Struct("<4sHBB32sII")
+_FLAG_ZLIB = 1
+_FLAG_REF = 2
 
 KIND_BLOOM = 1
 KIND_HLL = 2
@@ -71,17 +84,57 @@ def encode(kind: int, params: dict, payload: bytes, compress: str = "auto") -> b
     if compress in ("auto", "always"):
         z = zlib.compress(payload, 1)
         if compress == "always" or len(z) < len(payload):
-            stored, flags = z, 1
+            stored, flags = z, _FLAG_ZLIB
     pjson = json.dumps(params, sort_keys=True, separators=(",", ":")).encode()
     head = _HEADER.pack(MAGIC, VERSION, kind, flags, digest, len(pjson), len(stored))
     return head + pjson + stored
 
 
 def decode(buf: bytes) -> tuple[int, dict, bytes]:
-    """Full decode → (kind, params, uncompressed payload)."""
-    kind, flags, _, pjson, stored = _split(buf)
-    payload = zlib.decompress(stored) if flags & 1 else stored
+    """Full decode → (kind, params, uncompressed payload); a
+    by-reference blob decodes as the full blob it names."""
+    kind, flags, _, pjson, stored = _split(_full_blob(buf))
+    payload = zlib.decompress(stored) if flags & _FLAG_ZLIB else stored
     return kind, json.loads(pjson), payload
+
+
+def _by_reference(blob: bytes) -> tuple[str, bytes]:
+    """``(name, reference)`` for the full blob ``blob``: ``name`` is
+    its content address ``<sha256 hex>.sketch``, the file name the
+    caller ships it under, and ``reference`` the by-reference blob
+    naming it (119 bytes plus the params)."""
+    kind, _, digest, pjson, _ = _split(blob)
+    name = hashlib.sha256(blob).hexdigest() + ".sketch"
+    head = _HEADER.pack(MAGIC, VERSION, kind, _FLAG_REF, digest, len(pjson), len(name))
+    return name, head + pjson + name.encode("ascii")
+
+
+def _as_blob(sketch) -> bytes:
+    """The full blob of a sketch object or of blob bytes."""
+    return sketch.to_bytes() if hasattr(sketch, "to_bytes") else _full_blob(bytes(sketch))
+
+
+def _full_blob(buf: bytes) -> bytes:
+    """``buf`` itself, or for a by-reference blob the full blob it
+    names, read from the file shipped under that name
+    (``SparkFiles.get`` finds it on the driver and on every executor).
+    The one place a reference is resolved: :func:`decode` and every
+    function that returns or persists blob bytes call it."""
+    if len(buf) < _HEADER.size or buf[:4] != MAGIC or not buf[7] & _FLAG_REF:
+        return buf
+    _, _, digest, _, name = _split(buf)
+    from pyspark import SparkFiles
+
+    try:
+        with open(SparkFiles.get(name.decode("ascii")), "rb") as f:
+            full = f.read()
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"by-reference sketch {name.decode('ascii')} is not shipped to this "
+            f"Spark application; publish it with compat.publish_sketch_view") from e
+    if read_hash(full) != digest:
+        raise ValueError(f"shipped sketch {name.decode('ascii')} does not match its reference")
+    return full
 
 
 def _unpack_header(buf: bytes):

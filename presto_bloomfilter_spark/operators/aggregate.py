@@ -834,7 +834,9 @@ def mg_top_k(
     cands = [item for item, _ in summary.topk(k_counters)]
     if not cands:
         return spark.createDataFrame([], "item string, cnt long")
-    cand_df = spark.createDataFrame([(c,) for c in cands], "item string")
+    # a driver-local Arrow table plans as a LocalRelation: the broadcast
+    # side starts no Python job
+    cand_df = spark.createDataFrame(pa.table({"item": pa.array(cands, pa.string())}))
     exact = (
         df.select(F.col(col).alias("item"))
         .join(F.broadcast(cand_df), "item")

@@ -73,7 +73,9 @@ def _cached_sketch(blob: bytes):
     # digest: two sketches with byte-identical payloads but different
     # kind/params (two empty filters of equal word count and different
     # k; an empty HLL vs an equal-length zero bitset) must not collide
-    # into one cached object
+    # into one cached object.  A by-reference blob (publish_sketch_view)
+    # is keyed by its own ~150 bytes and resolved to the shipped full
+    # blob only on a miss (serialization.decode)
     import hashlib
 
     key = hashlib.sha256(blob).digest()

@@ -29,6 +29,7 @@ single filter can hold.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import math
 from collections.abc import Iterator
@@ -92,14 +93,14 @@ def persist_sharded_bloom(
     O(S * filter_bytes/S) = O(total filter bytes) streamed through the
     driver once at build time; probes never do this."""
     return persist_family(
-        family, store, name, shards,
+        family.collect(), store, name, shards,
         empty_blob=lambda: BloomFilter(expected_insertions_per_shard, fpp).to_bytes(),
         fmt="pbfs-sharded-v1",
     )
 
 
 def persist_family(
-    family: DataFrame,
+    rows: list,
     store: SketchStore,
     name: str,
     shards: int,
@@ -108,11 +109,11 @@ def persist_family(
 ) -> int:
     """The shared persist contract for every sharded filter family
     (bloom here, xor in operators/staticfilter.py): one store object
-    per shard id in [0, shards) — absent shards backfilled with
-    ``empty_blob()`` so a probe-side missing object always means store
-    breakage, never "empty shard" — plus the ``{name}.manifest`` that
+    per shard id in [0, shards) of the collected ``(shard, sketch)``
+    rows — absent shards backfilled with ``empty_blob()`` so a
+    probe-side missing object always means store breakage, never
+    "empty shard" — plus the ``{name}.manifest`` that
     ``sharded_contains`` validates before any task launches."""
-    rows = family.collect()
     written = set()
     for r in rows:
         store.put(f"{name}.s{int(r.shard)}", bytes(r.sketch))
@@ -264,14 +265,24 @@ def sharded_bloom_semi_join(
     sharded family is built (one grouped job) and persisted one object
     per shard when this is called, and the probe side is pre-filtered
     shard-locally when the result runs: a superset of the semi join with
-    no false negatives."""
+    no false negatives.  The family is persisted under the content
+    address ``{name}-{digest}`` (the digest covers the geometry and the
+    shard blobs), so a later call on the same ``store_root`` and
+    ``name`` with other build keys cannot overwrite the family an
+    earlier, not yet run result probes."""
 
     def prefilter(keys: DataFrame, probe: DataFrame, col: str) -> DataFrame:
-        family = build_sharded_bloom(keys, build_col, shards,
-                                     expected_insertions_per_shard, fpp)
-        persist_sharded_bloom(family, SketchStore(store_root), name, shards,
-                              expected_insertions_per_shard, fpp)
-        return sharded_contains(spark, probe, col, store_root, name, shards)
+        rows = sorted(build_sharded_bloom(keys, build_col, shards,
+                                          expected_insertions_per_shard, fpp).collect(),
+                      key=lambda r: int(r.shard))
+        digest = hashlib.sha256(repr((shards, expected_insertions_per_shard, fpp)).encode())
+        for r in rows:
+            digest.update(b"%d:" % int(r.shard) + bytes(r.sketch))
+        family = f"{name}-{digest.hexdigest()[:16]}"
+        persist_family(rows, SketchStore(store_root), family, shards,
+                       empty_blob=lambda: BloomFilter(expected_insertions_per_shard, fpp).to_bytes(),
+                       fmt="pbfs-sharded-v1")
+        return sharded_contains(spark, probe, col, store_root, family, shards)
 
     return _sketch_semi_join(probe_df, probe_col, build_df, build_col, prefilter,
                              exact, caller="sharded_bloom_semi_join")

@@ -110,7 +110,7 @@ def persist_xor_shards(
     sharded.persist_family).
     """
     return persist_family(
-        family, store, name, shards,
+        family.collect(), store, name, shards,
         empty_blob=lambda: XorFilter.build_digests([], fp_bits).to_bytes(),
         fmt="pbfs-xor-sharded-v1",
     )

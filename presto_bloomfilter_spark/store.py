@@ -50,8 +50,9 @@ class SketchStore:
     def put(self, key: str, sketch) -> bool:
         """Persist a sketch (object or raw bytes); atomic overwrite —
         bloom_filter_persist parity (BloomFilterPersistScalarFunction
-        .java:38-63: errors surface to the caller for retry)."""
-        blob = sketch.to_bytes() if hasattr(sketch, "to_bytes") else bytes(sketch)
+        .java:38-63: errors surface to the caller for retry).  A
+        by-reference blob is stored as the full blob it names."""
+        blob = ser._as_blob(sketch)
         ser.read_kind(blob)  # validate before write
         tmp = self._path(key) + f".tmp.{os.getpid()}"
         with open(tmp, "wb") as f:

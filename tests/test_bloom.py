@@ -86,6 +86,20 @@ def test_no_false_negatives():
     assert bf.might_contain_strings(keys).all()
 
 
+def test_strings_with_nul_hash_apart_in_one_batch():
+    """Strings that agree up to a NUL byte hash as themselves in a batch
+    (the same hash as alone), so a bloom built over them has no false
+    negatives."""
+    from presto_bloomfilter_spark.functions.hashing import hash_strings64
+
+    vals = ["\x00", "\x000", "\x00a", "ab\x00c", "ab\x00d"]
+    batch = hash_strings64(vals)
+    assert len(set(batch.tolist())) == len(vals)
+    assert batch.tolist() == [int(hash_strings64([v])[0]) for v in vals]
+    bf = BloomFilter(1000, 0.001).add_strings(vals)
+    assert all(bf.might_contain_strings([v])[0] for v in vals)
+
+
 def test_fpr_within_bound():
     rng = np.random.default_rng(7)
     n = 50_000

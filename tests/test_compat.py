@@ -425,3 +425,76 @@ def test_sql_new_family_scalars(spark):
     from pyspark.errors.exceptions.captured import PythonException
     with _pytest.raises((Py4JJavaError, PythonException)):
         spark.sql("SELECT sketch_f2((SELECT bf FROM tv_dds)) AS x").collect()
+
+
+def test_published_view_reference_is_invisible_to_callers(spark, tmp_path):
+    """A published view holds a by-reference blob, and every SQL scalar
+    over it returns exactly what it returns over the literal full blob;
+    a collected view value persists as the full blob; two sketches
+    published one after the other under one view name, or under two
+    names read in one query, each probe correctly; publishing one
+    sketch twice ships one file."""
+    import numpy as np
+
+    from presto_bloomfilter_spark import CountMinSketch, CountSketch, HyperLogLog, KLLSketch
+    from presto_bloomfilter_spark.functions import serialization as ser
+
+    compat.register_sql_functions(spark)
+    sketches = {
+        "tv_ref_bf": BloomFilter(1000, 0.01).add_strings(["alice", "bob"]),
+        "tv_ref_hll": HyperLogLog().add_strings([f"u{i}" for i in range(500)]),
+        "tv_ref_cms": CountMinSketch(eps=1e-2).add_strings(["a", "b", "a"]),
+        "tv_ref_kll": KLLSketch().add(np.arange(1.0, 1001.0)),
+        "tv_ref_cs": CountSketch(width=256, depth=3).add_strings(["w", "w", "x"]),
+    }
+    scalars = {
+        "to_string": "to_string({})",
+        "sketch_estimate": "sketch_estimate({})",
+        "sketch_merge": "sketch_merge({})",
+        "get_expected_insertions": "get_expected_insertions({})",
+        "get_false_positive_percentage": "get_false_positive_percentage({})",
+        "sketch_quantile": "sketch_quantile({}, 0.5)",
+        "sketch_f2": "sketch_f2({})",
+    }
+    applies = {"get_expected_insertions": {"tv_ref_bf"},
+               "get_false_positive_percentage": {"tv_ref_bf"},
+               "sketch_quantile": {"tv_ref_kll"}, "sketch_f2": {"tv_ref_cs"}}
+    for view, sk in sketches.items():
+        compat.publish_sketch_view(spark, sk, view)
+        full = sk.to_bytes()
+        ref = bytes(spark.table(view).first().bf)
+        assert ref != full and len(ref) < 256
+        assert ser.read_params(ref) == ser.read_params(full)
+        for fn, expr in scalars.items():
+            if view not in applies.get(fn, {view}):
+                continue
+            published = spark.sql(
+                f"SELECT {expr.format('bf')} AS v FROM {view}").first().v
+            literal = spark.sql(
+                f"SELECT {expr.format(f'X{full.hex()!r}')} AS v").first().v
+            assert published == literal, (view, fn)
+            if fn in ("to_string", "sketch_merge"):
+                assert published == (compat.to_string(full) if fn == "to_string"
+                                     else bytearray(full)), (view, fn)
+        path = str(tmp_path / view)
+        compat.bloom_filter_persist(spark.table(view).first().bf, path)
+        with open(path + ".sketch", "rb") as f:
+            assert f.read() == full
+
+    a = BloomFilter(100, 0.001).add_strings(["only-a"])
+    b = BloomFilter(100, 0.001).add_strings(["only-b"])
+    probe = ("SELECT bloom_filter_contains((SELECT bf FROM tv_ref_swap), 'only-a') AS a, "
+             "bloom_filter_contains((SELECT bf FROM tv_ref_swap), 'only-b') AS b")
+    compat.publish_sketch_view(spark, a, "tv_ref_swap")
+    assert tuple(spark.sql(probe).first()) == (True, False)
+    compat.publish_sketch_view(spark, b, "tv_ref_swap")
+    assert tuple(spark.sql(probe).first()) == (False, True)
+    compat.publish_sketch_view(spark, a, "tv_ref_a")
+    assert tuple(spark.sql(
+        "SELECT bloom_filter_contains((SELECT bf FROM tv_ref_a), 'only-a') AS a, "
+        "bloom_filter_contains((SELECT bf FROM tv_ref_swap), 'only-a') AS b").first()
+    ) == (True, False)
+
+    name, _ = ser._by_reference(a.to_bytes())
+    compat.publish_sketch_view(spark, a, "tv_ref_again")
+    assert sum(f.endswith("/" + name) for f in spark.sparkContext.listFiles) == 1

@@ -342,3 +342,73 @@ def test_round5_session4_ops_avoid_row_sorts_and_nested_loops(spark, sf_dir):
     # no global row-range sort anywhere in these ops
     for name, plan in plans.items():
         assert "Exchange rangepartitioning" not in plan, (name, plan[:2000])
+
+
+def _python_nodes(plan):
+    """The Python-evaluating nodes of an executed JVM plan, through AQE
+    and its query stages."""
+    name = plan.nodeName()
+    if name.startswith("AdaptiveSparkPlan"):
+        return _python_nodes(plan.executedPlan())
+    if "QueryStage" in name:
+        return _python_nodes(plan.plan())
+    out = [plan] if plan.metrics().contains("pythonDataSent") else []
+    children = plan.children().iterator()
+    while children.hasNext():
+        out += _python_nodes(children.next())
+    return out
+
+
+def test_published_view_is_driver_local(spark):
+    """A published sketch view is one driver-local literal row: its plan
+    reads no RDD, the optimizer inlines the scalar subquery that reads
+    it, and the SQL probe runs no more Spark jobs than filter_by_sketch
+    over the same rows."""
+    from presto_bloomfilter_spark import compat
+    from presto_bloomfilter_spark.functions.bloom import BloomFilter
+    from presto_bloomfilter_spark.operators.probe import filter_by_sketch
+
+    compat.register_sql_functions(spark)
+    keys = spark.range(2000).select(F.col("id").cast("string").alias("doc_id"))
+    keys.createOrReplaceTempView("tv_local_slice")
+    bf = BloomFilter(1000, 0.01).add_strings([str(i) for i in range(0, 2000, 2)])
+    compat.publish_sketch_view(spark, bf, "tv_local_bf")
+    plan = spark.table("tv_local_bf")._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(r"LocalRelation|OneRowRelation", plan), plan
+    assert not re.search(r"LogicalRDD|ExternalRDD", plan), plan
+
+    sql = ("SELECT count(*) AS c FROM tv_local_slice "
+           "WHERE bloom_filter_contains((SELECT bf FROM tv_local_bf), doc_id)")
+    plan = spark.sql(sql)._jdf.queryExecution().optimizedPlan().toString()
+    assert "subquery" not in plan.lower(), plan
+    n_sql, jobs_sql = _sketch_jobs(spark, lambda: spark.sql(sql).collect()[0].c)
+    n_py, jobs_py = _sketch_jobs(spark, lambda: filter_by_sketch(
+        spark, keys, "doc_id", bf).agg(F.count("*").alias("c")).collect()[0].c)
+    assert n_sql == n_py >= 1000
+    assert 0 < jobs_sql <= jobs_py, (jobs_sql, jobs_py)
+
+
+def test_sql_probe_ships_a_reference_not_the_filter(spark):
+    """A 1 MB bloom probed from SQL text over 10k rows feeds the probe
+    UDF at most 256 bytes per row (the by-reference blob and the key),
+    not the filter, and returns the rows filter_by_sketch returns."""
+    from presto_bloomfilter_spark import compat
+    from presto_bloomfilter_spark.functions.bloom import BloomFilter
+    from presto_bloomfilter_spark.operators.probe import filter_by_sketch
+
+    compat.register_sql_functions(spark)
+    rows = 10_000
+    keys = spark.range(rows).select(F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"))
+    keys.createOrReplaceTempView("tv_ref_keys")
+    # half full, so zlib cannot shrink the blob below its 1.2 MB bitset
+    bf = BloomFilter(1_000_000, 0.01).add_strings(
+        [f"k{i}" for i in range(0, rows, 3)] + [f"x{i}" for i in range(1_000_000)])
+    assert len(bf.to_bytes()) > 1_000_000
+    compat.publish_sketch_view(spark, bf, "tv_ref_big")
+    df = spark.sql("SELECT k FROM tv_ref_keys "
+                   "WHERE bloom_filter_contains((SELECT bf FROM tv_ref_big), k)")
+    got = sorted(r.k for r in df.collect())
+    [udf] = _python_nodes(df._jdf.queryExecution().executedPlan())
+    assert udf.metrics().apply("pythonNumRowsReceived").value() == rows
+    assert udf.metrics().apply("pythonDataSent").value() <= 256 * rows
+    assert got == sorted(r.k for r in filter_by_sketch(spark, keys, "k", bf).collect())

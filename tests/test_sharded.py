@@ -68,6 +68,29 @@ def test_sharded_semi_join_equals_exact(spark, sf_dir, tmp_path):
         exact.select(F.sum("l_quantity")).collect()[0][0]
 
 
+def test_sharded_prefilters_on_one_store_name_do_not_overwrite(spark, sf_dir, tmp_path):
+    """Two ``exact=False`` sharded semi joins on the same store_root and
+    name, both built before either runs: each persists its family under
+    its own content address, so the first (bigint keys) still returns
+    the exact semi join's rows after the second (string keys) was built."""
+    from presto_bloomfilter_spark.sources.tables import load_table
+
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    big = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_totalprice") > 300_000).select("o_orderkey")
+    kw = dict(store_root=str(tmp_path / "one"), shards=4,
+              expected_insertions_per_shard=10_000, fpp=0.001, name="fam", exact=False)
+    first = sharded_bloom_semi_join(spark, lineitem, "l_orderkey", big, "o_orderkey", **kw)
+    probe_s = spark.createDataFrame([("", 1), ("a", 2), ("b", 3)], "k string, v int")
+    build_s = spark.createDataFrame([("",), ("a",)], "k string")
+    second = sharded_bloom_semi_join(spark, probe_s, "k", build_s, "k", **kw)
+    exact = lineitem.join(big, lineitem.l_orderkey == big.o_orderkey, "left_semi").count()
+    assert exact > 0
+    assert first.join(big, first.l_orderkey == big.o_orderkey, "left_semi").count() == exact
+    assert {1, 2} <= {r.v for r in second.collect()}
+    assert len(SketchStore(kw["store_root"]).keys()) == 2 * 4
+
+
 def test_shard_function_partitioning_invariance(spark, keys_df, tmp_path):
     """Same family regardless of input partitioning (merge algebra per
     shard) — the property that makes the build restartable."""
