@@ -39,6 +39,7 @@ from presto_bloomfilter_spark.functions.countsketch import CountSketch
 from presto_bloomfilter_spark.functions.fd import FrequentDirections, ExactGram
 from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
 from presto_bloomfilter_spark import compat
+from presto_bloomfilter_spark import _zipimport
 
 __all__ = [
     "BloomFilter",
@@ -61,3 +62,5 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+_zipimport.install()  # in a Spark worker, tasks stop re-reading pyspark.zip
