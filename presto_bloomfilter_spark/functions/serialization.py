@@ -10,10 +10,11 @@ clean little-endian layout:
 
     offset  field
     0..3    magic  b"PBFS"
-    4..5    u16    format version (1)
+    4..5    u16    format version (1, or 2 for a zstd payload)
     6       u8     sketch kind (1=bloom 2=hll 3=cms 4=kll 5=multi)
     7       u8     flags (bit0: payload is zlib-compressed;
-                           bit1: by-reference, see below)
+                           bit1: by-reference, see below;
+                           bit2: payload is zstd-compressed)
     8..39   sha256 of the *uncompressed* payload  (cache key)
     40..43  u32    params JSON length
     44..47  u32    stored payload length
@@ -22,7 +23,27 @@ clean little-endian layout:
 Compression is optional and measured, not assumed: near-capacity bloom
 bitsets are incompressible (reference gzips unconditionally and pays
 ~20 ms per round trip, TestBloomFilterSerialization.java:59,74); we
-compress only when it actually shrinks the payload.
+compress only when it actually shrinks the payload.  The codec depends
+only on the payload's length:
+
+- below 64 KiB (``ZSTD_MIN_BYTES``): zlib level 1, format version 1.
+  Either codec costs microseconds there, and zlib's blobs are the
+  smaller ones: the 262 sparse/dense HLL and KLL blobs of a keyed
+  build total 823,121 bytes with zlib against 1,007,252 with zstd;
+- from 64 KiB up: zstd level 1 (``pyarrow.Codec``), format version 2,
+  and the stored section is the raw payload length (u64) followed by
+  the zstd frame.  On a seed-1 fused-build partial (4-core host, min
+  of 7) a 1.2 MB bloom bitset encodes in 5.0 ms against zlib's 17.5 ms
+  (217,830 against 255,655 bytes) and decodes in 2.2 ms against 6.9 ms,
+  and a 1.1 MB CMS table encodes in 4.7 against 8.9 ms (81,444 against
+  128,174 bytes).
+
+Every other blob is written as version 1, so its bytes are those of
+the version-1 format; a reader older than version 2 refuses a zstd blob
+(unsupported version) rather than misreading it.  The frames carry no
+checksum, so :func:`decode` checks a zstd payload against the header
+digest, the check zlib's adler32 makes for a zlib payload; a payload
+that fails either codec raises ``ValueError``.
 
 A *by-reference* blob has the header and params of a full blob (so its
 kind, params and content digest read as the full blob's) with the
@@ -42,11 +63,21 @@ import json
 import struct
 import zlib
 
+import pyarrow as pa
+
 MAGIC = b"PBFS"
-VERSION = 1
+_V1 = 1  # every blob but one with a zstd payload
+_V2 = 2  # a blob with a zstd payload
+VERSION = _V2  # the newest format version decode reads
 _HEADER = struct.Struct("<4sHBB32sII")
 _FLAG_ZLIB = 1
 _FLAG_REF = 2
+_FLAG_ZSTD = 4
+_FLAGS = _FLAG_ZLIB | _FLAG_REF | _FLAG_ZSTD
+ZSTD_MIN_BYTES = 64 * 1024
+_RAW_LEN = struct.Struct("<Q")
+_ZSTD = pa.Codec("zstd", compression_level=1)
+_ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
 
 KIND_BLOOM = 1
 KIND_HLL = 2
@@ -79,23 +110,64 @@ def register_kind(kind: int):
 
 def encode(kind: int, params: dict, payload: bytes, compress: str = "auto") -> bytes:
     digest = hashlib.sha256(payload).digest()
-    flags = 0
-    stored = payload
+    version, flags, stored = _V1, 0, payload
     if compress in ("auto", "always"):
-        z = zlib.compress(payload, 1)
-        if compress == "always" or len(z) < len(payload):
-            stored, flags = z, _FLAG_ZLIB
+        compressed = _compress(payload)
+        if compress == "always" or len(compressed[2]) < len(payload):
+            version, flags, stored = compressed
     pjson = json.dumps(params, sort_keys=True, separators=(",", ":")).encode()
-    head = _HEADER.pack(MAGIC, VERSION, kind, flags, digest, len(pjson), len(stored))
-    return head + pjson + stored
+    head = _HEADER.pack(MAGIC, version, kind, flags, digest, len(pjson), len(stored))
+    return b"".join((head, pjson, stored))
+
+
+def _compress(payload: bytes) -> tuple[int, int, bytes]:
+    """``(format version, codec flag, stored section)`` of ``payload``
+    compressed by the codec its length picks."""
+    if len(payload) < ZSTD_MIN_BYTES:
+        return _V1, _FLAG_ZLIB, zlib.compress(payload, 1)
+    return _V2, _FLAG_ZSTD, _RAW_LEN.pack(len(payload)) + _ZSTD.compress(payload, asbytes=True)
 
 
 def decode(buf: bytes) -> tuple[int, dict, bytes]:
     """Full decode → (kind, params, uncompressed payload); a
     by-reference blob decodes as the full blob it names."""
-    kind, flags, _, pjson, stored = _split(_full_blob(buf))
-    payload = zlib.decompress(stored) if flags & _FLAG_ZLIB else stored
-    return kind, json.loads(pjson), payload
+    kind, flags, digest, pjson, stored = _split(_full_blob(buf))
+    return kind, json.loads(pjson), _payload(flags, digest, stored)
+
+
+def _payload(flags: int, digest: bytes, stored: bytes) -> bytes:
+    """The uncompressed payload of a blob's stored section.  A payload
+    its codec rejects, or a zstd payload whose raw length or digest
+    differs from what its frame or header declares, raises
+    ``ValueError``."""
+    try:
+        if flags & _FLAG_ZSTD:
+            (n,) = _RAW_LEN.unpack_from(stored)
+            frame = memoryview(stored)[_RAW_LEN.size:]
+            # checked before decompress allocates n bytes
+            if _zstd_content_size(frame) != n:
+                raise ValueError("corrupt sketch payload: raw length does not match the zstd frame")
+            payload = _ZSTD.decompress(frame, decompressed_size=n, asbytes=True)
+            if hashlib.sha256(payload).digest() != digest:
+                raise ValueError("corrupt sketch payload: zstd payload does not match its digest")
+            return payload
+        return zlib.decompress(stored) if flags & _FLAG_ZLIB else stored
+    except (zlib.error, OSError, struct.error) as e:
+        raise ValueError(f"corrupt sketch payload: {e}") from e
+
+
+def _zstd_content_size(frame: memoryview) -> int:
+    """The content size a zstd frame header declares (RFC 8878
+    §3.1.1.1), or -1 for a frame that declares none or is no frame."""
+    if len(frame) < 6 or frame[:4] != _ZSTD_MAGIC:
+        return -1
+    desc = frame[4]
+    single = desc >> 5 & 1
+    width = (single, 2, 4, 8)[desc >> 6]
+    off = 5 + (1 - single) + (0, 1, 2, 4)[desc & 3]
+    if not width or len(frame) < off + width:
+        return -1
+    return int.from_bytes(frame[off : off + width], "little") + (256 if width == 2 else 0)
 
 
 def _by_reference(blob: bytes) -> tuple[str, bytes]:
@@ -105,7 +177,7 @@ def _by_reference(blob: bytes) -> tuple[str, bytes]:
     naming it (119 bytes plus the params)."""
     kind, _, digest, pjson, _ = _split(blob)
     name = hashlib.sha256(blob).hexdigest() + ".sketch"
-    head = _HEADER.pack(MAGIC, VERSION, kind, _FLAG_REF, digest, len(pjson), len(name))
+    head = _HEADER.pack(MAGIC, _V1, kind, _FLAG_REF, digest, len(pjson), len(name))
     return name, head + pjson + name.encode("ascii")
 
 
@@ -198,6 +270,8 @@ def merge_blobs(blobs, mapper=map):
 def _split(buf: bytes):
     magic, ver, kind, flags, digest, plen, slen = _unpack_header(buf)
     _check(magic, ver)
+    if flags & ~_FLAGS:
+        raise ValueError(f"unknown sketch flags {flags:#04x}")
     off = _HEADER.size
     pjson = buf[off : off + plen]
     stored = buf[off + plen : off + plen + slen]

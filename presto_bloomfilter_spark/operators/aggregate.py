@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import contextlib
 import itertools
+import time
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
@@ -402,6 +403,8 @@ class BuildMetrics:
         self._batches = sc.accumulator(0)
         self._partials = sc.accumulator(0)
         self._merges = sc.accumulator(0)
+        self._encode_s = sc.accumulator(0.0)
+        self._blob_bytes = sc.accumulator(0)
 
     def as_dict(self) -> dict:
         return {
@@ -409,6 +412,8 @@ class BuildMetrics:
             "batches": self._batches.value,
             "partial_sketches": self._partials.value,
             "merges": self._merges.value,
+            "encode_s": self._encode_s.value,
+            "blob_bytes": self._blob_bytes.value,
         }
 
 
@@ -431,8 +436,19 @@ def _build_partial(spec: SketchSpec, batches: Iterable[pa.RecordBatch],
     return _unwrap(sk), rows
 
 
-def _blob_batch(sk) -> pa.RecordBatch:
-    return pa.RecordBatch.from_arrays([pa.array([sk.to_bytes()], pa.binary())], ["sketch"])
+def _encode(sketches: list, metrics: BuildMetrics | None = None) -> list[bytes]:
+    """The blobs of ``sketches``.  A partial phase passes its
+    ``metrics``, which gain the encode seconds and the blob bytes."""
+    t0 = time.perf_counter()
+    blobs = [sk.to_bytes() for sk in sketches]
+    if metrics is not None:
+        metrics._encode_s.add(time.perf_counter() - t0)
+        metrics._blob_bytes.add(sum(map(len, blobs)))
+    return blobs
+
+
+def _blob_batch(sk, metrics: BuildMetrics | None = None) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays([pa.array(_encode([sk], metrics), pa.binary())], ["sketch"])
 
 
 def _row_group_batches(path: str, cols: list[str],
@@ -518,7 +534,7 @@ def aggregate_sketch(
         pruned = pruned.coalesce(target_partials)
 
     def partial(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield _blob_batch(_build_partial(spec, batches, metrics)[0])
+        yield _blob_batch(_build_partial(spec, batches, metrics)[0], metrics)
 
     with _tuned_arrow_batches(df):
         partials = pruned.mapInArrow(partial, "sketch binary")
@@ -558,10 +574,11 @@ def _tree_merge_collect(
         return _unwrap(spec.factory())
     if metrics is not None:
         metrics._merges.add(len(blobs) - 1)
-    # deserialize in a thread pool: zlib.decompress and the numpy buffer
-    # copies release the GIL, and per-blob decode (~13 ms for a
-    # compressed multi-sketch) dominates the driver tail — the merges
-    # themselves are sub-ms vector ops (SCALING_PROFILE.md)
+    # deserialize in a thread pool: zlib and zstd decompression, the
+    # payload digest check and the numpy buffer copies release the GIL,
+    # and per-blob decode (~10 ms for a fused-build partial) dominates
+    # the driver tail — the merges themselves are sub-ms vector ops
+    # (SCALING_PROFILE.md)
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(min(8, len(blobs))) as ex:
@@ -602,7 +619,7 @@ def aggregate_sketch_from_parquet(
 
     def build_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         shards = _task_shards(groups, batches)
-        yield _blob_batch(_build_partial(spec, _scan_shards(shards, cols), metrics)[0])
+        yield _blob_batch(_build_partial(spec, _scan_shards(shards, cols), metrics)[0], metrics)
 
     partials = tasks.mapInArrow(build_task, "sketch binary")
     return _tree_merge_collect(partials, len(groups), fan_in, spec, metrics)
@@ -614,6 +631,7 @@ def grouped_sketch_from_parquet(
     key: str,
     spec: SketchSpec,
     n_tasks: int | None = None,
+    metrics: BuildMetrics | None = None,
 ) -> DataFrame:
     """Grouped fused build: per-(task, key) partials from a direct
     pyarrow row-group scan, then a blob-only grouped merge.
@@ -623,7 +641,8 @@ def grouped_sketch_from_parquet(
     and never shuffle — only ``tasks x keys`` sketch blobs do.
     Skew-proof for the same reason as the map_side strategy: a task only
     sees its own shards' share of a hot key.  Returns DataFrame[key
-    string, sketch binary].
+    string, sketch binary].  ``metrics`` gains the encode seconds and
+    bytes of the partial blobs once the result runs.
     """
     files = _source_files(source)[0]
     # key labels come from Python str() in the fused kernel; str() and
@@ -641,7 +660,7 @@ def grouped_sketch_from_parquet(
             f"grouped_sketch)")
     cols = list(dict.fromkeys([key, *spec.columns]))
     tasks, groups = _fused_shards(spark, _list_shards(files), n_tasks)
-    grouped_body = _grouped_partial_build(spec, key)
+    grouped_body = _grouped_partial_build(spec, key, metrics)
 
     def build_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         yield from grouped_body(_scan_shards(_task_shards(groups, batches), cols))
@@ -935,7 +954,7 @@ def _key_slices(b: pa.RecordBatch, key: str) -> Iterator[tuple[object, pa.Record
         yield kv, b.slice(lo, hi - lo)
 
 
-def _grouped_partial_build(spec: SketchSpec, key: str):
+def _grouped_partial_build(spec: SketchSpec, key: str, metrics: BuildMetrics | None = None):
     """mapInArrow body: one partial sketch per (input partition, key).
 
     Arrow-level group split (:func:`_key_slices`, NULL keys one group).
@@ -961,7 +980,7 @@ def _grouped_partial_build(spec: SketchSpec, key: str):
             ks = list(sketches)
             yield pa.RecordBatch.from_arrays(
                 [pa.array([None if k is None else str(k) for k in ks], pa.string()),
-                 pa.array([sketches[k].to_bytes() for k in ks], pa.binary())],
+                 pa.array(_encode([sketches[k] for k in ks], metrics), pa.binary())],
                 [key, "sketch"],
             )
 
@@ -1042,6 +1061,7 @@ def grouped_sketch(
     salt: int | None = None,
     salt_col: str | None = None,
     strategy: str = "map_side",
+    metrics: BuildMetrics | None = None,
 ) -> DataFrame:
     """Per-key sketches: returns DataFrame[key string, sketch binary].
 
@@ -1061,6 +1081,10 @@ def grouped_sketch(
     repartition/salting dataflow (north_rule).  Use for high-cardinality
     keys where per-partition x per-key partials would blow up the map
     side.
+
+    ``metrics`` gains the encode seconds and bytes of the map_side
+    partial blobs once the result runs; the salted strategy has no
+    partial phase and records nothing.
     """
     tune_arrow_batches(df)
     cols = [key, *spec.columns]
@@ -1075,7 +1099,7 @@ def grouped_sketch(
     pruned = pruned.withColumn(key, F.col(key).cast("string"))
 
     if strategy == "map_side":
-        partials = pruned.mapInArrow(_grouped_partial_build(spec, key), out_schema)
+        partials = pruned.mapInArrow(_grouped_partial_build(spec, key, metrics), out_schema)
         return grouped_merge_sketch_column(partials, key)
 
     if strategy != "salted":

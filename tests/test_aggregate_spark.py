@@ -229,6 +229,24 @@ def test_build_metrics_accumulators(spark, tokens):
     assert d["batches"] >= d["partial_sketches"]
 
 
+def test_build_metrics_partial_encode(spark, sf_dir, tokens):
+    """The partial phase reports its encode time and blob bytes, for an
+    ungrouped fused build and for a grouped map_side build."""
+    from presto_bloomfilter_spark.sources.corpus import ensure_tokens_parquet
+
+    m = agg.BuildMetrics(spark)
+    agg.aggregate_sketch_from_parquet(
+        spark, ensure_tokens_parquet(sf_dir), agg.token_family_over_tokens("tokens"),
+        n_tasks=3, metrics=m)
+    d = m.as_dict()
+    assert d["partial_sketches"] >= 1
+    assert d["encode_s"] > 0 and d["blob_bytes"] > 0
+    g = agg.BuildMetrics(spark)
+    rows = agg.grouped_sketch(tokens, "source", agg.hll_over_tokens("tokens"), metrics=g).collect()
+    assert rows and g.as_dict()["encode_s"] > 0
+    assert g.as_dict()["blob_bytes"] >= len(rows) * 48
+
+
 def test_grouped_fused_parquet_matches_dataframe_grouped(spark, sf_dir, tmp_path):
     import pyarrow.parquet as pq
 

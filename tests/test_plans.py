@@ -400,7 +400,7 @@ def test_sql_probe_ships_a_reference_not_the_filter(spark):
     rows = 10_000
     keys = spark.range(rows).select(F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"))
     keys.createOrReplaceTempView("tv_ref_keys")
-    # half full, so zlib cannot shrink the blob below its 1.2 MB bitset
+    # half full, so no codec can shrink the blob below its 1.2 MB bitset
     bf = BloomFilter(1_000_000, 0.01).add_strings(
         [f"k{i}" for i in range(0, rows, 3)] + [f"x{i}" for i in range(1_000_000)])
     assert len(bf.to_bytes()) > 1_000_000

@@ -106,7 +106,7 @@ def _spark_probe_worker(cpus: int) -> None:
             from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
 
             # same driver tail as aggregate._tree_merge_collect:
-            # thread-pool deserialize (GIL-free zlib/numpy), serial merge
+            # thread-pool deserialize (GIL-free zlib/zstd/numpy), serial merge
             with ThreadPoolExecutor(min(8, len(rows))) as ex:
                 sketches = list(ex.map(sketch_from_bytes, [r.sketch for r in rows]))
             sk = sketches[0]

@@ -1,7 +1,7 @@
 """SQL-text probe cost against ``filter_by_sketch`` over the same rows.
 
 Builds a bloom of ``--n`` expected insertions filled to capacity (so
-zlib cannot shrink its bitset), then times, alternating, the SQL probe
+no codec can shrink its bitset), then times, alternating, the SQL probe
 ``bloom_filter_contains((SELECT bf FROM bf), k)`` over ``--rows`` string
 keys and ``filter_by_sketch`` over the same keys, and prints min /
 median of each.
