@@ -33,8 +33,9 @@ import numpy as np
 
 from presto_bloomfilter_spark.functions import serialization as ser
 from presto_bloomfilter_spark.functions.hashing import (
-    hash_ints64,
-    hash_strings64,
+    Inserts,
+    Membership,
+    double_hash,
     km_indexes,
 )
 
@@ -60,7 +61,7 @@ def _dense_buffer(n_bits: int) -> np.ndarray:
 
 
 @ser.register_kind(ser.KIND_BLOOM)
-class BloomFilter:
+class BloomFilter(Inserts, Membership):
     DEFAULT_EXPECTED_INSERTIONS = 10_000_000
     DEFAULT_FPP = 0.01
 
@@ -121,7 +122,7 @@ class BloomFilter:
 
     # ---- updates ------------------------------------------------------------
 
-    def _set_bits(self, h: np.ndarray) -> None:
+    def _add(self, h: np.ndarray) -> None:
         """Set k bits per element.
 
         Large batches take the dense path: scatter into a bool bitmap and
@@ -135,8 +136,6 @@ class BloomFilter:
         if n == 0:
             return
         if n * self.k >= 1 << 17:
-            from presto_bloomfilter_spark.functions.hashing import double_hash
-
             n_bits = len(self.words) * 64
             dense = _dense_buffer(n_bits)
             h1, h2 = double_hash(h)
@@ -155,33 +154,6 @@ class BloomFilter:
             np.bitwise_or.at(self.words, (idx >> _U64(6)).astype(np.int64), _U64(1) << (idx & _U64(63)))
         self.approx_items += n
 
-    def add_strings(self, values) -> "BloomFilter":
-        """Insert a batch of strings; None and '' are ignored
-        (reference BloomFilter.java:161-167)."""
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        mask = s.notna() & (s.str.len() > 0)
-        s = s[mask]
-        if len(s):
-            self._set_bits(hash_strings64(s))
-        return self
-
-    def add_ints(self, values) -> "BloomFilter":
-        """Insert a batch of integers (e.g. token ids), fully vectorized."""
-        a = np.asarray(values)
-        if a.size:
-            self._set_bits(hash_ints64(a))
-        return self
-
-    def add(self, value) -> "BloomFilter":
-        """Single-element convenience (tests / interactive use)."""
-        if value is None:
-            return self
-        if isinstance(value, (int, np.integer)):
-            return self.add_ints([value])
-        return self.add_strings([value])
-
     # ---- probes -------------------------------------------------------------
 
     def _probe(self, h: np.ndarray) -> np.ndarray:
@@ -193,32 +165,6 @@ class BloomFilter:
             hit = (w >> (idx & _U64(63))) & _U64(1)
             out[s:s + _CHUNK] = hit.all(axis=0)
         return out
-
-    def might_contain_strings(self, values) -> np.ndarray:
-        """Vectorized membership probe; None/'' → False (reference
-        BloomFilterContainsScalarFunction.java:33-42 returns false for
-        null elements)."""
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        out = np.zeros(len(s), dtype=bool)
-        mask = (s.notna() & (s.str.len() > 0)).to_numpy()
-        if mask.any():
-            out[mask] = self._probe(hash_strings64(s[mask]))
-        return out
-
-    def might_contain_ints(self, values) -> np.ndarray:
-        a = np.asarray(values)
-        if a.size == 0:
-            return np.zeros(0, dtype=bool)
-        return self._probe(hash_ints64(a))
-
-    def might_contain(self, value) -> bool:
-        if value is None:
-            return False
-        if isinstance(value, (int, np.integer)):
-            return bool(self.might_contain_ints([value])[0])
-        return bool(self.might_contain_strings([value])[0])
 
     # ---- merge --------------------------------------------------------------
 

@@ -45,11 +45,7 @@ import math
 import numpy as np
 
 from presto_bloomfilter_spark.functions import serialization as ser
-from presto_bloomfilter_spark.functions.hashing import (
-    hash_ints64,
-    hash_strings64,
-    km_indexes,
-)
+from presto_bloomfilter_spark.functions.hashing import Inserts, Membership, km_indexes
 
 _U64 = np.uint64
 _SAT = 255
@@ -57,7 +53,7 @@ _CHUNK = 1 << 16
 
 
 @ser.register_kind(ser.KIND_CBF)
-class CountingBloomFilter:
+class CountingBloomFilter(Inserts, Membership):
     DEFAULT_EXPECTED_INSERTIONS = 1_000_000
     DEFAULT_FPP = 0.01
 
@@ -132,56 +128,26 @@ class CountingBloomFilter:
                         "times than inserted) would create false negatives")
                 self.counters[pos] = np.where(sat, _SAT, nxt).astype(np.uint8)
 
-    @staticmethod
-    def _prep_strings(values):
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        return s[s.notna() & (s.str.len() > 0)]
-
-    def add_strings(self, values) -> "CountingBloomFilter":
-        s = self._prep_strings(values)
-        if len(s):
-            self._apply(hash_strings64(s), +1)
-            self.approx_items += len(s)
-        return self
-
-    def add_ints(self, values) -> "CountingBloomFilter":
-        a = np.asarray(values)
-        if a.size:
-            self._apply(hash_ints64(a), +1)
-            self.approx_items += int(a.size)
-        return self
-
-    def add(self, value) -> "CountingBloomFilter":
-        if value is None:
-            return self
-        if isinstance(value, (int, np.integer)):
-            return self.add_ints([value])
-        return self.add_strings([value])
+    def _add(self, h: np.ndarray) -> None:
+        self._apply(h, +1)
+        self.approx_items += len(h)
 
     def remove_strings(self, values) -> "CountingBloomFilter":
         """Delete a batch of previously-inserted strings; raises on
         provable misuse (underflow)."""
-        s = self._prep_strings(values)
-        if len(s):
-            self._apply(hash_strings64(s), -1)
-            self.approx_items -= len(s)
-        return self
+        return self._remove(values, False)
 
     def remove_ints(self, values) -> "CountingBloomFilter":
-        a = np.asarray(values)
-        if a.size:
-            self._apply(hash_ints64(a), -1)
-            self.approx_items -= int(a.size)
-        return self
+        return self._remove(values, True)
 
     def remove(self, value) -> "CountingBloomFilter":
-        if value is None:
-            return self
-        if isinstance(value, (int, np.integer)):
-            return self.remove_ints([value])
-        return self.remove_strings([value])
+        return self if value is None else self._remove([value], isinstance(value, (int, np.integer)))
+
+    def _remove(self, values, ints: bool) -> "CountingBloomFilter":
+        h, _ = self._digests(values, ints)
+        self._apply(h, -1)
+        self.approx_items -= len(h)
+        return self
 
     # ---- probes -------------------------------------------------------------
 
@@ -199,47 +165,14 @@ class CountingBloomFilter:
             out[s:s + _CHUNK] = self.counters[idx].min(axis=0)
         return out
 
-    def might_contain_strings(self, values) -> np.ndarray:
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        out = np.zeros(len(s), dtype=bool)
-        mask = (s.notna() & (s.str.len() > 0)).to_numpy()
-        if mask.any():
-            out[mask] = self._probe(hash_strings64(s[mask]))
-        return out
-
-    def might_contain_ints(self, values) -> np.ndarray:
-        a = np.asarray(values)
-        if a.size == 0:
-            return np.zeros(0, dtype=bool)
-        return self._probe(hash_ints64(a))
-
-    def might_contain(self, value) -> bool:
-        if value is None:
-            return False
-        if isinstance(value, (int, np.integer)):
-            return bool(self.might_contain_ints([value])[0])
-        return bool(self.might_contain_strings([value])[0])
-
     def count_strings(self, values) -> np.ndarray:
         """CMS-style upper bound (min over the k counters, capped at
         255) on each string's remaining multiplicity; never
         underestimates below saturation."""
-        import pandas as pd
-
-        full = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        out = np.zeros(len(full), dtype=np.int32)
-        mask = (full.notna() & (full.str.len() > 0)).to_numpy()
-        if mask.any():
-            out[mask] = self._count(hash_strings64(full[mask]))
-        return out
+        return self._answer(self._count, values, False)
 
     def count_ints(self, values) -> np.ndarray:
-        a = np.asarray(values)
-        if a.size == 0:
-            return np.zeros(0, dtype=np.int32)
-        return self._count(hash_ints64(a))
+        return self._answer(self._count, values, True)
 
     # ---- algebra ------------------------------------------------------------
 

@@ -17,13 +17,13 @@ import math
 import numpy as np
 
 from presto_bloomfilter_spark.functions import serialization as ser
-from presto_bloomfilter_spark.functions.hashing import hash_ints64, hash_strings64
+from presto_bloomfilter_spark.functions.hashing import CountedInserts, hash_ints64
 
 _E = math.e
 
 
 @ser.register_kind(ser.KIND_CMS)
-class CountMinSketch:
+class CountMinSketch(CountedInserts):
     DEFAULT_EPS = 0.0001
     DEFAULT_DELTA = 0.01
 
@@ -64,7 +64,7 @@ class CountMinSketch:
 
     _CHUNK = 1 << 18
 
-    def _update(self, h: np.ndarray, counts: np.ndarray) -> None:
+    def _add(self, h: np.ndarray, counts: np.ndarray) -> None:
         if len(h) == 0:
             return
         # bincount is a buffered single pass — ~100x the throughput of the
@@ -83,40 +83,7 @@ class CountMinSketch:
                     ).astype(np.int64)
         self.total += int(counts.sum())
 
-    def add_strings(self, values, counts=None) -> "CountMinSketch":
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        mask = s.notna()
-        s = s[mask]
-        if len(s) == 0:
-            return self
-        c = (
-            np.ones(len(s), dtype=np.int64)
-            if counts is None
-            else np.asarray(counts)[mask.to_numpy()].astype(np.int64)
-        )
-        self._update(hash_strings64(s), c)
-        return self
-
-    def add_ints(self, values, counts=None) -> "CountMinSketch":
-        a = np.asarray(values)
-        if a.size == 0:
-            return self
-        c = np.ones(a.size, dtype=np.int64) if counts is None else np.asarray(counts, dtype=np.int64)
-        self._update(hash_ints64(a), c)
-        return self
-
     # ---- queries ------------------------------------------------------------
-
-    def estimate_strings(self, values) -> np.ndarray:
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        return self._estimate(hash_strings64(s))
-
-    def estimate_ints(self, values) -> np.ndarray:
-        return self._estimate(hash_ints64(np.asarray(values)))
 
     def _estimate(self, h: np.ndarray) -> np.ndarray:
         if len(h) == 0:

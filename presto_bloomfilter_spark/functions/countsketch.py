@@ -33,7 +33,7 @@ from presto_bloomfilter_spark.functions import serialization as ser
 
 
 @ser.register_kind(ser.KIND_COUNTSKETCH)
-class CountSketch:
+class CountSketch(hashing.CountedInserts):
     DEFAULT_WIDTH = 4096
     DEFAULT_DEPTH = 7
 
@@ -60,53 +60,21 @@ class CountSketch:
         signs = np.where((hj >> np.uint64(63)) == 1, np.int64(1), np.int64(-1))
         return cols, signs
 
-    def _add_hashes(self, h64: np.ndarray, weights: np.ndarray | None = None) -> None:
-        if weights is None:
-            weights = np.ones(len(h64), dtype=np.int64)
+    def _add(self, h64: np.ndarray, counts: np.ndarray) -> None:
         for j in range(self.depth):
             cols, signs = self._row_cols_signs(h64, j)
-            np.add.at(self.table[j], cols, signs * weights)
-        self.n += int(weights.sum())
-
-    def add_strings(self, values, weights=None) -> "CountSketch":
-        """Vectorized insert of a string array (token grams, words, keys)."""
-        v = np.asarray(values)
-        if v.size == 0:
-            return self
-        w = None if weights is None else np.asarray(weights, dtype=np.int64)
-        self._add_hashes(hashing.hash_strings64(v), w)
-        return self
-
-    def add_ints(self, values, weights=None) -> "CountSketch":
-        """Vectorized insert of an integer array (token ids)."""
-        v = np.asarray(values, dtype=np.int64)
-        if v.size == 0:
-            return self
-        w = None if weights is None else np.asarray(weights, dtype=np.int64)
-        self._add_hashes(hashing.hash_ints64(v), w)
-        return self
+            np.add.at(self.table[j], cols, signs * counts)
+        self.n += int(counts.sum())
 
     # ---- estimators -----------------------------------------------------------
 
-    def _estimate_hashes(self, h64: np.ndarray) -> np.ndarray:
+    def _estimate(self, h64: np.ndarray) -> np.ndarray:
+        """Unbiased frequency estimates (may be negative for absent keys)."""
         est = np.empty((self.depth, len(h64)), dtype=np.float64)
         for j in range(self.depth):
             cols, signs = self._row_cols_signs(h64, j)
             est[j] = signs * self.table[j, cols]
         return np.median(est, axis=0)
-
-    def estimate_strings(self, values) -> np.ndarray:
-        """Unbiased frequency estimates (may be negative for absent keys)."""
-        v = np.asarray(values)
-        if v.size == 0:
-            return np.empty(0)
-        return self._estimate_hashes(hashing.hash_strings64(v))
-
-    def estimate_ints(self, values) -> np.ndarray:
-        v = np.asarray(values, dtype=np.int64)
-        if v.size == 0:
-            return np.empty(0)
-        return self._estimate_hashes(hashing.hash_ints64(v))
 
     def estimate(self) -> int:
         """Family-generic estimate() (compat.sketch_estimate): exact

@@ -40,7 +40,7 @@ import math
 import numpy as np
 
 from presto_bloomfilter_spark.functions import serialization as ser
-from presto_bloomfilter_spark.functions.hashing import hash_ints64, hash_strings64
+from presto_bloomfilter_spark.functions.hashing import Inserts
 
 _U64 = np.uint64
 
@@ -74,7 +74,7 @@ def _tau(x: float) -> float:
 
 
 @ser.register_kind(ser.KIND_HLL)
-class HyperLogLog:
+class HyperLogLog(Inserts):
     DEFAULT_PRECISION = 14
 
     def __init__(self, precision: int = DEFAULT_PRECISION,
@@ -168,7 +168,7 @@ class HyperLogLog:
         keep[:-1] = (packed[:-1] >> np.uint32(7)) != (packed[1:] >> np.uint32(7))
         return packed[keep]
 
-    def _update(self, h: np.ndarray) -> None:
+    def _add(self, h: np.ndarray) -> None:
         if len(h) == 0:
             return
         bucket, rank = self._bucket_rank(h)
@@ -184,21 +184,6 @@ class HyperLogLog:
             self._sparse = self._sparse_max(
                 np.concatenate([self._sparse, packed]))
             self._maybe_upgrade()
-
-    def add_strings(self, values) -> "HyperLogLog":
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        s = s[s.notna()]
-        if len(s):
-            self._update(hash_strings64(s))
-        return self
-
-    def add_ints(self, values) -> "HyperLogLog":
-        a = np.asarray(values)
-        if a.size:
-            self._update(hash_ints64(a))
-        return self
 
     # ---- estimate -----------------------------------------------------------
 

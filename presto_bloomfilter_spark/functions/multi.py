@@ -15,38 +15,26 @@ commutative because every child merge is.
 
 from __future__ import annotations
 
-import inspect
 import struct
 
 from presto_bloomfilter_spark.functions import serialization as ser
+from presto_bloomfilter_spark.functions.hashing import takes_counts
 
 _LEN = struct.Struct("<I")
 
 
-def _accepts_counts(part) -> bool:
-    """True iff part.add_ints takes a ``counts`` kwarg (weighted insert).
-
-    Detected once from the signature — catching TypeError around the
-    call would silently swallow a TypeError raised *inside* a weighted
-    part (e.g. bad counts dtype) and retry it unweighted, undercounting.
-    """
-    try:
-        return "counts" in inspect.signature(part.add_ints).parameters
-    except (TypeError, ValueError):  # builtins without signatures
-        return False
-
-
 @ser.register_kind(ser.KIND_MULTI)
 class MultiSketch:
+    takes_counts = True
+
     def __init__(self, parts: list):
         if not parts:
             raise ValueError("MultiSketch needs at least one part")
         self.parts = list(parts)
-        self._weighted = [_accepts_counts(p) for p in self.parts]
 
     def add_ints(self, values, counts=None):
-        for p, weighted in zip(self.parts, self._weighted):
-            if weighted:
+        for p in self.parts:
+            if takes_counts(p):
                 p.add_ints(values, counts=counts)
             else:  # unweighted sketch (bloom/HLL): counts moot
                 p.add_ints(values)

@@ -47,7 +47,7 @@ import math
 import numpy as np
 
 from presto_bloomfilter_spark.functions import serialization as ser
-from presto_bloomfilter_spark.functions.hashing import hash_ints64, hash_strings64
+from presto_bloomfilter_spark.functions.hashing import Inserts, Membership
 
 _U32 = np.uint32
 _U64 = np.uint64
@@ -109,7 +109,7 @@ def _solve_blocks(n: int, p: float) -> int:
 
 
 @ser.register_kind(ser.KIND_SBBF)
-class SplitBlockBloomFilter:
+class SplitBlockBloomFilter(Inserts, Membership):
     DEFAULT_EXPECTED_INSERTIONS = 10_000_000
     DEFAULT_FPP = 0.01
 
@@ -188,12 +188,12 @@ class SplitBlockBloomFilter:
 
     # ---- updates ------------------------------------------------------------
 
-    def _set_bits(self, h: np.ndarray) -> None:
+    def _add(self, h: np.ndarray) -> None:
         n = len(h)
         if n == 0:
             return
         if n * _WORDS_PER_BLOCK >= 1 << 17:
-            # dense path, same rationale as BloomFilter._set_bits:
+            # dense path, same rationale as BloomFilter._add:
             # buffered boolean scatter + one packbits pass beats
             # unbuffered bitwise_or.at ~25x on large batches; scratch
             # reuse keeps long-lived workers from re-faulting pages
@@ -210,30 +210,6 @@ class SplitBlockBloomFilter:
             for i in range(_WORDS_PER_BLOCK):
                 np.bitwise_or.at(self.words, base + i, _U32(1) << bits[:, i])
         self.approx_items += n
-
-    def add_strings(self, values) -> "SplitBlockBloomFilter":
-        """Insert a batch of strings; None and '' are ignored (the
-        BloomFilter null semantics, reference BloomFilter.java:161-167)."""
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        s = s[s.notna() & (s.str.len() > 0)]
-        if len(s):
-            self._set_bits(hash_strings64(s))
-        return self
-
-    def add_ints(self, values) -> "SplitBlockBloomFilter":
-        a = np.asarray(values)
-        if a.size:
-            self._set_bits(hash_ints64(a))
-        return self
-
-    def add(self, value) -> "SplitBlockBloomFilter":
-        if value is None:
-            return self
-        if isinstance(value, (int, np.integer)):
-            return self.add_ints([value])
-        return self.add_strings([value])
 
     # ---- probes -------------------------------------------------------------
 
@@ -252,29 +228,6 @@ class SplitBlockBloomFilter:
             blk = w64[(base >> 1)[:, None] + np.arange(4)]
             out[s:s + _CHUNK] = ((blk & m64) == m64).all(axis=1)
         return out
-
-    def might_contain_strings(self, values) -> np.ndarray:
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        out = np.zeros(len(s), dtype=bool)
-        mask = (s.notna() & (s.str.len() > 0)).to_numpy()
-        if mask.any():
-            out[mask] = self._probe(hash_strings64(s[mask]))
-        return out
-
-    def might_contain_ints(self, values) -> np.ndarray:
-        a = np.asarray(values)
-        if a.size == 0:
-            return np.zeros(0, dtype=bool)
-        return self._probe(hash_ints64(a))
-
-    def might_contain(self, value) -> bool:
-        if value is None:
-            return False
-        if isinstance(value, (int, np.integer)):
-            return bool(self.might_contain_ints([value])[0])
-        return bool(self.might_contain_strings([value])[0])
 
     # ---- merge --------------------------------------------------------------
 

@@ -41,9 +41,10 @@ only on the payload's length:
 Every other blob is written as version 1, so its bytes are those of
 the version-1 format; a reader older than version 2 refuses a zstd blob
 (unsupported version) rather than misreading it.  The frames carry no
-checksum, so :func:`decode` checks a zstd payload against the header
-digest, the check zlib's adler32 makes for a zlib payload; a payload
-that fails either codec raises ``ValueError``.
+checksum, so :func:`decode` checks a zstd payload, and a payload stored
+raw, against the header digest, the check zlib's adler32 makes for a
+zlib payload (~1 ms per MB of payload); a payload that fails either
+codec or its digest raises ``ValueError``.
 
 A *by-reference* blob has the header and params of a full blob (so its
 kind, params and content digest read as the full blob's) with the
@@ -137,10 +138,13 @@ def decode(buf: bytes) -> tuple[int, dict, bytes]:
 
 def _payload(flags: int, digest: bytes, stored: bytes) -> bytes:
     """The uncompressed payload of a blob's stored section.  A payload
-    its codec rejects, or a zstd payload whose raw length or digest
-    differs from what its frame or header declares, raises
-    ``ValueError``."""
+    its codec rejects, a zstd payload whose raw length differs from
+    what its frame declares, or a zstd or raw payload whose digest
+    differs from the header's raises ``ValueError``."""
     try:
+        if flags & _FLAG_ZLIB:
+            return zlib.decompress(stored)  # adler32 checks it
+        payload = stored
         if flags & _FLAG_ZSTD:
             (n,) = _RAW_LEN.unpack_from(stored)
             frame = memoryview(stored)[_RAW_LEN.size:]
@@ -148,12 +152,11 @@ def _payload(flags: int, digest: bytes, stored: bytes) -> bytes:
             if _zstd_content_size(frame) != n:
                 raise ValueError("corrupt sketch payload: raw length does not match the zstd frame")
             payload = _ZSTD.decompress(frame, decompressed_size=n, asbytes=True)
-            if hashlib.sha256(payload).digest() != digest:
-                raise ValueError("corrupt sketch payload: zstd payload does not match its digest")
-            return payload
-        return zlib.decompress(stored) if flags & _FLAG_ZLIB else stored
     except (zlib.error, OSError, struct.error) as e:
         raise ValueError(f"corrupt sketch payload: {e}") from e
+    if hashlib.sha256(payload).digest() != digest:
+        raise ValueError("corrupt sketch payload: payload does not match its digest")
+    return payload
 
 
 def _zstd_content_size(frame: memoryview) -> int:

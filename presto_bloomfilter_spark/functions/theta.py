@@ -30,14 +30,14 @@ from __future__ import annotations
 import numpy as np
 
 from presto_bloomfilter_spark.functions import serialization as ser
-from presto_bloomfilter_spark.functions.hashing import hash_ints64, hash_strings64
+from presto_bloomfilter_spark.functions.hashing import Inserts
 
 _U64 = np.uint64
 _MAX = float(2**64)
 
 
 @ser.register_kind(ser.KIND_THETA)
-class ThetaSketch:
+class ThetaSketch(Inserts):
     DEFAULT_K = 4096
 
     def __init__(self, k: int = DEFAULT_K, _values: np.ndarray | None = None):
@@ -50,26 +50,11 @@ class ThetaSketch:
 
     # ---- updates -------------------------------------------------------------
 
-    def _update(self, h: np.ndarray) -> None:
+    def _add(self, h: np.ndarray) -> None:
         if h.size == 0:
             return
         merged = np.union1d(self.values, h)  # sorted unique
         self.values = merged[: self.k]
-
-    def add_ints(self, values) -> "ThetaSketch":
-        a = np.asarray(values)
-        if a.size:
-            self._update(hash_ints64(a))
-        return self
-
-    def add_strings(self, values) -> "ThetaSketch":
-        import pandas as pd
-
-        s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-        s = s[s.notna()]
-        if len(s):
-            self._update(hash_strings64(s))
-        return self
 
     # ---- estimates -----------------------------------------------------------
 
@@ -98,7 +83,7 @@ class ThetaSketch:
             raise TypeError("can only merge ThetaSketch with ThetaSketch")
         if self.k != other.k:
             raise ValueError(f"k mismatch: {self.k} vs {other.k}")
-        self._update(other.values)
+        self._add(other.values)
         return self
 
     def copy(self) -> "ThetaSketch":

@@ -63,8 +63,9 @@ import numpy as np
 
 from presto_bloomfilter_spark.functions import serialization as ser
 from presto_bloomfilter_spark.functions.hashing import (
-    hash_ints64,
-    hash_strings64,
+    Inserts,
+    Membership,
+    key_digests,
     splitmix64,
 )
 
@@ -98,25 +99,10 @@ def _seed_for(attempt: int) -> int:
     return int(splitmix64(np.array([attempt + 1], dtype=_U64))[0])
 
 
-def _string_keys(values):
-    """(values as a Series, mask of the ones that are keys): NULL and ''
-    are not keys (reference empty-element semantics, as for every
-    membership filter)."""
-    import pandas as pd
-
-    s = values if isinstance(values, pd.Series) else pd.Series(values, dtype=object)
-    return s, (s.notna() & (s.str.len() > 0)).to_numpy()
-
-
-def _string_digests(values) -> np.ndarray:
-    s, keys = _string_keys(values)
-    return hash_strings64(s[keys])
-
-
 @ser.register_kind(ser.KIND_XOR)
-class XorFilter:
+class XorFilter(Membership):
     """Static xor filter over 64-bit key digests (the library's shared
-    hash_strings64/hash_ints64 digest space, same as BloomFilter)."""
+    key rule, ``hashing.key_digests``, same as BloomFilter)."""
 
     def __init__(self, fp_bits: int, seglen: int, seed: int,
                  cells: np.ndarray, n_keys: int):
@@ -213,12 +199,11 @@ class XorFilter:
 
     @classmethod
     def build_strings(cls, values, fp_bits: int = 8) -> "XorFilter":
-        return cls.build_digests(_string_digests(values), fp_bits)
+        return cls.build_digests(key_digests(values, False, cls.skips_empty)[0], fp_bits)
 
     @classmethod
     def build_ints(cls, values, fp_bits: int = 8) -> "XorFilter":
-        a = np.asarray(values)
-        return cls.build_digests(hash_ints64(a), fp_bits)
+        return cls.build_digests(key_digests(values, True)[0], fp_bits)
 
     # ---- probes -------------------------------------------------------------
 
@@ -231,26 +216,6 @@ class XorFilter:
         fp = _fingerprints(h, self.cells.dtype)
         got = self.cells[pos[:, 0]] ^ self.cells[pos[:, 1]] ^ self.cells[pos[:, 2]]
         return got == fp
-
-    def might_contain_strings(self, values) -> np.ndarray:
-        s, mask = _string_keys(values)
-        out = np.zeros(len(s), dtype=bool)
-        if mask.any():
-            out[mask] = self._probe(hash_strings64(s[mask]))
-        return out
-
-    def might_contain_ints(self, values) -> np.ndarray:
-        a = np.asarray(values)
-        if a.size == 0:
-            return np.zeros(0, dtype=bool)
-        return self._probe(hash_ints64(a))
-
-    def might_contain(self, value) -> bool:
-        if value is None:
-            return False
-        if isinstance(value, (int, np.integer)):
-            return bool(self.might_contain_ints([value])[0])
-        return bool(self.might_contain_strings([value])[0])
 
     # ---- introspection / algebra --------------------------------------------
 
@@ -322,26 +287,24 @@ class XorFilter:
         )
 
 
-class _XorKeyCollector:
+class _XorKeyCollector(Inserts):
     """The build state of one distributed XorFilter: ``add_ints`` /
     ``add_strings`` (fed by ``operators.aggregate.hash_dispatch``, so a
     column hashes as it probes) collect key digests, and ``to_bytes`` is
     the filter peeled over them.  The peel needs every key at once, so
     a build folds exactly one collector per filter (no merge)."""
 
+    skips_empty = XorFilter.skips_empty
+
     def __init__(self, fp_bits: int = 8):
         self.fp_bits = fp_bits
-        self._digests: list[np.ndarray] = []
+        self._parts: list[np.ndarray] = [np.empty(0, _U64)]
 
-    def add_ints(self, values) -> None:
-        self._digests.append(hash_ints64(np.asarray(values)))
-
-    def add_strings(self, values) -> None:
-        self._digests.append(_string_digests(values))
+    def _add(self, h: np.ndarray) -> None:
+        self._parts.append(h)
 
     def finish(self) -> XorFilter:
-        return XorFilter.build_digests(
-            np.concatenate([np.empty(0, _U64), *self._digests]), self.fp_bits)
+        return XorFilter.build_digests(np.concatenate(self._parts), self.fp_bits)
 
     def to_bytes(self) -> bytes:
         return self.finish().to_bytes()

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
 from presto_bloomfilter_spark.functions.cms import CountMinSketch
+from presto_bloomfilter_spark.functions.hashing import takes_counts
 from presto_bloomfilter_spark.functions.hll import HyperLogLog
 from presto_bloomfilter_spark.functions.kll import KLLSketch
 from presto_bloomfilter_spark.functions.multi import MultiSketch
@@ -110,7 +111,8 @@ class TokenDedupAccumulator:
 
     Token corpora are heavily Zipf-skewed over a bounded vocabulary, so a
     partition sees each id thousands of times.  Bloom/HLL inserts are
-    idempotent and CMS accepts weighted inserts, so counting duplicates
+    idempotent and a sketch that ``takes_counts`` (CMS, count-sketch,
+    ``MultiSketch``) gets each id's count with it, so counting duplicates
     first and hashing each unique id once is semantically identity — but
     it turns ~200 bytes of uint64 hash traffic per token into one
     cache-resident ``np.bincount`` increment (~8 bytes/token), which is
@@ -140,14 +142,9 @@ class TokenDedupAccumulator:
 
     RANGE_CAP = 1 << 22  # 4M distinct ids → 32MB counts array, max
 
-    def __init__(self, sketch, weighted: bool | None = None):
+    def __init__(self, sketch):
         self.sketch = sketch
         self.direct = False
-        self.weighted = (
-            isinstance(sketch, (CountMinSketch, MultiSketch))
-            if weighted is None
-            else weighted
-        )
         self._reset()
 
     def _reset(self) -> None:
@@ -229,7 +226,7 @@ class TokenDedupAccumulator:
             return
         self._reset()
         if vals.size:
-            if self.weighted:
+            if takes_counts(self.sketch):
                 self.sketch.add_ints(vals, counts=counts)
             else:
                 total = int(counts.sum())
@@ -264,7 +261,10 @@ def hash_dispatch(sk, op: str, col: pa.Array, name: str):
 
     - integer → ``sk.<op>_ints`` on the exact ints (every int width
       hashes alike, so an int32 build matches a bigint probe);
-    - string, large_string or dictionary of either → ``sk.<op>_strings``;
+    - string, large_string or dictionary of either → ``sk.<op>_strings``
+      on the Arrow array itself: the sketch's key rule
+      (``hashing.key_digests``) drops ``''`` for a membership filter in
+      Arrow and converts the batch once, to hash it;
     - anything else (floating, boolean, date, timestamp, decimal,
       binary, …) → TypeError naming the column and its type: which
       string form it would hash as is the caller's choice.
@@ -277,9 +277,7 @@ def hash_dispatch(sk, op: str, col: pa.Array, name: str):
         raise TypeError(
             f"column '{name}' ({col.type}) into hash sketch "
             f"{type(sk).__name__}: cast it to {to} first")
-    if pa.types.is_dictionary(col.type):
-        col = col.dictionary_decode()
-    return getattr(sk, op + "_strings")(col.to_pandas())
+    return getattr(sk, op + "_strings")(col)
 
 
 @dataclass(frozen=True)
@@ -742,7 +740,7 @@ def top_k_tokens(
 
     def local_top(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         sink, _ = _build_partial(SketchSpec(col, lambda: TokenDedupAccumulator(
-            _CandidateSink(), weighted=True)), batches)
+            _CandidateSink())), batches)
         ids, counts = sink.top(m)
         thr = int(min(counts)) if len(sink._ids) > m else 0
         yield pa.RecordBatch.from_arrays(
@@ -887,6 +885,8 @@ def mg_top_k(
 class _CandidateSink:
     """Accumulator target for top_k_tokens phase 1: keeps exact
     (id, count) pairs fed by TokenDedupAccumulator's weighted flush."""
+
+    takes_counts = True
 
     def __init__(self):
         import numpy as _np

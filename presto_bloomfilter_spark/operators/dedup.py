@@ -193,11 +193,7 @@ def _split_words_batch(texts) -> tuple[np.ndarray, np.ndarray]:
     flat = flat.filter(keep)
     parents = parents.filter(keep).to_numpy(zero_copy_only=False).astype(np.int64)
     lengths = np.bincount(parents, minlength=len(s)).astype(np.int64)
-    if len(flat):
-        hashes = hash_strings64(flat.to_pandas())
-    else:
-        hashes = np.empty(0, dtype=_U64)
-    return hashes, lengths
+    return hash_strings64(flat), lengths
 
 
 def _combine_ngram(wh: np.ndarray, n: int) -> np.ndarray:

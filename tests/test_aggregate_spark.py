@@ -14,6 +14,7 @@ from presto_bloomfilter_spark import (
     FrequentDirections, HyperLogLog, KLLSketch, MisraGries, MomentsSketch,
     SplitBlockBloomFilter, TDigest, ThetaSketch, sketch_from_bytes,
 )
+from presto_bloomfilter_spark.functions.hashing import takes_counts
 from presto_bloomfilter_spark.functions.multi import MultiSketch
 from presto_bloomfilter_spark.functions.xorf import _XorKeyCollector
 from presto_bloomfilter_spark.operators import aggregate as agg
@@ -603,14 +604,13 @@ def test_token_dedup_sparse_mode_matches_dense_reference(kind, dtype):
     wrapped sketch's bytes and approx_items equal a dense-only
     reference's."""
     make = _DEDUP_SKETCHES[kind]
-    weighted = kind == "top_k_sink" or None
     for name, batches, mode in _dedup_streams(dtype):
-        acc = agg.TokenDedupAccumulator(make(), weighted=weighted)
+        acc = agg.TokenDedupAccumulator(make())
         for b in batches:
             acc.add_ints(b)
         assert (acc._counts is None) == (mode == "sparse"), (kind, name)
         got = acc.finish()
-        ref = _dense_reference(make(), batches, acc.weighted)
+        ref = _dense_reference(make(), batches, takes_counts(got))
         if kind == "top_k_sink":
             assert np.array_equal(got._ids, ref._ids), name
             assert np.array_equal(got._counts, ref._counts), name
@@ -619,11 +619,30 @@ def test_token_dedup_sparse_mode_matches_dense_reference(kind, dtype):
         assert getattr(got, "approx_items", None) == getattr(ref, "approx_items", None), (kind, name)
 
 
+def test_token_dedup_counts_reach_every_weighted_part():
+    """The accumulator passes each id's count to every sketch that
+    takes counts, inside a MultiSketch too, by the one rule
+    (``hashing.takes_counts``)."""
+    ids = np.array([7] * 100 + [8] * 3, np.int64)
+    acc = agg.TokenDedupAccumulator(MultiSketch([CountSketch(), CountMinSketch()]))
+    acc.add_ints(ids)
+    for part in acc.finish().parts:
+        assert part.estimate_ints([7, 8]).tolist() == [100, 3], type(part).__name__
+    sink = agg.TokenDedupAccumulator(agg._CandidateSink())
+    sink.add_ints(ids)
+    assert takes_counts(sink.sketch)
+    assert sorted(zip(*sink.finish().top(2))) == [(7, 100), (8, 3)]
+    cbf = agg.TokenDedupAccumulator(CountingBloomFilter(1000, 0.01))
+    cbf.add_ints(ids)
+    assert not takes_counts(cbf.sketch)
+    assert cbf.finish().count_ints([7, 8]).tolist() == [1, 1]
+
+
 def test_token_dedup_sparse_buffer_survives_caller_reuse():
     """Sparse mode holds ids until flush, so it must not alias an array
     the caller refills between calls."""
     buf = np.empty(2, np.int64)
-    acc = agg.TokenDedupAccumulator(agg._CandidateSink(), weighted=True)
+    acc = agg.TokenDedupAccumulator(agg._CandidateSink())
     for batch in ([5, 40_000], [7, 30_000]):
         buf[:] = batch
         acc.add_ints(buf)

@@ -76,10 +76,18 @@ def test_merge_lossless_byte_identical_any_tree():
 
 def test_weighted_inserts_and_int_keys():
     sk = CountSketch(width=256, depth=5)
-    sk.add_ints([7, 11], weights=[100, 3])
+    sk.add_ints([7, 11], counts=[100, 3])
     est = sk.estimate_ints([7, 11])
     assert abs(est[0] - 100) <= 10
     assert abs(est[1] - 3) <= 10
+
+
+def test_null_is_not_a_key():
+    """NULL keys are skipped, as in CMS, HLL and theta; '' is a key."""
+    sk = CountSketch(width=256, depth=5).add_strings([None, None, None, "a"])
+    assert sk.n == 1
+    assert sk.estimate_strings([None, "a"]).tolist() == [0.0, 1.0]
+    assert CountSketch(width=256, depth=5).add_strings(["", None]).n == 1
 
 
 def test_serialization_roundtrip_and_kind_dispatch():

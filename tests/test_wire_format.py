@@ -1,21 +1,30 @@
 """PBFS wire-format pins: the bytes of small blobs, the codec choice by
-payload length, version-1 blobs written before zstd existed, and the
-errors of a corrupt or unknown blob."""
+payload length, version-1 blobs written before zstd existed, the
+errors of a corrupt or unknown blob, and the bytes the key rule
+(``hashing.key_digests``) gives each hash sketch over every input form."""
 
 import hashlib
 import struct
 import zlib
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from presto_bloomfilter_spark.functions import serialization as ser
 from presto_bloomfilter_spark.functions.bloom import BloomFilter
+from presto_bloomfilter_spark.functions.cbf import CountingBloomFilter
 from presto_bloomfilter_spark.functions.cms import CountMinSketch
+from presto_bloomfilter_spark.functions.countsketch import CountSketch
 from presto_bloomfilter_spark.functions.hll import HyperLogLog
 from presto_bloomfilter_spark.functions.kll import KLLSketch
+from presto_bloomfilter_spark.functions.sbbf import SplitBlockBloomFilter
 from presto_bloomfilter_spark.functions.serialization import sketch_from_bytes
+from presto_bloomfilter_spark.functions.theta import ThetaSketch
+from presto_bloomfilter_spark.functions.xorf import XorFilter, _XorKeyCollector
+from presto_bloomfilter_spark.operators.aggregate import SketchSpec
 
 
 def _small_blobs() -> dict[str, bytes]:
@@ -118,14 +127,18 @@ def test_unknown_version_or_flag_is_refused():
             sketch_from_bytes(flagged)
 
 
-@pytest.mark.parametrize("codec", ["zlib", "zstd"])
+@pytest.mark.parametrize("codec", ["zlib", "zstd", "raw"])
 def test_corrupt_payload_is_a_value_error(codec):
     if codec == "zlib":
         blob = _small_blobs()["bloom_12kb"]
         assert _version_flags(blob) == (1, 1)
-    else:
+    elif codec == "zstd":
         blob = _large_pair("cms")[0].to_bytes()
         assert _version_flags(blob) == (2, 4)
+    else:
+        # a 1M-geometry bloom filled to capacity: no codec shrinks it
+        blob = BloomFilter(1_000_000, 0.01).add_ints(np.arange(1_000_000)).to_bytes()
+        assert _version_flags(blob) == (1, 0)
     stored = _stored(blob)
     # every bit-flip position of the stored section, sampled evenly
     for pos in np.linspace(0, len(stored) - 1, 64).astype(int).tolist():
@@ -183,3 +196,108 @@ def test_encode_round_trips_and_is_pure(n, seed, zero_share, compress):
         assert flags == 0
     if compress == "always":
         assert flags == (4 if n >= ser.ZSTD_MIN_BYTES else 1)
+
+
+# ---- the key rule ------------------------------------------------------------
+
+_STRINGS = [None, "", "a\x00b", "a\x00c", "héllo", "日本", "dup", "dup", "", None, "z", "dup"]
+_INTS = [None, -7, 0, 5, 5, 2**31 - 1, -(2**31), None, 2**53 + 1, -(2**63), 2**63 - 1, 5]
+
+_KINDS = {
+    "bloom": lambda: BloomFilter(1000, 0.01),
+    "sbbf": lambda: SplitBlockBloomFilter(1000, 0.01),
+    "cbf": lambda: CountingBloomFilter(1000, 0.01),
+    "xor": lambda: _XorKeyCollector(8),
+    "hll": lambda: HyperLogLog(10),
+    "theta": lambda: ThetaSketch(16),
+    "cms": lambda: CountMinSketch(0.01, 0.01),
+    "countsketch": lambda: CountSketch(64, 3),
+}
+
+# sha256 of each kind's blob over (_STRINGS, _INTS), computed before the
+# key rule moved into hashing.key_digests, when each kind wrote its own;
+# count-sketch's over the NULL-free batches, as it counted NULL as a key
+KEY_RULE_PINS = {
+    "bloom": ("556800ce79037b80d8a06b73b117d943c88e0101099d8cf1cc959db90646edc4",
+              "bbb18110602a51fe2ba5450e9a457e1db10e09b0ea51556bbdb9d9a02c636ef5"),
+    "sbbf": ("8b167c8ae845be89a725a3ee4380d77de9a56f4c63168cf4a7d83a6a4b4b54ea",
+             "5cb1fde36bffccecdf76e5d7eeb617f678c69315676fdad462c93a5716e6ba3b"),
+    "cbf": ("5412d298cdbca5167e418f5ee03f99c62458b2448d52d691625040c1bdbb6088",
+            "cd95bf18ad17ee8de4387d4c5a7cd35128b73d13a61bc07bcc2913e5b2af34f7"),
+    "xor": ("9db9f1bab8e8bd7f5e8c5ab1518be468e0ea886e270a6b8da3940f1884277f9e",
+            "0e8d29e60d927d6ab9d871720d3b8a353df1f10be73ca47e8cd7b37de83e59b8"),
+    "hll": ("9e405e480b0bf08fe66db3172adbb46294120b11d19928da1540307d46e3af55",
+            "7fdba994ed02448d1609ab8947f3bdb4a2cf1755305e2872475ef19290222eb8"),
+    "theta": ("06595bf4c8903c23866a3618ff63bbc6a4f2271f909a6debb304764aed9d319f",
+              "576c130412e68f34f9ca0cdd905096a921c9d3f1bd25a899fc3e52a912022c73"),
+    "cms": ("158ebe53b8b2dc9501349e02e7973cfd9cbebbd2bd71f781e7c03d3a713d3226",
+            "1ecf9fabf5655e9387ae145a1e126ee5d226f452d1c9bb0a55c779f1e79d2280"),
+    "countsketch": ("7267de42ebfdd1350f85ac5a6a5b4271b201a33f29f929209c8c82cb17e56f6c",
+                    "4bfe79878f6726ac7434e28ffcd9a867eb11c39e61f5fa33b999c8f14ba16528"),
+}
+
+
+def _key_forms():
+    """(domain, form, batches): each test batch in every input form the
+    key rule takes; an int32 column cannot hold the wide ints, so those
+    follow as a second, int64 batch."""
+    arrow = pa.array(_STRINGS, pa.string())
+    yield "strings", "arrow string", [arrow]
+    yield "strings", "arrow large_string", [pa.array(_STRINGS, pa.large_string())]
+    yield "strings", "arrow dictionary", [arrow.dictionary_encode()]
+    yield "strings", "pandas", [pd.Series(_STRINGS, dtype=object)]
+    yield "strings", "list", [list(_STRINGS)]
+    narrow = [v for v in _INTS if v is None or -(2**31) <= v < 2**31]
+    wide = [v for v in _INTS if v is not None and not -(2**31) <= v < 2**31]
+    yield "ints", "arrow int64", [pa.array(_INTS, pa.int64())]
+    yield "ints", "arrow int32", [pa.array(narrow, pa.int32()), pa.array(wide, pa.int64())]
+    yield "ints", "numpy", [np.array([v for v in _INTS if v is not None], np.int64)]
+    yield "ints", "pandas", [pd.Series(_INTS, dtype="Int64")]
+    yield "ints", "list", [list(_INTS)]
+
+
+@pytest.mark.parametrize("kind", sorted(_KINDS))
+def test_key_rule_bytes_are_pinned_for_every_input_form(kind):
+    make = _KINDS[kind]
+    for domain, form, batches in _key_forms():
+        pin = KEY_RULE_PINS[kind][domain == "ints"]
+        via_spec, via_add = make(), make()
+        for b in batches:
+            col = b if isinstance(b, pa.Array) else pa.array(b, from_pandas=True)
+            SketchSpec("k", make).update(via_spec, pa.record_batch([col], names=["k"]))
+            getattr(via_add, "add_" + domain)(b)
+        for how, sk in (("SketchSpec.update", via_spec), ("add_" + domain, via_add)):
+            assert hashlib.sha256(sk.to_bytes()).hexdigest() == pin, (kind, form, how)
+        if kind == "xor" and len(batches) == 1:
+            built = getattr(XorFilter, "build_" + domain)(batches[0], 8)
+            assert hashlib.sha256(built.to_bytes()).hexdigest() == pin, (form, "build")
+
+
+def test_key_rule_answers_for_null_and_empty():
+    """NULL is never a key; '' is a key of the counting sketches and not
+    of the membership filters."""
+    probe = [None, "", "dup"]
+    for kind in ("bloom", "sbbf", "cbf"):
+        sk = _KINDS[kind]().add_strings(_STRINGS)
+        assert sk.might_contain_strings(probe).tolist() == [False, False, True], kind
+        assert not sk.might_contain(None) and not sk.might_contain(""), kind
+        assert sk.approx_items == 8, kind
+        on_ints = _KINDS[kind]().add_ints(_INTS)
+        assert on_ints.might_contain_ints(pa.array([None, 5, 6])).tolist() == [False, True, False]
+        assert on_ints.might_contain(5) and not on_ints.might_contain(None), kind
+    xor = XorFilter.build_strings(_STRINGS)
+    assert xor.n_keys == 6
+    assert xor.might_contain_strings(probe).tolist() == [False, False, True]
+    assert not xor.might_contain(None) and not xor.might_contain("")
+    assert CountingBloomFilter(1000, 0.01).add_strings(_STRINGS).count_strings(
+        probe).tolist() == [0, 0, 3]
+    assert CountMinSketch(0.01, 0.01).add_strings(_STRINGS).estimate_strings(
+        probe).tolist() == [0, 2, 3]
+    assert CountSketch(64, 3).add_strings(_STRINGS).estimate_strings(
+        probe).tolist() == [0.0, 2.0, 3.0]
+    assert CountMinSketch(0.01, 0.01).add_ints(_INTS).estimate_ints([None, 5]).tolist() == [0, 3]
+    assert round(HyperLogLog(10).add_strings(_STRINGS).estimate()) == 7
+    assert ThetaSketch(16).add_strings(_STRINGS).estimate() == 7.0
+    for make in (HyperLogLog, ThetaSketch):
+        assert make().add_strings([None, None]).estimate() == 0.0
+        assert round(make().add_strings(["", None]).estimate()) == 1
