@@ -25,8 +25,6 @@ batches — no per-row Python.
 
 from __future__ import annotations
 
-import base64
-import hashlib
 import math
 
 import numpy as np
@@ -60,8 +58,7 @@ def _dense_buffer(n_bits: int) -> np.ndarray:
     return buf
 
 
-@ser.register_kind(ser.KIND_BLOOM)
-class BloomFilter(Inserts, Membership):
+class BloomFilter(Inserts, Membership, ser.Sketch, kind=ser.KIND_BLOOM):
     DEFAULT_EXPECTED_INSERTIONS = 10_000_000
     DEFAULT_FPP = 0.01
 
@@ -168,68 +165,28 @@ class BloomFilter(Inserts, Membership):
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "BloomFilter") -> "BloomFilter":
-        """In-place bitset union (reference putAll, BloomFilter.java:175-182).
+    def _geometry(self) -> tuple:
+        # unlike the reference (which would silently union mismatched
+        # bitsets via library internals), a geometry mismatch raises
+        return (self.m_bits, self.k)
 
-        Unlike the reference (which would silently union mismatched
-        bitsets via library internals), geometry mismatch raises.
-        """
-        if not isinstance(other, BloomFilter):
-            raise TypeError("can only merge BloomFilter with BloomFilter")
-        if (self.m_bits, self.k) != (other.m_bits, other.k):
-            raise ValueError(
-                f"geometry mismatch: ({self.m_bits},{self.k}) vs "
-                f"({other.m_bits},{other.k}) — build with identical (n, p)"
-            )
+    def _merge(self, other: "BloomFilter") -> "BloomFilter":
+        """In-place bitset union (reference putAll, BloomFilter.java:175-182)."""
         np.bitwise_or(self.words, other.words, out=self.words)
         self.approx_items += other.approx_items
         return self
 
-    def copy(self) -> "BloomFilter":
-        c = BloomFilter(self.expected_insertions, self.fpp, _words=self.words.copy())
-        c.approx_items = self.approx_items
-        return c
-
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        return ser.encode(
-            ser.KIND_BLOOM,
-            {
-                "n": self.expected_insertions,
-                "p": self.fpp,
-                "items": self.approx_items,
-            },
-            self.words.tobytes(),
-        )
+    def _state(self) -> tuple[dict, bytes]:
+        params = {"n": self.expected_insertions, "p": self.fpp, "items": self.approx_items}
+        return params, self.words.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "BloomFilter":
         bf = cls(params["n"], params["p"], _words=np.frombuffer(payload, np.uint64).copy())
         bf.approx_items = int(params.get("items", 0))
         return bf
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "BloomFilter":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_BLOOM:
-            raise ValueError("not a bloom filter blob")
-        return cls._from_parts(params, payload)
-
-    def to_base64(self) -> str:
-        """String form = base64 of the serialized bytes (reference
-        to_string, BloomFilter.java:154-157)."""
-        return base64.b64encode(self.to_bytes()).decode("ascii")
-
-    @classmethod
-    def from_base64(cls, s: str) -> "BloomFilter":
-        return cls.from_bytes(base64.b64decode(s))
-
-    @property
-    def sha256(self) -> bytes:
-        """Content hash of the bitset (cache key; reference keys its
-        scalar-side LRU on a leading sha256, BloomFilter.java:409-415)."""
-        return hashlib.sha256(self.words.tobytes()).digest()
 
     def __eq__(self, other) -> bool:
         return (

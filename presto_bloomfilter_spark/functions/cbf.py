@@ -38,8 +38,6 @@ min-counter upper bound on an element's remaining multiplicity.
 
 from __future__ import annotations
 
-import base64
-import hashlib
 import math
 
 import numpy as np
@@ -52,8 +50,7 @@ _SAT = 255
 _CHUNK = 1 << 16
 
 
-@ser.register_kind(ser.KIND_CBF)
-class CountingBloomFilter(Inserts, Membership):
+class CountingBloomFilter(Inserts, Membership, ser.Sketch, kind=ser.KIND_CBF):
     DEFAULT_EXPECTED_INSERTIONS = 1_000_000
     DEFAULT_FPP = 0.01
 
@@ -176,21 +173,14 @@ class CountingBloomFilter(Inserts, Membership):
 
     # ---- algebra ------------------------------------------------------------
 
-    def _check_geometry(self, other: "CountingBloomFilter") -> None:
-        if not isinstance(other, CountingBloomFilter):
-            raise TypeError("can only combine CountingBloomFilter with "
-                            "CountingBloomFilter")
-        if (self.m, self.k) != (other.m, other.k):
-            raise ValueError(
-                f"geometry mismatch: ({self.m},{self.k}) vs "
-                f"({other.m},{other.k}) — build with identical (n, p)")
+    def _geometry(self) -> tuple:
+        return (self.m, self.k)
 
-    def merge(self, other: "CountingBloomFilter") -> "CountingBloomFilter":
+    def _merge(self, other: "CountingBloomFilter") -> "CountingBloomFilter":
         """Saturating element-wise counter addition — the multiset
         union, commutative and associative (NOT idempotent: merging a
         filter with itself doubles counts, exactly as inserting every
         element twice would)."""
-        self._check_geometry(other)
         wide = self.counters.astype(np.uint16) + other.counters
         np.minimum(wide, _SAT, out=wide)
         self.counters = wide.astype(np.uint8)
@@ -203,7 +193,7 @@ class CountingBloomFilter(Inserts, Membership):
         it; underflow (deleting never-inserted keys) raises.  Counters
         saturated on EITHER side stay saturated here (their true count
         is unknown; sticky keeps the no-false-negative contract)."""
-        self._check_geometry(other)
+        self._check_combinable(other)
         sat = (self.counters == _SAT) | (other.counters == _SAT)
         nxt = self.counters.astype(np.int16) - other.counters
         bad = (nxt < 0) & ~sat
@@ -216,21 +206,11 @@ class CountingBloomFilter(Inserts, Membership):
         self.approx_items -= other.approx_items
         return self
 
-    def copy(self) -> "CountingBloomFilter":
-        c = CountingBloomFilter(self.expected_insertions, self.fpp,
-                                _counters=self.counters.copy())
-        c.approx_items = self.approx_items
-        return c
-
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        return ser.encode(
-            ser.KIND_CBF,
-            {"n": self.expected_insertions, "p": self.fpp,
-             "items": self.approx_items},
-            self.counters.tobytes(),
-        )
+    def _state(self) -> tuple[dict, bytes]:
+        params = {"n": self.expected_insertions, "p": self.fpp, "items": self.approx_items}
+        return params, self.counters.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "CountingBloomFilter":
@@ -238,24 +218,6 @@ class CountingBloomFilter(Inserts, Membership):
                  _counters=np.frombuffer(payload, np.uint8).copy())
         sk.approx_items = int(params.get("items", 0))
         return sk
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "CountingBloomFilter":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_CBF:
-            raise ValueError("not a counting bloom filter blob")
-        return cls._from_parts(params, payload)
-
-    def to_base64(self) -> str:
-        return base64.b64encode(self.to_bytes()).decode("ascii")
-
-    @classmethod
-    def from_base64(cls, s: str) -> "CountingBloomFilter":
-        return cls.from_bytes(base64.b64decode(s))
-
-    @property
-    def sha256(self) -> bytes:
-        return hashlib.sha256(self.counters.tobytes()).digest()
 
     def __eq__(self, other) -> bool:
         return (

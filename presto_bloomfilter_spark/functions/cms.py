@@ -22,8 +22,7 @@ from presto_bloomfilter_spark.functions.hashing import CountedInserts, hash_ints
 _E = math.e
 
 
-@ser.register_kind(ser.KIND_CMS)
-class CountMinSketch(CountedInserts):
+class CountMinSketch(CountedInserts, ser.Sketch, kind=ser.KIND_CMS):
     DEFAULT_EPS = 0.0001
     DEFAULT_DELTA = 0.01
 
@@ -117,13 +116,7 @@ class CountMinSketch(CountedInserts):
         below 2^53 per product and ~1e-16 relative above, far inside
         the eps slack; int64 einsum would silently wrap at
         counter-scale ~3e9."""
-        if not isinstance(other, CountMinSketch):
-            raise TypeError("inner_product needs another CountMinSketch")
-        if (self.width, self.depth) != (other.width, other.depth):
-            raise ValueError(
-                f"geometry mismatch: ({self.depth}x{self.width}) vs "
-                f"({other.depth}x{other.width})"
-            )
+        self._check_combinable(other)
         per_row = np.einsum(
             "dw,dw->d",
             self.table.astype(np.float64, copy=False),
@@ -137,31 +130,19 @@ class CountMinSketch(CountedInserts):
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "CountMinSketch") -> "CountMinSketch":
-        if not isinstance(other, CountMinSketch):
-            raise TypeError("can only merge CountMinSketch with CountMinSketch")
-        if (self.width, self.depth) != (other.width, other.depth):
-            raise ValueError(
-                f"geometry mismatch: ({self.depth}x{self.width}) vs "
-                f"({other.depth}x{other.width})"
-            )
+    def _geometry(self) -> tuple:
+        return (self.depth, self.width)
+
+    def _merge(self, other: "CountMinSketch") -> "CountMinSketch":
         self.table += other.table
         self.total += other.total
         return self
 
-    def copy(self) -> "CountMinSketch":
-        c = CountMinSketch(self.eps, self.delta, _table=self.table.copy())
-        c.total = self.total
-        return c
-
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        return ser.encode(
-            ser.KIND_CMS,
-            {"eps": self.eps, "delta": self.delta, "total": self.total},
-            self.table.tobytes(),
-        )
+    def _state(self) -> tuple[dict, bytes]:
+        params = {"eps": self.eps, "delta": self.delta, "total": self.total}
+        return params, self.table.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "CountMinSketch":
@@ -169,13 +150,6 @@ class CountMinSketch(CountedInserts):
         c.table = np.frombuffer(payload, np.int64).reshape(c.depth, c.width).copy()
         c.total = int(params.get("total", 0))
         return c
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "CountMinSketch":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_CMS:
-            raise ValueError("not a CMS blob")
-        return cls._from_parts(params, payload)
 
     def __eq__(self, other) -> bool:
         return (

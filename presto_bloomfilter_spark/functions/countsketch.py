@@ -32,8 +32,7 @@ from presto_bloomfilter_spark.functions import hashing
 from presto_bloomfilter_spark.functions import serialization as ser
 
 
-@ser.register_kind(ser.KIND_COUNTSKETCH)
-class CountSketch(hashing.CountedInserts):
+class CountSketch(hashing.CountedInserts, ser.Sketch, kind=ser.KIND_COUNTSKETCH):
     DEFAULT_WIDTH = 4096
     DEFAULT_DEPTH = 7
 
@@ -90,38 +89,28 @@ class CountSketch(hashing.CountedInserts):
     def inner_product(self, other: "CountSketch") -> float:
         """Equi-join size Σ_x f_x·g_x against a same-geometry sketch —
         unbiased; error ≤ ~4·sqrt(2·F2(f)·F2(g)/width) w.h.p."""
-        self._check_geometry(other)
+        self._check_combinable(other)
         row_est = (self.table.astype(np.float64) * other.table.astype(np.float64)).sum(axis=1)
         return float(np.median(row_est))
 
     # ---- merge algebra ---------------------------------------------------------
 
-    def _check_geometry(self, other: "CountSketch") -> None:
-        if not isinstance(other, CountSketch):
-            raise TypeError("CountSketch required")
-        if other.width != self.width or other.depth != self.depth:
-            raise ValueError("cannot combine CountSketches with different geometry")
+    def _geometry(self) -> tuple:
+        return (self.width, self.depth)
 
-    def merge(self, other: "CountSketch") -> "CountSketch":
-        self._check_geometry(other)
+    def _merge(self, other: "CountSketch") -> "CountSketch":
         self.table += other.table
         self.n += other.n
         return self
-
-    def copy(self) -> "CountSketch":
-        c = CountSketch(self.width, self.depth, _table=self.table.copy())
-        c.n = self.n
-        return c
 
     def size_bytes(self) -> int:
         return int(self.table.nbytes + 64)
 
     # ---- serialization ---------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        payload = self.table.astype("<i8").tobytes()
+    def _state(self) -> tuple[dict, bytes]:
         params = {"width": self.width, "depth": self.depth, "n": int(self.n)}
-        return ser.encode(ser.KIND_COUNTSKETCH, params, payload)
+        return params, self.table.astype("<i8").tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "CountSketch":
@@ -130,13 +119,6 @@ class CountSketch(hashing.CountedInserts):
         c = cls(w, d, _table=table)
         c.n = int(params.get("n", 0))
         return c
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "CountSketch":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_COUNTSKETCH:
-            raise ValueError(f"not a CountSketch blob (kind={kind})")
-        return cls._from_parts(params, payload)
 
     def __eq__(self, other) -> bool:
         return (

@@ -41,8 +41,7 @@ import numpy as np
 from presto_bloomfilter_spark.functions import serialization as ser
 
 
-@ser.register_kind(ser.KIND_DDSKETCH)
-class DDSketch:
+class DDSketch(ser.Sketch, kind=ser.KIND_DDSKETCH):
     DEFAULT_ALPHA = 0.01
     DEFAULT_MAX_BINS = 2048
 
@@ -107,11 +106,12 @@ class DDSketch:
 
     # ---- merge (lossless, associative, commutative) --------------------------
 
-    def merge(self, other: "DDSketch") -> "DDSketch":
-        if not isinstance(other, DDSketch):
-            raise TypeError("can only merge DDSketch with DDSketch")
-        if abs(other.alpha - self.alpha) > 1e-12 or other.max_bins != self.max_bins:
-            raise ValueError("cannot merge DDSketches with different geometry")
+    def _geometry(self) -> tuple:
+        return (self.max_bins,)
+
+    def _merge(self, other: "DDSketch") -> "DDSketch":
+        if abs(other.alpha - self.alpha) > 1e-12:
+            raise ValueError(f"geometry mismatch: alpha {self.alpha} vs {other.alpha}")
         self._pos_idx, self._pos_cnt = _merge_sparse(
             self._pos_idx, self._pos_cnt, other._pos_idx, other._pos_cnt)
         self._neg_idx, self._neg_cnt = _merge_sparse(
@@ -120,16 +120,6 @@ class DDSketch:
         self.collapsed = self.collapsed or other.collapsed
         self._collapse()
         return self
-
-    def copy(self) -> "DDSketch":
-        c = DDSketch(self.alpha, self.max_bins)
-        c._pos_idx = self._pos_idx.copy()
-        c._pos_cnt = self._pos_cnt.copy()
-        c._neg_idx = self._neg_idx.copy()
-        c._neg_cnt = self._neg_cnt.copy()
-        c.zero_count = self.zero_count
-        c.collapsed = self.collapsed
-        return c
 
     # ---- estimate ------------------------------------------------------------
 
@@ -178,7 +168,7 @@ class DDSketch:
 
     # ---- serialization ---------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
+    def _state(self) -> tuple[dict, bytes]:
         payload = b"".join([
             self._pos_idx.astype("<i4").tobytes(),
             self._pos_cnt.astype("<i8").tobytes(),
@@ -193,7 +183,7 @@ class DDSketch:
             "zero": int(self.zero_count),
             "collapsed": bool(self.collapsed),
         }
-        return ser.encode(ser.KIND_DDSKETCH, params, payload)
+        return params, payload
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "DDSketch":
@@ -207,13 +197,6 @@ class DDSketch:
         c.zero_count = int(params["zero"])
         c.collapsed = bool(params.get("collapsed", False))
         return c
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "DDSketch":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_DDSKETCH:
-            raise ValueError(f"not a DDSketch blob (kind={kind})")
-        return cls._from_parts(params, payload)
 
     def __eq__(self, other) -> bool:
         return (

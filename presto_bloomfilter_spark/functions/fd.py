@@ -36,8 +36,7 @@ import numpy as np
 from presto_bloomfilter_spark.functions import serialization as ser
 
 
-@ser.register_kind(ser.KIND_FD)
-class FrequentDirections:
+class FrequentDirections(ser.Sketch, kind=ser.KIND_FD):
     DEFAULT_ELL = 32
 
     def __init__(self, d: int, ell: int = DEFAULT_ELL):
@@ -83,11 +82,10 @@ class FrequentDirections:
         self.shed += float(s2.sum() - (kept[nz] ** 2).sum())
         self.deltasum += float(delta)
 
-    def merge(self, other: "FrequentDirections") -> "FrequentDirections":
-        if not isinstance(other, FrequentDirections):
-            raise TypeError("FrequentDirections required")
-        if other.d != self.d or other.ell != self.ell:
-            raise ValueError("cannot merge FD sketches with different geometry")
+    def _geometry(self) -> tuple:
+        return (self.d, self.ell)
+
+    def _merge(self, other: "FrequentDirections") -> "FrequentDirections":
         if len(other.B):
             stacked = np.vstack([self.B, other.B]) if len(self.B) else other.B
             self._shrink(stacked)
@@ -96,13 +94,6 @@ class FrequentDirections:
         self.shed += other.shed
         self.deltasum += other.deltasum
         return self
-
-    def copy(self) -> "FrequentDirections":
-        c = FrequentDirections(self.d, self.ell)
-        c.B = self.B.copy()
-        c.n, c.fnorm2, c.shed = self.n, self.fnorm2, self.shed
-        c.deltasum = self.deltasum
-        return c
 
     # ---- estimates -------------------------------------------------------------
 
@@ -124,12 +115,12 @@ class FrequentDirections:
 
     # ---- serialization -----------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
+    def _state(self) -> tuple[dict, bytes]:
         params = {"d": self.d, "ell": self.ell, "n": int(self.n),
                   "rows": int(len(self.B)),
                   "fnorm2": self.fnorm2, "shed": self.shed,
                   "deltasum": self.deltasum}
-        return ser.encode(ser.KIND_FD, params, self.B.astype("<f8").tobytes())
+        return params, self.B.astype("<f8").tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "FrequentDirections":
@@ -142,20 +133,12 @@ class FrequentDirections:
         c.deltasum = float(params.get("deltasum", params["shed"]))
         return c
 
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "FrequentDirections":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_FD:
-            raise ValueError(f"not a FrequentDirections blob (kind={kind})")
-        return cls._from_parts(params, payload)
-
     def __repr__(self) -> str:
         return (f"FrequentDirections(d={self.d}, ell={self.ell}, n={self.n}, "
                 f"delta={self.deltasum:.3g})")
 
 
-@ser.register_kind(ser.KIND_GRAM)
-class ExactGram:
+class ExactGram(ser.Sketch, kind=ser.KIND_GRAM):
     """Exact AᵀA accumulator: d×d float64, lossless vector-add merge.
     The distributed one-pass covariance/Gram operator, and the oracle
     against which FD's spectral guarantee is asserted."""
@@ -178,20 +161,13 @@ class ExactGram:
             self.n += len(X)
         return self
 
-    def merge(self, other: "ExactGram") -> "ExactGram":
-        if not isinstance(other, ExactGram):
-            raise TypeError("ExactGram required")
-        if other.d != self.d:
-            raise ValueError("cannot merge Gram matrices of different dim")
+    def _geometry(self) -> tuple:
+        return (self.d,)
+
+    def _merge(self, other: "ExactGram") -> "ExactGram":
         self.G += other.G
         self.n += other.n
         return self
-
-    def copy(self) -> "ExactGram":
-        c = ExactGram(self.d)
-        c.G = self.G.copy()
-        c.n = self.n
-        return c
 
     def estimate(self) -> int:
         """Family-generic estimate() (compat.sketch_estimate): rows seen."""
@@ -206,9 +182,8 @@ class ExactGram:
     def size_bytes(self) -> int:
         return int(self.G.nbytes + 32)
 
-    def to_bytes(self) -> bytes:
-        params = {"d": self.d, "n": int(self.n)}
-        return ser.encode(ser.KIND_GRAM, params, self.G.astype("<f8").tobytes())
+    def _state(self) -> tuple[dict, bytes]:
+        return {"d": self.d, "n": int(self.n)}, self.G.astype("<f8").tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "ExactGram":
@@ -216,13 +191,6 @@ class ExactGram:
         c.G = np.frombuffer(payload, "<f8").reshape(c.d, c.d).copy()
         c.n = int(params["n"])
         return c
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "ExactGram":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_GRAM:
-            raise ValueError(f"not an ExactGram blob (kind={kind})")
-        return cls._from_parts(params, payload)
 
     def __repr__(self) -> str:
         return f"ExactGram(d={self.d}, n={self.n})"

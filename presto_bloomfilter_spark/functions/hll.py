@@ -73,8 +73,7 @@ def _tau(x: float) -> float:
             return z / 3.0
 
 
-@ser.register_kind(ser.KIND_HLL)
-class HyperLogLog(Inserts):
+class HyperLogLog(Inserts, ser.Sketch, kind=ser.KIND_HLL):
     DEFAULT_PRECISION = 14
 
     def __init__(self, precision: int = DEFAULT_PRECISION,
@@ -220,13 +219,10 @@ class HyperLogLog(Inserts):
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "HyperLogLog") -> "HyperLogLog":
-        if not isinstance(other, HyperLogLog):
-            raise TypeError("can only merge HyperLogLog with HyperLogLog")
-        if self.precision != other.precision:
-            raise ValueError(
-                f"precision mismatch: {self.precision} vs {other.precision}"
-            )
+    def _geometry(self) -> tuple:
+        return (self.precision,)
+
+    def _merge(self, other: "HyperLogLog") -> "HyperLogLog":
         if self._dense is None and other._dense is None:
             self._sparse = self._sparse_max(
                 np.concatenate([self._sparse, other._sparse]))
@@ -246,20 +242,12 @@ class HyperLogLog(Inserts):
                 self._dense[b] = np.maximum(self._dense[b], r)
         return self
 
-    def copy(self) -> "HyperLogLog":
-        if self._dense is not None:
-            return HyperLogLog(self.precision, _registers=self._dense.copy())
-        return HyperLogLog(self.precision, _sparse=self._sparse.copy())
-
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
+    def _state(self) -> tuple[dict, bytes]:
         if self._dense is not None:
-            return ser.encode(ser.KIND_HLL, {"precision": self.precision},
-                              self._dense.tobytes())
-        return ser.encode(ser.KIND_HLL,
-                          {"precision": self.precision, "sparse": True},
-                          self._sparse.tobytes())
+            return {"precision": self.precision}, self._dense.tobytes()
+        return {"precision": self.precision, "sparse": True}, self._sparse.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "HyperLogLog":
@@ -268,13 +256,6 @@ class HyperLogLog(Inserts):
                        _sparse=np.frombuffer(payload, np.uint32).copy())
         return cls(params["precision"],
                    _registers=np.frombuffer(payload, np.uint8).copy())
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "HyperLogLog":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_HLL:
-            raise ValueError("not an HLL blob")
-        return cls._from_parts(params, payload)
 
     def __eq__(self, other) -> bool:
         # content equality, representation-agnostic (the representation

@@ -28,8 +28,7 @@ from presto_bloomfilter_spark.functions import serialization as ser
 _C = 2.0 / 3.0
 
 
-@ser.register_kind(ser.KIND_KLL)
-class KLLSketch:
+class KLLSketch(ser.Sketch, kind=ser.KIND_KLL):
     DEFAULT_K = 200
 
     def __init__(self, k: int = DEFAULT_K, _levels: list[np.ndarray] | None = None):
@@ -150,11 +149,10 @@ class KLLSketch:
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "KLLSketch") -> "KLLSketch":
-        if not isinstance(other, KLLSketch):
-            raise TypeError("can only merge KLLSketch with KLLSketch")
-        if self.k != other.k:
-            raise ValueError(f"k mismatch: {self.k} vs {other.k}")
+    def _geometry(self) -> tuple:
+        return (self.k,)
+
+    def _merge(self, other: "KLLSketch") -> "KLLSketch":
         while len(self.levels) < len(other.levels):
             self.levels.append(np.empty(0, dtype=np.float64))
         for h, lv in enumerate(other.levels):
@@ -164,26 +162,13 @@ class KLLSketch:
         self._compress()
         return self
 
-    def copy(self) -> "KLLSketch":
-        c = KLLSketch(self.k, _levels=[lv.copy() for lv in self.levels])
-        c.n = self.n
-        c._parity = self._parity
-        return c
-
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        payload = np.concatenate([lv for lv in self.levels]) if self._total() else np.empty(0)
-        return ser.encode(
-            ser.KIND_KLL,
-            {
-                "k": self.k,
-                "n": self.n,
-                "parity": self._parity,
-                "lens": [len(lv) for lv in self.levels],
-            },
-            payload.astype(np.float64).tobytes(),
-        )
+    def _state(self) -> tuple[dict, bytes]:
+        payload = np.concatenate(self.levels) if self._total() else np.empty(0)
+        params = {"k": self.k, "n": self.n, "parity": self._parity,
+                  "lens": [len(lv) for lv in self.levels]}
+        return params, payload.astype(np.float64).tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "KLLSketch":
@@ -196,13 +181,6 @@ class KLLSketch:
         sk.n = int(params["n"])
         sk._parity = int(params.get("parity", 0))
         return sk
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "KLLSketch":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_KLL:
-            raise ValueError("not a KLL blob")
-        return cls._from_parts(params, payload)
 
     def __repr__(self) -> str:
         return f"KLLSketch(k={self.k}, n={self.n}, levels={len(self.levels)})"

@@ -45,8 +45,7 @@ import pandas as pd
 from presto_bloomfilter_spark.functions import serialization as ser
 
 
-@ser.register_kind(ser.KIND_MG)
-class MisraGries:
+class MisraGries(ser.Sketch, kind=ser.KIND_MG):
     DEFAULT_K = 4096
 
     def __init__(self, k: int = DEFAULT_K,
@@ -128,11 +127,10 @@ class MisraGries:
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "MisraGries") -> "MisraGries":
-        if not isinstance(other, MisraGries):
-            raise TypeError("can only merge MisraGries with MisraGries")
-        if self.k != other.k:
-            raise ValueError(f"geometry mismatch: k={self.k} vs {other.k}")
+    def _geometry(self) -> tuple:
+        return (self.k,)
+
+    def _merge(self, other: "MisraGries") -> "MisraGries":
         if other.item_type is not None:
             if self.item_type is None:
                 self.item_type = other.item_type
@@ -145,12 +143,6 @@ class MisraGries:
                 self._combine(other._items, other._counts)
         self.n += other.n
         return self
-
-    def copy(self) -> "MisraGries":
-        c = MisraGries(self.k, _items=self._items.copy(),
-                       _counts=self._counts.copy())
-        c.n, c.item_type = self.n, self.item_type
-        return c
 
     # ---- queries ------------------------------------------------------------
 
@@ -197,7 +189,7 @@ class MisraGries:
 
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
+    def _state(self) -> tuple[dict, bytes]:
         head = struct.pack("<qq", self.n, len(self._items))
         counts = self._counts.tobytes()
         if self.item_type == "int":
@@ -206,11 +198,7 @@ class MisraGries:
             enc = [s.encode() for s in self._items]
             keys = (np.array([len(b) for b in enc], np.uint32).tobytes()
                     + b"".join(enc))
-        return ser.encode(
-            ser.KIND_MG,
-            {"k": self.k, "item_type": self.item_type},
-            head + counts + keys,
-        )
+        return {"k": self.k, "item_type": self.item_type}, head + counts + keys
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "MisraGries":
@@ -232,13 +220,6 @@ class MisraGries:
         c = cls(int(params["k"]), _items=items, _counts=counts)
         c.n, c.item_type = int(n), t
         return c
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "MisraGries":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_MG:
-            raise ValueError("not a Misra-Gries blob")
-        return cls._from_parts(params, payload)
 
     def __eq__(self, other) -> bool:
         return (

@@ -39,8 +39,7 @@ from presto_bloomfilter_spark.functions import serialization as ser
 _GRID = 1024  # quadrature / inversion grid on [-1, 1]
 
 
-@ser.register_kind(ser.KIND_MOMENTS)
-class MomentsSketch:
+class MomentsSketch(ser.Sketch, kind=ser.KIND_MOMENTS):
     DEFAULT_K = 12
 
     def __init__(self, lo: float, hi: float, k: int = DEFAULT_K,
@@ -109,26 +108,15 @@ class MomentsSketch:
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "MomentsSketch") -> "MomentsSketch":
-        if not isinstance(other, MomentsSketch):
-            raise TypeError("can only merge MomentsSketch with MomentsSketch")
-        if ((self.lo, self.hi, self.k, self.log)
-                != (other.lo, other.hi, other.k, other.log)):
-            raise ValueError(
-                f"geometry mismatch: [{self.lo},{self.hi}] k={self.k} "
-                f"log={self.log} vs [{other.lo},{other.hi}] k={other.k} "
-                f"log={other.log}")
+    def _geometry(self) -> tuple:
+        return (self.lo, self.hi, self.k, self.log)
+
+    def _merge(self, other: "MomentsSketch") -> "MomentsSketch":
         self.sums += other.sums
         self.n += other.n
         self.min = min(self.min, other.min)
         self.max = max(self.max, other.max)
         return self
-
-    def copy(self) -> "MomentsSketch":
-        c = MomentsSketch(self.lo, self.hi, self.k, self.clamp, self.log,
-                          _sums=self.sums.copy())
-        c.n, c.min, c.max = self.n, self.min, self.max
-        return c
 
     # ---- queries ------------------------------------------------------------
 
@@ -231,16 +219,11 @@ class MomentsSketch:
 
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        payload = np.concatenate(
-            (np.array([self.n, self.min, self.max], dtype=np.float64),
-             self.sums)).tobytes()
-        return ser.encode(
-            ser.KIND_MOMENTS,
-            {"lo": self.lo, "hi": self.hi, "k": self.k,
-             "clamp": self.clamp, "log": self.log},
-            payload,
-        )
+    def _state(self) -> tuple[dict, bytes]:
+        head = np.array([self.n, self.min, self.max], dtype=np.float64)
+        params = {"lo": self.lo, "hi": self.hi, "k": self.k,
+                  "clamp": self.clamp, "log": self.log}
+        return params, np.concatenate((head, self.sums)).tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "MomentsSketch":
@@ -252,13 +235,6 @@ class MomentsSketch:
         c.min = float(arr[1])
         c.max = float(arr[2])
         return c
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "MomentsSketch":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_MOMENTS:
-            raise ValueError("not a moments blob")
-        return cls._from_parts(params, payload)
 
     def __eq__(self, other) -> bool:
         return (

@@ -23,8 +23,7 @@ from presto_bloomfilter_spark.functions.hashing import takes_counts
 _LEN = struct.Struct("<I")
 
 
-@ser.register_kind(ser.KIND_MULTI)
-class MultiSketch:
+class MultiSketch(ser.Sketch, kind=ser.KIND_MULTI):
     takes_counts = True
 
     def __init__(self, parts: list):
@@ -45,20 +44,22 @@ class MultiSketch:
             p.add_strings(values)
         return self
 
-    def merge(self, other: "MultiSketch") -> "MultiSketch":
-        if not isinstance(other, MultiSketch) or len(other.parts) != len(self.parts):
-            raise ValueError("MultiSketch merge requires identical composition")
+    def _geometry(self) -> tuple:
+        return tuple((p.KIND, p._geometry()) for p in self.parts)
+
+    def _merge(self, other: "MultiSketch") -> "MultiSketch":
+        # the parts' kinds and geometries are this sketch's geometry
         for a, b in zip(self.parts, other.parts):
-            a.merge(b)
+            a._merge(b)
         return self
 
-    def to_bytes(self) -> bytes:
+    def _state(self) -> tuple[dict, bytes]:
         chunks = []
         for p in self.parts:
             b = p.to_bytes()
             chunks.append(_LEN.pack(len(b)))
             chunks.append(b)
-        return ser.encode(ser.KIND_MULTI, {"n": len(self.parts)}, b"".join(chunks))
+        return {"n": len(self.parts)}, b"".join(chunks)
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "MultiSketch":

@@ -40,8 +40,6 @@ reference's *capability* rebuilt for columnar batch execution.
 
 from __future__ import annotations
 
-import base64
-import hashlib
 import math
 
 import numpy as np
@@ -108,8 +106,7 @@ def _solve_blocks(n: int, p: float) -> int:
     return hi
 
 
-@ser.register_kind(ser.KIND_SBBF)
-class SplitBlockBloomFilter(Inserts, Membership):
+class SplitBlockBloomFilter(Inserts, Membership, ser.Sketch, kind=ser.KIND_SBBF):
     DEFAULT_EXPECTED_INSERTIONS = 10_000_000
     DEFAULT_FPP = 0.01
 
@@ -231,33 +228,19 @@ class SplitBlockBloomFilter(Inserts, Membership):
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "SplitBlockBloomFilter") -> "SplitBlockBloomFilter":
-        if not isinstance(other, SplitBlockBloomFilter):
-            raise TypeError("can only merge SplitBlockBloomFilter with "
-                            "SplitBlockBloomFilter")
-        if self.n_blocks != other.n_blocks:
-            raise ValueError(
-                f"geometry mismatch: {self.n_blocks} vs {other.n_blocks} "
-                "blocks — build with identical (n, p)")
+    def _geometry(self) -> tuple:
+        return (self.n_blocks,)
+
+    def _merge(self, other: "SplitBlockBloomFilter") -> "SplitBlockBloomFilter":
         np.bitwise_or(self.words, other.words, out=self.words)
         self.approx_items += other.approx_items
         return self
 
-    def copy(self) -> "SplitBlockBloomFilter":
-        c = SplitBlockBloomFilter(self.expected_insertions, self.fpp,
-                                  _words=self.words.copy())
-        c.approx_items = self.approx_items
-        return c
-
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        return ser.encode(
-            ser.KIND_SBBF,
-            {"n": self.expected_insertions, "p": self.fpp,
-             "items": self.approx_items},
-            self.words.tobytes(),
-        )
+    def _state(self) -> tuple[dict, bytes]:
+        params = {"n": self.expected_insertions, "p": self.fpp, "items": self.approx_items}
+        return params, self.words.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "SplitBlockBloomFilter":
@@ -265,24 +248,6 @@ class SplitBlockBloomFilter(Inserts, Membership):
                  _words=np.frombuffer(payload, _U32).copy())
         sk.approx_items = int(params.get("items", 0))
         return sk
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "SplitBlockBloomFilter":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_SBBF:
-            raise ValueError("not a split-block bloom filter blob")
-        return cls._from_parts(params, payload)
-
-    def to_base64(self) -> str:
-        return base64.b64encode(self.to_bytes()).decode("ascii")
-
-    @classmethod
-    def from_base64(cls, s: str) -> "SplitBlockBloomFilter":
-        return cls.from_bytes(base64.b64decode(s))
-
-    @property
-    def sha256(self) -> bytes:
-        return hashlib.sha256(self.words.tobytes()).digest()
 
     def __eq__(self, other) -> bool:
         return (

@@ -11,7 +11,7 @@ clean little-endian layout:
     offset  field
     0..3    magic  b"PBFS"
     4..5    u16    format version (1, or 2 for a zstd payload)
-    6       u8     sketch kind (1=bloom 2=hll 3=cms 4=kll 5=multi)
+    6       u8     sketch kind (``KIND_*`` below)
     7       u8     flags (bit0: payload is zlib-compressed;
                            bit1: by-reference, see below;
                            bit2: payload is zstd-compressed)
@@ -55,10 +55,39 @@ ships it).  It is what a SQL probe carries per row in place of the
 filter, the way the reference passes its Slice by reference.
 :func:`decode` resolves one through ``SparkFiles``; it is never written
 to a store, a checkpoint or a sketch table.
+
+Adding a kind
+-------------
+Every kind subclasses :class:`Sketch` with a class keyword that
+registers it under its kind tag::
+
+    class ThetaSketch(Inserts, Sketch, kind=KIND_THETA):
+        def _state(self):               # -> (params dict, payload bytes)
+            return {"k": self.k}, self.values.tobytes()
+
+        @classmethod
+        def _from_parts(cls, params, payload):  # the inverse of _state
+            return cls(params["k"], _values=np.frombuffer(payload, np.uint64).copy())
+
+        def _geometry(self):            # what two mergeable sketches share
+            return (self.k,)
+
+        def _merge(self, other):        # the combine step, in place
+            self._add(other.values)
+            return self
+
+The base then gives the kind ``to_bytes``/``from_bytes``, ``copy``,
+``to_base64``/``from_base64``, ``sha256`` and ``merge``, whose
+precondition it checks before ``_merge`` runs: another class is a
+``TypeError`` and another ``_geometry()`` a ``ValueError``.  A
+``_merge`` makes only the checks of its own kind.  A new kind takes the
+next free ``KIND_*`` tag; a tag, once written to a blob, is never
+reused.
 """
 
 from __future__ import annotations
 
+import base64
 import hashlib
 import json
 import struct
@@ -97,16 +126,70 @@ KIND_COUNTSKETCH = 14
 KIND_FD = 15
 KIND_GRAM = 16
 
-_REGISTRY: dict[int, type] = {}
+_REGISTRY: dict[int, type["Sketch"]] = {}
 
 
-def register_kind(kind: int):
-    def deco(cls):
-        _REGISTRY[kind] = cls
-        cls.KIND = kind
-        return cls
+class Sketch:
+    """A serializable, mergeable sketch value: the one protocol of the
+    PBFS kinds (module docstring, "Adding a kind").  ``merge`` folds
+    ``other`` into this sketch in place and returns it."""
 
-    return deco
+    KIND: int
+
+    def __init_subclass__(cls, kind: int | None = None, **kw):
+        super().__init_subclass__(**kw)
+        if kind is not None:
+            _REGISTRY[kind] = cls
+            cls.KIND = kind
+
+    def to_bytes(self) -> bytes:
+        return encode(self.KIND, *self._state())
+
+    @classmethod
+    def from_bytes(cls, buf: bytes) -> "Sketch":
+        """The sketch blob ``buf`` holds: ``Sketch.from_bytes`` reads
+        any registered kind, a kind's own ``from_bytes`` only its own
+        (another kind's blob is a ``ValueError``)."""
+        kind, params, payload = decode(buf)
+        if cls is Sketch:
+            if kind not in _REGISTRY:
+                raise ValueError(f"unknown sketch kind {kind}")
+            cls = _REGISTRY[kind]
+        elif kind != cls.KIND:
+            raise ValueError(f"not a {cls.__name__} blob (kind {kind})")
+        return cls._from_parts(params, payload)
+
+    def copy(self) -> "Sketch":
+        """An independent sketch with the same bytes."""
+        return self._from_parts(*self._state())
+
+    def to_base64(self) -> str:
+        """String form = base64 of the blob (reference to_string,
+        BloomFilter.java:154-157)."""
+        return base64.b64encode(self.to_bytes()).decode("ascii")
+
+    @classmethod
+    def from_base64(cls, s: str) -> "Sketch":
+        return cls.from_bytes(base64.b64decode(s))
+
+    @property
+    def sha256(self) -> bytes:
+        """Digest of the payload, the cache key the blob's header
+        carries (reference BloomFilter.readHash, BloomFilter.java:409-415)."""
+        return hashlib.sha256(self._state()[1]).digest()
+
+    def merge(self, other: "Sketch") -> "Sketch":
+        self._check_combinable(other)
+        return self._merge(other)
+
+    def _check_combinable(self, other) -> None:
+        """The precondition of every combine (``merge``, and a kind's
+        own two-sketch operations): same class, same geometry."""
+        if type(other) is not type(self):
+            raise TypeError(f"can only combine {type(self).__name__} with "
+                            f"{type(self).__name__}, not {type(other).__name__}")
+        if self._geometry() != other._geometry():
+            raise ValueError(f"geometry mismatch: {self._geometry()} vs {other._geometry()}")
 
 
 def encode(kind: int, params: dict, payload: bytes, compress: str = "auto") -> bytes:
@@ -249,13 +332,7 @@ def read_kind(buf: bytes) -> int:
     return kind
 
 
-def sketch_from_bytes(buf: bytes):
-    """Deserialize any sketch by its kind tag."""
-    kind, params, payload = decode(buf)
-    cls = _REGISTRY.get(kind)
-    if cls is None:
-        raise ValueError(f"unknown sketch kind {kind}")
-    return cls._from_parts(params, payload)
+sketch_from_bytes = Sketch.from_bytes  # any kind, by its tag
 
 
 def merge_blobs(blobs, mapper=map):

@@ -40,8 +40,7 @@ import numpy as np
 from presto_bloomfilter_spark.functions import serialization as ser
 
 
-@ser.register_kind(ser.KIND_TDIGEST)
-class TDigest:
+class TDigest(ser.Sketch, kind=ser.KIND_TDIGEST):
     DEFAULT_COMPRESSION = 200
 
     def __init__(
@@ -152,13 +151,10 @@ class TDigest:
 
     # ---- merge --------------------------------------------------------------
 
-    def merge(self, other: "TDigest") -> "TDigest":
-        if not isinstance(other, TDigest):
-            raise TypeError("can only merge TDigest with TDigest")
-        if self.compression != other.compression:
-            raise ValueError(
-                f"compression mismatch: {self.compression} vs {other.compression}"
-            )
+    def _geometry(self) -> tuple:
+        return (self.compression,)
+
+    def _merge(self, other: "TDigest") -> "TDigest":
         other._compact()
         if other.means.size:
             self._buf_vals.append(other.means)
@@ -172,20 +168,16 @@ class TDigest:
 
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
+    def _state(self) -> tuple[dict, bytes]:
         self._compact()
-        payload = self.means.tobytes() + self.weights.tobytes()
-        return ser.encode(
-            ser.KIND_TDIGEST,
-            {
-                "compression": self.compression,
-                "n": self.n,
-                "min": None if math.isinf(self.min) else self.min,
-                "max": None if math.isinf(self.max) else self.max,
-                "k": int(self.means.size),
-            },
-            payload,
-        )
+        params = {
+            "compression": self.compression,
+            "n": self.n,
+            "min": None if math.isinf(self.min) else self.min,
+            "max": None if math.isinf(self.max) else self.max,
+            "k": int(self.means.size),
+        }
+        return params, self.means.tobytes() + self.weights.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "TDigest":
@@ -202,13 +194,6 @@ class TDigest:
         if params.get("max") is not None:
             td.max = float(params["max"])
         return td
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "TDigest":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_TDIGEST:
-            raise ValueError("not a t-digest blob")
-        return cls._from_parts(params, payload)
 
     def __repr__(self) -> str:
         return (

@@ -36,8 +36,7 @@ _U64 = np.uint64
 _MAX = float(2**64)
 
 
-@ser.register_kind(ser.KIND_THETA)
-class ThetaSketch(Inserts):
+class ThetaSketch(Inserts, ser.Sketch, kind=ser.KIND_THETA):
     DEFAULT_K = 4096
 
     def __init__(self, k: int = DEFAULT_K, _values: np.ndarray | None = None):
@@ -78,16 +77,12 @@ class ThetaSketch(Inserts):
 
     # ---- merge (union) -------------------------------------------------------
 
-    def merge(self, other: "ThetaSketch") -> "ThetaSketch":
-        if not isinstance(other, ThetaSketch):
-            raise TypeError("can only merge ThetaSketch with ThetaSketch")
-        if self.k != other.k:
-            raise ValueError(f"k mismatch: {self.k} vs {other.k}")
+    def _geometry(self) -> tuple:
+        return (self.k,)
+
+    def _merge(self, other: "ThetaSketch") -> "ThetaSketch":
         self._add(other.values)
         return self
-
-    def copy(self) -> "ThetaSketch":
-        return ThetaSketch(self.k, _values=self.values.copy())
 
     # ---- set operations ------------------------------------------------------
 
@@ -116,19 +111,12 @@ class ThetaSketch(Inserts):
 
     # ---- serialization -------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        return ser.encode(ser.KIND_THETA, {"k": self.k}, self.values.tobytes())
+    def _state(self) -> tuple[dict, bytes]:
+        return {"k": self.k}, self.values.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "ThetaSketch":
         return cls(int(params["k"]), _values=np.frombuffer(payload, dtype=_U64).copy())
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "ThetaSketch":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_THETA:
-            raise ValueError("not a theta sketch blob")
-        return cls._from_parts(params, payload)
 
     def __eq__(self, other) -> bool:
         return (

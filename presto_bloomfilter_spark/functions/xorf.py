@@ -55,8 +55,6 @@ same rationale as the SBBF/CBF variants (SURVEY.md §2 sketch siblings).
 
 from __future__ import annotations
 
-import base64
-import hashlib
 import math
 
 import numpy as np
@@ -99,8 +97,7 @@ def _seed_for(attempt: int) -> int:
     return int(splitmix64(np.array([attempt + 1], dtype=_U64))[0])
 
 
-@ser.register_kind(ser.KIND_XOR)
-class XorFilter(Membership):
+class XorFilter(Membership, ser.Sketch, kind=ser.KIND_XOR):
     """Static xor filter over 64-bit key digests (the library's shared
     key rule, ``hashing.key_digests``, same as BloomFilter)."""
 
@@ -230,26 +227,22 @@ class XorFilter(Membership):
     def false_positive_rate(self) -> float:
         return 2.0 ** -self.fp_bits
 
-    def merge(self, other) -> "XorFilter":
+    def _geometry(self) -> tuple:
+        return ()  # no two xor filters merge: _merge refuses every pair
+
+    def _merge(self, other) -> "XorFilter":
         raise TypeError(
             "XorFilter is a STATIC filter — the peeling construction needs "
             "the complete key set, so there is no union merge.  Rebuild over "
             "the unioned keys, or use BloomFilter/SplitBlockBloomFilter for "
             "mergeable membership.")
 
-    def copy(self) -> "XorFilter":
-        return XorFilter(self.fp_bits, self.seglen, self.seed,
-                         self.cells.copy(), self.n_keys)
-
     # ---- serialization ------------------------------------------------------
 
-    def to_bytes(self) -> bytes:
-        return ser.encode(
-            ser.KIND_XOR,
-            {"fp_bits": self.fp_bits, "seglen": self.seglen,
-             "seed": self.seed, "n_keys": self.n_keys},
-            self.cells.tobytes(),
-        )
+    def _state(self) -> tuple[dict, bytes]:
+        params = {"fp_bits": self.fp_bits, "seglen": self.seglen,
+                  "seed": self.seed, "n_keys": self.n_keys}
+        return params, self.cells.tobytes()
 
     @classmethod
     def _from_parts(cls, params: dict, payload: bytes) -> "XorFilter":
@@ -258,24 +251,6 @@ class XorFilter(Membership):
                    int(params["seed"]),
                    np.frombuffer(payload, dtype).copy(),
                    int(params["n_keys"]))
-
-    @classmethod
-    def from_bytes(cls, buf: bytes) -> "XorFilter":
-        kind, params, payload = ser.decode(buf)
-        if kind != ser.KIND_XOR:
-            raise ValueError("not an xor filter blob")
-        return cls._from_parts(params, payload)
-
-    def to_base64(self) -> str:
-        return base64.b64encode(self.to_bytes()).decode("ascii")
-
-    @classmethod
-    def from_base64(cls, s: str) -> "XorFilter":
-        return cls.from_bytes(base64.b64decode(s))
-
-    @property
-    def sha256(self) -> bytes:
-        return hashlib.sha256(self.cells.tobytes()).digest()
 
     def __eq__(self, other) -> bool:
         return (

@@ -214,6 +214,13 @@ class TokenDedupAccumulator:
             return
         self._counts += np.bincount(flat - self.base, minlength=self._size)
 
+    @property
+    def add_strings(self):
+        """The wrapped sketch's string insert: string keys have no id
+        to count, so they go straight in (an AttributeError for a sink
+        that takes ids only, which ``hash_dispatch`` reports)."""
+        return self.sketch.add_strings
+
     def flush(self) -> None:
         """Push accumulated (id, count) pairs into the wrapped sketch."""
         if self._counts is not None:
@@ -268,6 +275,9 @@ def hash_dispatch(sk, op: str, col: pa.Array, name: str):
     - anything else (floating, boolean, date, timestamp, decimal,
       binary, …) → TypeError naming the column and its type: which
       string form it would hash as is the caller's choice.
+
+    A string column into a sketch without a string path (the id sink of
+    ``top_k_tokens``) is a TypeError naming the column too.
     """
     if pa.types.is_integer(col.type):
         return getattr(sk, op + "_ints")(col.to_numpy(zero_copy_only=False))
@@ -277,7 +287,12 @@ def hash_dispatch(sk, op: str, col: pa.Array, name: str):
         raise TypeError(
             f"column '{name}' ({col.type}) into hash sketch "
             f"{type(sk).__name__}: cast it to {to} first")
-    return getattr(sk, op + "_strings")(col)
+    strings = getattr(sk, op + "_strings", None)
+    if strings is None:
+        raise TypeError(
+            f"column '{name}' ({col.type}) into {type(getattr(sk, 'sketch', sk)).__name__}, "
+            f"which takes integer keys only")
+    return strings(col)
 
 
 @dataclass(frozen=True)

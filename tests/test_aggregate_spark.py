@@ -649,6 +649,25 @@ def test_token_dedup_sparse_buffer_survives_caller_reuse():
     assert acc.finish()._ids.tolist() == [5, 7, 30_000, 40_000]
 
 
+def test_token_spec_over_strings_equals_plain_spec(spark):
+    """A token spec over a list<string> column inserts the strings into
+    the wrapped sketch: the bytes of the plain spec over that column."""
+    df = spark.createDataFrame(
+        [(["a", "b", None],), (None,), (["b", "", "c"],), ([f"w{i}" for i in range(300)],)],
+        "tokens array<string>")
+    tok = agg.aggregate_sketch(df, agg.hll_over_tokens("tokens"))
+    plain = agg.aggregate_sketch(df, agg.SketchSpec("tokens", HyperLogLog))
+    assert tok.to_bytes() == plain.to_bytes()
+    assert abs(tok.estimate() - 304) < 304 * 3 * tok.relative_error  # a, b, '', c, w0..w299
+
+
+def test_string_column_into_an_id_sink_names_the_column():
+    spec = agg.SketchSpec("words", lambda: agg.TokenDedupAccumulator(agg._CandidateSink()))
+    batch = pa.record_batch([pa.array([["a", "b"]], pa.list_(pa.string()))], names=["words"])
+    with pytest.raises(TypeError, match="column 'words'.*integer keys only"):
+        spec.update(spec.factory(), batch)
+
+
 # ---- SketchSpec type dispatch (Spark-free) ------------------------------------
 
 # three batches per Arrow input type, NULLs included

@@ -30,7 +30,7 @@ def test_strings_null_empty_and_roundtrip():
     rt = sketch_from_bytes(sk.to_bytes())
     assert type(rt) is CountingBloomFilter and rt == sk
     assert CountingBloomFilter.from_base64(sk.to_base64()) == sk
-    with pytest.raises(ValueError, match="not a counting"):
+    with pytest.raises(ValueError, match="not a CountingBloomFilter blob"):
         CountingBloomFilter.from_bytes(BloomFilter(100, 0.5).to_bytes())
 
 

@@ -74,7 +74,7 @@ def test_serialization_roundtrip_and_dispatch():
     assert type(rt) is SplitBlockBloomFilter
     assert rt == sk and rt.approx_items == 500
     assert SplitBlockBloomFilter.from_base64(sk.to_base64()) == sk
-    with pytest.raises(ValueError, match="not a split-block"):
+    with pytest.raises(ValueError, match="not a SplitBlockBloomFilter blob"):
         from presto_bloomfilter_spark import BloomFilter
 
         SplitBlockBloomFilter.from_bytes(BloomFilter(100, 0.5).to_bytes())
